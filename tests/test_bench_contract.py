@@ -12,21 +12,20 @@ from zg_etl_spark import plans
 
 def test_correctness_window_composition():
     """The driver verifies exactly the FIRST 50 of all_queries(). Pin the
-    round-12 composition: p54 (the one query that never had a driver
-    row) and the r11 rewrites whose new form was never driver-attested
-    (q10, p3, l10) first, then the whole 39-query round-9-attested band
-    (the oldest driver rows after r11's full-green window), then the
-    seven r11-attested queries round 12's changes touch again (staged
-    sinks w1/w4/w5/w6, spine p0, CC l16, sessions s2); registering a
-    new query must never silently displace one of these."""
+    round-13 composition: the queries whose materialization path the
+    session registry rewrote (p42/p52/p54/p54c/p54d, w2, l16/l27) first,
+    then l6/l31/l37 (rewritten after their last driver row), then the
+    oldest (round-10) rows whose sources are now registry entries and
+    the stream-source queries s5/s7/s8; registering a new query must
+    never silently displace one of these."""
     first50 = list(plans.all_queries())[:50]
     assert len(set(first50)) == 50
-    want_prefixes = ["p54_", "q10_", "p3_", "g4_", "s2_"]
-    want_prefixes += [f"l{i}_" for i in (10, *range(11, 28))]
-    want_prefixes += [f"p{i}_" for i in (0, 19, 21, 29, 34, 36, 38, 41,
-                                         44, 47, 48, 49, 50, 55, 56)]
-    want_prefixes += [f"s{i}_" for i in (1, 3, 4, 6, 9, 10)]
-    want_prefixes += [f"w{i}_" for i in (1, 3, 4, 5, 6, 9)]
+    want_prefixes = ["p54_", "p54c_", "p54d_", "w2_", "g2_", "g3_"]
+    want_prefixes += [f"l{i}_" for i in (1, 2, 3, 4, 5, 6, 7, 8, 9, 16, 27,
+                                         30, 31, 37)]
+    want_prefixes += [f"p{i}_" for i in (1, 2, 5, 7, 8, 9, 27, 28, 30, 31,
+                                         32, 33, 35, 39, 42, 51, 52)]
+    want_prefixes += [f"s{i}_" for i in (5, 7, 8)]
     for prefix in want_prefixes:
         assert any(q.startswith(prefix) for q in first50), (
             f"{prefix}* fell out of the driver's 50-query window"
@@ -66,11 +65,9 @@ def test_bench_line_fits_driver_capture_window():
 
 def test_driver_window_is_the_planned_rotation():
     """The driver's CORRECTNESS file covers the FIRST 50 entries of
-    all_queries(); round 12 pins that window to the never-attested p54,
-    the r11 rewrites without a driver row on their new form (q10, p3,
-    l10), the whole 39-query r9-attested band (the oldest rows after
-    r11's full-green window), and the seven r11-attested queries this
-    round's changes touch again. A later registry edit must not
+    all_queries(); round 13 pins that window to the queries the session
+    registry rewrote, the never-attested forms of l6/l31/l37, and the
+    oldest (round-10) driver rows. A later registry edit must not
     silently displace them — rotation is a DELIBERATE _WINDOW change,
     not a side effect."""
     from zg_etl_spark import plans
@@ -83,34 +80,25 @@ def test_driver_window_is_the_planned_rotation():
     missing = [n for n in plans._WINDOW if n not in merged]
     assert not missing, missing
     must_have = [
-        "p54_click_consumption", "q10_set_ops", "p3_zgid_binding",
-        "l10_multimodal_binary", "l15_multimodal_features",
-        "l17_resize_features", "l23_frame_sample",
-        "l11_embedding_neardup", "l14_ann_pandas",
-        "p47_adv_cdc_route", "p44_apple_asa", "p56_event_paths",
-        "s1_streaming_identity", "s4_streaming_route",
-        "s10_streaming_deep_convert", "w3_compat_csv_roundtrip",
-        "w9_partial_upsert",
-        "w1_upsert_writer", "w4_partition_overwrite", "w5_compaction",
-        "w6_delete_sign", "p0_envelope", "l16_dedup_groups",
-        "s2_streaming_sessions",
+        "p42_adv_click_match", "p52_adv_ss_priority",
+        "p54_click_consumption", "p54c_candidates", "p54d_replay_rollup",
+        "w2_bucketed_join", "l16_dedup_groups", "l27_dedup_keep_list",
+        "l6_lsh_candidates", "l31_candidate_verify", "l37_pq_ann",
+        "l5_minhash_signatures", "l9_ann_ivf", "s7_stream_stream_join",
+        "p8_wide_table", "p7_enrichment", "p5_virtual_attrs",
+        "q1_pricing_summary",
     ]
     for name in must_have:
         assert name in first50, f"{name} missing from the driver window"
-    # rotated/kept BEHIND the cut (still locally verified by the sf0.01
-    # parity rehearsal): the r10/r11-green band that yielded its slots
-    # to this round's rotation
-    for name in ("p45_device_classify", "g1_wire_roundtrip",
-                 "p54c_candidates", "p54d_replay_rollup",
-                 "l28_source_mixture", "l37_pq_ann",
-                 "p10_b_user_upsert", "p17_user_prop_dict",
-                 "p42_adv_click_match", "p52_adv_ss_priority",
-                 "q11_approx_distinct", "q20_gapfill_locf",
-                 "s5_streaming_zgid", "s7_stream_stream_join",
-                 "s8_stream_upsert_delete", "w7_schema_evolution",
-                 "w8_retention_sweep", "w10_scale_ids",
-                 "p8_wide_table", "p7_enrichment", "p5_virtual_attrs",
-                 "p43_adv_match_json", "p46_dims_mapping",
-                 "w2_bucketed_join", "q1_pricing_summary",
-                 "l1_text_stats", "g2_wire_crypto"):
+    # rotated BEHIND the cut (still locally verified by the sf0.01
+    # parity rehearsal): the round-12 window, hash-green in
+    # CORRECTNESS_r12, and the relational tail the cut leaves out
+    for name in ("q10_set_ops", "p3_zgid_binding", "l10_multimodal_binary",
+                 "g4_sm2_unwrap", "l11_embedding_neardup",
+                 "l15_multimodal_features", "p47_adv_cdc_route",
+                 "p56_event_paths", "s1_streaming_identity",
+                 "s4_streaming_route", "s10_streaming_deep_convert",
+                 "w1_upsert_writer", "w9_partial_upsert", "p0_envelope",
+                 "s2_streaming_sessions", "q13_cube",
+                 "q19_not_in_null_aware"):
         assert name in merged and name not in first50, name

@@ -39,6 +39,22 @@ def test_extract_features(media):
     assert f0.n_frames == (f0.n_bytes + 255) // 256
 
 
+@pytest.mark.parametrize("n_bins", [0, 257, 300])
+def test_extract_features_rejects_out_of_range_bins(n_bins):
+    """The histogram's bucket math is uint16: n_bins above 256 used to
+    wrap silently into wrong buckets, and 0 has no bucket at all. The
+    check runs before the DataFrame is touched, so none is needed."""
+    with pytest.raises(ValueError, match="n_bins"):
+        MM.extract_features(None, n_bins=n_bins)
+
+
+def test_extract_features_full_byte_range_bins(media):
+    """n_bins = 256 is the top of the valid range: one bucket per byte."""
+    f0 = MM.extract_features(media, n_bins=256).filter("media_id = 0").first()
+    assert len(f0.byte_histogram) == 256
+    assert sum(f0.byte_histogram) == f0.n_bytes
+
+
 def test_resize_media(media):
     resized = MM.resize_media(media, width=16, height=8)
     # stage is schema-preserving (modulo nullability flags)

@@ -295,12 +295,14 @@ def test_s7_join_reaches_across_micro_batches(spark):
     files are cut by event time). Assert at least one emitted pair spans
     the cut — otherwise the test would pass with per-batch joins and the
     watermarked-state machinery would be dead weight."""
-    from zg_etl_spark.plans.streaming_queries import QUERIES, _SRC_MEMO
-    from zg_etl_spark.session import session_key
+    from zg_etl_spark.plans.streaming_queries import QUERIES
+    from zg_etl_spark.session import materialize
 
     sf_dir = "/root/testdata/sf0.001"
     result = QUERIES["s7_stream_stream_join"](spark, sf_dir).localCheckpoint()
-    src = _SRC_MEMO[(session_key(spark), sf_dir, "s7_src")]
+    # the run's source dir, read back through the registry (never rebuilt)
+    src = materialize(spark, sf_dir, "s7_src",
+                      lambda: pytest.fail("s7_src not registered"))
     b0 = spark.read.parquet(src + "/b0.parquet")
     clicks_b0 = b0.filter("event_type = 'click'").selectExpr(
         "event_id AS click_id"

@@ -32,6 +32,7 @@ documented mode, the deterministic mode is the test/oracle profile.
 from __future__ import annotations
 
 from zg_etl_spark.operators import registries as R
+from zg_etl_spark.session import materialize
 
 DAY_MS = 86_400_000
 VALID_PAST_MS = 21 * DAY_MS  # configured subtime (reference ships 7d,
@@ -518,13 +519,6 @@ def _vtl_fanout_select(d: Dialect) -> str:
   WHERE {vtl_match_any(d)}"""
 
 
-# per-session memo for the streaming fan-out's batch-invariant pieces:
-# the broadcast rules relation and the two rendered predicate strings.
-# Rebuilding them inside foreachBatch would put driver-side
-# createDataFrame + SQL rendering on every micro-batch's hot path.
-_VTL_STREAM_MEMO: dict = {}
-
-
 def vtl_fanout_df(batch):
     """Per-micro-batch DataFrame rendering of the same fan-out, for the
     streaming route stage (the reference runs VirtualEventOperator as a
@@ -537,23 +531,22 @@ def vtl_fanout_df(batch):
     to the micro-batch at any rule count."""
     from pyspark.sql import functions as F
 
-    from zg_etl_spark.session import session_key
-
-    key = session_key(batch.sparkSession)
-    if key not in _VTL_STREAM_MEMO:
-        # inline VALUES (LocalRelation), NOT createDataFrame: the latter
-        # parallelizes the rows over defaultParallelism partitions through
-        # a Python RDD, and since a broadcast relation is rebuilt by every
-        # ACTION that references it, each micro-batch action re-ran a
-        # 32-task Python round trip just to re-collect a handful of rule
-        # rows (measured ~0.5 s × 3 actions × every batch in s4). A
-        # LocalRelation broadcast is a driver-side copy, zero tasks.
-        rules = batch.sparkSession.sql(
-            f"SELECT * FROM {vtl_rules_values()} "
-            "AS v(rule_id, rule_app, src_event, virtual_name, alias)"
-        )
-        _VTL_STREAM_MEMO[key] = (rules, vtl_match_any(SPARK))
-    rules, match_any = _VTL_STREAM_MEMO[key]
+    spark = batch.sparkSession
+    # inline VALUES (LocalRelation), NOT createDataFrame: the latter
+    # parallelizes the rows over defaultParallelism partitions through
+    # a Python RDD, and since a broadcast relation is rebuilt by every
+    # ACTION that references it, each micro-batch action re-ran a
+    # 32-task Python round trip just to re-collect a handful of rule
+    # rows (measured ~0.5 s × 3 actions × every batch in s4). A
+    # LocalRelation broadcast is a driver-side copy, zero tasks. The
+    # relation and the rendered predicate are batch-invariant, so they
+    # are built once per session (a tuple, so the registry keeps the
+    # LocalRelation as is), never on the micro-batch's hot path.
+    rules, match_any = materialize(spark, None, "vtl_rules", lambda: (
+        spark.sql(f"SELECT * FROM {vtl_rules_values()} "
+                  "AS v(rule_id, rule_app, src_event, virtual_name, alias)"),
+        vtl_match_any(SPARK),
+    ))
     joined = (
         batch.alias("r")
         .join(F.broadcast(rules.alias("v")), F.expr(VTL_JOIN_ON), "inner")
@@ -1120,91 +1113,69 @@ def full_query(d: Dialect, body: str) -> str:
     return prelude(d) + "\n" + body
 
 
-# --- Spark execution: per-session cached stage views -----------------------
-_ACTIVE: dict[int, str] = {}
-_CACHED: dict[int, list] = {}
-
-
+# --- Spark execution: the spine as registry entries -------------------------
 def ensure_pipeline_views(spark, sf_dir: str) -> None:
-    """Register every stage as a temp view, caching the shared spine.
-    Re-registers (and drops old cache) when sf_dir changes."""
-    import os
+    """Register every stage as a temp view: CACHE_STAGES (and the source
+    ``events``) are registry entries, the rest plain views over them. The
+    whole set is itself one entry, so asking for another sf_dir releases
+    and rebuilds it (session.materialize's live-set policy)."""
+    materialize(
+        spark, sf_dir, "spine", lambda: _build_spine(spark, sf_dir),
+        cleanup=lambda views: [spark.catalog.dropTempView(v) for v in views],
+    )
 
-    from zg_etl_spark.sources.tables import load_table
 
-    from zg_etl_spark.session import session_key
+def _build_spine(spark, sf_dir: str) -> list[str]:
+    """Build the spine; returns the names of its plain (uncached) views."""
+    import re
+    from concurrent.futures import ThreadPoolExecutor
 
-    key = session_key(spark)
-    if _ACTIVE.get(key) == sf_dir:
-        return
-    for df in _CACHED.get(key, []):
-        df.unpersist()
-    _CACHED[key] = []
+    from zg_etl_spark.sources.tables import fan_out
 
     # events.ts is parquet TIMESTAMP(NANOS); read it as a nanos BIGINT
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events = load_table(spark, sf_dir, "events")
     # the spine's first pass (feed -> gated) evaluates ~50 derived
     # columns per row (md5, regexps, string builds) — far heavier per
     # byte than a plain scan — and the testdata ships events as ONE
-    # parquet file, so without this the whole gated build runs in a
-    # single task (measured: gated checkpoint 2.9 s at 1 partition,
-    # 0.9 s at 8, 0.65 s at 32 in an interleaved A/B at sf0.1).
-    # Size-derived fan-out, same discipline as llm._register_docs_views
-    # but sized for EXPRESSION work rather than scan bytes (~64 KiB of
-    # source per task — still thousands of rows), capped at the core
-    # count, and a no-op when the native splits already parallelize
-    # (at 100 TB the source is many files and this never fires).
-    try:
-        ev_bytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        ev_bytes = 0
-    cores = spark.sparkContext.defaultParallelism
-    want = max(1, min(cores, -(-ev_bytes // (64 * 1024))))
-    if events.rdd.getNumPartitions() < want:
-        events = events.repartition(want)
-    events.createOrReplaceTempView("events")
+    # parquet file, so without the fan-out the whole gated build runs in
+    # a single task
+    materialize(spark, sf_dir, "events",
+                lambda: fan_out(spark, sf_dir, "events"))
 
-    # localCheckpoint truncates lineage: without it every downstream
-    # query's logical plan inlines the whole chain and Catalyst spends
-    # seconds per query on analysis/cache-matching of thousand-node plans
-    # (measured: attr_dict count 5.8s with a warm cache, 0.05s
-    # checkpointed). In a cluster deployment the spine stages would be
-    # persisted tables (as the reference persists stage outputs to
-    # Kafka/Doris), giving the same lineage cut reliably.
+    # Cached stages are localCheckpointed (by the registry): without the
+    # lineage cut every downstream query's logical plan inlines the whole
+    # chain and Catalyst spends seconds per query on analysis/cache-
+    # matching of thousand-node plans (measured: attr_dict count 5.8s
+    # with a warm cache, 0.05s checkpointed). In a cluster deployment the
+    # spine stages would be persisted tables (as the reference persists
+    # stage outputs to Kafka/Doris), giving the same lineage cut.
     #
     # Consecutive cache stages that don't reference each other (e.g.
     # did_ids / uid_ids; event_dict / attrs_melted) materialize
     # CONCURRENTLY — Spark schedules jobs from multiple driver threads
     # onto the same executor pool, exactly as independent registry builds
     # would run on a cluster.
-    import re
-    from concurrent.futures import ThreadPoolExecutor
-
-    pending: list[tuple[str, object]] = []
+    pending: list[tuple[str, str]] = []
+    views: list[str] = []
 
     def flush() -> None:
         if not pending:
             return
         with ThreadPoolExecutor(max_workers=len(pending)) as ex:
-            dfs = list(
-                ex.map(lambda nd: nd[1].localCheckpoint(eager=True), pending)
-            )
-        for (name, _), df in zip(pending, dfs):
-            _CACHED[key].append(df)
-            df.createOrReplaceTempView(name)
+            list(ex.map(lambda ns: materialize(
+                spark, sf_dir, ns[0], lambda: spark.sql(ns[1])), pending))
         pending.clear()
 
     for name, sql in stages(SPARK):
         if any(re.search(rf"\b{p}\b", sql) for p, _ in pending):
             flush()  # this stage reads a pending one — barrier first
-        df = spark.sql(sql)
         if name in CACHE_STAGES:
-            pending.append((name, df))
+            pending.append((name, sql))
         else:
-            df.createOrReplaceTempView(name)
+            spark.sql(sql).createOrReplaceTempView(name)
+            views.append(name)
     flush()
-    _ACTIVE[key] = sf_dir
+    return views
 
 
 def spark_pipeline_df(spark, sf_dir: str, body: str):

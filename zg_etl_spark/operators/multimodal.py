@@ -66,7 +66,11 @@ def decode_image(payload: bytes):
 def extract_features(df: DataFrame, n_bins: int = 16, frame_size: int = 256) -> DataFrame:
     """Deterministic fake feature extraction over binary payloads:
     byte-level stats + histogram + fixed-size frame count. Arrow-batched via
-    mapInPandas — the exact shape a real decode+embed stage has."""
+    mapInPandas — the exact shape a real decode+embed stage has.
+    ``n_bins`` must be in [1, 256]: the bucket math below is uint16 and
+    would wrap silently past that."""
+    if not 1 <= n_bins <= 256:
+        raise ValueError(f"n_bins must be in [1, 256], got {n_bins}")
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np  # worker-side import (closure is cloudpickled)

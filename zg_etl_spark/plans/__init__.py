@@ -15,90 +15,84 @@ changed this round; the twice-green remainder rotates behind them.
 from zg_etl_spark.plans import (
     consume, gate_queries, llm, pipeline, relational, streaming_queries)
 
-# Round-12 window: CORRECTNESS_r11 landed 50/50 hash-green on the
-# round-11 composition, so that block rotates behind. The window
-# front-loads, in priority order (the round-11 verdict's explicit
-# rotation instruction):
-#   1. p54_click_consumption — the only query that has NEVER had a
-#      driver row (its full DuckDB oracle landed mid-r11, its
-#      memoized+exploded form in r11), plus the three r11 rewrites
-#      whose NEW form has only local parity evidence: q10 (set-op
-#      counts in one scan), p3 (collect_set window), and l10 (the
-#      multimodal family whose extract_features path r11 vectorized
-#      and r12 re-narrowed to uint8);
-#   2. the whole 39-query r9-attested band — the oldest driver rows
-#      after r11's full-green window: g4, l11-l15/l17-l27 (includes
-#      the rewritten-op l15/l17/l23 and this round's ANN/CC targets
-#      l11/l14), p19/p21/p29/p34/p36/p38/p41/p44/p47-p50/p55/p56
-#      (includes the r11 from_json rewrite p47), s1/s3/s4/s6/s9/s10,
-#      w3/w9;
-#   3. seven r11-attested queries whose implementation round 12
-#      touches again: the staged-commit sinks w1/w4/w5/w6, the spine
-#      p0, the CC iteration l16, and the sessions lane s2.
-# The remainder (the r10/r11-green band) stays in the tail, covered by
-# the local sf0.01 parity rehearsal; after this rotation nothing
-# attested is older than round 10.
+# Round-13 window: CORRECTNESS_r12 landed 50/50 hash-green on the
+# round-12 composition, so that block rotates behind. The window
+# front-loads, in priority order:
+#   1. the queries whose materialization path the session registry
+#      (session.materialize) rewrote: p42/p52/p54/p54c/p54d now read one
+#      shared UA-parsed advertising-apps index, w2's bucketed tables and
+#      l16's groups (read by l27) are registry entries;
+#   2. l6, l31 and l37, rewritten onto shared views after their last
+#      driver row, so their new forms were never attested;
+#   3. the oldest driver rows (round 10) whose sources are now registry
+#      entries: the l-queries over the materialized documents/embeddings
+#      tables, the stream-source queries s5/s7/s8 (round 11), and the
+#      g/p queries over the spine's materialized events;
+#   4. the round-10 relational band, as far as the cut allows.
 #
 # EXPLICIT, not module-unpacked: a query added to llm/streaming/gate
 # must be slotted here deliberately — unpacking whole modules let any
 # new entry silently displace the intended 50th query.
 _WINDOW = [
+    "p42_adv_click_match",
+    "p52_adv_ss_priority",
     "p54_click_consumption",
-    "q10_set_ops",
-    "p3_zgid_binding",
-    "l10_multimodal_binary",
-    "g4_sm2_unwrap",
-    "l11_embedding_neardup",
-    "l12_tokens_fingerprint",
-    "l13_curation",
-    "l14_ann_pandas",
-    "l15_multimodal_features",
-    "l17_resize_features",
-    "l18_split_sample",
-    "l19_tfidf_terms",
-    "l20_chunking",
-    "l21_bigram_stats",
-    "l22_stratified_sample",
-    "l23_frame_sample",
-    "l24_pii_scrub",
-    "l25_decontaminate",
-    "l26_repetition_filter",
-    "l27_dedup_keep_list",
-    "p19_event_highwater",
-    "p21_sink_counts",
-    "p29_event_resolution",
-    "p34_user_duration",
-    "p36_event_platforms",
-    "p38_adv_user_sources",
-    "p41_adv_channel_props",
-    "p44_apple_asa",
-    "p47_adv_cdc_route",
-    "p48_adv_click_keys",
-    "p49_adv_deep_convert",
-    "p50_match_json_userprop",
-    "p55_tencent_web_match",
-    "p56_event_paths",
-    "s1_streaming_identity",
-    "s3_streaming_counts",
-    "s4_streaming_route",
-    "s6_streaming_dedup",
-    "s9_stream_partial_upsert",
-    "s10_streaming_deep_convert",
-    "w3_compat_csv_roundtrip",
-    "w9_partial_upsert",
-    "w1_upsert_writer",
-    "w4_partition_overwrite",
-    "w5_compaction",
-    "w6_delete_sign",
-    "p0_envelope",
-    "l16_dedup_groups",
-    "s2_streaming_sessions",
-    # behind the 50-query cut — stay listed so a future rotation is a
-    # reorder, not a rediscovery
-    "p45_device_classify",
-    "g1_wire_roundtrip",
     "p54c_candidates",
     "p54d_replay_rollup",
+    "w2_bucketed_join",
+    "l16_dedup_groups",
+    "l27_dedup_keep_list",
+    "l6_lsh_candidates",
+    "l31_candidate_verify",
+    "l37_pq_ann",
+    "l1_text_stats",
+    "l2_lang_id",
+    "l3_dedup_exact",
+    "l4_ngram_jaccard",
+    "l5_minhash_signatures",
+    "l7_simhash",
+    "l8_ann_bruteforce",
+    "l9_ann_ivf",
+    "l30_dup_span_fraction",
+    "s5_streaming_zgid",
+    "s7_stream_stream_join",
+    "s8_stream_upsert_delete",
+    "g2_wire_crypto",
+    "g3_rsa_unwrap",
+    "p1_gate_errors",
+    "p2_identity_mappings",
+    "p5_virtual_attrs",
+    "p7_enrichment",
+    "p8_wide_table",
+    "p9_user_properties",
+    "p27_user_profile",
+    "p28_gate_business",
+    "p30_search_keywords",
+    "p31_adv_attribution",
+    "p32_synthesized_records",
+    "p33_ua_parse",
+    "p35_user_anonymous",
+    "p39_baidu_eqid",
+    "p51_web_ad_lane",
+    "q1_pricing_summary",
+    "q2_orders_customer_join",
+    "q3_revenue_by_nation",
+    "q4_nation_region",
+    "q5_semi_anti",
+    "q6_hash_agg",
+    "q7_rollup",
+    "q8_window_topk",
+    "q9_top_parts",
+    "q12_scalar_functions",
+    # behind the 50-query cut — stay listed so a future rotation is a
+    # reorder, not a rediscovery
+    "q13_cube",
+    "q14_grouping_sets",
+    "q15_percentiles",
+    "q16_window_frames",
+    "q17_supplier_revenue",
+    "q18_correlated_subquery",
+    "q19_not_in_null_aware",
 ]
 
 _MODULES = (llm, streaming_queries, gate_queries, pipeline, relational, consume)

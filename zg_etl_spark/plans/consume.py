@@ -64,9 +64,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zg_etl_spark.operators.domain import (
-    DUCK, SPARK, duck_pipeline_sql, spark_pipeline_df)
+from zg_etl_spark.operators.domain import DUCK, SPARK, duck_pipeline_sql
 from zg_etl_spark.operators.graph import label_components
+from zg_etl_spark.session import materialize
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -151,46 +151,28 @@ def _replay(pdf: pd.DataFrame) -> pd.DataFrame:
 P54_COARSE_MAX = 2_000_000
 
 
-# p54 / p54c / p54d all consume the same candidate-resolution relations
-# (and p54/p54d the same replay detail). Build each ONCE per (session,
-# sf_dir) — the _shared_view/_SRC_MEMO discipline every other shared
-# stage in the repo follows (guide §1.2: don't recompute passes you
-# already have materialized). Every memoized frame is localCheckpointed,
-# so reuse scans materialized partitions; nothing persists across
-# processes.
-_REL_MEMO: dict = {}
-_DETAIL_MEMO: dict = {}
-
-
 def _p54_relations(spark: SparkSession, sf_dir: str):
     """The DataFrame build of p54's candidate resolution — click-store
     entries, per-key store, session probes, and the per-session static
     preference relation (cands). Shared by the sequential replay
     (_p54_run) and pinned against the dual-dialect p54_candidates SQL
     template by tests/test_pipeline.py, so the driver's hash-green
-    p54_candidates row transitively attests these joins. Memoized per
-    (session, sf_dir): p54, p54c and p54d all start from it."""
-    from zg_etl_spark.session import session_key
-
-    memo_key = (session_key(spark), sf_dir)
-    if memo_key in _REL_MEMO:
-        return _REL_MEMO[memo_key]
-    out = _build_p54_relations(spark, sf_dir)
-    _REL_MEMO[memo_key] = out
-    return out
+    p54_candidates row transitively attests these joins. A registry
+    entry (every frame in it localCheckpointed): p54, p54c and p54d all
+    start from it."""
+    return materialize(spark, sf_dir, "p54_relations",
+                       lambda: _build_p54_relations(spark, sf_dir))
 
 
 def _build_p54_relations(spark: SparkSession, sf_dir: str):
     from zg_etl_spark.plans.pipeline import (
-        p52_clicks_sql, p52_keyed_sql, p52_ss_sql)
+        p52_clicks_sql, p52_keyed_src, p52_ss_sql)
 
     d = SPARK
-    # keyed scans resolved once; clicks/ss are cheap projections of it
-    keyed = spark_pipeline_df(
-        spark, sf_dir, p52_keyed_sql(d)).localCheckpoint(True)
-    keyed.createOrReplaceTempView("keyed")
-    clicks = spark.sql(p52_clicks_sql(d)).localCheckpoint(True)
-    ss = spark.sql(p52_ss_sql(d)).localCheckpoint(True)
+    # clicks/ss are cheap projections of the shared UA-parsed index
+    keyed = p52_keyed_src(spark, sf_dir)
+    clicks = spark.sql(p52_clicks_sql(d, keyed)).localCheckpoint(True)
+    ss = spark.sql(p52_ss_sql(d, keyed)).localCheckpoint(True)
 
     app_s = F.col("app_id").cast("string")
 
@@ -314,18 +296,15 @@ def _p54_detail(spark: SparkSession, sf_dir: str,
     (session, sf_dir) — the applyInPandas replay runs once for both
     aggregates; the detail frame is checkpointed before reuse so both
     consumers scan the same materialized rows. The test-only
-    ``_force_components`` path bypasses the memo."""
-    from zg_etl_spark.session import session_key
+    ``_force_components`` path bypasses the registry."""
+    if _force_components:
+        return _build_p54_detail(spark, sf_dir, True)
 
-    memo_key = (session_key(spark), sf_dir)
-    if not _force_components and memo_key in _DETAIL_MEMO:
-        return _DETAIL_MEMO[memo_key]
-    out = _build_p54_detail(spark, sf_dir, _force_components)
-    if not _force_components:
-        detail, entries, ss = out
-        out = (detail.localCheckpoint(eager=True), entries, ss)
-        _DETAIL_MEMO[memo_key] = out
-    return out
+    def build():
+        detail, entries, ss = _build_p54_detail(spark, sf_dir)
+        return detail.localCheckpoint(eager=True), entries, ss
+
+    return materialize(spark, sf_dir, "p54_detail", build)
 
 
 def _build_p54_detail(spark: SparkSession, sf_dir: str,

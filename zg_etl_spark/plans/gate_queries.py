@@ -12,6 +12,7 @@ anything, hashes diverge.
 from __future__ import annotations
 
 import base64
+import functools
 import json
 import zlib
 
@@ -211,12 +212,8 @@ FROM events"""
 # and a comma-less unwrapped plaintext (the reference's keys[1] index
 # error) must both surface as error rows.
 # ---------------------------------------------------------------------------
-_G3_MEMO: dict = {}
-
-
+@functools.cache
 def _g3_fixture() -> dict:
-    if _G3_MEMO:
-        return _G3_MEMO
     import hashlib
 
     from cryptography.hazmat.primitives import serialization
@@ -237,7 +234,7 @@ def _g3_fixture() -> dict:
         wrapped.append(base64.b64encode(
             pub.encrypt(f"{secret},{iv}".encode(), apad.PKCS1v15())
         ).decode())
-    _G3_MEMO.update(
+    return dict(
         der_b64=base64.b64encode(der).decode(),
         keys=keys,
         wrapped=wrapped,
@@ -246,7 +243,6 @@ def _g3_fixture() -> dict:
             pub.encrypt(b"lonekeywithoutiv", apad.PKCS1v15())
         ).decode(),
     )
-    return _G3_MEMO
 
 
 def _g3_make_encoder(fx: dict):
@@ -344,12 +340,8 @@ FROM events"""
 # surface as error rows (1020001, the reference's decrypt-exception
 # attribution).
 # ---------------------------------------------------------------------------
-_G4_MEMO: dict = {}
-
-
+@functools.cache
 def _g4_fixture() -> dict:
-    if _G4_MEMO:
-        return _G4_MEMO
     import hashlib
 
     from zg_etl_spark.functions.sm_crypto import sm2_encrypt_hex, sm2_keypair
@@ -372,14 +364,13 @@ def _g4_fixture() -> dict:
     good = sm2_encrypt_hex(pub, (keys[0].hex() + ",x").encode())
     raw = bytearray(bytes.fromhex(good))
     raw[-1] ^= 0xFF  # flip a C2 byte → C3 MAC mismatch
-    _G4_MEMO.update(
+    return dict(
         d_hex=format(d, "x"),
         keys=keys,
         wrapped=wrapped,
         tampered=raw.hex(),
         not_a_point="04" + "11" * 96 + "22" * 16,
     )
-    return _G4_MEMO
 
 
 def _g4_make_encoder(fx: dict):

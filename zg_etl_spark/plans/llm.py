@@ -28,6 +28,8 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution
 
 from pyspark.sql import DataFrame, SparkSession
 
+from zg_etl_spark.session import materialize
+
 QUERIES: dict = {}
 ORACLE: dict = {}
 
@@ -232,51 +234,17 @@ class DD:
         return f"regexp_replace({col}, '{pattern}', '{repl}', 'g')"
 
 
-# bytes of source per partition the downstream per-row pipelines want:
-# sized for EXPRESSION work (md5-per-shingle minhash, array folds),
-# not scan bytes — small enough that a single-file table parallelizes
-# the CPU-heavy lanes, large enough that task scheduling doesn't
-# dominate. Interleaved A/B at sf0.1 (594 KB documents): the minhash
-# build read 2.8/0.85/0.94 s at 2 partitions vs 0.52/0.45/0.45 at 8,
-# and even the cheap map-only lanes improved slightly; 32 ≈ 8. The
-# earlier 512 KiB value under-parallelized exactly the builds that
-# matter (r11's 32-tasks-hurt measurement was the FLAT repartition on
-# sub-MB tables, which the size-derived count already avoids).
-_DOCS_PART_TARGET = 64 * 1024
-_DOCS_MEMO: dict = {}
-
-
 def _register_docs_views(spark: SparkSession, sf_dir: str) -> None:
     """documents/embeddings ship as ONE parquet file per table, which
     would serialize every per-row array/hash pipeline into a single task;
-    a round-robin repartition of the raw rows (cheap — thousands of rows)
-    parallelizes all downstream CPU. The count is SIZE-DERIVED, capped at
-    the core count (guide §2: partition counts must adapt to input scale,
-    not be a constant tuned for one deployment): tiny tables get a few
-    partitions instead of one-per-core, and a corpus whose native parquet
-    splits already reach the desired count is left alone — at 100 TB the
-    source is many files and the repartition never fires."""
-    import math
-    import os
+    a size-derived round-robin repartition of the raw rows (sources.tables
+    fan_out — cheap, thousands of rows) parallelizes all downstream CPU.
+    Each table is a registry entry: read, fanned out and materialized once
+    per (session, sf_dir), not re-read per query."""
+    from zg_etl_spark.sources.tables import fan_out
 
-    from zg_etl_spark.session import session_key
-    from zg_etl_spark.sources.tables import load_table
-
-    skey = session_key(spark)
-    cores = spark.sparkContext.defaultParallelism
     for t in ("documents", "embeddings"):
-        memo_key = (skey, sf_dir, t)
-        df = load_table(spark, sf_dir, t)
-        n_part = _DOCS_MEMO.get(memo_key)
-        if n_part is None:
-            size = os.path.getsize(os.path.join(sf_dir, t + ".parquet"))
-            want = max(1, min(cores, math.ceil(size / _DOCS_PART_TARGET)))
-            # 0 = native splits already parallel enough, never repartition
-            n_part = want if df.rdd.getNumPartitions() < want else 0
-            _DOCS_MEMO[memo_key] = n_part
-        if n_part:
-            df = df.repartition(n_part)
-        df.createOrReplaceTempView(t)
+        materialize(spark, sf_dir, t, lambda t=t: fan_out(spark, sf_dir, t))
 
 
 # Shared derived datasets (shingle sets, minhash signatures) referenced by
@@ -284,27 +252,13 @@ def _register_docs_views(spark: SparkSession, sf_dir: str) -> None:
 # clauses. Spark substitutes cached plans BEFORE CTE inlining, so a
 # `.cache()`d temp view inside a WITH body silently recomputes its whole
 # lineage per reference (measured: l4's 4 references re-ran the shingle
-# pipeline 4×). localCheckpoint truncates the lineage instead, so every
-# reference — CTE or not — scans the materialized partitions. Memoized per
-# (session, sf_dir): the suite builds each derived set once, as a real
-# deployment would persist it as a table.
-_VIEW_MEMO: dict = {}
-
-
+# pipeline 4×). A registry entry is localCheckpointed instead, so every
+# reference — CTE or not — scans the materialized partitions: the suite
+# builds each derived set once, as a real deployment would persist it as
+# a table.
 def _shared_view(spark: SparkSession, sf_dir: str, name: str, sql: str) -> None:
-    from zg_etl_spark.session import session_key
-
-    key = session_key(spark)
-    sf_views = _VIEW_MEMO.setdefault(key, {})
-    # base views are re-registered unconditionally: another query may have
-    # re-pointed `documents`/`embeddings` at a different sf_dir since the
-    # memoized build (registration is catalog-only, no job)
     _register_docs_views(spark, sf_dir)
-    if sf_views.get(name) == sf_dir:
-        return
-    df = spark.sql(sql).localCheckpoint(eager=True)
-    df.createOrReplaceTempView(name)
-    sf_views[name] = sf_dir
+    materialize(spark, sf_dir, name, lambda: spark.sql(sql))
 
 
 def _register(name: str, body_fn):
@@ -1233,27 +1187,6 @@ GROUP BY lang, rate_pct"""
 _register("l22_stratified_sample", _l22)
 
 
-def release_derived_views(spark: SparkSession) -> None:
-    """Drop this session's memoized derived-set views so their
-    checkpointed blocks can be reclaimed. Long-lived sessions that sweep
-    many scale factors (or run the full suite repeatedly) otherwise keep
-    localCheckpoint blocks for the whole session lifetime — measured as
-    late-suite slowdown in BASELINE.md.
-
-    localCheckpoint blocks bypass the CacheManager, so there is no
-    direct unpersist: dropping the temp views releases the last plan
-    references and Spark's ContextCleaner unpersists the orphaned RDDs
-    after a JVM GC (nudged here). A cluster deployment persists these
-    sets as tables and DROPs them instead."""
-    from zg_etl_spark.session import session_key
-
-    key = session_key(spark)
-    names = _VIEW_MEMO.pop(key, {})
-    for name in names:
-        spark.catalog.dropTempView(name)
-    spark.sparkContext._jvm.System.gc()
-
-
 # ---------------------------------------------------------------------------
 # L23 frame sampling as a declared query: every 4th fixed-size frame of
 # each media payload (operators/multimodal.py sample_frames — JVM-side
@@ -1408,23 +1341,16 @@ _register("l26_repetition_filter", _l26)
 # L27 dedup keep-list: the step after l16's connected components — keep
 # the canonical (min-doc-id) survivor of every near-dup group, drop the
 # rest, and report per-source retention. Reuses l16's propagation result
-# (memoized per session+SF: the groups relation is checkpointed once and
-# shared, so the bench pays the iterative join a single time).
+# (a registry entry: the groups relation is checkpointed once per
+# session and sf_dir and shared, so the bench pays the iterative join a
+# single time).
 # ---------------------------------------------------------------------------
-_l16_memo: dict = {}
-
-
 def _l16_groups(spark: SparkSession, sf_dir: str):
-    from zg_etl_spark.session import session_key
-
-    key = (session_key(spark), sf_dir)
-    if key not in _l16_memo:
-        _l16_memo[key] = _l16_run(spark, sf_dir).localCheckpoint(eager=True)
-    return _l16_memo[key]
+    return materialize(spark, sf_dir, "l16_groups", lambda: _l16_run(spark, sf_dir))
 
 
-# l16 itself serves from the same memo — the iterative propagation runs
-# once per (session, SF) no matter how many consumers ask
+# l16 itself serves from the same entry — the iterative propagation runs
+# once per (session, sf_dir) no matter how many consumers ask
 QUERIES["l16_dedup_groups"] = _l16_groups
 
 

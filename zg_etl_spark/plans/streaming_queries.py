@@ -27,6 +27,8 @@ from zg_etl_spark.operators.domain import (
     duck_pipeline_sql,
     spark_pipeline_df,
 )
+from zg_etl_spark.session import materialize
+from zg_etl_spark.sources.tables import table_bytes
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -69,11 +71,25 @@ def _write_seq_ordered_files(df: DataFrame, src_dir: str) -> None:
     _write_split_files([df.filter(df.seq <= mid), df.filter(df.seq > mid)], src_dir)
 
 
-# Each s-query streams a projection of the same spine; the seq-split
-# source files are deterministic per (session, sf_dir, sql), so write them
-# once and reuse across queries/reruns (dirs removed at process exit — a
-# deployment's source topic persists the same way).
-_SRC_MEMO: dict = {}
+def _source(spark: SparkSession, sf_dir: str, name: str, write) -> str:
+    """The stream-source dir ``name`` of sf_dir: ``write(src)`` fills a
+    fresh temp dir once per (session, sf_dir) and every s-query run reuses
+    it (a deployment's source topic persists the same way). The registry
+    removes the dir when the entry is released or the process exits."""
+
+    def build() -> str:
+        src = tempfile.mkdtemp(prefix=f"zg_{name}_")
+        try:
+            write(src)
+        except BaseException:
+            shutil.rmtree(src, ignore_errors=True)
+            raise
+        return src
+
+    return materialize(
+        spark, sf_dir, name, build,
+        cleanup=lambda src: shutil.rmtree(src, ignore_errors=True))
+
 
 # One state shard per this many bytes of stream-source input. Every
 # micro-batch pays a near-constant store-commit cost PER SHARD (load,
@@ -88,16 +104,9 @@ _STATE_SHARD_BYTES = 8 << 20
 
 
 def _stream_shards(spark: SparkSession, src: str) -> str:
-    try:
-        total = sum(
-            os.path.getsize(os.path.join(src, f))
-            for f in os.listdir(src)
-            if f.endswith(".parquet")
-        )
-    except OSError:
-        total = 0
     cap = spark.sparkContext.defaultParallelism
-    return str(max(2, min(total // _STATE_SHARD_BYTES + 1, cap)))
+    return str(max(2, min(table_bytes(src) // _STATE_SHARD_BYTES + 1, cap)))
+
 
 # One SUPERSET source serves every per-projection s-query: `resolved` is
 # row-for-row gate_ok (inner joins against mappings built FROM gate_ok),
@@ -112,25 +121,16 @@ _SUPERSET_SQL = (
 )
 
 
-def _seq_ordered_source(spark: SparkSession, sf_dir: str, sql: str) -> str:
-    from zg_etl_spark.session import session_key
-
-    key = (session_key(spark), sf_dir, sql)
-    if key in _SRC_MEMO:
-        return _SRC_MEMO[key]
-    import atexit
-
-    src = tempfile.mkdtemp(prefix="zg_stream_src_")
-    _write_seq_ordered_files(spark_pipeline_df(spark, sf_dir, sql), src)
-    atexit.register(shutil.rmtree, src, ignore_errors=True)
-    _SRC_MEMO[key] = src
-    return src
+def _seq_ordered_source(spark: SparkSession, sf_dir: str, name: str,
+                        sql: str) -> str:
+    return _source(spark, sf_dir, name, lambda src: _write_seq_ordered_files(
+        spark_pipeline_df(spark, sf_dir, sql), src))
 
 
 def _s1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.engine import start_identity_stream
 
-    src = _seq_ordered_source(spark, sf_dir, _SUPERSET_SQL)
+    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
     work = tempfile.mkdtemp(prefix="zg_stream_")
 
     # the per-batch shuffles here touch only distinct NEW devices (the
@@ -211,7 +211,7 @@ def _s2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.sinks import keep_latest
     from zg_etl_spark.streaming.sessions import sessionize
 
-    src = _seq_ordered_source(spark, sf_dir, _SUPERSET_SQL)
+    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
     work = tempfile.mkdtemp(prefix="zg_s2_")
     store = os.path.join(work, "session_store")
 
@@ -280,7 +280,7 @@ def _s3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from zg_etl_spark.streaming.engine import start_event_counts_stream
 
-    src = _seq_ordered_source(spark, sf_dir, _SUPERSET_SQL)
+    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
     work = tempfile.mkdtemp(prefix="zg_s3_")
 
     name = "s3_mem_" + _uuid.uuid4().hex[:8]
@@ -341,7 +341,7 @@ HAVING win_start + {_S3_WINDOW_MS} <= max_ct - {_S3_DELAY_MS}""")
 def _s4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.engine import start_route_stream
 
-    src = _seq_ordered_source(spark, sf_dir, _SUPERSET_SQL)
+    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
     work = tempfile.mkdtemp(prefix="zg_s4_")
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -395,7 +395,7 @@ JOIN event_dict ed ON ed.app_id = e.app_id AND ed.owner = e.owner_e
 def _s5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.engine import start_zgid_stream, zgid_result
 
-    src = _seq_ordered_source(spark, sf_dir, _SUPERSET_SQL)
+    src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
     work = tempfile.mkdtemp(prefix="zg_s5_")
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -456,16 +456,11 @@ def _s6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from zg_etl_spark.session import session_key
-
     body = (
         "SELECT app_id, did, seq, md5(CAST(seq AS STRING)) AS uuid FROM gate_ok"
     )
-    key = (session_key(spark), sf_dir, "s6_src")
-    if key not in _SRC_MEMO:
-        import atexit
 
-        src = tempfile.mkdtemp(prefix="zg_s6_src_")
+    def write(src: str) -> None:
         base = spark_pipeline_df(spark, sf_dir, body)
         mid = base.selectExpr("percentile_approx(seq, 0.5) AS m").first().m
         first_half = base.filter(base.seq <= mid)
@@ -480,10 +475,8 @@ def _s6(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             src,
         )
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        _SRC_MEMO[key] = src
 
-    src = _SRC_MEMO[key]
+    src = _source(spark, sf_dir, "s6_src", write)
     name = "s6_mem_" + _uuid.uuid4().hex[:8]
     work = tempfile.mkdtemp(prefix="zg_s6_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -543,14 +536,9 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from zg_etl_spark.session import session_key
     from zg_etl_spark.sources.tables import load_table
 
-    key = (session_key(spark), sf_dir, "s7_src")
-    if key not in _SRC_MEMO:
-        import atexit
-
-        src = tempfile.mkdtemp(prefix="zg_s7_src_")
+    def write(src: str) -> None:
         # engine contract: load_table normalizes events.ts to epoch-NANOS
         # BIGINT (sources/tables.py) — the split key and the source files
         # carry that; the stream derives a TIMESTAMP view for watermarks
@@ -582,10 +570,8 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
         _write_split_files(
             [base.filter(base.ts <= mid), base.filter(base.ts > mid)], src
         )
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        _SRC_MEMO[key] = src
 
-    src = _SRC_MEMO[key]
+    src = _source(spark, sf_dir, "s7_src", write)
     ev = (
         spark.readStream.schema(
             "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING"
@@ -677,17 +663,11 @@ FROM events c JOIN events p
 def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from zg_etl_spark.session import session_key
+    from zg_etl_spark.operators.domain import SPARK
+    from zg_etl_spark.plans.pipeline import b_user_rows_sql
     from zg_etl_spark.sinks import upsert_table
 
-    key = (session_key(spark), sf_dir, "s8_src")
-    if key not in _SRC_MEMO:
-        import atexit
-
-        from zg_etl_spark.operators.domain import SPARK
-        from zg_etl_spark.plans.pipeline import b_user_rows_sql
-
-        src = tempfile.mkdtemp(prefix="zg_s8_src_")
+    def write(src: str) -> None:
         base = spark_pipeline_df(
             spark, sf_dir, b_user_rows_sql(SPARK)
         ).localCheckpoint(eager=True)
@@ -715,10 +695,8 @@ def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             src,
         )
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        _SRC_MEMO[key] = src
 
-    src = _SRC_MEMO[key]
+    src = _source(spark, sf_dir, "s8_src", write)
     work = tempfile.mkdtemp(prefix="zg_s8_")
     path = os.path.join(work, "b_user_stream")
 
@@ -739,7 +717,7 @@ def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "seq BIGINT, _ds BOOLEAN"
             )
             .option("maxFilesPerTrigger", 1)
-            .parquet(_SRC_MEMO[key])
+            .parquet(src)
             .writeStream.foreachBatch(_sink)
             .option("checkpointLocation", os.path.join(work, "ckpt"))
             .trigger(availableNow=True)
@@ -791,17 +769,12 @@ def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from zg_etl_spark.operators.domain import SPARK
     from zg_etl_spark.plans.pipeline import _w9_obs_sql
-    from zg_etl_spark.session import session_key
     from zg_etl_spark.sinks import partial_upsert_table
 
-    key = (session_key(spark), sf_dir, "s9_src")
-    if key not in _SRC_MEMO:
-        import atexit
+    obs = materialize(spark, sf_dir, "s9_obs", lambda: spark_pipeline_df(
+        spark, sf_dir, _w9_obs_sql(SPARK)))
 
-        src = tempfile.mkdtemp(prefix="zg_s9_src_")
-        obs = spark_pipeline_df(
-            spark, sf_dir, _w9_obs_sql(SPARK)
-        ).localCheckpoint(eager=True)
+    def write(src: str) -> None:
         part = (
             obs.filter(F.col("seq") % 2 == 1)
             .select("app_id", "device_id", "language", "timezone",
@@ -826,10 +799,8 @@ def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
             [part.filter(part.seq <= mid), part.filter(part.seq > mid), dels],
             src,
         )
-        _SRC_MEMO[key] = (src, obs)
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
 
-    src, obs = _SRC_MEMO[key]
+    src = _source(spark, sf_dir, "s9_src", write)
     work = tempfile.mkdtemp(prefix="zg_s9_")
     path = os.path.join(work, "b_device_stream")
     # seed: the full-column creation write (w9 batch 1)
@@ -911,7 +882,7 @@ def _s10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.deep_convert import deep_convert_gate
 
     src = _seq_ordered_source(
-        spark, sf_dir,
+        spark, sf_dir, "s10_src",
         "SELECT app_id, lid, event_name, event_type, is_multi, "
         "CAST(purchase_window AS BIGINT) AS purchase_window, "
         "CAST(click_window AS BIGINT) AS click_window, "

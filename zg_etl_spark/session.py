@@ -17,9 +17,13 @@ same plan shapes survive a 1000-executor cluster:
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
+import threading
+from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -30,6 +34,74 @@ def session_key(spark: SparkSession) -> str:
     inherit the dead session's memoized views/paths. applicationId is
     unique per SparkContext lifetime."""
     return spark.sparkContext.applicationId
+
+
+# The session's materialization registry: every derived set a query
+# shares (spine stages, derived-set indexes, keyed slices, stream-source
+# dirs) is built once per (session, sf_dir, name), the way the
+# reference's Dw/Id stages persist each stage's output once for every
+# consumer. (session, sf_dir, name) -> (value, cleanup).
+_ENTRIES: dict[tuple[str, str | None, str], tuple[Any, Callable | None]] = {}
+_LOCK = threading.Lock()
+
+
+def materialize(
+    spark: SparkSession,
+    sf_dir: str | None,
+    name: str,
+    build: Callable[[], Any],
+    cleanup: Callable[[Any], None] | None = None,
+) -> Any:
+    """Return the entry ``name`` of ``sf_dir`` in this session, running
+    ``build()`` the first time it is asked for.
+
+    A DataFrame is localCheckpointed and registered as temp view ``name``:
+    lineage is cut, so every later reference (CTE or not) scans the
+    materialized partitions instead of re-deriving them. Any other value
+    is kept as returned. ``cleanup(value)`` runs when the entry is
+    released and at process exit.
+
+    One live sf_dir per session: asking for a different sf_dir releases
+    every entry of the old one (temp view dropped, references dropped so
+    the ContextCleaner frees the blocks, cleanup run). Entries with
+    ``sf_dir=None`` do not depend on the data and are never released this
+    way. Temp-view names are global per session, so this policy is what
+    keeps a view from ever pointing at another sf_dir's data."""
+    app = session_key(spark)
+    key = (app, sf_dir, name)
+    with _LOCK:
+        if key in _ENTRIES:
+            return _ENTRIES[key][0]
+        stale = [k for k in _ENTRIES if sf_dir is not None
+                 and k[0] == app and k[1] not in (None, sf_dir)]
+        for k in stale:
+            value, drop = _ENTRIES.pop(k)
+            if isinstance(value, DataFrame):
+                spark.catalog.dropTempView(k[2])
+            if drop is not None:
+                drop(value)
+    # built outside the lock: a build may ask for the entries it reads,
+    # and independent builds may run on concurrent threads
+    value = build()
+    if isinstance(value, DataFrame):
+        value = value.localCheckpoint(eager=True)
+        value.createOrReplaceTempView(name)
+    with _LOCK:
+        if not _ENTRIES:
+            # (re-)registered once the session is up, so it runs before
+            # the JVM gateway's own exit hook
+            atexit.unregister(_release_all)
+            atexit.register(_release_all)
+        _ENTRIES[key] = (value, cleanup)
+    return value
+
+
+def _release_all() -> None:
+    while _ENTRIES:
+        value, drop = _ENTRIES.popitem()[1]
+        if drop is not None:
+            with contextlib.suppress(Exception):
+                drop(value)
 
 
 def get_spark(

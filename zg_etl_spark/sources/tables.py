@@ -61,6 +61,44 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def table_bytes(path: str) -> int:
+    """Bytes of a parquet table: the file itself, or the summed part files
+    of a directory layout (hidden ``_``/``.`` files such as _SUCCESS and
+    .crc excluded). The size of a directory entry is its inode, not its
+    data, so it cannot stand in for the table."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path) if os.path.exists(path) else 0
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
+
+
+# bytes of source per task for the per-row pipelines that read the
+# single-file testdata tables: sized for EXPRESSION work (the spine's ~50
+# derived columns per event, md5-per-shingle minhash, array folds), not
+# scan bytes — small enough that a single-file table parallelizes the
+# CPU-heavy stages, large enough that task scheduling doesn't dominate.
+# Interleaved A/Bs at sf0.1: gated checkpoint 2.9 s at 1 partition, 0.9 s
+# at 8, 0.65 s at 32; minhash build 2.8/0.85/0.94 s at 2 partitions vs
+# 0.52/0.45/0.45 at 8.
+FAN_OUT_BYTES = 64 * 1024
+
+
+def fan_out(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """load_table, repartitioned to ~FAN_OUT_BYTES of source per task,
+    capped at the core count. A no-op when the native splits already
+    reach that count (at 100 TB the source is many files and this never
+    fires)."""
+    df = load_table(spark, sf_dir, name)
+    size = table_bytes(os.path.join(sf_dir, f"{name}.parquet"))
+    want = max(1, min(spark.sparkContext.defaultParallelism,
+                      -(-size // FAN_OUT_BYTES)))
+    return df.repartition(want) if df.rdd.getNumPartitions() < want else df
+
+
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
     """Pin the engine-internal contract events.ts = epoch-NANOS BIGINT.
 
