@@ -1132,8 +1132,6 @@ def _build_spine(spark, sf_dir: str) -> list[str]:
 
     from zg_etl_spark.sources.tables import fan_out
 
-    # events.ts is parquet TIMESTAMP(NANOS); read it as a nanos BIGINT
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the spine's first pass (feed -> gated) evaluates ~50 derived
     # columns per row (md5, regexps, string builds) — far heavier per
     # byte than a plain scan — and the testdata ships events as ONE

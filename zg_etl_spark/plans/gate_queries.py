@@ -59,24 +59,29 @@ def _wire_encode(event_id: pd.Series, event_type: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def _g1(spark: SparkSession, sf_dir: str) -> DataFrame:
+_WIRE_COLS = ("ip", "server_ts", "result", "error_code")
+
+
+def _decode_wire(spark: SparkSession, sf_dir: str, encode,
+                 cols: tuple = _WIRE_COLS) -> DataFrame:
+    """Every event wire-encoded by ``encode`` (a pandas UDF body over
+    event_id, event_type), decoded by resolve_wire, and projected to the
+    decoded (event_id, event_type) plus the envelope columns ``cols``."""
     from zg_etl_spark.operators.decode import resolve_wire
     from zg_etl_spark.sources.tables import load_table
 
-    # events.ts is parquet TIMESTAMP(NANOS); must be readable as bigint
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    enc = pandas_udf(_wire_encode, "string")
+    enc = pandas_udf(encode, "string")
     events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     raw = events.select(enc("event_id", "event_type").alias("raw"))
-    resolved = resolve_wire(raw)
-    return resolved.select(
+    return resolve_wire(raw).select(
         F.get_json_object("payload", "$.eid").cast("bigint").alias("event_id"),
         F.get_json_object("payload", "$.etype").alias("event_type"),
-        "ip",
-        "server_ts",
-        "result",
-        "error_code",
+        *cols,
     )
+
+
+def _g1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _decode_wire(spark, sf_dir, _wire_encode)
 
 
 QUERIES["g1_wire_roundtrip"] = _g1
@@ -149,28 +154,14 @@ def _g2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.operators.decode import (
         aes_cbc_decryptor,
         register_decryptor,
-        resolve_wire,
         sm4_ecb_decryptor,
     )
-    from zg_etl_spark.sources.tables import load_table
 
     # the key resolvers play the RSA/SM2 unwrap of Args.key — deployment
     # secrets in the reference, fixture constants here
     register_decryptor(1, aes_cbc_decryptor(lambda _k: (_G2_AES_KEY, _G2_AES_IV)))
     register_decryptor(2, sm4_ecb_decryptor(lambda _k: _G2_SM4_KEY))
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    enc = pandas_udf(_g2_encode, "string")
-    events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    raw = events.select(enc("event_id", "event_type").alias("raw"))
-    return resolve_wire(raw).select(
-        F.get_json_object("payload", "$.eid").cast("bigint").alias("event_id"),
-        F.get_json_object("payload", "$.etype").alias("event_type"),
-        "ip",
-        "server_ts",
-        "result",
-        "error_code",
-    )
+    return _decode_wire(spark, sf_dir, _g2_encode)
 
 
 QUERIES["g2_wire_crypto"] = _g2
@@ -292,27 +283,13 @@ def _g3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.operators.decode import (
         aes_cbc_decryptor,
         register_decryptor,
-        resolve_wire,
         rsa_key_unwrapper,
     )
-    from zg_etl_spark.sources.tables import load_table
 
     fx = _g3_fixture()
     register_decryptor(1, aes_cbc_decryptor(rsa_key_unwrapper(fx["der_b64"])))
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    enc = pandas_udf(_g3_make_encoder(fx), "string")
-    events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    raw = events.select(enc("event_id", "event_type").alias("raw"))
-    return resolve_wire(raw).select(
-        F.get_json_object("payload", "$.eid").cast("bigint").alias("event_id"),
-        F.get_json_object("payload", "$.etype").alias("event_type"),
-        "ip",
-        "server_ts",
-        "ua",
-        "result",
-        "error_code",
-    )
+    return _decode_wire(spark, sf_dir, _g3_make_encoder(fx),
+                        ("ip", "server_ts", "ua", "result", "error_code"))
 
 
 QUERIES["g3_rsa_unwrap"] = _g3
@@ -419,27 +396,13 @@ def _g4_make_encoder(fx: dict):
 def _g4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.operators.decode import (
         register_decryptor,
-        resolve_wire,
         sm2_key_unwrapper,
         sm4_ecb_decryptor,
     )
-    from zg_etl_spark.sources.tables import load_table
 
     fx = _g4_fixture()
     register_decryptor(2, sm4_ecb_decryptor(sm2_key_unwrapper(fx["d_hex"])))
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    enc = pandas_udf(_g4_make_encoder(fx), "string")
-    events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    raw = events.select(enc("event_id", "event_type").alias("raw"))
-    return resolve_wire(raw).select(
-        F.get_json_object("payload", "$.eid").cast("bigint").alias("event_id"),
-        F.get_json_object("payload", "$.etype").alias("event_type"),
-        "ip",
-        "server_ts",
-        "result",
-        "error_code",
-    )
+    return _decode_wire(spark, sf_dir, _g4_make_encoder(fx))
 
 
 QUERIES["g4_sm2_unwrap"] = _g4

@@ -932,16 +932,16 @@ _register("p19_event_highwater", _p19)
 # ---------------------------------------------------------------------------
 def _w1_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from zg_etl_spark.sinks import upsert_table
 
     rows = spark_pipeline_df(spark, sf_dir, b_user_rows_sql(SPARK))
     mid = rows.selectExpr("percentile_approx(seq, 0.5) AS m").first().m
-    work = tempfile.mkdtemp(prefix="zg_w1_")
-    path = os.path.join(work, "b_user")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zg_w1_", ignore_cleanup_errors=True
+    ) as work:
+        path = os.path.join(work, "b_user")
         for part in (rows.filter(rows.seq <= mid), rows.filter(rows.seq > mid)):
             upsert_table(
                 spark, part, path,
@@ -953,8 +953,6 @@ def _w1_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("app_id", "device_id", "zg_id", "user_id", "begin_date", "platform")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 QUERIES["w1_upsert_writer"] = _w1_run
@@ -1270,15 +1268,15 @@ _register("p24_app_first_seen", _p24)
 # ---------------------------------------------------------------------------
 def _w3_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from zg_etl_spark.sinks import NULL_TOKEN, export_stream_load_csv
 
     rows = spark_pipeline_df(spark, sf_dir, _p10(SPARK))
-    work = tempfile.mkdtemp(prefix="zg_w3_")
-    path = os.path.join(work, "b_user_csv")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zg_w3_", ignore_cleanup_errors=True
+    ) as work:
+        path = os.path.join(work, "b_user_csv")
         export_stream_load_csv(rows, path)
         schema = (
             "app_id BIGINT, device_id BIGINT, zg_id BIGINT, user_id BIGINT, "
@@ -1291,8 +1289,6 @@ def _w3_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(path)
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 QUERIES["w3_compat_csv_roundtrip"] = _w3_run
@@ -1341,7 +1337,6 @@ FROM gate_ok GROUP BY app_id, {DUCK.idiv('ct', '86400000')}"""
 
 def _w4_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from zg_etl_spark.sinks import write_partitioned
@@ -1353,9 +1348,10 @@ def _w4_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT app_id, {SPARK.idiv('ct', '86400000')} AS day_id, COUNT(*) AS n
 FROM gate_ok GROUP BY app_id, {SPARK.idiv('ct', '86400000')}""",
     ).localCheckpoint(eager=True)
-    work = tempfile.mkdtemp(prefix="zg_w4_")
-    path = os.path.join(work, "day_counts")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zg_w4_", ignore_cleanup_errors=True
+    ) as work:
+        path = os.path.join(work, "day_counts")
         write_partitioned(days, path, ["day_id"], mode="overwrite", dynamic=False)
         # the "correction" batch: latest day only, counts doubled — dynamic
         # overwrite must replace exactly that partition
@@ -1372,8 +1368,6 @@ FROM gate_ok GROUP BY app_id, {SPARK.idiv('ct', '86400000')}""",
             .select("app_id", "day_id", "n")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 QUERIES["w4_partition_overwrite"] = _w4_run
@@ -2250,7 +2244,6 @@ FROM gate_ok GROUP BY app_id, event_type""")
 def _w5_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
-    import shutil
     import tempfile
 
     days = spark_pipeline_df(
@@ -2259,9 +2252,10 @@ def _w5_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT app_id, did, seq, {SPARK.idiv('ct', '86400000')} AS day_id "
         "FROM gate_ok",
     )
-    work = tempfile.mkdtemp(prefix="zg_w5_")
-    frag, compact = os.path.join(work, "frag"), os.path.join(work, "compact")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zg_w5_", ignore_cleanup_errors=True
+    ) as work:
+        frag, compact = os.path.join(work, "frag"), os.path.join(work, "compact")
         # fragmented layout: 8 writer tasks each touch every day
         days.repartition(8).write.partitionBy("day_id").parquet(frag)
         fragmented = spark.read.parquet(frag)
@@ -2288,8 +2282,6 @@ def _w5_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .selectExpr("CAST(day_id AS BIGINT) AS day_id", "count AS n_rows")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -2315,7 +2307,6 @@ FROM gate_ok GROUP BY {DUCK.idiv('ct', '86400000')}""")
 # ---------------------------------------------------------------------------
 def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -2350,9 +2341,10 @@ def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         live.filter(F.col("zg_id") % 14 == 0)
         .withColumn("seq", F.col("seq") + F.lit(maxseq + 2))
     )
-    work = tempfile.mkdtemp(prefix="zg_w6_")
-    path = os.path.join(work, "b_user_ds")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zg_w6_", ignore_cleanup_errors=True
+    ) as work:
+        path = os.path.join(work, "b_user_ds")
         for batch in (
             live.filter(F.col("seq") <= mid),
             live.filter(F.col("seq") > mid).unionByName(dels),
@@ -2369,8 +2361,6 @@ def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "begin_date", "platform")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 QUERIES["w6_delete_sign"] = _w6_run
@@ -2392,7 +2382,6 @@ ORACLE["w6_delete_sign"] = duck_pipeline_sql(
 # ---------------------------------------------------------------------------
 def _w7_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -2406,9 +2395,10 @@ def _w7_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = base.filter(F.col("seq") % 2 == 1).withColumn(
         "vip_level", F.col("zg_id") % 5
     )
-    work = tempfile.mkdtemp(prefix="zg_w7_")
-    path = os.path.join(work, "b_user_evo")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zg_w7_", ignore_cleanup_errors=True
+    ) as work:
+        path = os.path.join(work, "b_user_evo")
         for batch in (b1, b2):
             upsert_table(
                 spark, batch, path,
@@ -2421,8 +2411,6 @@ def _w7_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "begin_date", "platform", "vip_level")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 QUERIES["w7_schema_evolution"] = _w7_run
@@ -2447,7 +2435,6 @@ FROM (
 # ---------------------------------------------------------------------------
 def _w8_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -2460,9 +2447,10 @@ def _w8_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT app_id, did, seq, {SPARK.idiv('ct', '86400000')} AS day_id "
         "FROM gate_ok",
     )
-    work = tempfile.mkdtemp(prefix="zg_w8_")
-    path = os.path.join(work, "events_by_day")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zg_w8_", ignore_cleanup_errors=True
+    ) as work:
+        path = os.path.join(work, "events_by_day")
         write_partitioned(days, path, ["day_id"], dynamic=False)
         max_day = days.agg(F.max("day_id")).first()[0]  # single-scalar collect
         drop_expired_partitions(spark, path, "day_id", int(max_day) - 3)
@@ -2473,8 +2461,6 @@ def _w8_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .selectExpr("CAST(day_id AS BIGINT) AS day_id", "count AS n_rows")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 QUERIES["w8_retention_sweep"] = _w8_run
@@ -2515,7 +2501,6 @@ FROM resolved WHERE dt = 'pl'"""
 
 def _w9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -2540,9 +2525,10 @@ def _w9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             "TRUE AS _ds",
         )
     )
-    work = tempfile.mkdtemp(prefix="zg_w9_")
-    path = os.path.join(work, "b_device_partial")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zg_w9_", ignore_cleanup_errors=True
+    ) as work:
+        path = os.path.join(work, "b_device_partial")
         partial_upsert_table(
             spark, seed, path, keys=["app_id", "device_id"], order_col="seq",
             update_cols=["device_model", "language", "timezone",
@@ -2565,8 +2551,6 @@ def _w9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "timezone", "last_update_date")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 QUERIES["w9_partial_upsert"] = _w9_run

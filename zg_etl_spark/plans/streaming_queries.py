@@ -7,10 +7,14 @@ order per app — proven equivalent in tests/test_streaming.py). That lets a
 REAL Structured Streaming run be checked against a plain SQL oracle: the
 stream's merged mapping table must equal the batch `did_ids` stage.
 
-s1 runs readStream (file source, maxFilesPerTrigger=1, availableNow) over
-gate-ok events split into two seq-ordered files → foreachBatch incremental
-identity → the final mapping store, and the DuckDB oracle is just
+s1 replays gate-ok events split into two seq-ordered files (one file per
+micro-batch, availableNow) → foreachBatch incremental identity → the final
+mapping store, and the DuckDB oracle is just
 `SELECT app_id, did, zg_did FROM did_ids`.
+
+Every s-query is one ``_replay`` run: a ``start(work)`` that starts the
+stream with its checkpoint and sink state under a scratch dir, and a
+``read(work)`` that reads the result back.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from zg_etl_spark.operators.domain import (
 )
 from zg_etl_spark.session import materialize
 from zg_etl_spark.sources.tables import table_bytes
+from zg_etl_spark.streaming.engine import file_stream, start_available_now
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -54,15 +59,6 @@ def _write_split_files(parts: list[DataFrame], src_dir: str) -> None:
 
     with ThreadPoolExecutor(max_workers=max(len(parts), 1)) as ex:
         list(ex.map(write_one, enumerate(parts)))
-
-
-def _await_done(q, timeout_s: int = 300) -> None:
-    """availableNow runs MUST finish inside the timeout: ignoring the
-    False return would read a partial result from the sink and delete
-    the checkpoint under a live query."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(f"streaming query did not finish in {timeout_s}s")
 
 
 def _write_seq_ordered_files(df: DataFrame, src_dir: str) -> None:
@@ -108,6 +104,60 @@ def _stream_shards(spark: SparkSession, src: str) -> str:
     return str(max(2, min(table_bytes(src) // _STATE_SHARD_BYTES + 1, cap)))
 
 
+_REPLAY_TIMEOUT_S = 300
+
+
+def _replay(spark: SparkSession, src: str, start, read) -> DataFrame:
+    """One availableNow run over the stream source ``src``.
+
+    ``start(work)`` starts the query with its checkpoint and sink state
+    under the scratch dir ``work``; ``read(work)`` returns the result,
+    which is checkpointed before the dir goes. The query starts with
+    ``spark.sql.shuffle.partitions`` at ``_stream_shards`` (a stateful
+    query freezes its state-shard count at start), and the session value
+    is back before ``read`` runs. The run must finish inside
+    ``_REPLAY_TIMEOUT_S``: reading a partial sink under a live query
+    would return a wrong answer. On every exit path the query is
+    stopped, the setting restored, ``work`` removed and the memory-sink
+    view (the query's name) dropped — the memory sink holds every
+    emitted row on the driver until then."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    q = None
+    with tempfile.TemporaryDirectory(
+        prefix="zg_replay_", ignore_cleanup_errors=True
+    ) as work:
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
+            try:
+                q = start(work)
+                if not q.awaitTermination(_REPLAY_TIMEOUT_S):
+                    raise RuntimeError(
+                        f"streaming query did not finish in {_REPLAY_TIMEOUT_S}s"
+                    )
+            finally:
+                if q is not None and q.isActive:
+                    q.stop()
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+            return read(work).localCheckpoint(eager=True)
+        finally:
+            if q is not None and q.name:
+                spark.catalog.dropTempView(q.name)
+
+
+def _replay_to_memory(spark: SparkSession, src: str, stream: DataFrame,
+                      name: str) -> DataFrame:
+    """``_replay`` of an append-mode ``stream`` into the memory sink
+    ``name``; the result is the sink's rows."""
+    return _replay(
+        spark, src,
+        lambda work: start_available_now(
+            stream.writeStream.outputMode("append").format("memory").queryName(name),
+            os.path.join(work, "ckpt"),
+        ),
+        lambda work: spark.table(name),
+    )
+
+
 # One SUPERSET source serves every per-projection s-query: `resolved` is
 # row-for-row gate_ok (inner joins against mappings built FROM gate_ok),
 # and a parquet file stream read with a SUBSET schema prunes columns at
@@ -128,18 +178,12 @@ def _seq_ordered_source(spark: SparkSession, sf_dir: str, name: str,
 
 
 def _s1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zg_etl_spark.streaming.engine import start_identity_stream
+    from zg_etl_spark.streaming.engine import MappingStore, start_identity_stream
 
     src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_stream_")
 
-    # the per-batch shuffles here touch only distinct NEW devices (the
-    # event-side joins are broadcast) — a handful of shards beats paying
-    # 32-task scheduling overhead per micro-batch job on tiny state
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = start_identity_stream(
+    def start(work: str):
+        return start_identity_stream(
             spark,
             source_dir=src,
             schema="event_id BIGINT, app_id BIGINT, did STRING, ct BIGINT, seq BIGINT",
@@ -147,23 +191,18 @@ def _s1(spark: SparkSession, sf_dir: str) -> DataFrame:
             output_path=os.path.join(work, "out"),
             checkpoint_dir=os.path.join(work, "ckpt"),
         )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # the merged mapping store IS the result; localCheckpoint detaches it
-    # from the temp dir before cleanup
-    from zg_etl_spark.streaming.engine import MappingStore
 
-    result = (
-        MappingStore(
-            spark, os.path.join(work, "store"), key_col="did", id_col="zg_did"
+    def read(work: str) -> DataFrame:
+        # the merged mapping store IS the result
+        return (
+            MappingStore(
+                spark, os.path.join(work, "store"), key_col="did", id_col="zg_did"
+            )
+            .read()
+            .select("app_id", "did", "zg_did")
         )
-        .read()
-        .select("app_id", "did", "zg_did")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+
+    return _replay(spark, src, start, read)
 
 
 QUERIES["s1_streaming_identity"] = _s1
@@ -212,50 +251,34 @@ def _s2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.sessions import sessionize
 
     src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_s2_")
-    store = os.path.join(work, "session_store")
 
-    stream = (
-        spark.readStream.schema("app_id BIGINT, zg_did BIGINT, ct BIGINT, seq BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    def start(work: str):
+        store = os.path.join(work, "session_store")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # O(changed-sessions) append per batch — never a store rewrite
-        batch_df.withColumn("_b", F.lit(batch_id)).write.mode("append").parquet(store)
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            # O(changed-sessions) append per batch — never a store rewrite
+            batch_df.withColumn("_b", F.lit(batch_id)).write.mode("append").parquet(store)
 
-    # the state-store partition count is frozen from shuffle.partitions at
-    # query start; per-partition store commit cost dominates at this volume,
-    # so the stateful query runs with a handful of state shards (a real
-    # deployment sizes this to active-entity count / executor count)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
+        stream = file_stream(
+            spark, src, "app_id BIGINT, zg_did BIGINT, ct BIGINT, seq BIGINT"
+        )
+        return start_available_now(
             sessionize(stream, gap_ms=_SESSION_GAP_MS)
             .writeStream.outputMode("update")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .foreachBatch(sink),
+            os.path.join(work, "ckpt"),
         )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # final state per session = the latest batch's emission (sessions only
-    # grow, so last write wins) — UNIQUE-KEY read-time merge
-    result = (
-        keep_latest(
-            spark.read.parquet(store),
+
+    def read(work: str) -> DataFrame:
+        # final state per session = the latest batch's emission (sessions
+        # only grow, so last write wins) — UNIQUE-KEY read-time merge
+        return keep_latest(
+            spark.read.parquet(os.path.join(work, "session_store")),
             ["app_id", "zg_did", "session_start"],
             "_b",
-        )
-        .select("app_id", "zg_did", "session_start", "session_end", "n_events")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+        ).select("app_id", "zg_did", "session_start", "session_end", "n_events")
+
+    return _replay(spark, src, start, read)
 
 
 QUERIES["s2_streaming_sessions"] = _s2
@@ -274,48 +297,32 @@ _S3_DELAY_MS = 7_200_000       # 2 hour watermark delay
 
 
 def _s3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     from zg_etl_spark.streaming.engine import start_event_counts_stream
 
     src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_s3_")
 
-    name = "s3_mem_" + _uuid.uuid4().hex[:8]
-    # windowed-agg state is (windows × apps × event types) — a few
-    # thousand rows; 8 state shards, not 32 (same sizing rule as s1/s2)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = start_event_counts_stream(
+    def start(work: str):
+        return start_event_counts_stream(
             spark,
             source_dir=src,
             schema="app_id BIGINT, event_type STRING, ct BIGINT, seq BIGINT",
             checkpoint_dir=os.path.join(work, "ckpt"),
-            query_name=name,
+            query_name="s3_mem",
             window_duration="1 hour",
             watermark_delay="2 hours",
         )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = (
-        spark.table(name)
-        .select(
+
+    def read(work: str) -> DataFrame:
+        return spark.table("s3_mem").select(
             (F.unix_millis(F.col("win.start"))).alias("win_start"),
             "app_id",
             "event_type",
             F.col("count").alias("n"),
         )
-        .localCheckpoint(eager=True)
-    )
-    # the memory sink holds every emitted row on the driver until the
-    # table is dropped; the checkpointed result no longer needs it
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+
+    return _replay(spark, src, start, read)
 
 
 QUERIES["s3_streaming_counts"] = _s3
@@ -342,12 +349,9 @@ def _s4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.engine import start_route_stream
 
     src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_s4_")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = start_route_stream(
+    def start(work: str):
+        return start_route_stream(
             spark,
             source_dir=src,
             schema=(
@@ -360,19 +364,14 @@ def _s4(spark: SparkSession, sf_dir: str) -> DataFrame:
             output_path=os.path.join(work, "out"),
             checkpoint_dir=os.path.join(work, "ckpt"),
         )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = (
-        spark.read.parquet(os.path.join(work, "out"))
-        .select(
+
+    def read(work: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(work, "out")).select(
             "event_id", "app_id", "did", "zg_did", "owner", "event_name",
             "zg_eid", "ct",
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+
+    return _replay(spark, src, start, read)
 
 
 QUERIES["s4_streaming_route"] = _s4
@@ -396,12 +395,10 @@ def _s5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zg_etl_spark.streaming.engine import start_zgid_stream, zgid_result
 
     src = _seq_ordered_source(spark, sf_dir, "stream_src", _SUPERSET_SQL)
-    work = tempfile.mkdtemp(prefix="zg_s5_")
+    stores = []
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q, dev_store, uid_store, bind_store = start_zgid_stream(
+    def start(work: str):
+        q, *run_stores = start_zgid_stream(
             spark,
             source_dir=src,
             schema="event_id BIGINT, app_id BIGINT, did STRING, cuid STRING, seq BIGINT",
@@ -410,14 +407,10 @@ def _s5(spark: SparkSession, sf_dir: str) -> DataFrame:
             bind_store_path=os.path.join(work, "bind"),
             checkpoint_dir=os.path.join(work, "ckpt"),
         )
-        _await_done(q)
-        result = zgid_result(dev_store, uid_store, bind_store).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+        stores.extend(run_stores)
+        return q
+
+    return _replay(spark, src, start, lambda work: zgid_result(*stores))
 
 
 QUERIES["s5_streaming_zgid"] = _s5
@@ -452,8 +445,6 @@ ORACLE["s5_streaming_zgid"] = duck_pipeline_sql(
 # the state metric stays bounded.
 # ---------------------------------------------------------------------------
 def _s6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     body = (
@@ -477,39 +468,16 @@ def _s6(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = _source(spark, sf_dir, "s6_src", write)
-    name = "s6_mem_" + _uuid.uuid4().hex[:8]
-    work = tempfile.mkdtemp(prefix="zg_s6_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            spark.readStream.schema(
-                "app_id BIGINT, did STRING, seq BIGINT, uuid STRING"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            # seq = ct_ms * 1e6 + event_id (operators/domain.py feed), so
-            # seq DIV 1e6 recovers the event time the watermark rides on
-            .withColumn(
-                "event_ts", F.timestamp_millis(F.expr("seq DIV 1000000"))
-            )
-            .withWatermark("event_ts", f"{VALID_PAST_MS // 86_400_000} days")
-            .dropDuplicatesWithinWatermark(["uuid"])
-            .select("app_id", "did", "seq", "uuid")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)  # free the driver-held sink rows
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+    deduped = (
+        file_stream(spark, src, "app_id BIGINT, did STRING, seq BIGINT, uuid STRING")
+        # seq = ct_ms * 1e6 + event_id (operators/domain.py feed), so
+        # seq DIV 1e6 recovers the event time the watermark rides on
+        .withColumn("event_ts", F.timestamp_millis(F.expr("seq DIV 1000000")))
+        .withWatermark("event_ts", f"{VALID_PAST_MS // 86_400_000} days")
+        .dropDuplicatesWithinWatermark(["uuid"])
+        .select("app_id", "did", "seq", "uuid")
+    )
+    return _replay_to_memory(spark, src, deduped, "s6_mem")
 
 
 QUERIES["s6_streaming_dedup"] = _s6
@@ -532,8 +500,6 @@ ORACLE["s6_streaming_dedup"] = duck_pipeline_sql(
 # boundary into batch-1 click state.
 # ---------------------------------------------------------------------------
 def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     from zg_etl_spark.sources.tables import load_table
@@ -572,12 +538,8 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = _source(spark, sf_dir, "s7_src", write)
-    ev = (
-        spark.readStream.schema(
-            "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    ev = file_stream(
+        spark, src, "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING"
     )
     # s7's semantics are defined at MICROsecond precision end-to-end
     # (join bounds AND delay from the same truncated micros): the oracle
@@ -616,27 +578,7 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "p_us - click_us AS delay_us",
     )
-
-    name = "s7_mem_" + _uuid.uuid4().hex[:8]
-    work = tempfile.mkdtemp(prefix="zg_s7_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)  # free the driver-held sink rows
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+    return _replay_to_memory(spark, src, joined, "s7_mem")
 
 
 QUERIES["s7_stream_stream_join"] = _s7
@@ -697,43 +639,33 @@ def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = _source(spark, sf_dir, "s8_src", write)
-    work = tempfile.mkdtemp(prefix="zg_s8_")
-    path = os.path.join(work, "b_user_stream")
 
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert_table(
-            spark, batch_df, path,
-            keys=["app_id", "device_id", "zg_id"], order_col="seq",
-            partition_cols=["app_id"], delete_col="_ds",
-        )
+    def start(work: str):
+        path = os.path.join(work, "b_user_stream")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            spark.readStream.schema(
-                "app_id BIGINT, device_id BIGINT, zg_id BIGINT, "
-                "user_id BIGINT, begin_date BIGINT, platform INT, "
-                "seq BIGINT, _ds BOOLEAN"
+        def sink(batch_df: DataFrame, _batch_id: int) -> None:
+            upsert_table(
+                spark, batch_df, path,
+                keys=["app_id", "device_id", "zg_id"], order_col="seq",
+                partition_cols=["app_id"], delete_col="_ds",
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+
+        stream = file_stream(
+            spark, src,
+            "app_id BIGINT, device_id BIGINT, zg_id BIGINT, "
+            "user_id BIGINT, begin_date BIGINT, platform INT, "
+            "seq BIGINT, _ds BOOLEAN",
         )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = (
-        spark.read.parquet(path)
-        .select("app_id", "device_id", "zg_id", "user_id",
-                "begin_date", "platform")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+        return start_available_now(
+            stream.writeStream.foreachBatch(sink), os.path.join(work, "ckpt")
+        )
+
+    def read(work: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(work, "b_user_stream")).select(
+            "app_id", "device_id", "zg_id", "user_id", "begin_date", "platform"
+        )
+
+    return _replay(spark, src, start, read)
 
 
 def _s8_oracle() -> str:
@@ -801,52 +733,43 @@ def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = _source(spark, sf_dir, "s9_src", write)
-    work = tempfile.mkdtemp(prefix="zg_s9_")
-    path = os.path.join(work, "b_device_stream")
-    # seed: the full-column creation write (w9 batch 1)
-    partial_upsert_table(
-        spark, obs.filter(F.col("seq") % 2 == 0), path,
-        keys=["app_id", "device_id"], order_col="seq",
-        update_cols=["device_model", "language", "timezone",
-                     "last_update_date"],
-        partition_cols=["app_id"],
-    )
 
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
+    def start(work: str):
+        path = os.path.join(work, "b_device_stream")
+        # seed: the full-column creation write (w9 batch 1)
         partial_upsert_table(
-            spark, batch_df, path,
+            spark, obs.filter(F.col("seq") % 2 == 0), path,
             keys=["app_id", "device_id"], order_col="seq",
-            update_cols=["language", "timezone", "last_update_date"],
-            delete_col="_ds", partition_cols=["app_id"],
+            update_cols=["device_model", "language", "timezone",
+                         "last_update_date"],
+            partition_cols=["app_id"],
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            spark.readStream.schema(
-                "app_id BIGINT, device_id BIGINT, language STRING, "
-                "timezone STRING, last_update_date BIGINT, seq BIGINT, "
-                "_ds BOOLEAN"
+        def sink(batch_df: DataFrame, _batch_id: int) -> None:
+            partial_upsert_table(
+                spark, batch_df, path,
+                keys=["app_id", "device_id"], order_col="seq",
+                update_cols=["language", "timezone", "last_update_date"],
+                delete_col="_ds", partition_cols=["app_id"],
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+
+        stream = file_stream(
+            spark, src,
+            "app_id BIGINT, device_id BIGINT, language STRING, "
+            "timezone STRING, last_update_date BIGINT, seq BIGINT, "
+            "_ds BOOLEAN",
         )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = (
-        spark.read.parquet(path)
-        .select("app_id", "device_id", "device_model", "language",
-                "timezone", "last_update_date")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+        return start_available_now(
+            stream.writeStream.foreachBatch(sink), os.path.join(work, "ckpt")
+        )
+
+    def read(work: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(work, "b_device_stream")).select(
+            "app_id", "device_id", "device_model", "language", "timezone",
+            "last_update_date",
+        )
+
+    return _replay(spark, src, start, read)
 
 
 QUERIES["s9_stream_partial_upsert"] = _s9
@@ -889,44 +812,31 @@ def _s10(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ct, seq, touch_ct, touch_k "
         f"FROM ({p49_candidates_sql(SPARK)}) q",
     )
-    work = tempfile.mkdtemp(prefix="zg_s10_")
-    store = os.path.join(work, "decisions")
+    gated = deep_convert_gate(file_stream(
+        spark, src,
+        "app_id BIGINT, lid BIGINT, event_name STRING, "
+        "event_type STRING, is_multi BOOLEAN, "
+        "purchase_window BIGINT, click_window BIGINT, "
+        "ct BIGINT, seq BIGINT, touch_ct BIGINT, touch_k BIGINT",
+    ))
 
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(store)
+    def start(work: str):
+        store = os.path.join(work, "decisions")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-    try:
-        q = (
-            spark.readStream.schema(
-                "app_id BIGINT, lid BIGINT, event_name STRING, "
-                "event_type STRING, is_multi BOOLEAN, "
-                "purchase_window BIGINT, click_window BIGINT, "
-                "ct BIGINT, seq BIGINT, touch_ct BIGINT, touch_k BIGINT"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        def sink(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode("append").parquet(store)
+
+        return start_available_now(
+            gated.writeStream.outputMode("append").foreachBatch(sink),
+            os.path.join(work, "ckpt"),
         )
-        q = (
-            deep_convert_gate(q)
-            .writeStream.outputMode("append")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_done(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    spark.read.parquet(store).createOrReplaceTempView("s10_decisions")
-    result = spark.sql(
-        p49_final_sql(SPARK, "SELECT * FROM s10_decisions")
-    ).localCheckpoint(eager=True)
-    spark.catalog.dropTempView("s10_decisions")
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+    def read(work: str) -> DataFrame:
+        # a path relation, not a temp view: nothing session-global to drop
+        decisions = os.path.join(work, "decisions")
+        return spark.sql(p49_final_sql(SPARK, f"SELECT * FROM parquet.`{decisions}`"))
+
+    return _replay(spark, src, start, read)
 
 
 QUERIES["s10_streaming_deep_convert"] = _s10

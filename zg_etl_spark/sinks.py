@@ -215,8 +215,7 @@ def _commit_touched_partitions(
     par = spark.sparkContext.defaultParallelism
     if touched is not None and len(touched) >= par:
         merged = merged.repartition(par, *[F.col(c) for c in partition_cols])
-    staging = tempfile.mkdtemp(prefix="_zg_stage_", dir=os.path.dirname(path))
-    try:
+    with _staging_dir(path) as staging:
         write_partitioned(merged, staging, partition_cols, dynamic=False)
         staged = _staged_partition_dirs(staging, partition_cols)
         _clear_empty_placeholder(path, partition_cols)
@@ -234,21 +233,24 @@ def _commit_touched_partitions(
             if rel not in staged_set:
                 shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
         _ensure_readable(path, partition_cols, merged)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _staging_dir(path: str) -> tempfile.TemporaryDirectory:
+    """A scratch sibling of ``path`` (same filesystem, so the commit's
+    ``os.replace`` is a rename), removed when the ``with`` exits."""
+    return tempfile.TemporaryDirectory(
+        prefix="_zg_stage_", dir=os.path.dirname(path), ignore_cleanup_errors=True
+    )
 
 
 def _swap_unpartitioned(merged: DataFrame, path: str) -> None:
     """Unpartitioned variant of the staged commit: write once to a sibling
     staging dir, swap the whole table directory."""
-    staging = tempfile.mkdtemp(prefix="_zg_stage_", dir=os.path.dirname(path))
-    try:
+    with _staging_dir(path) as staging:
         out = os.path.join(staging, "t")
         merged.write.parquet(out)
         shutil.rmtree(path, ignore_errors=True)
         os.replace(out, path)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _has_partition_dirs(path: str, partition_cols: list[str]) -> bool:

@@ -116,15 +116,3 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     if dt in ("timestamp_ntz", "timestamp"):
         df = df.withColumn("ts", F.unix_micros(F.col("ts").cast("timestamp")) * 1000)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the SQL surface)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

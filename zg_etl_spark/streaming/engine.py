@@ -27,6 +27,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.window import Window
 
 DEVICE_ID_OFFSET = 100_000  # same namespace as batch did_ids (domain.py)
@@ -229,6 +230,29 @@ def incremental_device_ids(
     )
 
 
+def file_stream(spark: SparkSession, source_dir: str, schema: str) -> DataFrame:
+    """The ordered file source every stream replays: one file per
+    micro-batch. Run under availableNow (``start_available_now``) it
+    gives ordered, bounded micro-batches — the batch analog of the
+    reference's Kafka consumption; a Kafka deployment swaps
+    ``format("kafka")`` + ``from_json`` in, nothing else changes."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
+    )
+
+
+def start_available_now(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``writer`` checkpointed at ``checkpoint_dir``, processing
+    every source file present at start and then terminating."""
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def start_identity_stream(
     spark: SparkSession,
     source_dir: str,
@@ -236,15 +260,11 @@ def start_identity_stream(
     store_path: str,
     output_path: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ):
     """File-source stream → per-batch identity resolution → parquet sink.
 
-    availableNow + maxFilesPerTrigger gives ordered, bounded micro-batches
-    (the batch analog of the reference's Kafka consumption; a Kafka
-    deployment swaps ``format("kafka")`` + ``from_json`` in, nothing else
-    changes). Exactly-once: checkpoint + idempotent overwrite-by-batch-id
-    output layout.
+    Exactly-once: checkpoint + idempotent overwrite-by-batch-id output
+    layout.
     """
     store = MappingStore(spark, store_path, key_col="did", id_col="zg_did")
 
@@ -254,14 +274,9 @@ def start_identity_stream(
             os.path.join(output_path, f"batch_id={batch_id}")
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        file_stream(spark, source_dir, schema).writeStream.foreachBatch(process),
+        checkpoint_dir,
     )
 
 
@@ -283,9 +298,7 @@ def start_event_counts_stream(
     Flink job never had.
     """
     src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+        file_stream(spark, source_dir, schema)
         .withColumn("event_time", F.timestamp_millis(F.col("ct")))
         .withWatermark("event_time", watermark_delay)
     )
@@ -294,13 +307,9 @@ def start_event_counts_stream(
         F.col("app_id"),
         F.col("event_type"),
     ).count()
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        agg.writeStream.outputMode("append").format("memory").queryName(query_name),
+        checkpoint_dir,
     )
 
 
@@ -388,14 +397,9 @@ def start_route_stream(
             os.path.join(output_path, f"batch_id={batch_id}")
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        file_stream(spark, source_dir, schema).writeStream.foreachBatch(process),
+        checkpoint_dir,
     )
 
 
@@ -480,14 +484,9 @@ def start_zgid_stream(
                       ex.submit(merge_bind)]:
                 f.result()
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    q = start_available_now(
+        file_stream(spark, source_dir, schema).writeStream.foreachBatch(process),
+        checkpoint_dir,
     )
     return q, dev_store, uid_store, bind_store
 
