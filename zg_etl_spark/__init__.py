@@ -5,6 +5,8 @@ data-processing capabilities of the reference event-analytics ETL
 Layout:
     session     SparkSession factory tuned for local[32] testing and
                 cluster-scale defaults (AQE, shuffle partitions, Arrow).
+    dialect     the one Spark/DuckDB SQL dialect (SPARK engine, DUCK oracle)
+                every template renders through.
     sources     table loaders / registry (parquet today, Kafka+stream later).
     functions   scalar function library + the virtual-attribute SQL-subset
                 expression compiler (reference operator/id/virtualAttribute/).

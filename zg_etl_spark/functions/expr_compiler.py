@@ -157,6 +157,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field as dc_field
 
+from zg_etl_spark.dialect import DUCK, SPARK, Dialect
+
 AGGREGATES = {
     "sum",
     "avg",
@@ -510,34 +512,12 @@ def returns_boolean(node: Node) -> bool:
 # weakly-typed (stringly) fields get coerced at use sites, exactly like the
 # reference's dynamic coercion (numeric-first equality, BigDecimal math).
 # ---------------------------------------------------------------------------
-_JAVA_TO_STRF = [
-    ("yyyy", "%Y"),
-    ("MM", "%m"),
-    ("dd", "%d"),
-    ("HH", "%H"),
-    ("mm", "%M"),
-    ("ss", "%S"),
-]
-
-
-def java_fmt_to_strftime(fmt: str) -> str:
-    out = fmt
-    for i, (java, strf) in enumerate(_JAVA_TO_STRF):
-        out = out.replace(java, f"\x00{i}\x00")
-    for i, (java, strf) in enumerate(_JAVA_TO_STRF):
-        out = out.replace(f"\x00{i}\x00", strf)
-    return out
-
-
-def _sql_str(value: str) -> str:
-    return "'" + value.replace("'", "''") + "'"
-
-
 class Emitter:
     """Base emitter. ``field_resolver(name, hint)`` maps an identifier to a
-    SQL fragment; hint ∈ {'any','number','string','timestamp'}."""
+    SQL fragment; hint ∈ {'any','number','string','timestamp'}. String
+    literals — rule constants included — render through ``d.lit``."""
 
-    dialect = "base"
+    d: Dialect
 
     def __init__(self, field_resolver=None, now_literal: str | None = None):
         self.resolve = field_resolver or (lambda name, hint: name)
@@ -545,7 +525,7 @@ class Emitter:
 
     # --- dialect hooks -----------------------------------------------------
     def cast_num(self, frag: str) -> str:
-        raise NotImplementedError
+        return f"CAST({frag} AS DOUBLE)"
 
     def try_num(self, frag: str) -> str:
         """Force an operand into double space WITHOUT the abort-on-bad
@@ -654,7 +634,7 @@ class Emitter:
                 return f"CAST({v!r} AS DOUBLE)"
             if v.strip() == "":
                 return "CAST(0.0 AS DOUBLE)"
-            return self.try_num(_sql_str(v))
+            return self.try_num(self.d.lit(v))
         if self._ts_operand(node) is not None:
             # LocalDateTime / DateTimeResult in numeric space → throw
             return "CAST(NULL AS DOUBLE)"
@@ -741,7 +721,7 @@ class Emitter:
                 f"ELSE {frag} END)")
 
     def cast_str(self, frag: str) -> str:
-        raise NotImplementedError
+        return self.d.s(frag)
 
     def rlike(self, frag: str, pattern: str) -> str:
         """Anchored regex test over a string fragment."""
@@ -871,7 +851,7 @@ class Emitter:
         h24 = form.endswith("_h24")
         rx_date = f"^([0-9]{{4}}){sep}([0-9]{{1,2}}){sep}([0-9]{{1,2}})"
         g = lambda i, rx: (  # noqa: E731 — local shorthand
-            f"CAST(regexp_extract({frag}, {_sql_str(rx)}, {i}) AS INT)")
+            f"CAST(regexp_extract({frag}, {self.d.lit(rx)}, {i}) AS INT)")
         y, mo, dd = (g(1, rx_date), g(2, rx_date), g(3, rx_date))
         clamp_day = f"LEAST({dd}, day(last_day(make_date({y}, {mo}, 1))))"
         date_ok = f"({mo} BETWEEN 1 AND 12 AND {dd} BETWEEN 1 AND 31)"
@@ -908,7 +888,7 @@ class Emitter:
         return f"(CASE {whens} END)"
 
     def fmt_ts(self, ts_frag: str, fmt: str) -> str:
-        raise NotImplementedError
+        return self.d.fmt(ts_frag, fmt)
 
     def datediff_days(self, a_ts: str, b_ts: str) -> str:
         raise NotImplementedError
@@ -932,7 +912,7 @@ class Emitter:
             # the OBJECT form is taken by _ts_operand at the boundaries
             # that care; everywhere else the value is Java's
             # LocalDateTime.toString() rendering, a compile-time string
-            return _sql_str(node.java_str())
+            return self.d.lit(node.java_str())
         if isinstance(node, Const):
             if node.value is None:
                 return "NULL"
@@ -940,7 +920,7 @@ class Emitter:
                 return "TRUE" if node.value else "FALSE"
             if isinstance(node.value, (int, float)):
                 return repr(node.value)
-            return _sql_str(node.value)
+            return self.d.lit(node.value)
         if isinstance(node, Field):
             return self.resolve(node.name, hint)
         if isinstance(node, Op):
@@ -1337,10 +1317,7 @@ class Emitter:
 
 
 class SparkEmitter(Emitter):
-    dialect = "spark"
-
-    def cast_num(self, frag: str) -> str:
-        return f"CAST({frag} AS DOUBLE)"
+    d = SPARK
 
     def safe_div(self, a: str, b: str) -> str:
         # ANSI-safe: Spark 4 defaults spark.sql.ansi.enabled=true, where
@@ -1350,11 +1327,8 @@ class SparkEmitter(Emitter):
     def safe_mod(self, a: str, b: str) -> str:
         return f"try_mod({a}, {b})"
 
-    def cast_str(self, frag: str) -> str:
-        return f"CAST({frag} AS STRING)"
-
     def rlike(self, frag: str, pattern: str) -> str:
-        return f"({frag} RLIKE {_sql_str(pattern)})"
+        return f"({self.d.rlike(frag, pattern)})"
 
     def ms_to_ts(self, ms_frag: str) -> str:
         return f"timestamp_millis({ms_frag})"
@@ -1405,13 +1379,10 @@ class SparkEmitter(Emitter):
         if form in self._SMART_SEP:
             return self.dt_parse_smart(frag, form)
         tries = ", ".join(
-            f"try_to_timestamp({frag}, {_sql_str(p)})"
+            f"try_to_timestamp({frag}, {self.d.lit(p)})"
             for p in self._SPARK_DT[form]
         )
         return f"coalesce({tries})" if "," in tries else tries
-
-    def fmt_ts(self, ts_frag: str, fmt: str) -> str:
-        return f"date_format({ts_frag}, {_sql_str(fmt)})"
 
     def datediff_days(self, a_ts: str, b_ts: str) -> str:
         # full 24-hour periods, truncated toward zero, ENTIRELY in BIGINT
@@ -1423,7 +1394,7 @@ class SparkEmitter(Emitter):
                 f" DIV 86400000000)")
 
     def json_get(self, j: str, p: str) -> str:
-        return f"get_json_object({j}, {_sql_str(p)})"
+        return self.d.json_str(j, p)
 
     def now(self) -> str:
         return self.now_literal or "current_timestamp()"
@@ -1436,10 +1407,7 @@ class SparkEmitter(Emitter):
 
 
 class DuckEmitter(Emitter):
-    dialect = "duckdb"
-
-    def cast_num(self, frag: str) -> str:
-        return f"CAST({frag} AS DOUBLE)"
+    d = DUCK
 
     def safe_div(self, a: str, b: str) -> str:
         return f"({a} / {b})"  # DuckDB double division yields NULL on /0
@@ -1447,11 +1415,8 @@ class DuckEmitter(Emitter):
     def safe_mod(self, a: str, b: str) -> str:
         return f"({a} % {b})"  # DuckDB double mod yields NULL on %0
 
-    def cast_str(self, frag: str) -> str:
-        return f"CAST({frag} AS VARCHAR)"
-
     def rlike(self, frag: str, pattern: str) -> str:
-        return f"regexp_matches({frag}, {_sql_str(pattern)})"
+        return self.d.rlike(frag, pattern)
 
     def ms_to_ts(self, ms_frag: str) -> str:
         return f"epoch_ms({ms_frag})"
@@ -1500,13 +1465,10 @@ class DuckEmitter(Emitter):
         # one try_strptime per format, NOT the format-list form: the list
         # overload returns TIMESTAMP WITH TIME ZONE (naive everywhere else)
         tries = ", ".join(
-            f"try_strptime({frag}, {_sql_str(p)})"
+            f"try_strptime({frag}, {self.d.lit(p)})"
             for p in self._DUCK_DT[form]
         )
         return f"coalesce({tries})" if "," in tries else tries
-
-    def fmt_ts(self, ts_frag: str, fmt: str) -> str:
-        return f"strftime({ts_frag}, {_sql_str(java_fmt_to_strftime(fmt))})"
 
     def datediff_days(self, a_ts: str, b_ts: str) -> str:
         # full 24-hour periods toward zero; NOT DuckDB's date_diff('day'),
@@ -1520,8 +1482,7 @@ class DuckEmitter(Emitter):
         # json_valid gate: DuckDB's json_extract_string THROWS on
         # malformed JSON where Spark's get_json_object and the
         # reference's readTree-catch (:624-680) return NULL
-        return (f"(CASE WHEN json_valid({j}) THEN "
-                f"json_extract_string({j}, {_sql_str(p)}) END)")
+        return f"(CASE WHEN json_valid({j}) THEN {self.d.json_str(j, p)} END)"
 
     def now(self) -> str:
         return self.now_literal or "now()"

@@ -62,11 +62,6 @@ _NUM_OPS = {
 }
 
 
-
-def _lit(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 def java_parse_long(s: str, bits: int = 64) -> int:
     """Long.parseLong(s, 10) exactly (Integer.parseInt with bits=32):
     optional ASCII '+'/'-', then 1+ chars that Character.digit(c, 10)
@@ -103,12 +98,12 @@ def _i32(x: int) -> int:
     return (x + 2**31) % 2**32 - 2**31
 
 
-def _nd_translate(v: str) -> str:
+def _nd_translate(d, v: str) -> str:
     """SQL: the value with every BMP Unicode decimal digit folded to
     ASCII via the JDK's own Character.digit table — the pre-pass that
     lets TRY_CAST/_LONG_RE reproduce parseLong's real accept set."""
-    return (f"translate({v}, {_lit(TRANSLATE_SRC)}, "
-            f"{_lit(TRANSLATE_DST)})")
+    return (f"translate({v}, {d.lit(TRANSLATE_SRC)}, "
+            f"{d.lit(TRANSLATE_DST)})")
 
 
 # LocalDate.toEpochDay's proleptic-Gregorian day count (public
@@ -164,7 +159,7 @@ def value_str(d, expr: str) -> str:
 
 
 def _string_pred(d, v: str, op: str, t: str) -> str:
-    lit = _lit(t)
+    lit = d.lit(t)
     if op == "equal":
         return f"{v} = {lit}"
     if op == "not equal":
@@ -200,7 +195,7 @@ def _numeric_pred(d, v: str, op: str, t: str) -> str:
         target = java_parse_long(t)
     except ValueError:
         return "FALSE"  # NumberFormatException (or null-ish gate) → false
-    tv = _nd_translate(v)
+    tv = _nd_translate(d, v)
     digits = d.rlike(tv, _LONG_RE)
     nv = f"CASE WHEN {digits} THEN TRY_CAST({tv} AS BIGINT) END"
     # the translate+gate also rejects '' / 'null' / supplementary-plane
@@ -217,7 +212,7 @@ def _date_pred(d, v: str, op: str, values: list[str], now_ms: str) -> str:
     # below any window); a negative seconds value whose wrap lands
     # INSIDE the window is the one contrived input where the reference
     # would say true and we say false — documented deviation.
-    tv = _nd_translate(v)
+    tv = _nd_translate(d, v)
     digits = d.rlike(tv, _LONG_RE)
     sec = f"TRY_CAST({tv} AS BIGINT)"
     in_range = (f"{digits} AND {sec} BETWEEN -9223372036854775 "

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import pandas as pd  # module-level: pandas-UDF type hints resolve by name
 
+from zg_etl_spark.dialect import SPARK
+
 # (engine, host regex, keyword param names) — SearchKeywordParser.java:
 # 38-57. Patterns are case-insensitive (Pattern.CASE_INSENSITIVE) and
 # unanchored (Matcher.find). The param list is a MEMBERSHIP set, not a
@@ -68,7 +70,7 @@ def term_case(d, ref: str, engine: str) -> str:
     q = f"substring({ref}, instr({ref}, '?') + 1)"
     whens = []
     for eng, _, params in ENGINES:
-        pat = d.re_lit("(?i)(^|&)(" + "|".join(params) + ")=([^&]*)")
+        pat = d.lit("(?i)(^|&)(" + "|".join(params) + ")=([^&]*)")
         whens.append(
             f"WHEN '{eng}' THEN CASE WHEN instr({ref}, '?') > 0 "
             f"THEN NULLIF(regexp_extract({q}, {pat}, 3), '') END"
@@ -82,7 +84,7 @@ def clean_keyword(d, kw: str) -> str:
     quote (each replaceAll is anchored, so at most one char per edge)."""
     out = f"trim({kw})"
     for pat in ('^"', '"$', "^'", "'$"):
-        out = f"regexp_replace({out}, {d.re_lit(pat)}, '')"
+        out = f"regexp_replace({out}, {d.lit(pat)}, '')"
     return out
 
 
@@ -186,12 +188,12 @@ def utm_term_fallback(d, ref: str) -> str:
     is modeled as a layer-2 throw (→ NULL) here; '%-1'-style negative
     pairs throw in all three. Sign-escape refs are pinned by 'ut'
     fixture cells and stay outside the SQL sweep corpus by this note."""
-    auth = f"regexp_extract({ref}, {d.re_lit('^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)')}, 1)"
+    auth = f"regexp_extract({ref}, {d.lit('^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)')}, 1)"
     host_pat = ("^(?:[^@]*@)?((?:[A-Za-z0-9](?:[A-Za-z0-9-]*[A-Za-z0-9])?"
                 "\\.)*[A-Za-z](?:[A-Za-z0-9-]*[A-Za-z0-9])?\\.?)"
                 "(?::[0-9]*)?$")
-    host = f"regexp_extract({auth}, {d.re_lit(host_pat)}, 1)"
-    raw_q = f"regexp_extract({ref}, {d.re_lit('^[^#?]*[?]([^#]*)')}, 1)"
+    host = f"regexp_extract({auth}, {d.lit(host_pat)}, 1)"
+    raw_q = f"regexp_extract({ref}, {d.lit('^[^#?]*[?]([^#]*)')}, 1)"
     q1 = decode_layer_sql(raw_q, plus=False)  # URI.getQuery decode
 
     bad_esc = (f"instr({d.re_replace_all(ref, '%[0-9a-fA-F]{2}', '')}, "
@@ -199,7 +201,7 @@ def utm_term_fallback(d, ref: str) -> str:
     uri_ok = f"(NOT {d.rlike(ref, _URI_BAD_CHARS)} AND NOT {bad_esc})"
 
     def last_val(key: str) -> str:
-        pat = d.re_lit(f"(?s).*(^|&){key}=([^&]*)")
+        pat = d.lit(f"(?s).*(^|&){key}=([^&]*)")
         return f"regexp_extract({q1}, {pat}, 2)"
 
     def has_host(h: str) -> str:
@@ -729,8 +731,6 @@ def with_search_keyword(df, ref_col: str = "ref"):
     (decoded per decode_multi_charset, cleaned) from a referrer column.
     Extraction is JVM-side; only the decode crosses to Python, Arrow-batched."""
     from pyspark.sql import functions as F
-
-    from zg_etl_spark.operators.domain import SPARK
 
     @F.pandas_udf("string")
     def _decode(col: pd.Series) -> pd.Series:

@@ -56,7 +56,7 @@ def os_version(d, ua: str) -> str:
     for fam, pat, vre in OS_RULES:
         if vre is None:
             continue
-        cap = f"regexp_extract({ua}, {d.re_lit(vre)}, 1)"
+        cap = f"regexp_extract({ua}, {d.lit(vre)}, 1)"
         whens.append(
             f"WHEN {d.rlike(ua, pat)} THEN NULLIF(replace({cap}, '_', '.'), '')"
         )
@@ -74,7 +74,7 @@ def browser_major(d, ua: str) -> str:
     """Major version only (UserAgentParser.java:128-141)."""
     whens = " ".join(
         f"WHEN {d.rlike(ua, pat)} THEN "
-        f"NULLIF(regexp_extract({ua}, {d.re_lit(vre)}, 1), '')"
+        f"NULLIF(regexp_extract({ua}, {d.lit(vre)}, 1), '')"
         for name, pat, vre in BROWSER_RULES
     )
     return f"CASE {whens} END"
@@ -115,8 +115,8 @@ UA_ANALYSIS_IOS = r"(ip[honead]+)(?:.*os.([\w.,/\-]+).like|;\sopera)"
 def _ua_analysis_group(d, ua: str, group: int) -> str:
     return (
         f"CASE WHEN {ua} LIKE '%Android%' "
-        f"THEN regexp_extract({ua}, {d.re_lit('(?i)' + UA_ANALYSIS_ANDROID)}, {group}) "
-        f"ELSE regexp_extract({ua}, {d.re_lit('(?i)' + UA_ANALYSIS_IOS)}, {group}) END"
+        f"THEN regexp_extract({ua}, {d.lit('(?i)' + UA_ANALYSIS_ANDROID)}, {group}) "
+        f"ELSE regexp_extract({ua}, {d.lit('(?i)' + UA_ANALYSIS_IOS)}, {group}) END"
     )
 
 

@@ -3,8 +3,9 @@
 The reference pipeline (SURVEY.md §3.1) is: parse → gate → identity
 resolution → dictionaries → virtual attrs/events → enrichment → route/pivot.
 Here every stage is a named relation over the driver's ``events`` table,
-written ONCE as a template rendered for two dialects — Spark SQL (the
-engine) and DuckDB SQL (the correctness oracle) — so oracle and engine
+written ONCE as a template rendered with the one dialect
+(``zg_etl_spark.dialect``): ``SPARK`` for Spark SQL (the engine) and
+``DUCK`` for DuckDB SQL (the correctness oracle) — so oracle and engine
 cannot drift.
 
 Execution differs per engine: DuckDB gets one WITH-prelude per query;
@@ -31,6 +32,7 @@ documented mode, the deterministic mode is the test/oracle profile.
 
 from __future__ import annotations
 
+from zg_etl_spark.dialect import DUCK, SPARK, Dialect
 from zg_etl_spark.operators import registries as R
 from zg_etl_spark.session import materialize
 
@@ -52,317 +54,6 @@ VALID_FUTURE_MS = DAY_MS     # config.properties:98-99; this deployment
 # beyond the allocated dictionary (cus6..8 stay NULL) and beyond app 1's
 # attr_cap=2 truncation
 ZG_CUS_N = 8
-
-
-class Dialect:
-    name = "base"
-    strtype = "STRING"
-
-    def event_ms(self) -> str:
-        """events.ts -> epoch millis. The driver parquet stores
-        TIMESTAMP(NANOS): Spark reads it as a nanos BIGINT (with
-        spark.sql.legacy.parquet.nanosAsLong), DuckDB as a µs timestamp —
-        both floor to identical millis."""
-        raise NotImplementedError
-
-    def ts(self, ms: str) -> str:          # epoch millis -> naive timestamp
-        raise NotImplementedError
-
-    def json_str(self, col: str, path: str) -> str:
-        raise NotImplementedError
-
-    def idiv(self, a: str, b: str) -> str:
-        raise NotImplementedError
-
-    def fmt(self, ts_expr: str, java_fmt: str) -> str:
-        raise NotImplementedError
-
-    def date_sub(self, d: str, n: int) -> str:
-        raise NotImplementedError
-
-    def yw_java(self, d: str) -> str:
-        """SimpleDateFormat("YYYYww") — the wide table's yw bucket
-        (EventAttrTransfer.java:56,246,385-396) — under the deployment
-        JVM's default-locale calendar week rules. CLDR gives zh_CN and
-        en_US (the plausible deployment locales) Sunday-START weeks with
-        minimalDaysInFirstWeek=1: week 1 of week-year Y is the week
-        CONTAINING Jan 1 of Y, so late-December days of a week that
-        touches Jan 1 already belong to (Y+1)*100+1 — NOT ISO-8601
-        (Monday start, 4-day rule), which differs on every Sunday date
-        among others. Derivation: S = the Sunday on-or-before d; the
-        week-year is the year of S+6 (the week's Saturday — it exceeds
-        year(S) exactly when the week contains Jan 1); ww counts weeks
-        from the week containing that year's Jan 1. Pinned against a
-        Python port of the Calendar rules in
-        tests/test_independent_oracles.py. (A ROOT/C-locale JVM would
-        use Monday-start/min-1 instead — a deployment pin like the
-        session timezone, documented here.)"""
-        raise NotImplementedError
-
-    def s(self, x: str) -> str:
-        return f"CAST({x} AS {self.strtype})"
-
-    # --- G8 sanitizers (transfer/EventAttrTransfer.java:497-534) ---------
-    def _bad_chars(self) -> str:
-        """SQL string literal whose runtime value is TAB NL CR " \\ —
-        the character class ensureLength strips (reference also strips
-        \\u0000, unrepresentable in a SQL literal; noted, not needed for
-        parquet-borne strings)."""
-        raise NotImplementedError
-
-    def _nv_lit(self) -> str:
-        """SQL literal for the reference's two-char NULL sentinel
-        backslash-N (NULL_VALUE, EventAttrTransfer.java:32)."""
-        raise NotImplementedError
-
-    def java_trim(self, x: str) -> str:
-        """String.trim semantics: strip EVERY char <= U+0020 from both
-        ends, not just the space SQL trim() removes (JVM fixture mode
-        'ea': '\\x1fa' trims to 'a', U+3000/NBSP stay). U+0000 never
-        reaches the trim — ensureLength's replaceAll already mapped it
-        to a space."""
-        raise NotImplementedError
-
-    def clean(self, x: str, maxlen: int) -> str:
-        """ensureLength (EventAttrTransfer.java:497-502, JVM-pinned by
-        fixture mode 'ea'): NULL for null/empty/the exact '\\N' sentinel
-        (isNullOrEmpty checks NULL_VALUE.equals too), strip
-        [\\t\\n\\r"\\\\\\u0000] to spaces, Java-trim, truncate.
-        Documented deviation: Java truncates by UTF-16 units, SQL
-        substring by codepoints — differs only when a string LONGER than
-        maxlen contains non-BMP chars (the fixture test carves those
-        cells out of the SQL leg and pins them on the Python port)."""
-        return (
-            f"CASE WHEN {x} IS NULL OR {x} = '' OR {x} = {self._nv_lit()} "
-            f"THEN NULL "
-            f"ELSE substring({self.java_trim(f'translate({x}, {self._bad_chars()}, {chr(39)}     {chr(39)})')}, 1, {maxlen}) END"
-        )
-
-    def is_digits(self, x: str) -> str:
-        raise NotImplementedError
-
-    def int_len(self, x: str) -> str:
-        """ensureIntLength(…, 256): digits-only, ≤6 chars, else NULL."""
-        return (
-            f"CASE WHEN {x} IS NULL OR {x} = '' OR {x} = 'null' "
-            f"OR length({x}) > 6 OR NOT {self.is_digits(x)} THEN NULL ELSE {x} END"
-        )
-
-    def net(self, x: str) -> str:
-        """ensureNetwork: '-1' -> NULL, else ensureIntLength."""
-        return f"CASE WHEN {x} = '-1' THEN NULL ELSE {self.int_len(x)} END"
-
-    def re_lit(self, pattern: str) -> str:
-        """Render a regex (given as its runtime character sequence) as a
-        SQL string literal for this dialect."""
-        raise NotImplementedError
-
-    def rlike(self, x: str, pattern: str) -> str:
-        raise NotImplementedError
-
-    def re_replace_all(self, x: str, pattern: str, repl: str) -> str:
-        """Replace EVERY match of pattern — Spark's regexp_replace is
-        global by default, DuckDB's needs the 'g' option."""
-        raise NotImplementedError
-
-    def json_str_key(self, col: str, key: str) -> str:
-        """JSON string value for a key that needs quoting in the path
-        (dashes etc.) — the engines quote path segments differently."""
-        raise NotImplementedError
-
-    def last_ignore_nulls(self, x: str, over: str) -> str:
-        """last_value(x) with IGNORE NULLS — the engines put the clause
-        in different places."""
-        raise NotImplementedError
-
-    def utc_str_ms(self, x: str, seconds: bool) -> str:
-        """ToolUtil.dateUsStrToTimestamp's UTC parse (ToolUtil.java:
-        45-70): "yyyy-MM-dd'T'HH:mm[:ss]'Z'" → epoch ms, NULL on parse
-        failure (the caller maps failure to 0). The formatter is an
-        ofPattern — default ResolverStyle.SMART, live-JVM-verified: an
-        in-range day (1-31) CLAMPS to the month's last valid day
-        ('2023-02-29T…' → Feb 28, '2023-04-31T…' → Apr 30) and exactly
-        24:00[:00] resolves to next-day midnight; month/minute/second
-        stay strict. The session TZ is pinned UTC, so a naive parse IS
-        the UTC instant."""
-        ts = self._smart_utc_ts(x, seconds)
-        return self._ts_ms(ts)
-
-    def _smart_utc_ts(self, x: str, seconds: bool) -> str:
-        """The SMART-resolved TIMESTAMP for utc_str_ms (dialect-neutral
-        component SQL; the engines' own pattern parses are strict and
-        would NULL the clamp/hour-24 cells Java accepts)."""
-        tail = ":([0-9]{2})" if seconds else ""
-        rx = (f"^([0-9]{{4}})-([0-9]{{2}})-([0-9]{{2}})"
-              f"T([0-9]{{2}}):([0-9]{{2}}){tail}Z$")
-
-        def g(i: int) -> str:
-            return (f"CAST(regexp_extract({x}, {self.re_lit(rx)}, {i})"
-                    f" AS INT)")
-
-        y, mo, dd, h, mi = g(1), g(2), g(3), g(4), g(5)
-        ss = g(6) if seconds else "0"
-        clamp = f"LEAST({dd}, day(last_day(make_date({y}, {mo}, 1))))"
-        ok_date = f"({mo} BETWEEN 1 AND 12 AND {dd} BETWEEN 1 AND 31)"
-        ok_time = f"({h} <= 23 AND {mi} <= 59 AND {ss} <= 59)"
-        h24 = f"({h} = 24 AND {mi} = 0 AND {ss} = 0)"
-        nxt = self.date_sub(f"make_date({y}, {mo}, {clamp})", -1)
-        return (f"CASE WHEN NOT {self.rlike(x, rx)} THEN NULL "
-                f"WHEN NOT {ok_date} THEN NULL "
-                f"WHEN {ok_time} THEN make_timestamp({y}, {mo}, {clamp}, "
-                f"{h}, {mi}, {ss}) "
-                f"WHEN {h24} THEN CAST({nxt} AS TIMESTAMP) END")
-
-    def _ts_ms(self, ts: str) -> str:
-        """Whole-second naive TIMESTAMP expr → epoch millis BIGINT."""
-        raise NotImplementedError
-
-
-class SparkDialect(Dialect):
-    name = "spark"
-    strtype = "STRING"
-
-    def event_ms(self):
-        return "(ts DIV 1000000)"
-
-    def ts(self, ms):
-        return f"timestamp_millis({ms})"
-
-    def json_str(self, col, path):
-        return f"get_json_object({col}, '{path}')"
-
-    def idiv(self, a, b):
-        return f"({a} DIV {b})"
-
-    def fmt(self, ts_expr, java_fmt):
-        return f"date_format({ts_expr}, '{java_fmt}')"
-
-    def date_sub(self, d, n):
-        return f"date_sub({d}, {n})"
-
-    def yw_java(self, d):
-        s = f"date_sub({d}, dayofweek({d}) - 1)"  # dayofweek: 1=Sun
-        wy = f"year(date_add({s}, 6))"
-        jan1 = f"make_date({wy}, 1, 1)"
-        w1 = f"date_sub({jan1}, dayofweek({jan1}) - 1)"
-        return f"({wy} * 100 + (datediff({s}, {w1}) DIV 7) + 1)"
-
-    def _bad_chars(self):
-        # Spark processes backslash escapes in '…' literals: \t\n\r stay
-        # escapes, \\\\ -> one backslash at runtime
-        return "'\\t\\n\\r\"\\\\'"
-
-    def _nv_lit(self):
-        return "'\\\\N'"
-
-    def java_trim(self, x):
-        ctl = "'" + "".join(f"\\u{i:04x}" for i in range(1, 0x21)) + "'"
-        return f"btrim({x}, {ctl})"
-
-    def is_digits(self, x):
-        # \A..\z, not ^..$: Spark RLIKE is java.util.regex, where a bare
-        # '$' also matches BEFORE a trailing line terminator — '12\n'
-        # would pass the digits gate the reference's matches("[0-9]*")
-        # rejects (found by the round-11 'ea' JVM fixture Spark leg)
-        return f"{x} RLIKE '\\\\A[0-9]+\\\\z'"
-
-    def re_lit(self, pattern):
-        # Spark '…' literals process backslash escapes: double them so the
-        # runtime regex keeps its \. etc.; quotes escape as \'
-        return "'" + pattern.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    def rlike(self, x, pattern):
-        return f"{x} RLIKE {self.re_lit(pattern)}"
-
-    def re_replace_all(self, x, pattern, repl):
-        return f"regexp_replace({x}, {self.re_lit(pattern)}, '{repl}')"
-
-    def json_str_key(self, col, key):
-        # Spark path: $['key'] — rendered inside a "…" literal so the
-        # path's own single quotes need no escaping
-        return f'get_json_object({col}, "$[\'{key}\']")'
-
-    def last_ignore_nulls(self, x, over):
-        return f"last_value({x}) IGNORE NULLS OVER {over}"
-
-    def _ts_ms(self, ts):
-        return f"CAST(to_unix_timestamp({ts}) AS BIGINT) * 1000"
-
-
-class DuckDialect(Dialect):
-    name = "duckdb"
-    strtype = "VARCHAR"
-
-    _strf = {
-        "yyyyMMdd": "%Y%m%d",
-        "yyyyMM": "%Y%m",
-        "HH": "%H",
-        "yyyy-MM-dd": "%Y-%m-%d",
-    }
-
-    def event_ms(self):
-        return "epoch_ms(ts)"
-
-    def ts(self, ms):
-        return f"epoch_ms(CAST({ms} AS BIGINT))"
-
-    def json_str(self, col, path):
-        return f"json_extract_string({col}, '{path}')"
-
-    def idiv(self, a, b):
-        return f"({a} // {b})"
-
-    def fmt(self, ts_expr, java_fmt):
-        return f"strftime({ts_expr}, '{self._strf[java_fmt]}')"
-
-    def date_sub(self, d, n):
-        return f"({d} - {n})"
-
-    def yw_java(self, d):
-        s = f"({d} - CAST(dayofweek({d}) AS INTEGER))"  # dayofweek: 0=Sun
-        wy = f"year(({s} + 6))"
-        jan1 = f"make_date({wy}, 1, 1)"
-        w1 = f"({jan1} - CAST(dayofweek({jan1}) AS INTEGER))"
-        return f"({wy} * 100 + (datediff('day', {w1}, {s}) // 7) + 1)"
-
-    def _bad_chars(self):
-        # DuckDB '…' literals are raw: embed the control chars directly
-        return "'\t\n\r\"\\'"
-
-    def _nv_lit(self):
-        return "'\\N'"
-
-    def java_trim(self, x):
-        ctl = "E'" + "".join(f"\\x{i:02x}" for i in range(1, 0x21)) + "'"
-        return f"trim({x}, {ctl})"
-
-    def is_digits(self, x):
-        return f"regexp_matches({x}, '^[0-9]+$')"
-
-    def re_lit(self, pattern):
-        # DuckDB '…' literals are raw except '' for a quote
-        return "'" + pattern.replace("'", "''") + "'"
-
-    def rlike(self, x, pattern):
-        return f"regexp_matches({x}, {self.re_lit(pattern)})"
-
-    def re_replace_all(self, x, pattern, repl):
-        return f"regexp_replace({x}, {self.re_lit(pattern)}, '{repl}', 'g')"
-
-    def json_str_key(self, col, key):
-        # DuckDB path: $."key" (double quotes are fine inside a '…'
-        # literal; they'd be identifiers only outside one)
-        return f'json_extract_string({col}, \'$."{key}"\')'
-
-    def last_ignore_nulls(self, x, over):
-        return f"last_value({x} IGNORE NULLS) OVER {over}"
-
-    def _ts_ms(self, ts):
-        return f"epoch_ms({ts})"
-
-
-SPARK = SparkDialect()
-DUCK = DuckDialect()
 
 
 def ua_real_case(d: Dialect, q: str = "") -> str:

@@ -270,7 +270,6 @@ ADS_MATCH_RULES = [
     # by design — the resolution order itself is in _p43's value build)
     (9, "eid", {"type": 1, "operator": "contains", "values": ["ck"]}),
 ]
-ADS_MATCH_COLS = ["m_rule", "m_label", "m_operator"]
 
 # per-event UTM override store (AdvAddUtmFlatMapFunction.java:108-155:
 # Redis `utm:{zg_eid}` JSON applied to evt/abp records as $utm_* props)
@@ -281,7 +280,7 @@ UTM_OVERRIDES = [
 UTM_OVERRIDE_COLS = ["u_event", "u_source", "u_medium", "u_campaign"]
 
 
-def values_sql(rows: list[tuple], cols: list[str], quote=str) -> str:
+def values_sql(rows: list[tuple], cols: list[str]) -> str:
     """Render rows as an inline VALUES table usable in both dialects:
     ``(VALUES (...), (...)) AS t(c1, c2)`` (caller adds alias)."""
 

@@ -22,7 +22,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 NS_DEVICE = "zg:did"
 NS_USER = "zg:cuid"
-NS_EVENT = "zg:eid"
 
 
 def hash_id(namespace: str, *cols: str | Column) -> Column:

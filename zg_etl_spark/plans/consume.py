@@ -64,7 +64,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zg_etl_spark.operators.domain import DUCK, SPARK, duck_pipeline_sql
+from zg_etl_spark.dialect import DUCK, SPARK
+from zg_etl_spark.operators.domain import duck_pipeline_sql
 from zg_etl_spark.operators.graph import label_components
 from zg_etl_spark.session import materialize
 

@@ -2,10 +2,11 @@
 (BASELINE.json north star: dedup, similarity search, text analysis as
 first-class engine components).
 
-Same dual-dialect discipline as the event pipeline: every query body is one
-template rendered for Spark SQL and DuckDB SQL, so oracle and engine cannot
-drift. Everything is expressed with built-in array/lambda functions — no
-Python UDFs in any hot path (JVM-side codegen in Spark).
+Every query body is one template rendered with the same dialect as the
+event pipeline (``zg_etl_spark.dialect``: ``SPARK`` for the engine, ``DUCK``
+for the oracle), so oracle and engine cannot drift. Everything is expressed
+with built-in array/lambda functions — no Python UDFs in any hot path
+(JVM-side codegen in Spark).
 
 Scale design (100 TB corpus thinking):
 - exact dedup: hash-groupBy on md5(text) — one shuffle on the hash, partial
@@ -28,210 +29,13 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution
 
 from pyspark.sql import DataFrame, SparkSession
 
+from zg_etl_spark.dialect import DUCK, SPARK
 from zg_etl_spark.session import materialize
 
 QUERIES: dict = {}
 ORACLE: dict = {}
 
 STOPWORDS = "('the', 'a')"
-
-
-# ---------------------------------------------------------------------------
-# dialect helpers
-# ---------------------------------------------------------------------------
-class LD:
-    name = "spark"
-
-    @staticmethod
-    def split(col: str) -> str:
-        return f"split({col}, ' ')"
-
-    @staticmethod
-    def alen(arr: str) -> str:
-        return f"size({arr})"
-
-    @staticmethod
-    def lmap(arr: str, var: str, body: str) -> str:
-        return f"transform({arr}, {var} -> {body})"
-
-    @staticmethod
-    def lfilter(arr: str, var: str, body: str) -> str:
-        return f"filter({arr}, {var} -> {body})"
-
-    @staticmethod
-    def lmin(arr: str) -> str:
-        return f"array_min({arr})"
-
-    @staticmethod
-    def fold_sum(arr: str) -> str:
-        return f"aggregate({arr}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-
-    @staticmethod
-    def seq(lo: str, hi_incl: str) -> str:
-        return f"sequence({lo}, {hi_incl})"
-
-    @staticmethod
-    def seq_step(lo: str, hi_incl: str, step: int) -> str:
-        return f"sequence({lo}, {hi_incl}, {step})"
-
-    @staticmethod
-    def slice_join(arr: str, start_var: str, n: int) -> str:
-        return f"concat_ws(' ', slice({arr}, {start_var}, {n}))"
-
-    @staticmethod
-    def vslice(arr: str, start: str, n: int) -> str:
-        return f"slice({arr}, {start}, {n})"
-
-    @staticmethod
-    def strpos(s: str, sub: str) -> str:
-        return f"instr({s}, {sub})"
-
-    @staticmethod
-    def explode(arr_expr: str, alias: str) -> str:
-        return f"LATERAL VIEW explode({arr_expr}) _t AS {alias}"
-
-    @staticmethod
-    def explode_ne(arr_expr: str, alias: str) -> str:
-        # OUTER explode for arrays a preceding WHERE proves non-empty:
-        # the non-outer Generate infers `size(arr)>0 AND isnotnull(arr)`,
-        # and that predicate pushes below the parallelizing repartition,
-        # re-evaluating the whole array-build chain (3×) on the source's
-        # few native partitions (BASELINE.md plan-finding 2). The OUTER
-        # form infers nothing; with non-emptiness guaranteed the rows are
-        # identical.
-        return f"LATERAL VIEW OUTER explode({arr_expr}) _t AS {alias}"
-
-    @staticmethod
-    def dvec(col: str) -> str:
-        return f"CAST({col} AS ARRAY<DOUBLE>)"
-
-    @staticmethod
-    def zip_mul(a: str, b: str) -> str:
-        return f"zip_with({a}, {b}, (x, y) -> x * y)"
-
-    @staticmethod
-    def idx(arr: str, i: str) -> str:
-        return f"element_at({arr}, {i})"
-
-    @staticmethod
-    def idiv(a: str, b: str) -> str:
-        return f"({a} DIV {b})"
-
-    @staticmethod
-    def fold(arr: str, init: str, body: str) -> str:
-        return f"aggregate({arr}, {init}, (acc, x) -> {body})"
-
-    @staticmethod
-    def re_count(col: str, pattern: str) -> str:
-        return f"size(regexp_extract_all({col}, '{pattern}', 0))"
-
-    @staticmethod
-    def h64(x: str) -> str:
-        # engine-local 64-bit hash: ONLY for internal join keys, never for
-        # values the oracle compares (algorithms differ across engines)
-        return f"xxhash64({x})"
-
-    @staticmethod
-    def adistinct(arr: str) -> str:
-        return f"array_distinct({arr})"
-
-    @staticmethod
-    def re_replace_all(col: str, pattern: str, repl: str) -> str:
-        # Spark regexp_replace replaces every occurrence
-        return f"regexp_replace({col}, '{pattern}', '{repl}')"
-
-
-class DD:
-    name = "duckdb"
-
-    @staticmethod
-    def split(col: str) -> str:
-        return f"string_split({col}, ' ')"
-
-    @staticmethod
-    def alen(arr: str) -> str:
-        return f"len({arr})"
-
-    @staticmethod
-    def lmap(arr: str, var: str, body: str) -> str:
-        return f"list_transform({arr}, {var} -> {body})"
-
-    @staticmethod
-    def lfilter(arr: str, var: str, body: str) -> str:
-        return f"list_filter({arr}, {var} -> {body})"
-
-    @staticmethod
-    def lmin(arr: str) -> str:
-        return f"list_min({arr})"
-
-    @staticmethod
-    def fold_sum(arr: str) -> str:
-        return f"list_reduce(list_prepend(CAST(0 AS DOUBLE), {arr}), (acc, x) -> acc + x)"
-
-    @staticmethod
-    def seq(lo: str, hi_incl: str) -> str:
-        return f"range({lo}, ({hi_incl}) + 1)"
-
-    @staticmethod
-    def seq_step(lo: str, hi_incl: str, step: int) -> str:
-        return f"range({lo}, ({hi_incl}) + 1, {step})"
-
-    @staticmethod
-    def slice_join(arr: str, start_var: str, n: int) -> str:
-        return f"array_to_string({arr}[{start_var}:{start_var}+{n - 1}], ' ')"
-
-    @staticmethod
-    def vslice(arr: str, start: str, n: int) -> str:
-        return f"({arr})[{start}:({start}) + {n - 1}]"
-
-    @staticmethod
-    def strpos(s: str, sub: str) -> str:
-        return f"strpos({s}, {sub})"
-
-    @staticmethod
-    def explode(arr_expr: str, alias: str) -> str:
-        return f", UNNEST({arr_expr}) AS _t({alias})"
-
-    # UNNEST already emits zero rows for empty/NULL lists; with the
-    # non-empty guarantee the Spark OUTER form matches it row-for-row
-    explode_ne = explode
-
-    @staticmethod
-    def dvec(col: str) -> str:
-        return f"CAST({col} AS DOUBLE[])"
-
-    @staticmethod
-    def zip_mul(a: str, b: str) -> str:
-        return f"list_transform(list_zip({a}, {b}), p -> p[1] * p[2])"
-
-    @staticmethod
-    def idx(arr: str, i: str) -> str:
-        return f"{arr}[{i}]"
-
-    @staticmethod
-    def idiv(a: str, b: str) -> str:
-        return f"({a} // {b})"
-
-    @staticmethod
-    def fold(arr: str, init: str, body: str) -> str:
-        return f"list_reduce(list_prepend({init}, {arr}), (acc, x) -> {body})"
-
-    @staticmethod
-    def re_count(col: str, pattern: str) -> str:
-        return f"len(regexp_extract_all({col}, '{pattern}'))"
-
-    @staticmethod
-    def h64(x: str) -> str:
-        return f"hash({x})"
-
-    @staticmethod
-    def adistinct(arr: str) -> str:
-        return f"list_distinct({arr})"
-
-    @staticmethod
-    def re_replace_all(col: str, pattern: str, repl: str) -> str:
-        # DuckDB replaces the first match unless the 'g' flag is given
-        return f"regexp_replace({col}, '{pattern}', '{repl}', 'g')"
 
 
 def _register_docs_views(spark: SparkSession, sf_dir: str) -> None:
@@ -264,10 +68,10 @@ def _shared_view(spark: SparkSession, sf_dir: str, name: str, sql: str) -> None:
 def _register(name: str, body_fn):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         _register_docs_views(spark, sf_dir)
-        return spark.sql(body_fn(LD))
+        return spark.sql(body_fn(SPARK))
 
     QUERIES[name] = run
-    ORACLE[name] = body_fn(DD)
+    ORACLE[name] = body_fn(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -342,13 +146,13 @@ def _l2_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "l2_words",
         f"SELECT doc_id, lang, word FROM documents "
-        f"{LD.explode(LD.split('text'), 'word')}",
+        f"{SPARK.explode(SPARK.split('text'), 'word')}",
     )
-    return spark.sql(_l2(LD, words_src="l2_words"))
+    return spark.sql(_l2(SPARK, words_src="l2_words"))
 
 
 QUERIES["l2_lang_id"] = _l2_run
-ORACLE["l2_lang_id"] = _l2(DD)
+ORACLE["l2_lang_id"] = _l2(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -428,34 +232,34 @@ def _ensure_shingle_views(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
     round-robin repartition, evaluating the expensive expression on the
     single source partition — measured 3× slower than this split.
     Returns the name of the exploded hashed-shingle view."""
-    starts = LD.seq("1", f"{LD.alen('ws')} - {n - 1}")
-    sh_arr = LD.lmap(starts, "i", LD.slice_join("ws", "i", n))
+    starts = SPARK.seq("1", f"{SPARK.alen('ws')} - {n - 1}")
+    sh_arr = SPARK.lmap(starts, "i", SPARK.slice_join("ws", "i", n))
     _shared_view(
         spark,
         sf_dir,
         "l4_sharr",
-        f"""SELECT doc_id, {LD.adistinct(sh_arr)} AS sh_arr
-            FROM (SELECT doc_id, {LD.split('text')} AS ws FROM documents) w
-            WHERE {LD.alen('ws')} >= {n}""",
+        f"""SELECT doc_id, {SPARK.adistinct(sh_arr)} AS sh_arr
+            FROM (SELECT doc_id, {SPARK.split('text')} AS ws FROM documents) w
+            WHERE {SPARK.alen('ws')} >= {n}""",
     )
     _shared_view(
         spark,
         sf_dir,
         "l4_shingles",
-        f"""SELECT doc_id, {LD.h64('shingle')} AS shingle
-            FROM l4_sharr {LD.explode('sh_arr', 'shingle')}""",
+        f"""SELECT doc_id, {SPARK.h64('shingle')} AS shingle
+            FROM l4_sharr {SPARK.explode('sh_arr', 'shingle')}""",
     )
     return "l4_shingles"
 
 
 def _l4_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_l4_inner(LD, _ensure_shingle_views(spark, sf_dir)))
+    return spark.sql(_l4_inner(SPARK, _ensure_shingle_views(spark, sf_dir)))
 
 
 QUERIES["l4_ngram_jaccard"] = _l4_run
 ORACLE["l4_ngram_jaccard"] = (
-    f"WITH {_shingles_cte_fixed(DD, 4, hashed=True)},"
-    + _l4_inner(DD, "shingles").lstrip()[len("WITH "):]
+    f"WITH {_shingles_cte_fixed(DUCK, 4, hashed=True)},"
+    + _l4_inner(DUCK, "shingles").lstrip()[len("WITH "):]
 )
 
 
@@ -536,8 +340,8 @@ def _ensure_cands_view(spark: SparkSession, sf_dir: str) -> None:
     DISTINCT before (and l16's symmetric-edge union executed it TWICE
     in one action). On a cluster this is the persisted candidate table
     every dedup pipeline keeps next to its signature index."""
-    _shared_view(spark, sf_dir, "mh_sigs", _l5(LD))
-    _shared_view(spark, sf_dir, "l6_cands", _l6(LD))
+    _shared_view(spark, sf_dir, "mh_sigs", _l5(SPARK))
+    _shared_view(spark, sf_dir, "l6_cands", _l6(SPARK))
 
 
 def _l6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,7 +350,7 @@ def _l6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["l6_lsh_candidates"] = _l6_run
-ORACLE["l6_lsh_candidates"] = _l6(DD)
+ORACLE["l6_lsh_candidates"] = _l6(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -597,8 +401,8 @@ def _l16_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["l16_dedup_groups"] = _l16_run
 ORACLE["l16_dedup_groups"] = f"""
-WITH RECURSIVE {_l6_ctes(DD)},
-cand AS ({_l6_select(DD)}),
+WITH RECURSIVE {_l6_ctes(DUCK)},
+cand AS ({_l6_select(DUCK)}),
 edges AS (SELECT doc_a AS a, doc_b AS b FROM cand WHERE est_sim >= {_L16_SIM}),
 sym_edges AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
 walk(doc, lab) AS (
@@ -707,13 +511,13 @@ def _l9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side); inlined CTEs recompute it per reference (15 Exchanges). The
     # materialized view computes it once — exactly an IVF index build: on
     # a cluster this IS the persisted index table.
-    _shared_view(spark, sf_dir, "l9_assign", _l9_assign_sql(LD))
-    return spark.sql("WITH " + _l9_inner(LD, "l9_assign"))
+    _shared_view(spark, sf_dir, "l9_assign", _l9_assign_sql(SPARK))
+    return spark.sql("WITH " + _l9_inner(SPARK, "l9_assign"))
 
 
 QUERIES["l9_ann_ivf"] = _l9_run
 ORACLE["l9_ann_ivf"] = (
-    f"WITH assign AS ({_l9_assign_sql(DD)}), " + _l9_inner(DD, "assign")
+    f"WITH assign AS ({_l9_assign_sql(DUCK)}), " + _l9_inner(DUCK, "assign")
 )
 
 
@@ -785,12 +589,12 @@ def _l11_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a cluster, same discipline as l9_assign/mh_sigs. Interleaved
     # A/B at sf0.1: inline 0.69/0.54/0.56 s -> view 0.22/0.18/0.19
     # warm, 0.47/0.42/0.39 including the view build.
-    _shared_view(spark, sf_dir, "l11_vecs", _l11_vecs_sql(LD))
-    return spark.sql(_l11_pairs(LD, "l11_vecs"))
+    _shared_view(spark, sf_dir, "l11_vecs", _l11_vecs_sql(SPARK))
+    return spark.sql(_l11_pairs(SPARK, "l11_vecs"))
 
 
 QUERIES["l11_embedding_neardup"] = _l11_run
-ORACLE["l11_embedding_neardup"] = _l11(DD)
+ORACLE["l11_embedding_neardup"] = _l11(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -900,17 +704,16 @@ def _l14_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"element_at(array({','.join(str(int(i)) for i in bq_ids.value)}), q_idx + 1) AS q_id",
         "cand_id", "cosine",
     ).where("q_id != cand_id")
-    pairs.createOrReplaceTempView("l14_pairs")
     return spark.sql("""
 SELECT q_id, cand_id, cosine, rank FROM (
   SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY q_id
                                     ORDER BY cosine DESC, cand_id) AS BIGINT) AS rank
-  FROM l14_pairs
-) x WHERE rank <= 10""")
+  FROM {pairs}
+) x WHERE rank <= 10""", pairs=pairs)
 
 
 QUERIES["l14_ann_pandas"] = _l14_run
-ORACLE["l14_ann_pandas"] = _l8(DD)
+ORACLE["l14_ann_pandas"] = _l8(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -988,10 +791,7 @@ FROM r"""
 # (decode itself is a stubbed Pandas-UDF path, operators/multimodal.py)
 # ---------------------------------------------------------------------------
 def _l10(d) -> str:
-    if d.name == "spark":
-        nbytes = "length(encode(text, 'UTF-8'))"
-    else:
-        nbytes = "octet_length(encode(text))"
+    nbytes = d.byte_len("text")
     return f"""
 SELECT doc_id,
        CAST({nbytes} AS BIGINT) AS n_bytes,
@@ -1084,14 +884,14 @@ def _l19_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "l19_tf",
         f"SELECT doc_id, word, COUNT(*) AS tf FROM (SELECT doc_id, word "
-        f"FROM documents {LD.explode(LD.split('text'), 'word')}) w "
+        f"FROM documents {SPARK.explode(SPARK.split('text'), 'word')}) w "
         f"GROUP BY doc_id, word",
     )
-    return spark.sql(_l19(LD, tf_src="l19_tf"))
+    return spark.sql(_l19(SPARK, tf_src="l19_tf"))
 
 
 QUERIES["l19_tfidf_terms"] = _l19_run
-ORACLE["l19_tfidf_terms"] = _l19(DD)
+ORACLE["l19_tfidf_terms"] = _l19(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1234,7 +1034,7 @@ _IP_RE = "([0-9]{1,3}[.]){3}[0-9]{1,3}"
 
 
 def _l24(d) -> str:
-    did = "CAST(doc_id AS VARCHAR)" if d.name == "duckdb" else "CAST(doc_id AS STRING)"
+    did = d.s("doc_id")
     planted = f"""text
       || CASE WHEN doc_id % 7 = 0
               THEN ' contact u' || {did} || '@example.com now' ELSE '' END
@@ -1293,13 +1093,13 @@ def _l25_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans total). Reuse l4's materialized hashed-shingle views — one
     # materialization serves both queries; hashed keys are equality-only
     # here, same collision argument as l4.
-    return spark.sql("WITH " + _l25_inner(LD, _ensure_shingle_views(spark, sf_dir)))
+    return spark.sql("WITH " + _l25_inner(SPARK, _ensure_shingle_views(spark, sf_dir)))
 
 
 QUERIES["l25_decontaminate"] = _l25_run
 ORACLE["l25_decontaminate"] = (
-    f"WITH {_shingles_cte_fixed(DD, n=4, hashed=True)}, "
-    + _l25_inner(DD, "shingles")
+    f"WITH {_shingles_cte_fixed(DUCK, n=4, hashed=True)}, "
+    + _l25_inner(DUCK, "shingles")
 )
 
 
@@ -1376,8 +1176,8 @@ def _l27_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["l27_dedup_keep_list"] = _l27_run
 ORACLE["l27_dedup_keep_list"] = f"""
-WITH RECURSIVE {_l6_ctes(DD)},
-cand AS ({_l6_select(DD)}),
+WITH RECURSIVE {_l6_ctes(DUCK)},
+cand AS ({_l6_select(DUCK)}),
 edges AS (SELECT doc_a AS a, doc_b AS b FROM cand WHERE est_sim >= {_L16_SIM}),
 sym_edges AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
 walk(doc, lab) AS (
@@ -1507,15 +1307,15 @@ def _l29_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantization shared with l9 (if l9 ran first, the coarse step is
     # free); the vector-carrying index view is materialized once more on
     # top and referenced three times (both pair sides + the verdict).
-    _shared_view(spark, sf_dir, "l9_assign", _l9_assign_sql(LD))
+    _shared_view(spark, sf_dir, "l9_assign", _l9_assign_sql(SPARK))
     _shared_view(spark, sf_dir, "l29_index", _l29_index_sql("l9_assign"))
-    return spark.sql("WITH " + _l29_inner(LD, "l29_index"))
+    return spark.sql("WITH " + _l29_inner(SPARK, "l29_index"))
 
 
 QUERIES["l29_semantic_dedup"] = _l29_run
 ORACLE["l29_semantic_dedup"] = (
-    f"WITH assign AS ({_l9_assign_sql(DD)}), "
-    f"idx AS ({_l29_index_sql('assign')}), " + _l29_inner(DD, "idx")
+    f"WITH assign AS ({_l9_assign_sql(DUCK)}), "
+    f"idx AS ({_l29_index_sql('assign')}), " + _l29_inner(DUCK, "idx")
 )
 
 
@@ -1582,13 +1382,13 @@ def _l30_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count, exact because starts is 1..n-k+1), keeping the whole query
     # at ONE corpus scan. On a cluster this view is the persisted span
     # index a dedup sweep would build anyway.
-    _shared_view(spark, sf_dir, "l30_win", _l30_win_sql(LD))
-    return spark.sql("WITH " + _l30_inner(LD, "l30_win"))
+    _shared_view(spark, sf_dir, "l30_win", _l30_win_sql(SPARK))
+    return spark.sql("WITH " + _l30_inner(SPARK, "l30_win"))
 
 
 QUERIES["l30_dup_span_fraction"] = _l30_run
 ORACLE["l30_dup_span_fraction"] = (
-    f"WITH win AS ({_l30_win_sql(DD)}), " + _l30_inner(DD, "win")
+    f"WITH win AS ({_l30_win_sql(DUCK)}), " + _l30_inner(DUCK, "win")
 )
 
 
@@ -1652,14 +1452,14 @@ def _l31_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _ensure_shingle_views(spark, sf_dir)
     _ensure_cands_view(spark, sf_dir)
     return spark.sql(
-        "WITH " + _l31_inner(LD, sh, cand_sql="SELECT * FROM l6_cands")
+        "WITH " + _l31_inner(SPARK, sh, cand_sql="SELECT * FROM l6_cands")
     )
 
 
 QUERIES["l31_candidate_verify"] = _l31_run
 ORACLE["l31_candidate_verify"] = (
-    f"WITH {_shingles_cte_fixed(DD, 4, hashed=True)}, {_l6_ctes(DD)}, "
-    + _l31_inner(DD, "shingles")
+    f"WITH {_shingles_cte_fixed(DUCK, 4, hashed=True)}, {_l6_ctes(DUCK)}, "
+    + _l31_inner(DUCK, "shingles")
 )
 
 
@@ -1740,13 +1540,13 @@ FROM scored"""
 
 
 def _l33_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _shared_view(spark, sf_dir, "l33_bg", _l33_bg_sql(LD))
-    return spark.sql("WITH " + _l33_inner(LD, "l33_bg"))
+    _shared_view(spark, sf_dir, "l33_bg", _l33_bg_sql(SPARK))
+    return spark.sql("WITH " + _l33_inner(SPARK, "l33_bg"))
 
 
 QUERIES["l33_lm_quality_score"] = _l33_run
 ORACLE["l33_lm_quality_score"] = (
-    f"WITH bg AS ({_l33_bg_sql(DD)}), " + _l33_inner(DD, "bg")
+    f"WITH bg AS ({_l33_bg_sql(DUCK)}), " + _l33_inner(DUCK, "bg")
 )
 
 
@@ -1791,13 +1591,13 @@ def _l34_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the whole query pays a single documents scan at build time
     sh = _ensure_shingle_views(spark, sf_dir)
     _shared_view(spark, sf_dir, "l34_src_sh", _l34_src_sh_sql(sh))
-    return spark.sql(f"WITH {_l34_inner(LD, 'l34_src_sh')}")
+    return spark.sql(f"WITH {_l34_inner(SPARK, 'l34_src_sh')}")
 
 
 QUERIES["l34_source_overlap"] = _l34_run
 ORACLE["l34_source_overlap"] = (
-    f"WITH {_shingles_cte_fixed(DD, 4, hashed=True)}, "
-    f"src_sh AS ({_l34_src_sh_sql('shingles')}), " + _l34_inner(DD, "src_sh")
+    f"WITH {_shingles_cte_fixed(DUCK, 4, hashed=True)}, "
+    f"src_sh AS ({_l34_src_sh_sql('shingles')}), " + _l34_inner(DUCK, "src_sh")
 )
 
 
@@ -1841,12 +1641,12 @@ WHERE d.doc_id % 10 = 0"""
 
 
 def _l35_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _shared_view(spark, sf_dir, "mh_sigs", _l5(LD))
-    return spark.sql(f"WITH {_l6_ctes(LD)}, {_l35_inner(LD)}")
+    _shared_view(spark, sf_dir, "mh_sigs", _l5(SPARK))
+    return spark.sql(f"WITH {_l6_ctes(SPARK)}, {_l35_inner(SPARK)}")
 
 
 QUERIES["l35_incremental_dedup"] = _l35_run
-ORACLE["l35_incremental_dedup"] = f"WITH {_l6_ctes(DD)}, " + _l35_inner(DD)
+ORACLE["l35_incremental_dedup"] = f"WITH {_l6_ctes(DUCK)}, " + _l35_inner(DUCK)
 
 
 # ---------------------------------------------------------------------------
@@ -1999,10 +1799,10 @@ def _l37_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized build, same discipline as l9_assign/l6_cands/l11_vecs.
     _shared_view(
         spark, sf_dir, "l37_enc",
-        f"WITH {_l37_ctes(LD)} SELECT * FROM enc",
+        f"WITH {_l37_ctes(SPARK)} SELECT * FROM enc",
     )
-    return spark.sql(f"WITH {_l37_ctes(LD)},\n{_l37_body(LD, 'l37_enc')}")
+    return spark.sql(f"WITH {_l37_ctes(SPARK)},\n{_l37_body(SPARK, 'l37_enc')}")
 
 
 QUERIES["l37_pq_ann"] = _l37_run
-ORACLE["l37_pq_ann"] = _l37(DD)
+ORACLE["l37_pq_ann"] = _l37(DUCK)

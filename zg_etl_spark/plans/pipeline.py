@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from zg_etl_spark.dialect import DUCK, SPARK, Dialect
 from zg_etl_spark.functions import search_keywords as SK
 from zg_etl_spark.functions.expr_compiler import (
     DuckEmitter,
@@ -20,9 +21,6 @@ from zg_etl_spark.functions.expr_compiler import (
 )
 from zg_etl_spark.operators import registries as R
 from zg_etl_spark.operators.domain import (
-    DUCK,
-    SPARK,
-    Dialect,
     duck_pipeline_sql,
     ensure_pipeline_views,
     spark_pipeline_df,
@@ -1387,17 +1385,15 @@ FROM w4_days""")
 # count. md5 is engine-portable, so the fingerprints hash-match.
 # ---------------------------------------------------------------------------
 def _p26(d: Dialect) -> str:
-    return """
+    return f"""
 SELECT app_id, error_code,
-       md5(CONCAT_WS('|', CAST(app_id AS STRING), CAST(error_code AS STRING),
+       md5(CONCAT_WS('|', {d.s('app_id')}, {d.s('error_code')},
                      COALESCE(event_name, ''), COALESCE(sdk, ''),
                      COALESCE(pl, ''))) AS detail_fp,
        COUNT(*) AS n_occurrences,
        MIN(seq) AS first_seq
 FROM gated WHERE error_code <> 0
-GROUP BY app_id, error_code, event_name, sdk, pl""".replace(
-        "AS STRING", "AS STRING" if d.name == "spark" else "AS VARCHAR"
-    )
+GROUP BY app_id, error_code, event_name, sdk, pl"""
 
 
 _register("p26_error_details", _p26)
@@ -1413,8 +1409,7 @@ _register("p26_error_details", _p26)
 # wrap in COALESCE('') so both engines' arg-extrema see the same value.
 # ---------------------------------------------------------------------------
 def _p27(d: Dialect) -> str:
-    fn_min = "MIN_BY" if d.name == "spark" else "ARG_MIN"
-    fn_max = "MAX_BY" if d.name == "spark" else "ARG_MAX"
+    fn_min, fn_max = d.arg_min, d.arg_max
     website = "regexp_extract(COALESCE(ref, ''), 'https?://([^/]+)', 1)"
     return f"""
 SELECT app_id, zg_id,
@@ -2086,7 +2081,7 @@ def _p44(d: Dialect) -> str:
         # segment whose key CONTAINS `key` (the Java key.contains), value
         # up to ';', quotes removed, trimmed — :966-984
         pat = f"[^;=]*{key}[^;=]*=([^;]*)"
-        return f"trim(replace(regexp_extract(payload, {d.re_lit(pat)}, 1), '\"', ''))"
+        return f"trim(replace(regexp_extract(payload, {d.lit(pat)}, 1), '\"', ''))"
 
     def js(key: str) -> str:
         return d.json_str_key("payload", key)
@@ -2666,29 +2661,26 @@ _P45_CASES = [
 ]
 
 
-def _sql_str(v, d: Dialect = None) -> str:
-    if v is None:
-        return f"CAST(NULL AS {d.strtype})"
-    return "'" + v.replace("'", "''") + "'"
-
-
 def _p45(d: Dialect) -> str:
+    def _nullable(v):
+        return f"CAST(NULL AS {d.strtype})" if v is None else d.lit(v)
+
     n = len(_P45_CASES)
     spine = "(VALUES " + ", ".join(f"({i})" for i in range(n)) + ")"
     brand = "CASE cid " + " ".join(
-        f"WHEN {i} THEN {_sql_str(b, d)}" for i, (b, _) in enumerate(_P45_CASES)
+        f"WHEN {i} THEN {_nullable(b)}" for i, (b, _) in enumerate(_P45_CASES)
     ) + " END"
     model = "CASE cid " + " ".join(
-        f"WHEN {i} THEN {_sql_str(m, d)}" for i, (_, m) in enumerate(_P45_CASES)
+        f"WHEN {i} THEN {_nullable(m)}" for i, (_, m) in enumerate(_P45_CASES)
     ) + " END"
 
     bl = "lower(trim(brand))"
     exact = "CASE " + bl + " " + " ".join(
-        f"WHEN {_sql_str(k)} THEN {_sql_str(v)}" for k, v in _BRAND_MAP
+        f"WHEN {d.lit(k)} THEN {d.lit(v)}" for k, v in _BRAND_MAP
     ) + " END"
     brand_of = dict(_BRAND_MAP)
     fuzzy = "CASE " + " ".join(
-        f"WHEN instr({bl}, {_sql_str(k)}) > 0 THEN {_sql_str(brand_of[k])}"
+        f"WHEN instr({bl}, {d.lit(k)}) > 0 THEN {d.lit(brand_of[k])}"
         for k in _BRAND_SCAN_ORDER
     ) + " END"
     capitalized = ("upper(substr(brand, 1, 1)) || lower(substr(brand, 2))")
@@ -2700,9 +2692,9 @@ def _p45(d: Dialect) -> str:
 
     um = "upper(std_model)"
     foldable_std = " OR ".join(
-        f"instr({um}, {_sql_str(k)}) > 0" for k in _FOLDABLE_KW)
+        f"instr({um}, {d.lit(k)}) > 0" for k in _FOLDABLE_KW)
     flagship = " OR ".join(
-        f"instr({um}, {_sql_str(k)}) > 0" for k in _FLAGSHIP_KW)
+        f"instr({um}, {d.lit(k)}) > 0" for k in _FLAGSHIP_KW)
     category = f"""CASE
       WHEN std_model = '' THEN 'UNKNOWN'
       WHEN {foldable_std} THEN 'Foldable'
@@ -2727,7 +2719,7 @@ def _p45(d: Dialect) -> str:
             + d.rlike("model", "(?i)(5G|全网通)") + " THEN 1 ELSE 0 END")
     raw_um = "upper(model)"
     fold_raw = " OR ".join(
-        f"instr({raw_um}, {_sql_str(k)}) > 0" for k in _FOLDABLE_KW)
+        f"instr({raw_um}, {d.lit(k)}) > 0" for k in _FOLDABLE_KW)
     is_fold = f"CASE WHEN model IS NOT NULL AND ({fold_raw}) THEN 1 ELSE 0 END"
     year = ("CASE WHEN " + d.rlike("std_model", r"20[12][0-9]")
             + " THEN regexp_extract(std_model, '(20[12][0-9])', 1) "
@@ -3623,7 +3615,7 @@ def _p51(d: Dialect) -> str:
         # LAST occurrence (map.put overwrites) — the greedy .* prefix
         # forces the rightmost match
         return (f"regexp_extract(query, "
-                f"{d.re_lit(f'(?s).*(^|&){key}=([^&=]*)')}, 2)")
+                f"{d.lit(f'(?s).*(^|&){key}=([^&=]*)')}, 2)")
 
     def qhas(key: str) -> str:
         return d.rlike("query", f"(^|&){key}=")
@@ -3647,7 +3639,7 @@ def _p51(d: Dialect) -> str:
     # URLDecoder.decode over the closed fixture escape alphabet
     decoded = "replace(replace(web_ad, '+', ' '), '%26', '&')"
     q_pat = r"^[^?]*\?([^?]*)"
-    query = f"regexp_extract({decoded}, {d.re_lit(q_pat)}, 1)"
+    query = f"regexp_extract({decoded}, {d.lit(q_pat)}, 1)"
 
     def aj(key: str) -> str:
         return f"COALESCE(CAST({d.json_str('apple_ad', '$.' + key)} AS BIGINT), 0)"
@@ -4059,7 +4051,7 @@ def ipv6_hex32_sql(d: Dialect, inner: str, passthru: str) -> str:
         return f"(length({x}) - length(replace({x}, '{ch}', '')))"
 
     groups = ", ".join(
-        f"lpad(regexp_extract(fullip, {d.re_lit(g8_re)}, {i}), 4, '0')"
+        f"lpad(regexp_extract(fullip, {d.lit(g8_re)}, {i}), 4, '0')"
         for i in range(1, 9)
     )
     return f"""
@@ -4117,9 +4109,9 @@ def dw_private_sql(d: Dialect, col: str) -> str:
 
     # trailing dots produce exactly the trailing empty strings Java
     # drops, so stripping them makes parts == dot-count + 1
-    trimmed = f"regexp_replace({col}, {d.re_lit(r'[.]+$')}, '')"
-    seg1 = f"regexp_extract({col}, {d.re_lit(r'^([^.]*)[.]')}, 1)"
-    seg2 = f"regexp_extract({col}, {d.re_lit(r'^[^.]*[.]([^.]*)[.]')}, 1)"
+    trimmed = f"regexp_replace({col}, {d.lit(r'[.]+$')}, '')"
+    seg1 = f"regexp_extract({col}, {d.lit(r'^([^.]*)[.]')}, 1)"
+    seg2 = f"regexp_extract({col}, {d.lit(r'^[^.]*[.]([^.]*)[.]')}, 1)"
     v1 = f"TRY_CAST({seg1} AS BIGINT)"
     v2 = f"TRY_CAST({seg2} AS BIGINT)"
     return f"""CASE
@@ -4169,7 +4161,7 @@ def _p53(d: Dialect) -> str:
         return f"(length({x}) - length(replace({x}, '{ch}', '')))"
 
     octs = ", ".join(
-        f"TRY_CAST(regexp_extract(quad, {d.re_lit(oct_re)}, {i}) AS BIGINT)"
+        f"TRY_CAST(regexp_extract(quad, {d.lit(oct_re)}, {i}) AS BIGINT)"
         f" AS o{i}"
         for i in range(1, 5)
     )

@@ -521,17 +521,16 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("q14_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
                COUNT(*) AS n_rows,
                CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        FROM q14_lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus), ())
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -597,14 +596,14 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY {epoch}, o_orderkey)"""
     ),
 )
 def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q16_orders")
     # parquet stores TIMESTAMP_NTZ; session TZ is pinned UTC so the
     # NTZ -> TIMESTAMP cast inside unix_seconds is an identity conversion
     return spark.sql(
         _Q16_BODY.format(
-            src="q16_orders",
+            src="{orders}",
             epoch="unix_seconds(CAST(o_orderdate AS TIMESTAMP))",
-        )
+        ),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -665,8 +664,8 @@ GROUP BY o.o_custkey"""
 
 @_q("q18_correlated_subquery", _Q18_BODY.format(src="orders"))
 def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q18_orders")
-    return spark.sql(_Q18_BODY.format(src="q18_orders"))
+    return spark.sql(_Q18_BODY.format(src="{orders}"),
+                     orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -689,9 +688,11 @@ GROUP BY c.c_mktsegment"""
 
 @_q("q19_not_in_null_aware", _Q19_BODY.format(cust="customer", orders="orders"))
 def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("q19_customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q19_orders")
-    return spark.sql(_Q19_BODY.format(cust="q19_customer", orders="q19_orders"))
+    return spark.sql(
+        _Q19_BODY.format(cust="{customer}", orders="{orders}"),
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from zg_etl_spark.dialect import DUCK, SPARK
 from zg_etl_spark.operators.domain import (
     VALID_PAST_MS,
     duck_pipeline_sql,
@@ -511,7 +512,6 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type"
         )
-        base.createOrReplaceTempView("s7_events")
         # The cut must STRADDLE at least one join pair or the test proves
         # nothing about cross-batch state (a median cut misses every pair
         # at the driver SFs — pairs span ≤2 h of a 30-day range). Cut at
@@ -520,10 +520,10 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
         mid = spark.sql(
             """
             WITH m AS (SELECT CAST(percentile_approx(ts, 0.5) AS BIGINT) AS c
-                       FROM s7_events)
+                       FROM {events})
             SELECT COALESCE(
               (SELECT c.ts
-               FROM s7_events c JOIN s7_events p
+               FROM {events} c JOIN {events} p
                  ON p.user_id = c.user_id
                 AND c.event_type = 'click' AND p.event_type = 'purchase'
                 AND p.ts > c.ts
@@ -531,7 +531,8 @@ def _s7(spark: SparkSession, sf_dir: str) -> DataFrame:
                CROSS JOIN m
                ORDER BY abs(c.ts - m.c), c.ts, p.ts LIMIT 1),
               (SELECT c FROM m)) AS cut
-            """
+            """,
+            events=base,
         ).first().cut
         _write_split_files(
             [base.filter(base.ts <= mid), base.filter(base.ts > mid)], src
@@ -605,7 +606,6 @@ FROM events c JOIN events p
 def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from zg_etl_spark.operators.domain import SPARK
     from zg_etl_spark.plans.pipeline import b_user_rows_sql
     from zg_etl_spark.sinks import upsert_table
 
@@ -669,7 +669,6 @@ def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _s8_oracle() -> str:
-    from zg_etl_spark.operators.domain import DUCK
     from zg_etl_spark.plans.pipeline import _p10
 
     return duck_pipeline_sql(
@@ -699,7 +698,6 @@ ORACLE["s8_stream_upsert_delete"] = _s8_oracle()
 def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from zg_etl_spark.operators.domain import SPARK
     from zg_etl_spark.plans.pipeline import _w9_obs_sql
     from zg_etl_spark.sinks import partial_upsert_table
 
@@ -800,7 +798,6 @@ ORACLE["s9_stream_partial_upsert"] = _s9_oracle()
 # land on identical aggregates.
 # ---------------------------------------------------------------------------
 def _s10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zg_etl_spark.operators.domain import SPARK
     from zg_etl_spark.plans.pipeline import p49_candidates_sql, p49_final_sql
     from zg_etl_spark.streaming.deep_convert import deep_convert_gate
 

@@ -25,9 +25,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Small dimension tables that should always be broadcast in joins.
-BROADCAST_TABLES = {"region", "nation"}
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
