@@ -65,11 +65,15 @@ def main() -> None:
     per_query, total = run_suite()
 
     # Warm pass: same suite again in the same JVM. The cold pass pays
-    # per-novel-plan Catalyst analysis + codegen compilation + streaming
-    # checkpoint bootstrap — one-time costs a long-lived cluster amortizes
-    # to zero; the warm number is the data-proportional cost that actually
-    # scales with SF and is the one BASELINE.md's ≤2×-DuckDB target is
-    # stated against.
+    # per-novel-plan codegen compilation and streaming checkpoint
+    # bootstrap; the warm number is the data-proportional cost that
+    # actually scales with SF and is the one BASELINE.md's ≤2×-DuckDB
+    # target is stated against. Compilation is one-time only because the
+    # session's codegen cache holds the whole suite's classes
+    # (session.CODEGEN_CACHE_ENTRIES): at sf0.001 on local[4], the warm
+    # pass over the 130 non-streaming queries compiled 1,414 classes
+    # with Spark's default 100-entry cache and 13 with it (the 10
+    # stream replays: 384 and 2).
     per_query_warm, warm_total = run_suite()
 
     # Same-host calibration: run the DuckDB oracle suite on the same data.

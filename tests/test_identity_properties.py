@@ -16,6 +16,7 @@ runs, not a reimplementation.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from zg_etl_spark.operators.domain import SPARK, stages
@@ -24,6 +25,15 @@ IDENTITY_STAGES = [
     "did_first", "did_ids", "cuid_first", "uid_ids",
     "dev_first_cuid", "device_zgid",
 ]
+
+
+@pytest.fixture(scope="module")
+def spark(spark):
+    """A session of its own on the shared context: the synthetic gate_ok
+    and identity-stage temp views stay out of the suite's session, where
+    the materialization registry owns those names for the live spine."""
+    return spark.newSession()
+
 
 ROW = st.tuples(
     st.integers(min_value=1, max_value=2),              # app_id

@@ -82,11 +82,50 @@ def test_relational_path_stays_jvm_side(spark, sf_dir):
         assert "EvalPython" not in plan, f"{name} fell off the JVM path:\n{plan}"
 
 
+def _codegen_fallbacks(df) -> list[str]:
+    """The whole-stage-codegen subtrees of ``df``'s executed plan that fail
+    to compile. Spark then runs such a stage unfused, and since a failed
+    compile is not cached it pays for the attempt again on every run.
+    ``debug.codegenString`` compiles each subtree and reports
+    ``maxMethodCodeSize:-1`` for one that does not compile (typically
+    Janino's "Code grows beyond 64 KB"). AQE is off while the plan is
+    rendered, so the executed plan holds the final stages."""
+    spark = df.sparkSession
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        text = spark.sparkContext._jvm.org.apache.spark.sql.execution \
+            .debug.package.codegenString(plan)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    return [sub for sub in text.split("== Subtree")[1:]
+            if "maxMethodCodeSize:-1" in sub]
+
+
 def test_whole_stage_codegen_present(spark, sf_dir):
+    """q1 runs inside whole-stage codegen, and p8's fused wide projection
+    (the widest select in the suite) compiles under the 64 KB limit."""
     plan = _plan(ALL["q1_pricing_summary"](spark, sf_dir), "simple")
     assert "WholeStageCodegen" in _plan(
         ALL["q1_pricing_summary"](spark, sf_dir), "codegen"
     ) or "*(" in plan, plan
+    assert not _codegen_fallbacks(ALL["p8_wide_table"](spark, sf_dir))
+
+
+@pytest.mark.slow
+def test_no_declared_query_falls_back_from_codegen(spark, sf_dir):
+    """Every declared query except the stream replays (s*) compiles all its
+    fused stages: no subtree falls back to unfused execution. ~75 s on a
+    4-core host, so it runs in the slow set; p8, the widest projection,
+    is checked in the default set above."""
+    failed = {}
+    for name in ALL:
+        if not name.startswith("s"):
+            bad = _codegen_fallbacks(ALL[name](spark, sf_dir))
+            if bad:
+                failed[name] = bad[0].splitlines()[0]
+    assert not failed, f"stages that fail to compile: {failed}"
 
 
 def test_aqe_enabled_in_session(spark):

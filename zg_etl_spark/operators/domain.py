@@ -162,9 +162,7 @@ def vtl_rules_values() -> str:
     filters ride separately through vtl_match_any (they are per-rule SQL
     predicates, not relation columns)."""
     return R.values_sql(
-        [(i,) + tuple(r[:4]) for i, r in enumerate(R.VIRTUAL_EVENT_RULES)],
-        ["rule_id", "rule_app", "src_event", "virtual_name", "alias"],
-    )
+        [(i,) + tuple(r[:4]) for i, r in enumerate(R.VIRTUAL_EVENT_RULES)])
 
 
 # join ON clause shared by the spine fan-out and p6's provenance query:
@@ -396,14 +394,14 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
   FROM feed f CROSS JOIN (SELECT MAX({d.event_ms()}) AS now_ref FROM events) nr""",
     ))
 
-    out.append(("app_reg", f"SELECT * FROM {R.values_sql(R.APP_REGISTRY, [])} AS t(r_ak, r_app_id, company_id)"))
-    out.append(("ip_bl", f"SELECT * FROM {R.values_sql(R.IP_BLACKLIST, [])} AS t(b_app_id, b_ip)"))
-    out.append(("ua_bl", f"SELECT * FROM {R.values_sql(R.UA_BLACKLIST, [])} AS t(b_app_id, b_ua)"))
-    out.append(("ip_ranges", f"SELECT * FROM {R.values_sql(R.IP_RANGES, [])} AS t({', '.join(R.IP_RANGE_COLS)})"))
-    out.append(("ipv6_ranges", f"SELECT * FROM {R.values_sql(R.IPV6_RANGES, [])} AS t({', '.join(R.IPV6_RANGE_COLS)})"))
+    out.append(("app_reg", f"SELECT * FROM {R.values_sql(R.APP_REGISTRY)} AS t(r_ak, r_app_id, company_id)"))
+    out.append(("ip_bl", f"SELECT * FROM {R.values_sql(R.IP_BLACKLIST)} AS t(b_app_id, b_ip)"))
+    out.append(("ua_bl", f"SELECT * FROM {R.values_sql(R.UA_BLACKLIST)} AS t(b_app_id, b_ua)"))
+    out.append(("ip_ranges", f"SELECT * FROM {R.values_sql(R.IP_RANGES)} AS t({', '.join(R.IP_RANGE_COLS)})"))
+    out.append(("ipv6_ranges", f"SELECT * FROM {R.values_sql(R.IPV6_RANGES)} AS t({', '.join(R.IPV6_RANGE_COLS)})"))
     out.append((
         "biz_wl",
-        f"SELECT * FROM {R.values_sql(R.BUSINESS_WHITELIST, [])} AS t(wb_cid, wb_business)",
+        f"SELECT * FROM {R.values_sql(R.BUSINESS_WHITELIST)} AS t(wb_cid, wb_business)",
     ))
 
     # gate (GateFlatMapFunction.java:102-213), the reference's observable
@@ -570,27 +568,27 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
     # (EventAsyncOperator.java:300-326; company_app.event_sum/auto_event).
     out.append((
         "app_cfg",
-        f"SELECT * FROM {R.values_sql(R.APP_CONFIG, [])} "
+        f"SELECT * FROM {R.values_sql(R.APP_CONFIG)} "
         "AS t(cfg_app_id, auto_disabled, event_cap, attr_cap)",
     ))
     out.append((
         "event_preseed",
-        f"SELECT * FROM {R.values_sql(R.EVENT_PRESEED, [])} "
+        f"SELECT * FROM {R.values_sql(R.EVENT_PRESEED)} "
         "AS t(ps_app_id, ps_owner, ps_event_name, ps_eid)",
     ))
     out.append((
         "event_bl",
-        f"SELECT * FROM {R.values_sql(R.EVENT_BLACKLIST, [])} "
+        f"SELECT * FROM {R.values_sql(R.EVENT_BLACKLIST)} "
         "AS t(bl_app_id, bl_owner, bl_event_name)",
     ))
     out.append((
         "attr_bl",
-        f"SELECT * FROM {R.values_sql(R.ATTR_BLACKLIST, [])} "
+        f"SELECT * FROM {R.values_sql(R.ATTR_BLACKLIST)} "
         "AS t(ab_app_id, ab_attr_name)",
     ))
     out.append((
         "uprop_bl",
-        f"SELECT * FROM {R.values_sql(R.USER_PROP_BLACKLIST, [])} "
+        f"SELECT * FROM {R.values_sql(R.USER_PROP_BLACKLIST)} "
         "AS t(ub_app_id, ub_prop_name)",
     ))
     out.append((
@@ -773,7 +771,7 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
     # (DevicePropertyOperator.java:46-152 — no auto-create)
     out.append((
         "device_prop_dict",
-        f"SELECT * FROM {R.values_sql(R.DEVICE_PROP_DICT, [])} "
+        f"SELECT * FROM {R.values_sql(R.DEVICE_PROP_DICT)} "
         f"AS t({', '.join(R.DEVICE_PROP_COLS)})",
     ))
     out.append((

@@ -216,7 +216,6 @@ ADS_LINK_RULES = [
     (3, "purchase", 1, 0),
     (4, "click", 86400, 1),
 ]
-ADS_LINK_COLS = ["r_lid", "conv_event", "window_sec", "frequency"]
 
 # advertising-enabled apps (the `advertisingMap` ak whitelist gating the
 # whole lid/channel annotation chain,
@@ -277,12 +276,12 @@ UTM_OVERRIDES = [
     ("purchase", "tf_src", "cpc", "camp_q3"),
     ("view", "tf_view", "cpm", "camp_v"),
 ]
-UTM_OVERRIDE_COLS = ["u_event", "u_source", "u_medium", "u_campaign"]
 
 
-def values_sql(rows: list[tuple], cols: list[str]) -> str:
+def values_sql(rows: list[tuple]) -> str:
     """Render rows as an inline VALUES table usable in both dialects:
-    ``(VALUES (...), (...)) AS t(c1, c2)`` (caller adds alias)."""
+    ``(VALUES (...), (...))``. The caller's ``AS t(c1, c2)`` alias is the
+    one place the column names live."""
 
     def lit(v) -> str:
         if v is None:

@@ -430,6 +430,12 @@ def _p8(d: Dialect) -> str:
     )
     family_given = ("(e.utm_source IS NOT NULL OR e.utm_campaign IS NOT NULL"
                     " OR e.utm_content IS NOT NULL)")
+    # term_full (~4.9 KB of SQL) is a column of the `e` subquery, which
+    # Spark pushes into each UNION branch, and the outer select reads it
+    # by name: inlined into the outer d.clean, which repeats its argument
+    # four times, it takes the final fused stage's method past the JVM's
+    # 64 KB limit, and that stage then fails to compile on every run and
+    # runs unfused (tests/test_plan_quality.py checks for fallbacks)
     term_full = (
         f"COALESCE(NULLIF({SK.clean_keyword(d, term_dec)}, ''), "
         f"CASE WHEN NOT {family_given} "
@@ -499,7 +505,7 @@ SELECT /*+ BROADCAST(am), BROADCAST(g) */
             WHEN e.ref IS NOT NULL THEN '引荐' END AS utm_medium,
        {d.clean(f"COALESCE(e.utm_source, CASE WHEN e.ref IS NOT NULL THEN {website} END)", 256)}
            AS utm_source_f,
-       {d.clean(term_full, 256)} AS utm_term,
+       {d.clean('e.term_full', 256)} AS utm_term,
        {d.clean('e.utm_campaign', 256)} AS utm_campaign,
        {d.clean('e.utm_content', 256)} AS utm_content,
        CASE WHEN e.dur BETWEEN 0 AND 86400000 THEN e.dur
@@ -511,19 +517,22 @@ SELECT /*+ BROADCAST(am), BROADCAST(g) */
        {d.s('e.zg_id')} || '_' || {d.s('COALESCE(e.sid, -1)')} AS attr5,
        {_cus_cols(d)}
 FROM (
-  SELECT {cols}, owner_e, event_name_t, zg_eid,
-         {SK.engine_case(d, 'ref')} AS search_engine,
-         {term_raw} AS term_raw,
-         {ua_real_case(d)} AS ua_real
-  FROM events_dicted WHERE event_error_code = 0
-  UNION ALL
-  SELECT {cols}, owner AS owner_e,
-         CAST(NULL AS {d.strtype}) AS event_name_t,
-         CAST(CASE dt WHEN 'ss' THEN -1 ELSE -2 END AS BIGINT) AS zg_eid,
-         {SK.engine_case(d, 'ref')} AS search_engine,
-         {term_raw} AS term_raw,
-         {ua_real_case(d)} AS ua_real
-  FROM resolved WHERE dt IN ('ss', 'se')
+  SELECT e.*, {term_full} AS term_full
+  FROM (
+    SELECT {cols}, owner_e, event_name_t, zg_eid,
+           {SK.engine_case(d, 'ref')} AS search_engine,
+           {term_raw} AS term_raw,
+           {ua_real_case(d)} AS ua_real
+    FROM events_dicted WHERE event_error_code = 0
+    UNION ALL
+    SELECT {cols}, owner AS owner_e,
+           CAST(NULL AS {d.strtype}) AS event_name_t,
+           CAST(CASE dt WHEN 'ss' THEN -1 ELSE -2 END AS BIGINT) AS zg_eid,
+           {SK.engine_case(d, 'ref')} AS search_engine,
+           {term_raw} AS term_raw,
+           {ua_real_case(d)} AS ua_real
+    FROM resolved WHERE dt IN ('ss', 'se')
+  ) e
 ) e
 LEFT JOIN attr_map am ON am.zg_eid = e.zg_eid AND am.owner = e.owner_e
 LEFT JOIN ip_ranges g ON e.ip_long BETWEEN g.ip_lo AND g.ip_hi"""
@@ -1214,7 +1223,7 @@ def _p23_claims(d: Dialect) -> str:
 
 def _p23(d: Dialect) -> str:
     clicks = (
-        f"{R.values_sql(R.AD_CLICKS, [])} "
+        f"{R.values_sql(R.AD_CLICKS)} "
         f"AS s({', '.join(R.AD_CLICK_COLS)})"
     )
     return f"""
@@ -1520,8 +1529,8 @@ _register("p30_search_keywords", _p30)
 # the reference's max-ct Redis lookup. Rules/overrides broadcast.
 # ---------------------------------------------------------------------------
 def _p31(d: Dialect) -> str:
-    rules = R.values_sql(R.ADS_LINK_RULES, R.ADS_LINK_COLS)
-    utm = R.values_sql(R.UTM_OVERRIDES, R.UTM_OVERRIDE_COLS)
+    rules = R.values_sql(R.ADS_LINK_RULES)
+    utm = R.values_sql(R.UTM_OVERRIDES)
     w = (
         "(PARTITION BY app_id, zg_id ORDER BY ct, is_touch DESC, seq "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
@@ -3374,9 +3383,7 @@ def p49_candidates_sql(d: Dialect) -> str:
     attributed to their latest prior touch, rule-joined and window-gated
     — shared by p49's batch gate and s10's streaming gate so the two
     formulations cannot drift."""
-    deep_rules = R.values_sql(
-        P49_DEEP_RULES,
-        ["dr_lid", "dr_event", "dr_window", "dr_channel_event"])
+    deep_rules = R.values_sql(P49_DEEP_RULES)
     multi = "r.dr_lid IN (" + ", ".join(str(x) for x in P49_MULTI_LIDS) + ")"
     w_attr = (
         "(PARTITION BY app_id, zg_id ORDER BY ct, is_touch DESC, seq "
@@ -3831,14 +3838,14 @@ SELECT r.app_id, r.dt, r.user_id, r.ip, r.k, r.ct, r.seq, r.zg_id,
     UNION ALL
     SELECT f.app_id, f.dt, f.user_id, f.ip, f.k, f.ct, f.seq, f.zg_id,
            f.pl, f.ua_real
-    FROM {R.values_sql(P52_FIXTURES, [])}
+    FROM {R.values_sql(P52_FIXTURES)}
          AS f(app_id, dt, user_id, ip, k, ct, seq, zg_id, pl, ua_real)""")
 
 
 def p52_keyed_src(spark: SparkSession, sf_dir: str) -> str:
     """p52_keyed_sql's rows on Spark, as a FROM item: the shared UA-parsed
     index UNION ALL the parsed P52_FIXTURES rows."""
-    fixtures = (f"SELECT * FROM {R.values_sql(P52_FIXTURES, [])} "
+    fixtures = (f"SELECT * FROM {R.values_sql(P52_FIXTURES)} "
                 f"AS f({_P52_COLS}, ua_real)")
     return f"""(
   SELECT {_P52_COLS}, ua_name, ua_ver, ua_iphone
@@ -4284,10 +4291,9 @@ def _p55(d: Dialect) -> str:
     s = d.s
     click_seed = R.values_sql(
         [(a, i, f"198.51.100.{i}", 1699980000000 + i, -(200 + 10 * a + i))
-         for a in R.ADVERTISING_APPS for i in range(9)],
-        [])
+         for a in R.ADVERTISING_APPS for i in range(9)])
     probe_seed = R.values_sql(
-        [(a, i) for a in R.ADVERTISING_APPS for i in range(11)], [])
+        [(a, i) for a in R.ADVERTISING_APPS for i in range(11)])
     return f"""
 WITH keyed AS ({p52_keyed_sql(d)}
 ), clicks AS ({p52_clicks_sql(d)}
