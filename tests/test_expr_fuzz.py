@@ -4,7 +4,7 @@ treatment applied to functions/expr_compiler.py.
 Three legs:
 
 1. ENGINE ≡ ENGINE: every (expression template × dirty value pair) must
-   agree across SparkEmitter and DuckEmitter, tri-state (NULL / value),
+   agree across the Spark and DuckDB renderings, tri-state (NULL / value),
    with numeric and NaN/Inf rendering normalization. All cells evaluate
    in ONE query per engine.
 2. ENGINE ≡ REFERENCE PORT: a literal Python port of the evaluator's
@@ -831,6 +831,42 @@ def test_iso_fractional_seconds(spark):
         + ") AS STRING) FROM iso_frac_rows").collect()}
     assert got["2024-08-15T11:59:59.5"] == "true"
     assert got["2024-08-15T12:00:00"] == "false"
+
+
+def test_smart_year_zero_is_null(spark):
+    """The dash/slash/hour-24 bodies are ofPattern("yyyy…") parses under
+    ResolverStyle.SMART, whose era-based ``yyyy`` rejects year-of-era 0
+    (live-JVM-verified), so a year-0000 string is no datetime there and
+    date_format/date_diff throw → NULL on both engines, as the port
+    says. Strict ISO bodies keep year 0 (ISO_LOCAL_DATE_TIME uses the
+    proleptic year); the year-1 controls prove the forms still parse."""
+    year0 = ["0000-1-4 8:11:23", "0000/1/4 8:11:23", "0000-1-4 24:00:00"]
+    year1 = {"0001-1-4 8:11:23": "0001-01-04 08:11:23",
+             "0001/1/4 8:11:23": "0001-01-04 08:11:23",
+             "0001-1-4 24:00:00": "0001-01-05 00:00:00"}
+    for f in year0:
+        assert ref_parse_datetime(f) is None, f
+    tpls = ["date_format(f, 'yyyy-MM-dd HH:mm:ss')",
+            "DATEDIFF(f, '2024-01-01 00:00:00')"]
+    rows = [(f, None) for f in year0 + list(year1)]
+    spark.createDataFrame(rows, "f string, g string") \
+        .createOrReplaceTempView("year0_rows")
+    s_cols = ", ".join(
+        f"CAST(({COMPILER.to_spark_sql(t)}) AS STRING)" for t in tpls)
+    s_map = {r[0]: (r[1], r[2]) for r in spark.sql(
+        f"SELECT f, {s_cols} FROM year0_rows").collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE year0_rows(f VARCHAR, g VARCHAR)")
+    con.executemany("INSERT INTO year0_rows VALUES (?, ?)", rows)
+    d_cols = ", ".join(
+        f"CAST(({COMPILER.to_duckdb_sql(t)}) AS VARCHAR)" for t in tpls)
+    d_map = {r[0]: (r[1], r[2]) for r in con.execute(
+        f"SELECT f, {d_cols} FROM year0_rows").fetchall()}
+    for f in year0:
+        assert s_map[f] == d_map[f] == (None, None), (f, s_map[f], d_map[f])
+    for f, want in year1.items():
+        assert s_map[f][0] == d_map[f][0] == want, (f, s_map[f], d_map[f])
+        assert s_map[f][1] == d_map[f][1] is not None, (f, s_map[f], d_map[f])
 
 
 def test_sec_ms_boundary_is_strict():

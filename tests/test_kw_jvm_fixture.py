@@ -565,6 +565,57 @@ def test_ea_sql_templates_match_jvm_fixture_spark(spark):
     assert not bad, f"{len(bad)} SQL divergences, first 5: {bad[:5]}"
 
 
+def _dt_cells():
+    with gzip.open(FIXTURE, "rt", encoding="utf-8") as fh:
+        fh.readline()
+        cells = [json.loads(l) for l in fh]
+    return [(v, int(jvm)) for m, v, jvm in cells if m == "dt"]
+
+
+def _dt_sql(d):
+    """p51's clickDate lane (plans/pipeline._p51) over column v, with
+    ToolUtil's failure value 0 in place of NULL."""
+    return (f"COALESCE(CASE WHEN length(v) > 17 "
+            f"THEN {d.utc_str_ms('v', True)} "
+            f"ELSE {d.utc_str_ms('v', False)} END, 0)")
+
+
+def test_dt_sql_matches_jvm_fixture_duckdb():
+    """The DUCK rendering of utc_str_ms — the SQL p51's oracle runs —
+    reproduces ToolUtil.dateUsStrToTimestamp on every 'dt' cell,
+    including the year-0000 cells SMART's era-based yyyy rejects."""
+    import duckdb
+
+    from zg_etl_spark.dialect import DUCK
+
+    cells = _dt_cells()
+    assert len(cells) == 30, len(cells)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INT, v VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)",
+                    [(i, v) for i, (v, _) in enumerate(cells)])
+    got = dict(con.execute(f"SELECT i, {_dt_sql(DUCK)} FROM t").fetchall())
+    bad = [(v, jvm, got[i]) for i, (v, jvm) in enumerate(cells)
+           if got[i] != jvm]
+    assert not bad, f"{len(bad)} SQL divergences: {bad}"
+
+
+def test_dt_sql_matches_jvm_fixture_spark(spark):
+    """Same leg through the SPARK rendering — the expression p51 runs."""
+    from zg_etl_spark.dialect import SPARK
+
+    cells = _dt_cells()
+    assert len(cells) == 30, len(cells)
+    spark.createDataFrame([(i, v) for i, (v, _) in enumerate(cells)],
+                          "i long, v string") \
+        .createOrReplaceTempView("dt_cells")
+    got = {r.i: r.o for r in spark.sql(
+        f"SELECT i, {_dt_sql(SPARK)} AS o FROM dt_cells").collect()}
+    bad = [(v, jvm, got[i]) for i, (v, jvm) in enumerate(cells)
+           if got[i] != jvm]
+    assert not bad, f"{len(bad)} SQL divergences: {bad}"
+
+
 def test_python_models_reproduce_kw_jvm_fixture():
     from zg_etl_spark.functions.search_keywords import ref_utm_term_from_ref
 

@@ -6,8 +6,9 @@ rendered twice — with ``SPARK`` for the engine and ``DUCK`` for the oracle
 — so the two renderings cannot drift, and oracle parity stays an
 equivalence proof. A template never tests which engine it renders for to
 pick a spelling; it asks its dialect. (Templates that deliberately give
-the engine a rewrite of the oracle's original form, and p5's choice of
-rule emitter, still branch on ``d.name``.)
+the engine a rewrite of the oracle's original form still branch on
+``d.name``.) The virtual-attribute rule compiler
+(functions/expr_compiler.py) is one emitter over these hooks too.
 
 String literals go through ``lit`` only: Spark processes backslash
 escapes inside ``'…'`` while DuckDB keeps them raw, so a value from
@@ -20,6 +21,8 @@ use it without loading the pipeline.
 
 from __future__ import annotations
 
+import re
+
 _JAVA_TO_STRF = [
     ("yyyy", "%Y"),
     ("MM", "%m"),
@@ -31,12 +34,22 @@ _JAVA_TO_STRF = [
 
 
 def java_fmt_to_strftime(fmt: str) -> str:
-    out = fmt
-    for i, (java, strf) in enumerate(_JAVA_TO_STRF):
-        out = out.replace(java, f"\x00{i}\x00")
-    for i, (java, strf) in enumerate(_JAVA_TO_STRF):
-        out = out.replace(f"\x00{i}\x00", strf)
-    return out
+    """A Java DateTimeFormatter pattern in strftime spelling: the
+    _JAVA_TO_STRF letter runs map to their directives, a quoted run
+    ('T') stays literal ('' is a quote), and a literal % doubles."""
+    out = []
+    # re.split with one group alternates unquoted text, quoted run
+    for i, part in enumerate(re.split(r"'((?:[^']|'')*)'", fmt)):
+        part = part.replace("%", "%%")
+        if i % 2:
+            out.append(part.replace("''", "'") if part else "'")
+            continue
+        for j, (java, _) in enumerate(_JAVA_TO_STRF):
+            part = part.replace(java, f"\x00{j}\x00")
+        for j, (_, strf) in enumerate(_JAVA_TO_STRF):
+            part = part.replace(f"\x00{j}\x00", strf)
+        out.append(part)
+    return "".join(out)
 
 
 class Dialect:
@@ -169,23 +182,27 @@ class Dialect:
         """ToolUtil.dateUsStrToTimestamp's UTC parse (ToolUtil.java:
         45-70): "yyyy-MM-dd'T'HH:mm[:ss]'Z'" → epoch ms, NULL on parse
         failure (the caller maps failure to 0). The formatter is an
-        ofPattern — default ResolverStyle.SMART, live-JVM-verified: an
-        in-range day (1-31) CLAMPS to the month's last valid day
-        ('2023-02-29T…' → Feb 28, '2023-04-31T…' → Apr 30) and exactly
-        24:00[:00] resolves to next-day midnight; month/minute/second
-        stay strict. The session TZ is pinned UTC, so a naive parse IS
-        the UTC instant."""
-        ts = self._smart_utc_ts(x, seconds)
-        return self._ts_ms(ts)
-
-    def _smart_utc_ts(self, x: str, seconds: bool) -> str:
-        """The SMART-resolved TIMESTAMP for utc_str_ms (dialect-neutral
-        component SQL; the engines' own pattern parses are strict and
-        would NULL the clamp/hour-24 cells Java accepts)."""
+        ofPattern, so ``smart_ts`` resolves it; the session TZ is pinned
+        UTC, so a naive parse IS the UTC instant."""
         tail = ":([0-9]{2})" if seconds else ""
         rx = (f"^([0-9]{{4}})-([0-9]{{2}})-([0-9]{{2}})"
               f"T([0-9]{{2}}):([0-9]{{2}}){tail}Z$")
+        return self._ts_ms(f"CASE WHEN {self.rlike(x, rx)} "
+                           f"THEN {self.smart_ts(x, rx, seconds)} END")
 
+    def smart_ts(self, x: str, rx: str, seconds: bool = True) -> str:
+        """The TIMESTAMP an ofPattern("yyyy…") parse resolves to under
+        the default ResolverStyle.SMART, for an ``x`` already known to
+        match ``rx`` (anchored; groups year, month, day, hour, minute
+        and, with ``seconds``, second). Live-JVM-verified: the era-based
+        ``yyyy`` rejects year-of-era 0; month 1-12, day 1-31 and
+        minute/second 0-59 are strict, but an in-range day CLAMPS to the
+        month's last valid day ('2023-02-29' → Feb 28, '2023-04-31' →
+        Apr 30), and exactly 24:00[:00] resolves to next-day midnight
+        (composing with the clamp: '2023-02-29 24:00:00' → 2023-03-01).
+        Dialect-neutral component SQL: the engines' own pattern parses
+        are strict and would NULL the clamp/hour-24 values Java accepts.
+        Shared by utc_str_ms and the rule compiler's dash/slash forms."""
         def g(i: int) -> str:
             return (f"CAST(regexp_extract({x}, {self.lit(rx)}, {i})"
                     f" AS INT)")
@@ -193,12 +210,12 @@ class Dialect:
         y, mo, dd, h, mi = g(1), g(2), g(3), g(4), g(5)
         ss = g(6) if seconds else "0"
         clamp = f"LEAST({dd}, day(last_day(make_date({y}, {mo}, 1))))"
-        ok_date = f"({mo} BETWEEN 1 AND 12 AND {dd} BETWEEN 1 AND 31)"
+        ok_date = (f"({y} >= 1 AND {mo} BETWEEN 1 AND 12 "
+                   f"AND {dd} BETWEEN 1 AND 31)")
         ok_time = f"({h} <= 23 AND {mi} <= 59 AND {ss} <= 59)"
         h24 = f"({h} = 24 AND {mi} = 0 AND {ss} = 0)"
         nxt = self.date_sub(f"make_date({y}, {mo}, {clamp})", -1)
-        return (f"CASE WHEN NOT {self.rlike(x, rx)} THEN NULL "
-                f"WHEN NOT {ok_date} THEN NULL "
+        return (f"CASE WHEN NOT {ok_date} THEN NULL "
                 f"WHEN {ok_time} THEN make_timestamp({y}, {mo}, {clamp}, "
                 f"{h}, {mi}, {ss}) "
                 f"WHEN {h24} THEN CAST({nxt} AS TIMESTAMP) END")
@@ -206,6 +223,44 @@ class Dialect:
     def _ts_ms(self, ts: str) -> str:
         """Whole-second naive TIMESTAMP expr → epoch millis BIGINT."""
         raise NotImplementedError
+
+    # --- the rule compiler's hooks (functions/expr_compiler.py) ----------
+    def now(self) -> str:
+        raise NotImplementedError
+
+    def safe_div(self, a: str, b: str) -> str:
+        """DOUBLE division yielding NULL on a zero divisor."""
+        raise NotImplementedError
+
+    def safe_mod(self, a: str, b: str) -> str:
+        """DOUBLE remainder yielding NULL on a zero divisor."""
+        raise NotImplementedError
+
+    def trunc_to_long(self, x: str) -> str:
+        """DOUBLE → BIGINT truncated toward zero, like Java's
+        Number.longValue() (the caller range-gates the operand)."""
+        raise NotImplementedError
+
+    def epoch_us(self, ts: str) -> str:
+        """Naive TIMESTAMP → epoch microseconds BIGINT."""
+        raise NotImplementedError
+
+    def try_ts(self, x: str, java_fmt: str) -> str:
+        """Strict parse of a string by a Java pattern; NULL on failure."""
+        raise NotImplementedError
+
+    def backref(self, i: int) -> str:
+        """Capture-group reference in a re_replace_all replacement."""
+        raise NotImplementedError
+
+    def arr(self, x: str) -> str:
+        """One-element array literal."""
+        raise NotImplementedError
+
+    def json_doc_str(self, col: str, path: str) -> str:
+        """json_str over any string: NULL, not an error, when the
+        document is not valid JSON."""
+        return self.json_str(col, path)
 
 
 class SparkDialect(Dialect):
@@ -278,6 +333,33 @@ class SparkDialect(Dialect):
 
     def _ts_ms(self, ts):
         return f"CAST(to_unix_timestamp({ts}) AS BIGINT) * 1000"
+
+    def now(self):
+        return "current_timestamp()"
+
+    def safe_div(self, a, b):
+        # ANSI-safe: Spark 4 defaults spark.sql.ansi.enabled=true, where
+        # bare `/` raises DIVIDE_BY_ZERO
+        return f"try_divide({a}, {b})"
+
+    def safe_mod(self, a, b):
+        return f"try_mod({a}, {b})"
+
+    def trunc_to_long(self, x):
+        # the ANSI double→BIGINT cast truncates toward zero
+        return f"CAST({x} AS BIGINT)"
+
+    def epoch_us(self, ts):
+        return f"unix_micros({ts})"
+
+    def try_ts(self, x, java_fmt):
+        return f"try_to_timestamp({x}, {self.lit(java_fmt)})"
+
+    def backref(self, i):
+        return f"${i}"
+
+    def arr(self, x):
+        return f"array({x})"
 
     def byte_len(self, x):
         return f"length(encode({x}, 'UTF-8'))"
@@ -417,6 +499,39 @@ class DuckDialect(Dialect):
 
     def _ts_ms(self, ts):
         return f"epoch_ms({ts})"
+
+    def now(self):
+        return "now()"
+
+    def safe_div(self, a, b):
+        return f"({a} / {b})"  # double division yields NULL on /0
+
+    def safe_mod(self, a, b):
+        return f"({a} % {b})"  # double mod yields NULL on %0
+
+    def trunc_to_long(self, x):
+        # the double→BIGINT cast ROUNDS; trunc() first
+        return f"CAST(trunc({x}) AS BIGINT)"
+
+    def epoch_us(self, ts):
+        return f"epoch_us({ts})"
+
+    def try_ts(self, x, java_fmt):
+        # one pattern per call: the format-LIST overload of try_strptime
+        # returns TIMESTAMP WITH TIME ZONE (naive everywhere else)
+        return (f"try_strptime({x}, "
+                f"{self.lit(java_fmt_to_strftime(java_fmt))})")
+
+    def backref(self, i):
+        return f"\\{i}"
+
+    def arr(self, x):
+        return f"[{x}]"
+
+    def json_doc_str(self, col, path):
+        # json_extract_string THROWS on malformed JSON where Spark's
+        # get_json_object returns NULL
+        return f"(CASE WHEN json_valid({col}) THEN {self.json_str(col, path)} END)"
 
     def byte_len(self, x):
         return f"octet_length(encode({x}))"

@@ -1,7 +1,6 @@
 from zg_etl_spark.functions.expr_compiler import (
     ExprCompiler,
     ExpressionError,
-    compile_rule,
 )
 
-__all__ = ["ExprCompiler", "ExpressionError", "compile_rule"]
+__all__ = ["ExprCompiler", "ExpressionError"]

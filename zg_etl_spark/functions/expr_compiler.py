@@ -18,8 +18,10 @@ ceil floor coalesce nullif get_json_string.
 
 Spark-first design: instead of the reference's per-row interpreter, we
 compile the AST ONCE into engine SQL evaluated by Catalyst codegen — and
-into DuckDB SQL for the correctness oracle. One parser, two emitters; the
-oracle of a virtual-attribute query is generated, never hand-written twice.
+into DuckDB SQL for the correctness oracle. One parser and one emitter,
+rendered through the project's one SQL dialect (zg_etl_spark/dialect.py)
+with ``SPARK`` for the engine and ``DUCK`` for the oracle; the oracle of a
+virtual-attribute query is generated, never hand-written twice.
 
 Documented semantics preserved:
 - division carries scale 10, HALF_UP (`:302-311`) → round(a/b, 10);
@@ -508,22 +510,25 @@ def returns_boolean(node: Node) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Emitters: AST -> SQL string per dialect, with type-context hints so
+# Emitter: AST -> SQL string for one dialect, with type-context hints so
 # weakly-typed (stringly) fields get coerced at use sites, exactly like the
 # reference's dynamic coercion (numeric-first equality, BigDecimal math).
 # ---------------------------------------------------------------------------
 class Emitter:
-    """Base emitter. ``field_resolver(name, hint)`` maps an identifier to a
+    """AST → SQL for one dialect ``d``: every engine-specific spelling is
+    a ``d`` hook. ``field_resolver(name, hint)`` maps an identifier to a
     SQL fragment; hint ∈ {'any','number','string','timestamp'}. String
     literals — rule constants included — render through ``d.lit``."""
 
-    d: Dialect
-
-    def __init__(self, field_resolver=None, now_literal: str | None = None):
+    def __init__(self, d: Dialect, field_resolver=None,
+                 now_literal: str | None = None):
+        self.d = d
         self.resolve = field_resolver or (lambda name, hint: name)
         self.now_literal = now_literal
+        # nesting depth of bind_one's lambda variables
+        self._bind_depth = 0
 
-    # --- dialect hooks -----------------------------------------------------
+    # --- coercions ----------------------------------------------------------
     def cast_num(self, frag: str) -> str:
         return f"CAST({frag} AS DOUBLE)"
 
@@ -698,14 +703,6 @@ class Emitter:
             return f"(CASE WHEN {conds} THEN NULL ELSE FALSE END)", True
         return "FALSE", False
 
-    def safe_div(self, a: str, b: str) -> str:
-        """Division yielding NULL on a zero divisor in this dialect."""
-        raise NotImplementedError
-
-    def safe_mod(self, a: str, b: str) -> str:
-        """Remainder yielding NULL on a zero divisor in this dialect."""
-        raise NotImplementedError
-
     def round_scaled(self, frag: str, n: int) -> str:
         """round(x, n) agreeing across engines: identity where x·10^n
         exceeds 2^53. Below that bound both engines' round is exact in
@@ -725,17 +722,10 @@ class Emitter:
 
     def rlike(self, frag: str, pattern: str) -> str:
         """Anchored regex test over a string fragment."""
-        raise NotImplementedError
+        return f"({self.d.rlike(frag, pattern)})"
 
-    def ms_to_ts(self, ms_frag: str) -> str:
-        """BIGINT epoch-millis fragment (nullable) → naive timestamp."""
-        raise NotImplementedError
-
-    def trunc_to_long(self, d_frag: str) -> str:
-        """DOUBLE fragment → BIGINT truncated toward zero, matching
-        Number.longValue() (DuckDB's double→BIGINT cast rounds, Spark's
-        truncates — each dialect supplies its truncating form)."""
-        raise NotImplementedError
+    def now(self) -> str:
+        return self.now_literal or self.d.now()
 
     # --- shared timestamp semantics (reference evaluator :440-535) ---------
     # calendar years 0001-9999 as epoch bounds; outside → NULL (documented
@@ -773,7 +763,7 @@ class Emitter:
         STRINGS its sibling date_format accepts)."""
         as_long = f"TRY_CAST({frag} AS BIGINT)"
         return (f"CASE WHEN {self.rlike(frag, self._LONG_RE)} "
-                f"THEN {self.ms_to_ts(self._epoch_ms(as_long))} "
+                f"THEN {self.d.ts(self._epoch_ms(as_long))} "
                 f"ELSE {self.ts_date_str(frag, with_date_only)} END")
 
     def ts_from_num(self, frag: str) -> str:
@@ -781,29 +771,26 @@ class Emitter:
         truncation toward zero (:512), then the >1e10 rule."""
         d = self.try_num(frag)
         v = (f"CASE WHEN {d} BETWEEN -9.2e18 AND 9.2e18 "
-             f"THEN {self.trunc_to_long(d)} END")
-        return self.ms_to_ts(self._epoch_ms(v))
+             f"THEN {self.d.trunc_to_long(d)} END")
+        return self.d.ts(self._epoch_ms(v))
 
     # regex gate per accepted datetime format — the evaluator's EFFECTIVE
     # set (module docstring): date-only patterns fail LocalDateTime.parse,
     # only strict ISO yyyy-MM-dd survives via the LocalDate fallback;
-    # with-time forms take 1-2 digit month/day/hour/min/sec
+    # with-time forms take 1-2 digit month/day/hour/min/sec. Each gate
+    # pairs with its parse: "smart" (the ofPattern bodies), "iso_frac",
+    # or strict Java patterns (the gate already fixed the digit counts).
+    _SMART_RX = ("^([0-9]{{4}}){0}([0-9]{{1,2}}){0}([0-9]{{1,2}})"
+                 " ([0-9]{{1,2}}):([0-9]{{1,2}}):([0-9]{{1,2}})$")
     _DT_FORMS = (
-        # SMART-resolver hour 24 (live-JVM-verified, round 9): the
-        # ofPattern bodies use the default ResolverStyle.SMART, which
-        # resolves EXACTLY 24:00:00 to next-day midnight ('2024-08-10
-        # 24:00:00' → 2024-08-11T00:00; 24:00:01 / 24:30:00 still fail);
-        # the strict ISO_LOCAL_DATE_TIME body rejects the T-form. These
-        # two rows must precede the generic with-time rows (whose regex
-        # also matches, but whose engine parse returns NULL for hour 24).
-        ("^[0-9]{4}-[0-9]{1,2}-[0-9]{1,2} 24:0{1,2}:0{1,2}$", "dash_h24"),
-        ("^[0-9]{4}/[0-9]{1,2}/[0-9]{1,2} 24:0{1,2}:0{1,2}$", "slash_h24"),
-        ("^[0-9]{4}-[0-9]{1,2}-[0-9]{1,2}"
-         " [0-9]{1,2}:[0-9]{1,2}:[0-9]{1,2}$", "dash_dt"),
-        ("^[0-9]{4}/[0-9]{1,2}/[0-9]{1,2}"
-         " [0-9]{1,2}:[0-9]{1,2}:[0-9]{1,2}$", "slash_dt"),
+        # the ofPattern bodies use the default ResolverStyle.SMART
+        # (dialect.smart_ts: day clamp, exactly 24:00:00 → next-day
+        # midnight, year-of-era 0 rejected — live-JVM-verified); the
+        # strict ISO_LOCAL_DATE_TIME body rejects the T-form's hour 24
+        (_SMART_RX.format("-"), "smart"),
+        (_SMART_RX.format("/"), "smart"),
         ("^[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}(:[0-9]{2})?$",
-         "iso_t"),
+         ("yyyy-MM-dd'T'HH:mm:ss", "yyyy-MM-dd'T'HH:mm")),
         # ISO_LOCAL_DATE_TIME's fractional seconds: Java accepts 1-9
         # digits (nanos); engines hold int64 microseconds, so digits 7-9
         # are truncated at parse (regex-gated TRY_CAST after a
@@ -814,25 +801,23 @@ class Emitter:
         # full nanos) — the reference port raises Fragile there.
         ("^[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2}"
          "\\.[0-9]{1,9}$", "iso_frac"),
-        ("^[0-9]{4}-[0-9]{2}-[0-9]{2}$", "date_only"),
+        ("^[0-9]{4}-[0-9]{2}-[0-9]{2}$", ("yyyy-MM-dd",)),
     )
 
-    def dt_parse(self, frag: str, form: str) -> str:
-        """Parse a regex-vetted datetime string of the named form."""
-        raise NotImplementedError
-
-    # the ofPattern bodies' ResolverStyle.SMART, live-JVM-verified:
-    # month 1-12 / day 1-31 / minute+second 0-59 are strict, but an
-    # in-range day is CLAMPED to the month's last valid day
-    # ('2023-02-29 10:00:00' → 2023-02-28T10:00, '2024/2/30' → Feb 29),
-    # hour 24 is valid only as exactly 24:00:00 (→ next-day midnight,
-    # composing with the clamp: '2023-02-29 24:00:00' → 2023-03-01).
-    # Strict ISO bodies (iso_t/iso_frac/date_only) do none of this.
-    _SMART_SEP = {"dash_dt": "-", "slash_dt": "/",
-                  "dash_h24": "-", "slash_h24": "/"}
-
-    def add_days(self, date_frag: str, n: int) -> str:
-        raise NotImplementedError
+    def dt_parse(self, frag: str, rx: str, how) -> str:
+        """Parse a datetime string already known to match ``rx``."""
+        d = self.d
+        if how == "smart":
+            return self.bind_one(frag, lambda v: d.smart_ts(v, rx))
+        if how == "iso_frac":
+            # the native ISO cast reads the fraction as a DECIMAL
+            # fraction ('.5' → .500000) at exact µs, matching
+            # ISO_LOCAL_DATE_TIME; sub-µs digits 7-9 drop first
+            trunc = d.re_replace_all(frag, r"(\.[0-9]{6})[0-9]+$",
+                                     d.backref(1))
+            return f"TRY_CAST({trunc} AS TIMESTAMP)"
+        tries = ", ".join(d.try_ts(frag, p) for p in how)
+        return f"coalesce({tries})" if len(how) > 1 else tries
 
     def bind_one(self, frag: str, body_fn) -> str:
         """Emit ``body_fn(var)`` with ``frag`` bound ONCE to a lambda
@@ -840,32 +825,22 @@ class Emitter:
         SMART component parse references its operand ~12 times; inlining
         that into nested tree emissions multiplies fragment size per
         nesting level — emission-size blowup that OOMed the date-leg
-        sweep — so the operand must be emitted exactly once."""
-        raise NotImplementedError
+        sweep — so the operand must be emitted exactly once.
 
-    def dt_parse_smart(self, frag: str, form: str) -> str:
-        return self.bind_one(frag, lambda v: self._smart_body(v, form))
-
-    def _smart_body(self, frag: str, form: str) -> str:
-        sep = self._SMART_SEP[form]
-        h24 = form.endswith("_h24")
-        rx_date = f"^([0-9]{{4}}){sep}([0-9]{{1,2}}){sep}([0-9]{{1,2}})"
-        g = lambda i, rx: (  # noqa: E731 — local shorthand
-            f"CAST(regexp_extract({frag}, {self.d.lit(rx)}, {i}) AS INT)")
-        y, mo, dd = (g(1, rx_date), g(2, rx_date), g(3, rx_date))
-        clamp_day = f"LEAST({dd}, day(last_day(make_date({y}, {mo}, 1))))"
-        date_ok = f"({mo} BETWEEN 1 AND 12 AND {dd} BETWEEN 1 AND 31)"
-        if h24:
-            nxt = self.add_days(f"make_date({y}, {mo}, {clamp_day})", 1)
-            return (f"CASE WHEN {date_ok} "
-                    f"THEN CAST({nxt} AS TIMESTAMP) END")
-        rx_t = rx_date + " ([0-9]{1,2}):([0-9]{1,2}):([0-9]{1,2})$"
-        h, mi, ss = (g(4, rx_t), g(5, rx_t), g(6, rx_t))
-        time_ok = (f"({h} BETWEEN 0 AND 23 AND {mi} BETWEEN 0 AND 59 "
-                   f"AND {ss} BETWEEN 0 AND 59)")
-        return (f"CASE WHEN {date_ok} AND {time_ok} "
-                f"THEN make_timestamp({y}, {mo}, {clamp_day}, "
-                f"{h}, {mi}, {ss}) END")
+        Variable names derive from NESTING DEPTH, not a global counter:
+        emitted SQL text is reproducible across emission order, sibling
+        binds share a name safely (disjoint lambda scopes), and a bind
+        nested inside another bind's body gets a deeper name — no
+        shadowing. ``frag`` is already-emitted text, so its own binds
+        have completed and reset the depth before this call reads it."""
+        v = f"zgb{self._bind_depth}"
+        self._bind_depth += 1
+        try:
+            body = body_fn(v)
+        finally:
+            self._bind_depth -= 1
+        d = self.d
+        return f"({d.idx(d.lmap(d.arr(frag), v, body), 1)})"
 
     def ts_date_str(self, frag: str, with_date_only: bool = True) -> str:
         """Multi-format DATE-STRING parse (VirtualAttributeExpressionEvaluator
@@ -882,29 +857,31 @@ class Emitter:
         accept date-only strings."""
         forms = self._DT_FORMS if with_date_only else self._DT_FORMS[:-1]
         whens = " ".join(
-            f"WHEN {self.rlike(frag, rx)} THEN {self.dt_parse(frag, form)}"
-            for rx, form in forms
+            f"WHEN {self.rlike(frag, rx)} THEN {self.dt_parse(frag, rx, how)}"
+            for rx, how in forms
         )
         return f"(CASE {whens} END)"
 
-    def fmt_ts(self, ts_frag: str, fmt: str) -> str:
-        return self.d.fmt(ts_frag, fmt)
-
     def datediff_days(self, a_ts: str, b_ts: str) -> str:
-        raise NotImplementedError
-
-    def json_get(self, j: str, p: str) -> str:
-        raise NotImplementedError
-
-    def now(self) -> str:
-        raise NotImplementedError
+        """Full 24-hour periods truncated toward zero, ENTIRELY in
+        BIGINT µs space (integer division truncates toward zero) — a
+        double detour loses ulps once the span exceeds 2^53 µs (~285
+        years, reachable inside the 0001-9999 window) and can flip the
+        day count by one vs ChronoUnit.DAYS.between. Not DuckDB's
+        date_diff('day'), which counts calendar-boundary crossings."""
+        d = self.d
+        return d.idiv(f"({d.epoch_us(a_ts)} - {d.epoch_us(b_ts)})",
+                      "86400000000")
 
     def ldt_render(self, ts_frag: str) -> str:
         """Java LocalDateTime.toString() of a timestamp fragment: the
         ISO 'T' form with seconds omitted when zero — the rendering a
         datetime OBJECT takes in string contexts (concat/upper/equality
         fallthrough). NOT the DateTimeResult format."""
-        raise NotImplementedError
+        hm = self.d.fmt(ts_frag, "yyyy-MM-dd'T'HH:mm")
+        hms = self.d.fmt(ts_frag, "yyyy-MM-dd'T'HH:mm:ss")
+        return (f"(CASE WHEN second({ts_frag}) = 0 THEN {hm} "
+                f"ELSE {hms} END)")
 
     # --- shared emission ---------------------------------------------------
     def emit(self, node: Node, hint: str = "any") -> str:
@@ -1032,7 +1009,7 @@ class Emitter:
             # flipping the remainder by 0.025).
             a = self.num_operand(node.left)
             return (f"(CASE WHEN abs({a}) <= 9.007199254740992e15 "
-                    f"THEN {self.safe_mod(a, self.num_operand(node.right))} "
+                    f"THEN {self.d.safe_mod(a, self.num_operand(node.right))} "
                     f"END)")
         if op == "/":
             # reference divide carries scale 10 HALF_UP (:302-311).
@@ -1046,7 +1023,7 @@ class Emitter:
             # whole job (the reference throws per-row and routes the row
             # to errData; NULL-and-continue is the batch rendering of that)
             return (
-                self.round_scaled(self.safe_div(self.num_operand(node.left), self.num_operand(node.right)), 10)
+                self.round_scaled(self.d.safe_div(self.num_operand(node.left), self.num_operand(node.right)), 10)
             )
         if op in ("=", "!="):
             # isEqual (:230-265) is NULL-SAFE and NUMERIC-FIRST: both
@@ -1232,14 +1209,14 @@ class Emitter:
             fmt = self._const_str(args[1], "date_format pattern")
             # date_format's own string parse (:487-501) has NO LocalDate
             # fallback — '2024-08-01' throws here while date_diff takes it
-            return self.fmt_ts(self.ts_from_any(a(0), with_date_only=False),
-                               fmt)
+            return self.d.fmt(self.ts_from_any(a(0), with_date_only=False),
+                              fmt)
         if name == "from_unixtime":
             ts = self.ts_from_num(a(0, "number"))
             if len(args) == 1:
-                return self.fmt_ts(ts, "yyyy-MM-dd HH:mm:ss")
+                return self.d.fmt(ts, "yyyy-MM-dd HH:mm:ss")
             fmt = self._const_str(args[1], "from_unixtime pattern")
-            return self.fmt_ts(ts, fmt)
+            return self.d.fmt(ts, fmt)
         if name == "abs":
             # abs/round/ceil/floor run their argument through
             # FunctionNode's toBigDecimal (:547-556 → :682-694) — null
@@ -1289,7 +1266,7 @@ class Emitter:
                     if not re.fullmatch(r"[+-]?[0-9]+", idx) or \
                             not -2**31 <= int(idx) < 2**31 or int(idx) < 0:
                         return "NULL"
-            return self.json_get(a(0, "string"), path)
+            return self.d.json_doc_str(a(0, "string"), path)
         raise ExpressionError(f"unknown function {name}")
 
     def _guard_throwy_args(self, args: list, inner: str) -> str:
@@ -1316,183 +1293,6 @@ class Emitter:
         return int(node.value)
 
 
-class SparkEmitter(Emitter):
-    d = SPARK
-
-    def safe_div(self, a: str, b: str) -> str:
-        # ANSI-safe: Spark 4 defaults spark.sql.ansi.enabled=true, where
-        # bare `/` raises DIVIDE_BY_ZERO
-        return f"try_divide({a}, {b})"
-
-    def safe_mod(self, a: str, b: str) -> str:
-        return f"try_mod({a}, {b})"
-
-    def rlike(self, frag: str, pattern: str) -> str:
-        return f"({self.d.rlike(frag, pattern)})"
-
-    def ms_to_ts(self, ms_frag: str) -> str:
-        return f"timestamp_millis({ms_frag})"
-
-    def trunc_to_long(self, d_frag: str) -> str:
-        # Spark's ANSI double→BIGINT cast truncates toward zero (the
-        # operand is range-gated by the caller, so it cannot throw)
-        return f"CAST({d_frag} AS BIGINT)"
-
-    # single pattern letters (M/d/H/m/s) accept 1-2 digits in Spark's
-    # datetime patterns — the regex gate already fixed the digit counts
-    _SPARK_DT = {
-        "dash_dt": ["yyyy-M-d H:m:s"],
-        "slash_dt": ["yyyy/M/d H:m:s"],
-        "iso_t": ["yyyy-M-d'T'H:m:s", "yyyy-M-d'T'H:m"],
-        "date_only": ["yyyy-M-d"],
-    }
-
-    def add_days(self, date_frag, n):
-        return f"date_add({date_frag}, {n})"
-
-    # lambda-variable names derive from NESTING DEPTH, not a global
-    # counter: emitted SQL text is reproducible across emission order,
-    # sibling binds share a name safely (disjoint lambda scopes), and a
-    # bind nested inside another bind's body gets a deeper name — no
-    # shadowing. `frag` is already-emitted text, so its own binds have
-    # completed and reset the depth before this call reads it.
-    _bind_depth = 0
-
-    def bind_one(self, frag, body_fn):
-        v = f"zgb{SparkEmitter._bind_depth}"
-        SparkEmitter._bind_depth += 1
-        try:
-            body = body_fn(v)
-        finally:
-            SparkEmitter._bind_depth -= 1
-        return f"(transform(array({frag}), {v} -> {body})[0])"
-
-    def dt_parse(self, frag: str, form: str) -> str:
-        if form == "iso_frac":
-            # regex-vetted ISO with 1-9 fractional digits: digits 7-9
-            # (Java nanos) are dropped before the cast — engines hold µs;
-            # the native ISO cast then reads the fraction as a DECIMAL
-            # fraction ('.5' → .500000) at exact µs
-            trunc = (f"regexp_replace({frag}, "
-                     f"'(\\\\.[0-9]{{6}})[0-9]+$', '$1')")
-            return f"TRY_CAST({trunc} AS TIMESTAMP)"
-        if form in self._SMART_SEP:
-            return self.dt_parse_smart(frag, form)
-        tries = ", ".join(
-            f"try_to_timestamp({frag}, {self.d.lit(p)})"
-            for p in self._SPARK_DT[form]
-        )
-        return f"coalesce({tries})" if "," in tries else tries
-
-    def datediff_days(self, a_ts: str, b_ts: str) -> str:
-        # full 24-hour periods, truncated toward zero, ENTIRELY in BIGINT
-        # space (DIV truncates toward zero on integers) — a double detour
-        # loses ulps once the span exceeds 2^53 µs (~285 years, reachable
-        # inside the 0001-9999 window) and can flip the day count by one
-        # vs ChronoUnit.DAYS.between
-        return (f"((unix_micros({a_ts}) - unix_micros({b_ts}))"
-                f" DIV 86400000000)")
-
-    def json_get(self, j: str, p: str) -> str:
-        return self.d.json_str(j, p)
-
-    def now(self) -> str:
-        return self.now_literal or "current_timestamp()"
-
-    def ldt_render(self, ts_frag: str) -> str:
-        return (f"(CASE WHEN second({ts_frag}) = 0 "
-                f"THEN date_format({ts_frag}, \"yyyy-MM-dd'T'HH:mm\") "
-                f"ELSE date_format({ts_frag}, \"yyyy-MM-dd'T'HH:mm:ss\") "
-                f"END)")
-
-
-class DuckEmitter(Emitter):
-    d = DUCK
-
-    def safe_div(self, a: str, b: str) -> str:
-        return f"({a} / {b})"  # DuckDB double division yields NULL on /0
-
-    def safe_mod(self, a: str, b: str) -> str:
-        return f"({a} % {b})"  # DuckDB double mod yields NULL on %0
-
-    def rlike(self, frag: str, pattern: str) -> str:
-        return self.d.rlike(frag, pattern)
-
-    def ms_to_ts(self, ms_frag: str) -> str:
-        return f"epoch_ms({ms_frag})"
-
-    def trunc_to_long(self, d_frag: str) -> str:
-        # DuckDB's double→BIGINT cast ROUNDS; trunc() first to match
-        # Number.longValue()'s truncation toward zero
-        return f"CAST(trunc({d_frag}) AS BIGINT)"
-
-    # %-padded strptime fields accept 1-2 digits in DuckDB — the regex
-    # gate already fixed the digit counts
-    _DUCK_DT = {
-        "dash_dt": ["%Y-%m-%d %H:%M:%S"],
-        "slash_dt": ["%Y/%m/%d %H:%M:%S"],
-        "iso_t": ["%Y-%m-%dT%H:%M:%S", "%Y-%m-%dT%H:%M"],
-        "date_only": ["%Y-%m-%d"],
-    }
-
-    def add_days(self, date_frag, n):
-        return f"({date_frag} + {n})"
-
-    # depth-derived lambda names — see SparkEmitter.bind_one
-    _bind_depth = 0
-
-    def bind_one(self, frag, body_fn):
-        v = f"zgb{DuckEmitter._bind_depth}"
-        DuckEmitter._bind_depth += 1
-        try:
-            body = body_fn(v)
-        finally:
-            DuckEmitter._bind_depth -= 1
-        return f"(list_transform([{frag}], {v} -> {body})[1])"
-
-    def dt_parse(self, frag: str, form: str) -> str:
-        if form == "iso_frac":
-            # the native ISO cast, like the Spark emitter: '%f' strptime
-            # reads raw microDIGITS ('.5' → 5 µs), the cast reads a
-            # decimal FRACTION ('.5' → .500000) — only the cast matches
-            # ISO_LOCAL_DATE_TIME; the regex gate keeps the cast's wider
-            # grammar out of reach. Sub-µs digits 7-9 drop first.
-            trunc = (f"regexp_replace({frag}, "
-                     f"'(\\.[0-9]{{6}})[0-9]+$', '\\1')")
-            return f"TRY_CAST({trunc} AS TIMESTAMP)"
-        if form in self._SMART_SEP:
-            return self.dt_parse_smart(frag, form)
-        # one try_strptime per format, NOT the format-list form: the list
-        # overload returns TIMESTAMP WITH TIME ZONE (naive everywhere else)
-        tries = ", ".join(
-            f"try_strptime({frag}, {self.d.lit(p)})"
-            for p in self._DUCK_DT[form]
-        )
-        return f"coalesce({tries})" if "," in tries else tries
-
-    def datediff_days(self, a_ts: str, b_ts: str) -> str:
-        # full 24-hour periods toward zero; NOT DuckDB's date_diff('day'),
-        # which counts calendar-boundary crossings. BIGINT µs space with
-        # `//` (truncates toward zero on integers) — exact past 2^53 µs,
-        # matching the Spark emitter's DIV form bit-for-bit
-        return (f"((epoch_us({a_ts}) - epoch_us({b_ts}))"
-                f" // 86400000000)")
-
-    def json_get(self, j: str, p: str) -> str:
-        # json_valid gate: DuckDB's json_extract_string THROWS on
-        # malformed JSON where Spark's get_json_object and the
-        # reference's readTree-catch (:624-680) return NULL
-        return f"(CASE WHEN json_valid({j}) THEN {self.d.json_str(j, p)} END)"
-
-    def now(self) -> str:
-        return self.now_literal or "now()"
-
-    def ldt_render(self, ts_frag: str) -> str:
-        return (f"(CASE WHEN date_part('second', {ts_frag}) = 0 "
-                f"THEN strftime({ts_frag}, '%Y-%m-%dT%H:%M') "
-                f"ELSE strftime({ts_frag}, '%Y-%m-%dT%H:%M:%S') END)")
-
-
 # ---------------------------------------------------------------------------
 # Façade (reference VirtualAttributeManager.java:30-116)
 # ---------------------------------------------------------------------------
@@ -1503,28 +1303,14 @@ class ExprCompiler:
         duck_field_resolver=None,
         now_literal: str | None = None,
     ):
-        self.spark = SparkEmitter(spark_field_resolver, now_literal)
-        self.duck = DuckEmitter(duck_field_resolver, now_literal)
-
-    def validate(self, sql: str) -> Node:
-        return parse(sql)
+        self.spark = Emitter(SPARK, spark_field_resolver, now_literal)
+        self.duck = Emitter(DUCK, duck_field_resolver, now_literal)
 
     def to_spark_sql(self, sql: str) -> str:
         return self.spark.emit(parse(sql))
 
     def to_duckdb_sql(self, sql: str) -> str:
         return self.duck.emit(parse(sql))
-
-    def to_column(self, sql: str):
-        from pyspark.sql import functions as F
-
-        return F.expr(self.to_spark_sql(sql))
-
-
-def compile_rule(sql: str, **kwargs) -> tuple[str, str]:
-    """Compile one rule → (spark_sql, duckdb_sql)."""
-    c = ExprCompiler(**kwargs)
-    return c.to_spark_sql(sql), c.to_duckdb_sql(sql)
 
 
 # CASE parsing lives on Parser but needs Case; defined here to keep the

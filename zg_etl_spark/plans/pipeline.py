@@ -4,7 +4,7 @@ Each query body is a dialect-templated SQL string over the prelude CTEs in
 operators/domain.py (feed → gate → identity → dictionaries); the Spark and
 DuckDB renderings come from the same template, so the oracle is generated,
 not hand-duplicated. Virtual-attribute queries additionally run the rule SQL
-through the ExprCompiler's two emitters (functions/expr_compiler.py).
+through the rule compiler's one emitter (functions/expr_compiler.py).
 """
 
 from __future__ import annotations
@@ -14,8 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from zg_etl_spark.dialect import DUCK, SPARK, Dialect
 from zg_etl_spark.functions import search_keywords as SK
 from zg_etl_spark.functions.expr_compiler import (
-    DuckEmitter,
-    SparkEmitter,
+    Emitter,
     parse,
     returns_boolean,
 )
@@ -184,9 +183,7 @@ def _va_frag(d: Dialect, rule_sql: str, now_literal: str | None = None) -> str:
     # now_literal: test seam — the p5 rule fuzz pins the engines' clock
     # to its ports' NOW constant so now()-bearing random rules compare
     # deterministically (production keeps the live current_timestamp)
-    resolver = _va_resolver_for(d)
-    emitter = (SparkEmitter(resolver, now_literal) if d.name == "spark"
-               else DuckEmitter(resolver, now_literal))
+    emitter = Emitter(d, _va_resolver_for(d), now_literal)
     ast = parse(rule_sql)
     frag = emitter.emit(ast)
     if returns_boolean(ast):
