@@ -72,6 +72,31 @@ SEED = 96_180_000 + BUILD_ROUND          # fresh trees every round
 N_NUM_BATCHES, NUM_PER_BATCH = 6, 90     # 540 numeric-leg trees
 N_DATE_BATCHES, DATE_PER_BATCH = 6, 80   # 480 date-leg trees
 N_MIX_BATCHES, MIX_PER_BATCH = 4, 60     # 240 mixed-leg trees
+# the date and mixed legs evaluate each batch this many trees per query:
+# their trees emit SQL many times larger than the numeric leg's, so one
+# 60-80-column projection is a giant plan to parse, analyse and compile
+DATE_PER_QUERY = 10
+
+
+@pytest.fixture(autouse=True)
+def _bounded_parser_cache(spark):
+    """Every fresh tree is new SQL text, and Spark's ANTLR parser keeps
+    the DFA states of every text it parses in one process-wide cache:
+    after three 80-tree date batches it held ~4 GB (ATNConfig and
+    DFAState arrays in a heap histogram) and the legs ran the suite heap
+    out. While the sweep runs, Spark flushes that cache once it passes
+    10% of the driver heap (heap after GC stayed ~0.3 GB)."""
+    confs = {"spark.sql.parser.manageParserCaches": "true",
+             "spark.sql.parser.parserDfaCacheFlushRatio": "10"}
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in prev.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
 
 
 # --- mixed-family generator --------------------------------------------------
@@ -135,7 +160,22 @@ def _rows(offset: int):
     return [(a, b) for a, b in zip(DIRTY, DIRTY[k:] + DIRTY[:k])]
 
 
-def _eval_both(spark, rows, exprs, view):
+def _eval_both(spark, rows, exprs, view, per_query=None):
+    """Per (f, g) row, each engine's values of ``exprs`` in order;
+    ``per_query`` trees are evaluated per query (default: all at once)."""
+    per_query = per_query or len(exprs)
+    s_map: dict = {}
+    d_map: dict = {}
+    for i in range(0, len(exprs), per_query):
+        s_part, d_part = _eval_query(spark, rows, exprs[i:i + per_query],
+                                     f"{view}_{i}")
+        for key in s_part:
+            s_map[key] = s_map.get(key, ()) + s_part[key]
+            d_map[key] = d_map.get(key, ()) + d_part[key]
+    return s_map, d_map
+
+
+def _eval_query(spark, rows, exprs, view):
     s_cols = [f"CAST(({COMPILER.to_spark_sql(e)}) AS STRING) AS c{i}"
               for i, e in enumerate(exprs)]
     d_cols = [f"CAST(({COMPILER.to_duckdb_sql(e)}) AS VARCHAR) AS c{i}"
@@ -186,7 +226,7 @@ def test_deep_sweep_date_leg(spark):
         exprs = [_gen_date_tree(rng) for _ in range(DATE_PER_BATCH)]
         asts = [parse(e) for e in exprs]
         s_map, d_map = _eval_both(spark, rows, exprs,
-                                  f"dsweep_d{batch}")
+                                  f"dsweep_d{batch}", DATE_PER_QUERY)
         for key in rows:
             ev = EngineEvalDates({"f": key[0], "g": key[1]})
             rv = RefEvalDates({"f": key[0], "g": key[1]})
@@ -235,7 +275,7 @@ def test_deep_sweep_mixed_leg(spark):
                  if len(COMPILER.to_spark_sql(e)) < 60_000] or ["f = g"]
         asts = [parse(e) for e in exprs]
         s_map, d_map = _eval_both(spark, rows, exprs,
-                                  f"dsweep_m{batch}")
+                                  f"dsweep_m{batch}", DATE_PER_QUERY)
         for key in rows:
             ev = EngineEvalDates({"f": key[0], "g": key[1]})
             rv = RefEvalDates({"f": key[0], "g": key[1]})

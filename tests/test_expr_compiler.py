@@ -27,6 +27,10 @@ FIELDS = {
     "ct_ms": "1722470400123",    # same instant, millis (> 1e10 heuristic)
     "json_s": '{"a":{"b":[10,20]}}',
     "maybe_null": None,
+    # a trailing line terminator: Long.parseLong and every
+    # DateTimeFormatter parse reject it, so each is NULL on both engines
+    "epoch_nl": "123\n",
+    "dt_nl": "2024-08-10 10:00:00\n",
 }
 
 
@@ -189,6 +193,10 @@ CORPUS = [
     ("get_json_string(json_s, '$.a.b[1]')", "20"),
     # dotted path keeps last segment
     ("events.props.price * 2", 3001.0),
+    # the epoch and datetime gates are whole-string: java.util.regex '$'
+    # also matches before a final line terminator, \z does not
+    ("date_format(epoch_nl, 'yyyy-MM-dd HH:mm:ss')", None),
+    ("date_format(dt_nl, 'yyyy-MM-dd HH:mm:ss')", None),
 ]
 
 

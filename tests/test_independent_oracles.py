@@ -2544,7 +2544,7 @@ def test_ipv6_geo_matches_ipaddress_port(spark, sf_dir):
 # replay after connected-components, so equality here verifies BOTH the
 # probe/consume logic AND that the component decomposition leaks nothing.
 # ---------------------------------------------------------------------------
-def test_click_consumption_matches_sequential_replay(spark, sf_dir):
+def test_click_consumption_matches_sequential_replay(spark, sf_dir, monkeypatch):
     import hashlib
     import re
     from types import SimpleNamespace
@@ -2657,11 +2657,17 @@ def test_click_consumption_matches_sequential_replay(spark, sf_dir):
     exp = {k: (n, len(exp_users[k])) for k, n in exp_n.items()}
     assert got == exp, (got, exp)
     # the size-gated coarse (per-app) grouping took the path above;
-    # force the component-labeling path and pin it to the same result
-    from zg_etl_spark.plans.consume import _p54_run
+    # force the component-labeling path (a size gate below any candidate
+    # count) and pin it to the same result
+    from pyspark.sql import functions as F
+
+    from zg_etl_spark.plans import consume
+    monkeypatch.setattr(consume, "P54_COARSE_MAX", -1)
+    detail, _, _ = consume._build_p54_detail(spark, sf_dir)
     got_fine = {(r.match_tier, r.lid): (r.n_sessions, r.n_users)
-                for r in _p54_run(spark, sf_dir,
-                                  _force_components=True).collect()}
+                for r in detail.groupBy("match_tier", "lid").agg(
+                    F.count(F.lit(1)).alias("n_sessions"),
+                    F.countDistinct("zg_id").alias("n_users")).collect()}
     assert got_fine == exp, (got_fine, exp)
     # consumption must actually bite at every SF: the fixture C4 click is
     # claimable once, so p52's snapshot and p54's replay must differ

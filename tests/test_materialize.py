@@ -5,7 +5,8 @@ The registry holds one live sf_dir per session: asking for another
 releases every entry of the old one (temp views, references, cleanups).
 These tests pin that contract, run the queries whose shared state lives
 in it across sf_dir switches against their oracles, and check that the
-UA-parsed advertising-apps index is built once for all its readers."""
+UA-parsed advertising-apps index and the write path's b_user and
+b_device rows are each built once for all their readers."""
 
 from __future__ import annotations
 
@@ -103,6 +104,27 @@ def test_adv_ua_index_builds_once(spark, monkeypatch):
     qs = plans.all_queries()
     for name in ("p42_adv_click_match", "p52_adv_ss_priority",
                  "p54c_candidates"):
+        qs[name](spark, SF_A).count()
+    assert len(builds) == 1
+
+
+@pytest.mark.parametrize("render,readers", [
+    ("b_user_rows_sql", ("w1_upsert_writer", "w6_delete_sign",
+                         "w7_schema_evolution", "s8_stream_upsert_delete")),
+    ("b_device_obs_sql", ("w9_partial_upsert", "s9_stream_partial_upsert")),
+])
+def test_write_path_rows_build_once(spark, monkeypatch, render, readers):
+    """The b_user writers read the one b_user_rows entry, and the
+    b_device writers the one b_device_obs entry."""
+    from zg_etl_spark.plans import pipeline
+
+    builds = []
+    sql = getattr(pipeline, render)
+    monkeypatch.setattr(pipeline, render,
+                        lambda d: builds.append(1) or sql(d))
+    materialize(spark, SF_B, "reg_switch", lambda: 0)
+    qs = plans.all_queries()
+    for name in readers:
         qs[name](spark, SF_A).count()
     assert len(builds) == 1
 

@@ -734,9 +734,13 @@ class Emitter:
     # ANSI BIGINT cast and abort the whole job on one bad row)
     _EPOCH_S_MIN = -62_135_596_800
     _EPOCH_MS_MAX = 253_402_300_799_999
-    _LONG_RE = "^[+-]?[0-9]{1,18}$"  # Long.parseLong grammar; 19-digit
+    _LONG_RE = "\\A[+-]?[0-9]{1,18}\\z"  # Long.parseLong grammar; 19-digit
     # longs parse in Java but all exceed the year-9999 window → NULL
-    # either way, so the 18-digit cap is value-identical and overflow-free
+    # either way, so the 18-digit cap is value-identical and overflow-free.
+    # Every gate here is anchored \A..\z, not ^..$: Spark RLIKE is
+    # java.util.regex, where a bare '$' also matches BEFORE a trailing
+    # line terminator, and TRY_CAST then trims it — '123\n' would read
+    # 123 where Long.parseLong (and DuckDB's RE2 '$') reject it
 
     def _epoch_ms(self, v: str) -> str:
         """Nullable BIGINT epoch → epoch-millis with the strict >1e10 ⇒
@@ -780,8 +784,8 @@ class Emitter:
     # with-time forms take 1-2 digit month/day/hour/min/sec. Each gate
     # pairs with its parse: "smart" (the ofPattern bodies), "iso_frac",
     # or strict Java patterns (the gate already fixed the digit counts).
-    _SMART_RX = ("^([0-9]{{4}}){0}([0-9]{{1,2}}){0}([0-9]{{1,2}})"
-                 " ([0-9]{{1,2}}):([0-9]{{1,2}}):([0-9]{{1,2}})$")
+    _SMART_RX = ("\\A([0-9]{{4}}){0}([0-9]{{1,2}}){0}([0-9]{{1,2}})"
+                 " ([0-9]{{1,2}}):([0-9]{{1,2}}):([0-9]{{1,2}})\\z")
     _DT_FORMS = (
         # the ofPattern bodies use the default ResolverStyle.SMART
         # (dialect.smart_ts: day clamp, exactly 24:00:00 → next-day
@@ -789,7 +793,7 @@ class Emitter:
         # strict ISO_LOCAL_DATE_TIME body rejects the T-form's hour 24
         (_SMART_RX.format("-"), "smart"),
         (_SMART_RX.format("/"), "smart"),
-        ("^[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}(:[0-9]{2})?$",
+        ("\\A[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}(:[0-9]{2})?\\z",
          ("yyyy-MM-dd'T'HH:mm:ss", "yyyy-MM-dd'T'HH:mm")),
         # ISO_LOCAL_DATE_TIME's fractional seconds: Java accepts 1-9
         # digits (nanos); engines hold int64 microseconds, so digits 7-9
@@ -799,9 +803,9 @@ class Emitter:
         # 5 µs). A NONZERO sub-µs tail makes chronological comparisons
         # engine-undecidable (documented deviation; the reference keeps
         # full nanos) — the reference port raises Fragile there.
-        ("^[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2}"
-         "\\.[0-9]{1,9}$", "iso_frac"),
-        ("^[0-9]{4}-[0-9]{2}-[0-9]{2}$", ("yyyy-MM-dd",)),
+        ("\\A[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2}"
+         "\\.[0-9]{1,9}\\z", "iso_frac"),
+        ("\\A[0-9]{4}-[0-9]{2}-[0-9]{2}\\z", ("yyyy-MM-dd",)),
     )
 
     def dt_parse(self, frag: str, rx: str, how) -> str:

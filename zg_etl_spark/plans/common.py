@@ -12,11 +12,17 @@ is bit-identical in both engines.
 Decimal precision budget (Spark reduces scale when precision would exceed
 38 — avoid by keeping inputs narrow): (12,2) * (5,2) -> (18,4);
 (18,4) * (5,2) -> (24,6); sum adds 10 precision. All within 38.
+
+``scratch_run`` is the one scratch lifecycle of the queries that write
+tables (the w-queries and the s-queries' ``_replay``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+import tempfile
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def _c(col: Column | str) -> Column:
@@ -50,3 +56,15 @@ def o_dsum(expr: str) -> str:
 
 def o_davg(expr: str) -> str:
     return f"(CAST(SUM({expr}) AS DOUBLE) / CAST(COUNT({expr}) AS DOUBLE))"
+
+
+def scratch_run(name: str, run: Callable[[str], None],
+                read: Callable[[str], DataFrame]) -> DataFrame:
+    """``run(work)`` writes under a fresh scratch dir ``work``; the result
+    is ``read(work)``, checkpointed before the dir goes. The dir is
+    removed on every exit path, a failing ``run`` or ``read`` included."""
+    with tempfile.TemporaryDirectory(
+        prefix=f"zg_{name}_", ignore_cleanup_errors=True
+    ) as work:
+        run(work)
+        return read(work).localCheckpoint(eager=True)

@@ -288,18 +288,14 @@ def _build_p54_relations(spark: SparkSession, sf_dir: str):
     return entries, store, ss, cands
 
 
-def _p54_detail(spark: SparkSession, sf_dir: str,
-                _force_components: bool = False):
+def _p54_detail(spark: SparkSession, sf_dir: str):
     """Per-session replay outcome (match_tier, lid, sess_seq, zg_id,
     claim_click) plus the relations p54d's del-set accounting joins
     back to. p54 aggregates this to its (tier, lid) rollup; p54d to
     its per-app claim/del-set rollup. The default path is memoized per
     (session, sf_dir) — the applyInPandas replay runs once for both
     aggregates; the detail frame is checkpointed before reuse so both
-    consumers scan the same materialized rows. The test-only
-    ``_force_components`` path bypasses the registry."""
-    if _force_components:
-        return _build_p54_detail(spark, sf_dir, True)
+    consumers scan the same materialized rows."""
 
     def build():
         detail, entries, ss = _build_p54_detail(spark, sf_dir)
@@ -308,8 +304,7 @@ def _p54_detail(spark: SparkSession, sf_dir: str,
     return materialize(spark, sf_dir, "p54_detail", build)
 
 
-def _build_p54_detail(spark: SparkSession, sf_dir: str,
-                      _force_components: bool = False):
+def _build_p54_detail(spark: SparkSession, sf_dir: str):
     entries, store, ss, cands = _p54_relations(spark, sf_dir)
 
     # the map-only fast path: sessions with no candidate key at all
@@ -341,8 +336,9 @@ def _build_p54_detail(spark: SparkSession, sf_dir: str,
     #     click-alias–key edges, iterating min-label propagation on the
     #     contested subgraph only (the l16 pattern) so no single pandas
     #     group has to hold an app's whole contested stream.
-    # tests force the component path and pin both groupings equal.
-    if not _force_components and cands.count() <= P54_COARSE_MAX:
+    # tests force the component path (P54_COARSE_MAX below any count)
+    # and pin both groupings equal.
+    if cands.count() <= P54_COARSE_MAX:
         return _finish(store, akeys, cands, nomatch, None), entries, ss
 
     # nodes: keys + sessions + clicks that alias a live key
@@ -379,9 +375,8 @@ def _build_p54_detail(spark: SparkSession, sf_dir: str,
     return _finish(store, akeys, cands, nomatch, key_comp), entries, ss
 
 
-def _p54_run(spark: SparkSession, sf_dir: str,
-             _force_components: bool = False) -> DataFrame:
-    detail, _, _ = _p54_detail(spark, sf_dir, _force_components)
+def _p54_run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    detail, _, _ = _p54_detail(spark, sf_dir)
     return (detail.groupBy("match_tier", "lid")
             .agg(F.count(F.lit(1)).alias("n_sessions"),
                  F.countDistinct("zg_id").alias("n_users")))

@@ -9,8 +9,11 @@ through the rule compiler's one emitter (functions/expr_compiler.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
 
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from zg_etl_spark import sinks
 from zg_etl_spark.dialect import DUCK, SPARK, Dialect
 from zg_etl_spark.functions import search_keywords as SK
 from zg_etl_spark.functions.expr_compiler import (
@@ -24,6 +27,7 @@ from zg_etl_spark.operators.domain import (
     ensure_pipeline_views,
     spark_pipeline_df,
 )
+from zg_etl_spark.plans.common import scratch_run
 from zg_etl_spark.session import materialize
 
 QUERIES: dict = {}
@@ -587,6 +591,34 @@ SELECT app_id, zg_did AS device_id, zg_id, zg_uid AS user_id,
 FROM resolved WHERE abs(tzoff) <= 172800000"""
 
 
+def b_user_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The b_user rows of sf_dir: one registry entry that every b_user
+    writer (w1/w6/w7/s8) reads."""
+    return materialize(spark, sf_dir, "b_user_rows", lambda: spark_pipeline_df(
+        spark, sf_dir, b_user_rows_sql(SPARK)))
+
+
+# The b_user sink contract: UNIQUE KEY(app_id, device_id, zg_id)
+# keep-latest by seq, app_id partitions; B_USER_COLS is the read-back.
+B_USER_KEYS = ["app_id", "device_id", "zg_id"]
+B_USER_COLS = [*B_USER_KEYS, "user_id", "begin_date", "platform"]
+
+
+def upsert_b_user(spark: SparkSession, batch: DataFrame, path: str) -> None:
+    """One batch into the b_user table at ``path``; a ``_ds`` column is
+    the batch's delete sign (__DORIS_DELETE_SIGN__)."""
+    sinks.upsert_table(
+        spark, batch, path, keys=B_USER_KEYS, order_col="seq",
+        partition_cols=["app_id"],
+        delete_col="_ds" if "_ds" in batch.columns else None,
+    )
+
+
+def read_b_user(spark: SparkSession, work: str, *extra: str) -> DataFrame:
+    return spark.read.parquet(os.path.join(work, "b_user")).select(
+        *B_USER_COLS, *extra)
+
+
 def _p10(d: Dialect) -> str:
     return f"""
 SELECT app_id, device_id, zg_id, user_id, begin_date, platform
@@ -935,28 +967,14 @@ _register("p19_event_highwater", _p19)
 # exactly where the single-shot p10 dedup lands, so it shares p10's oracle.
 # ---------------------------------------------------------------------------
 def _w1_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from zg_etl_spark.sinks import upsert_table
-
-    rows = spark_pipeline_df(spark, sf_dir, b_user_rows_sql(SPARK))
+    rows = b_user_rows(spark, sf_dir)
     mid = rows.selectExpr("percentile_approx(seq, 0.5) AS m").first().m
-    with tempfile.TemporaryDirectory(
-        prefix="zg_w1_", ignore_cleanup_errors=True
-    ) as work:
-        path = os.path.join(work, "b_user")
+
+    def run(work: str) -> None:
         for part in (rows.filter(rows.seq <= mid), rows.filter(rows.seq > mid)):
-            upsert_table(
-                spark, part, path,
-                keys=["app_id", "device_id", "zg_id"], order_col="seq",
-                partition_cols=["app_id"],
-            )
-        return (
-            spark.read.parquet(path)
-            .select("app_id", "device_id", "zg_id", "user_id", "begin_date", "platform")
-            .localCheckpoint(eager=True)
-        )
+            upsert_b_user(spark, part, os.path.join(work, "b_user"))
+
+    return scratch_run("w1", run, lambda work: read_b_user(spark, work))
 
 
 QUERIES["w1_upsert_writer"] = _w1_run
@@ -1271,28 +1289,25 @@ _register("p24_app_first_seen", _p24)
 # contract a Doris-side consumer of our export relies on.
 # ---------------------------------------------------------------------------
 def _w3_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from zg_etl_spark.sinks import NULL_TOKEN, export_stream_load_csv
-
     rows = spark_pipeline_df(spark, sf_dir, _p10(SPARK))
-    with tempfile.TemporaryDirectory(
-        prefix="zg_w3_", ignore_cleanup_errors=True
-    ) as work:
-        path = os.path.join(work, "b_user_csv")
-        export_stream_load_csv(rows, path)
-        schema = (
-            "app_id BIGINT, device_id BIGINT, zg_id BIGINT, user_id BIGINT, "
-            "begin_date BIGINT, platform INT"
-        )
+
+    def read(work: str) -> DataFrame:
         return (
-            spark.read.schema(schema)
-            .option("sep", "\t")
-            .option("nullValue", NULL_TOKEN)
-            .csv(path)
-            .localCheckpoint(eager=True)
+            spark.read.schema(
+                "app_id BIGINT, device_id BIGINT, zg_id BIGINT, user_id BIGINT, "
+                "begin_date BIGINT, platform INT"
+            )
+            .option("sep", sinks.STREAM_LOAD_SEP)
+            .option("nullValue", sinks.NULL_TOKEN)
+            .csv(os.path.join(work, "b_user_csv"))
         )
+
+    return scratch_run(
+        "w3",
+        lambda work: sinks.export_stream_load_csv(
+            rows, os.path.join(work, "b_user_csv")),
+        read,
+    )
 
 
 QUERIES["w3_compat_csv_roundtrip"] = _w3_run
@@ -1340,11 +1355,6 @@ FROM gate_ok GROUP BY app_id, {DUCK.idiv('ct', '86400000')}"""
 
 
 def _w4_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from zg_etl_spark.sinks import write_partitioned
-
     days = spark_pipeline_df(
         spark,
         sf_dir,
@@ -1352,26 +1362,21 @@ def _w4_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT app_id, {SPARK.idiv('ct', '86400000')} AS day_id, COUNT(*) AS n
 FROM gate_ok GROUP BY app_id, {SPARK.idiv('ct', '86400000')}""",
     ).localCheckpoint(eager=True)
-    with tempfile.TemporaryDirectory(
-        prefix="zg_w4_", ignore_cleanup_errors=True
-    ) as work:
+
+    def run(work: str) -> None:
         path = os.path.join(work, "day_counts")
-        write_partitioned(days, path, ["day_id"], mode="overwrite", dynamic=False)
+        sinks.write_partitioned(days, path, ["day_id"], dynamic=False)
         # the "correction" batch: latest day only, counts doubled — dynamic
         # overwrite must replace exactly that partition
-        from pyspark.sql import functions as F
-
         latest = days.agg(F.max("day_id").alias("m")).first().m
         corrected = (
             days.filter(F.col("day_id") == latest)
             .withColumn("n", F.col("n") * 2)
         )
-        write_partitioned(corrected, path, ["day_id"], mode="overwrite", dynamic=True)
-        return (
-            spark.read.parquet(path)
-            .select("app_id", "day_id", "n")
-            .localCheckpoint(eager=True)
-        )
+        sinks.write_partitioned(corrected, path, ["day_id"], dynamic=True)
+
+    return scratch_run("w4", run, lambda work: spark.read.parquet(
+        os.path.join(work, "day_counts")).select("app_id", "day_id", "n"))
 
 
 QUERIES["w4_partition_overwrite"] = _w4_run
@@ -2201,8 +2206,6 @@ _register("p39_baidu_eqid", _p39)
 # salt pre-aggregation is algebraically invisible.
 # ---------------------------------------------------------------------------
 def _p40_run(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
     from zg_etl_spark.operators.skew import salted_agg
 
     gate_ok = spark_pipeline_df(
@@ -2244,8 +2247,6 @@ FROM gate_ok GROUP BY app_id, event_type""")
 # ---------------------------------------------------------------------------
 def _w5_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
-    import os
-    import tempfile
 
     days = spark_pipeline_df(
         spark,
@@ -2253,9 +2254,8 @@ def _w5_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT app_id, did, seq, {SPARK.idiv('ct', '86400000')} AS day_id "
         "FROM gate_ok",
     )
-    with tempfile.TemporaryDirectory(
-        prefix="zg_w5_", ignore_cleanup_errors=True
-    ) as work:
+
+    def run(work: str) -> None:
         frag, compact = os.path.join(work, "frag"), os.path.join(work, "compact")
         # fragmented layout: 8 writer tasks each touch every day
         days.repartition(8).write.partitionBy("day_id").parquet(frag)
@@ -2276,14 +2276,13 @@ def _w5_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"compaction did not collapse files: {n_frag} -> {n_compact} "
                 f"over {n_days} days"
             )
-        out = (
-            spark.read.parquet(compact)
-            .groupBy("day_id")
-            .count()
-            .selectExpr("CAST(day_id AS BIGINT) AS day_id", "count AS n_rows")
-            .localCheckpoint(eager=True)
-        )
-    return out
+
+    return scratch_run("w5", run, lambda work: (
+        spark.read.parquet(os.path.join(work, "compact"))
+        .groupBy("day_id")
+        .count()
+        .selectExpr("CAST(day_id AS BIGINT) AS day_id", "count AS n_rows")
+    ))
 
 
 QUERIES["w5_compaction"] = _w5_run
@@ -2306,28 +2305,23 @@ FROM gate_ok GROUP BY {DUCK.idiv('ct', '86400000')}""")
 # The read-back must equal the single-shot p10 dedup minus the deleted
 # slice plus the resurrected subset — pure relational oracle, row-identity.
 # ---------------------------------------------------------------------------
-def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from zg_etl_spark.sinks import upsert_table
-
-    base = spark_pipeline_df(
-        spark, sf_dir, b_user_rows_sql(SPARK)
-    ).localCheckpoint(eager=True)  # three batches + markers reuse the spine scan
-    stats = base.selectExpr(
+def b_user_delete_batches(rows: DataFrame) -> list[DataFrame]:
+    """The delete-sign scenario over the b_user ``rows``, each batch
+    with its ``_ds`` sign: (1) the first half by seq; (2) the second half
+    plus a delete marker (newest seq) for every zg_id % 7 = 0 key;
+    (3) those keys' zg_id % 14 = 0 rows re-sent newer still. w6 writes
+    all three, s8 streams the first two."""
+    stats = rows.selectExpr(
         "percentile_approx(seq, 0.5) AS m", "max(seq) AS mx"
     ).first()
     mid, maxseq = stats.m, stats.mx
-    live = base.withColumn("_ds", F.lit(False))
+    live = rows.withColumn("_ds", F.lit(False))
     dels = (
-        base.filter(F.col("zg_id") % 7 == 0)
-        .select("app_id", "device_id", "zg_id")
+        rows.filter(F.col("zg_id") % 7 == 0)
+        .select(*B_USER_KEYS)
         .distinct()
         .selectExpr(
-            "app_id", "device_id", "zg_id",
+            *B_USER_KEYS,
             "CAST(NULL AS BIGINT) AS user_id",
             "CAST(NULL AS BIGINT) AS begin_date",
             "CAST(NULL AS INT) AS platform",
@@ -2342,26 +2336,21 @@ def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         live.filter(F.col("zg_id") % 14 == 0)
         .withColumn("seq", F.col("seq") + F.lit(maxseq + 2))
     )
-    with tempfile.TemporaryDirectory(
-        prefix="zg_w6_", ignore_cleanup_errors=True
-    ) as work:
-        path = os.path.join(work, "b_user_ds")
-        for batch in (
-            live.filter(F.col("seq") <= mid),
-            live.filter(F.col("seq") > mid).unionByName(dels),
-            reins,
-        ):
-            upsert_table(
-                spark, batch, path,
-                keys=["app_id", "device_id", "zg_id"], order_col="seq",
-                partition_cols=["app_id"], delete_col="_ds",
-            )
-        return (
-            spark.read.parquet(path)
-            .select("app_id", "device_id", "zg_id", "user_id",
-                    "begin_date", "platform")
-            .localCheckpoint(eager=True)
-        )
+    return [
+        live.filter(F.col("seq") <= mid),
+        live.filter(F.col("seq") > mid).unionByName(dels),
+        reins,
+    ]
+
+
+def _w6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    batches = b_user_delete_batches(b_user_rows(spark, sf_dir))
+
+    def run(work: str) -> None:
+        for batch in batches:
+            upsert_b_user(spark, batch, os.path.join(work, "b_user"))
+
+    return scratch_run("w6", run, lambda work: read_b_user(spark, work))
 
 
 QUERIES["w6_delete_sign"] = _w6_run
@@ -2382,36 +2371,18 @@ ORACLE["w6_delete_sign"] = duck_pipeline_sql(
 # can state the winner's schema generation exactly.
 # ---------------------------------------------------------------------------
 def _w7_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from zg_etl_spark.sinks import upsert_table
-
-    base = spark_pipeline_df(
-        spark, sf_dir, b_user_rows_sql(SPARK)
-    ).localCheckpoint(eager=True)
-    b1 = base.filter(F.col("seq") % 2 == 0)
-    b2 = base.filter(F.col("seq") % 2 == 1).withColumn(
+    rows = b_user_rows(spark, sf_dir)
+    b1 = rows.filter(F.col("seq") % 2 == 0)
+    b2 = rows.filter(F.col("seq") % 2 == 1).withColumn(
         "vip_level", F.col("zg_id") % 5
     )
-    with tempfile.TemporaryDirectory(
-        prefix="zg_w7_", ignore_cleanup_errors=True
-    ) as work:
-        path = os.path.join(work, "b_user_evo")
+
+    def run(work: str) -> None:
         for batch in (b1, b2):
-            upsert_table(
-                spark, batch, path,
-                keys=["app_id", "device_id", "zg_id"], order_col="seq",
-                partition_cols=["app_id"],
-            )
-        return (
-            spark.read.parquet(path)
-            .select("app_id", "device_id", "zg_id", "user_id",
-                    "begin_date", "platform", "vip_level")
-            .localCheckpoint(eager=True)
-        )
+            upsert_b_user(spark, batch, os.path.join(work, "b_user"))
+
+    return scratch_run(
+        "w7", run, lambda work: read_b_user(spark, work, "vip_level"))
 
 
 QUERIES["w7_schema_evolution"] = _w7_run
@@ -2435,33 +2406,25 @@ FROM (
 # 100 TB.
 # ---------------------------------------------------------------------------
 def _w8_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from zg_etl_spark.sinks import drop_expired_partitions, write_partitioned
-
     days = spark_pipeline_df(
         spark,
         sf_dir,
         f"SELECT app_id, did, seq, {SPARK.idiv('ct', '86400000')} AS day_id "
         "FROM gate_ok",
     )
-    with tempfile.TemporaryDirectory(
-        prefix="zg_w8_", ignore_cleanup_errors=True
-    ) as work:
+
+    def run(work: str) -> None:
         path = os.path.join(work, "events_by_day")
-        write_partitioned(days, path, ["day_id"], dynamic=False)
+        sinks.write_partitioned(days, path, ["day_id"], dynamic=False)
         max_day = days.agg(F.max("day_id")).first()[0]  # single-scalar collect
-        drop_expired_partitions(spark, path, "day_id", int(max_day) - 3)
-        return (
-            spark.read.parquet(path)
-            .groupBy("day_id")
-            .count()
-            .selectExpr("CAST(day_id AS BIGINT) AS day_id", "count AS n_rows")
-            .localCheckpoint(eager=True)
-        )
+        sinks.drop_expired_partitions(spark, path, "day_id", int(max_day) - 3)
+
+    return scratch_run("w8", run, lambda work: (
+        spark.read.parquet(os.path.join(work, "events_by_day"))
+        .groupBy("day_id")
+        .count()
+        .selectExpr("CAST(day_id AS BIGINT) AS day_id", "count AS n_rows")
+    ))
 
 
 QUERIES["w8_retention_sweep"] = _w8_run
@@ -2487,7 +2450,7 @@ GROUP BY {DUCK.idiv('ct', '86400000')}""")
 # touched app partitions are read and rewritten (plan-pinned in
 # tests/test_decode_sinks.py).
 # ---------------------------------------------------------------------------
-def _w9_obs_sql(d: Dialect) -> str:
+def b_device_obs_sql(d: Dialect) -> str:
     # the b_device column subset the partial mode exercises
     # (schema.sql:26-66 grain; values per DeviceTransfer.java:30-146)
     return f"""
@@ -2500,25 +2463,59 @@ SELECT app_id, zg_did AS device_id,
 FROM resolved WHERE dt = 'pl'"""
 
 
-def _w9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
+def b_device_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The b_device observations of sf_dir: one registry entry that both
+    partial-column writers (w9/s9) read."""
+    return materialize(spark, sf_dir, "b_device_obs", lambda: spark_pipeline_df(
+        spark, sf_dir, b_device_obs_sql(SPARK)))
 
-    from pyspark.sql import functions as F
 
-    from zg_etl_spark.sinks import partial_upsert_table
+# The b_device partial-column sink contract: UNIQUE KEY(app_id,
+# device_id) keep-latest by seq, app_id partitions; B_DEVICE_COLS is the
+# read-back.
+B_DEVICE_KEYS = ["app_id", "device_id"]
+B_DEVICE_COLS = [*B_DEVICE_KEYS, "device_model", "language", "timezone",
+                 "last_update_date"]
 
-    obs = spark_pipeline_df(spark, sf_dir, _w9_obs_sql(SPARK)).localCheckpoint(
-        eager=True
+
+def upsert_b_device_partial(spark: SparkSession, batch: DataFrame,
+                            path: str) -> None:
+    """One batch into the b_device table at ``path`` in partial_columns
+    mode: as in a Doris partial stream load, the batch updates exactly
+    the value columns it carries, and ``_ds`` is its delete sign."""
+    sinks.partial_upsert_table(
+        spark, batch, path, keys=B_DEVICE_KEYS, order_col="seq",
+        update_cols=[c for c in batch.columns
+                     if c not in (*B_DEVICE_KEYS, "seq", "_ds")],
+        delete_col="_ds" if "_ds" in batch.columns else None,
+        partition_cols=["app_id"],
     )
-    seed = obs.filter(F.col("seq") % 2 == 0)
-    part = obs.filter(F.col("seq") % 2 == 1).drop("device_model")
+
+
+def read_b_device(spark: SparkSession, work: str) -> DataFrame:
+    return spark.read.parquet(os.path.join(work, "b_device")).select(
+        *B_DEVICE_COLS)
+
+
+def b_device_partial_batches(obs: DataFrame) -> list[DataFrame]:
+    """The partial-column scenario over the b_device observations
+    ``obs``: (1) the full-column seed (even seq); (2) the partial update,
+    only language/timezone/last_update_date (odd seq), with a false
+    ``_ds``; (3) delete markers (newer than any seq) for every
+    device_id % 5 = 0 device. w9 writes all three; s9 writes the seed
+    and streams the other two."""
+    part = (
+        obs.filter(F.col("seq") % 2 == 1)
+        .select(*B_DEVICE_KEYS, "language", "timezone", "last_update_date",
+                "seq")
+        .withColumn("_ds", F.lit(False))
+    )
     dels = (
         obs.filter(F.col("device_id") % 5 == 0)
-        .select("app_id", "device_id")
+        .select(*B_DEVICE_KEYS)
         .distinct()
         .selectExpr(
-            "app_id", "device_id",
+            *B_DEVICE_KEYS,
             "CAST(NULL AS STRING) AS language",
             "CAST(NULL AS STRING) AS timezone",
             "CAST(NULL AS BIGINT) AS last_update_date",
@@ -2526,37 +2523,22 @@ def _w9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             "TRUE AS _ds",
         )
     )
-    with tempfile.TemporaryDirectory(
-        prefix="zg_w9_", ignore_cleanup_errors=True
-    ) as work:
-        path = os.path.join(work, "b_device_partial")
-        partial_upsert_table(
-            spark, seed, path, keys=["app_id", "device_id"], order_col="seq",
-            update_cols=["device_model", "language", "timezone",
-                         "last_update_date"],
-            partition_cols=["app_id"],
-        )
-        partial_upsert_table(
-            spark, part, path, keys=["app_id", "device_id"], order_col="seq",
-            update_cols=["language", "timezone", "last_update_date"],
-            partition_cols=["app_id"],
-        )
-        partial_upsert_table(
-            spark, dels, path, keys=["app_id", "device_id"], order_col="seq",
-            update_cols=["language", "timezone", "last_update_date"],
-            delete_col="_ds", partition_cols=["app_id"],
-        )
-        return (
-            spark.read.parquet(path)
-            .select("app_id", "device_id", "device_model", "language",
-                    "timezone", "last_update_date")
-            .localCheckpoint(eager=True)
-        )
+    return [obs.filter(F.col("seq") % 2 == 0), part, dels]
+
+
+def _w9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    batches = b_device_partial_batches(b_device_obs(spark, sf_dir))
+
+    def run(work: str) -> None:
+        for batch in batches:
+            upsert_b_device_partial(spark, batch, os.path.join(work, "b_device"))
+
+    return scratch_run("w9", run, lambda work: read_b_device(spark, work))
 
 
 QUERIES["w9_partial_upsert"] = _w9_run
 ORACLE["w9_partial_upsert"] = duck_pipeline_sql(f"""
-WITH w9_obs AS ({_w9_obs_sql(DUCK)}),
+WITH w9_obs AS ({b_device_obs_sql(DUCK)}),
 w9_b1 AS (
   SELECT * FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY app_id, device_id
@@ -4418,8 +4400,6 @@ _register("p56_event_paths", _p56)
 # multiset equality.
 # ---------------------------------------------------------------------------
 def _w10_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from zg_etl_spark.operators.scale_ids import (
         with_hash_device_ids,
         with_hash_user_ids,

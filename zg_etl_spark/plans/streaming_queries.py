@@ -32,6 +32,7 @@ from zg_etl_spark.operators.domain import (
     duck_pipeline_sql,
     spark_pipeline_df,
 )
+from zg_etl_spark.plans.common import scratch_run
 from zg_etl_spark.session import materialize
 from zg_etl_spark.sources.tables import table_bytes
 from zg_etl_spark.streaming.engine import file_stream, start_available_now
@@ -109,40 +110,41 @@ _REPLAY_TIMEOUT_S = 300
 
 
 def _replay(spark: SparkSession, src: str, start, read) -> DataFrame:
-    """One availableNow run over the stream source ``src``.
+    """One availableNow run over the stream source ``src``, as the
+    ``run`` of one ``scratch_run``.
 
     ``start(work)`` starts the query with its checkpoint and sink state
-    under the scratch dir ``work``; ``read(work)`` returns the result,
-    which is checkpointed before the dir goes. The query starts with
-    ``spark.sql.shuffle.partitions`` at ``_stream_shards`` (a stateful
-    query freezes its state-shard count at start), and the session value
-    is back before ``read`` runs. The run must finish inside
-    ``_REPLAY_TIMEOUT_S``: reading a partial sink under a live query
-    would return a wrong answer. On every exit path the query is
-    stopped, the setting restored, ``work`` removed and the memory-sink
-    view (the query's name) dropped — the memory sink holds every
-    emitted row on the driver until then."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    under the scratch dir ``work``; ``read(work)`` returns the result.
+    The query starts with ``spark.sql.shuffle.partitions`` at
+    ``_stream_shards`` (a stateful query freezes its state-shard count at
+    start), and the session value is back before ``read`` runs. The run
+    must finish inside ``_REPLAY_TIMEOUT_S``: reading a partial sink
+    under a live query would return a wrong answer. On every exit path
+    the query is stopped, the setting restored, ``work`` removed and the
+    memory-sink view (the query's name) dropped — the memory sink holds
+    every emitted row on the driver until then."""
     q = None
-    with tempfile.TemporaryDirectory(
-        prefix="zg_replay_", ignore_cleanup_errors=True
-    ) as work:
+
+    def run(work: str) -> None:
+        nonlocal q
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
         try:
             spark.conf.set("spark.sql.shuffle.partitions", _stream_shards(spark, src))
-            try:
-                q = start(work)
-                if not q.awaitTermination(_REPLAY_TIMEOUT_S):
-                    raise RuntimeError(
-                        f"streaming query did not finish in {_REPLAY_TIMEOUT_S}s"
-                    )
-            finally:
-                if q is not None and q.isActive:
-                    q.stop()
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-            return read(work).localCheckpoint(eager=True)
+            q = start(work)
+            if not q.awaitTermination(_REPLAY_TIMEOUT_S):
+                raise RuntimeError(
+                    f"streaming query did not finish in {_REPLAY_TIMEOUT_S}s"
+                )
         finally:
-            if q is not None and q.name:
-                spark.catalog.dropTempView(q.name)
+            if q is not None and q.isActive:
+                q.stop()
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    try:
+        return scratch_run("replay", run, read)
+    finally:
+        if q is not None and q.name:
+            spark.catalog.dropTempView(q.name)
 
 
 def _replay_to_memory(spark: SparkSession, src: str, stream: DataFrame,
@@ -604,51 +606,19 @@ FROM events c JOIN events p
 # must equal the batch dedup relation minus the deleted slice.
 # ---------------------------------------------------------------------------
 def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    from zg_etl_spark.plans.pipeline import (
+        b_user_delete_batches,
+        b_user_rows,
+        read_b_user,
+        upsert_b_user,
+    )
 
-    from zg_etl_spark.plans.pipeline import b_user_rows_sql
-    from zg_etl_spark.sinks import upsert_table
-
-    def write(src: str) -> None:
-        base = spark_pipeline_df(
-            spark, sf_dir, b_user_rows_sql(SPARK)
-        ).localCheckpoint(eager=True)
-        stats = base.selectExpr(
-            "percentile_approx(seq, 0.5) AS m", "max(seq) AS mx"
-        ).first()
-        live = base.withColumn("_ds", F.lit(False))
-        dels = (
-            base.filter(F.col("zg_id") % 7 == 0)
-            .select("app_id", "device_id", "zg_id")
-            .distinct()
-            .selectExpr(
-                "app_id", "device_id", "zg_id",
-                "CAST(NULL AS BIGINT) AS user_id",
-                "CAST(NULL AS BIGINT) AS begin_date",
-                "CAST(NULL AS INT) AS platform",
-                f"CAST({stats.mx} + 1 AS BIGINT) AS seq",
-                "TRUE AS _ds",
-            )
-        )
-        _write_split_files(
-            [
-                live.filter(F.col("seq") <= stats.m),
-                live.filter(F.col("seq") > stats.m).unionByName(dels),
-            ],
-            src,
-        )
-
-    src = _source(spark, sf_dir, "s8_src", write)
+    src = _source(spark, sf_dir, "s8_src", lambda src: _write_split_files(
+        b_user_delete_batches(b_user_rows(spark, sf_dir))[:2], src))
 
     def start(work: str):
-        path = os.path.join(work, "b_user_stream")
-
         def sink(batch_df: DataFrame, _batch_id: int) -> None:
-            upsert_table(
-                spark, batch_df, path,
-                keys=["app_id", "device_id", "zg_id"], order_col="seq",
-                partition_cols=["app_id"], delete_col="_ds",
-            )
+            upsert_b_user(spark, batch_df, os.path.join(work, "b_user"))
 
         stream = file_stream(
             spark, src,
@@ -660,12 +630,7 @@ def _s8(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.writeStream.foreachBatch(sink), os.path.join(work, "ckpt")
         )
 
-    def read(work: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(work, "b_user_stream")).select(
-            "app_id", "device_id", "zg_id", "user_id", "begin_date", "platform"
-        )
-
-    return _replay(spark, src, start, read)
+    return _replay(spark, src, start, lambda work: read_b_user(spark, work))
 
 
 def _s8_oracle() -> str:
@@ -696,35 +661,17 @@ ORACLE["s8_stream_upsert_delete"] = _s8_oracle()
 # w9's verbatim.
 # ---------------------------------------------------------------------------
 def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+    from zg_etl_spark.plans.pipeline import (
+        b_device_obs,
+        b_device_partial_batches,
+        read_b_device,
+        upsert_b_device_partial,
+    )
 
-    from zg_etl_spark.plans.pipeline import _w9_obs_sql
-    from zg_etl_spark.sinks import partial_upsert_table
-
-    obs = materialize(spark, sf_dir, "s9_obs", lambda: spark_pipeline_df(
-        spark, sf_dir, _w9_obs_sql(SPARK)))
+    seed, part, dels = b_device_partial_batches(b_device_obs(spark, sf_dir))
 
     def write(src: str) -> None:
-        part = (
-            obs.filter(F.col("seq") % 2 == 1)
-            .select("app_id", "device_id", "language", "timezone",
-                    "last_update_date", "seq")
-            .withColumn("_ds", F.lit(False))
-        )
         mid = part.selectExpr("percentile_approx(seq, 0.5) AS m").first().m
-        dels = (
-            obs.filter(F.col("device_id") % 5 == 0)
-            .select("app_id", "device_id")
-            .distinct()
-            .selectExpr(
-                "app_id", "device_id",
-                "CAST(NULL AS STRING) AS language",
-                "CAST(NULL AS STRING) AS timezone",
-                "CAST(NULL AS BIGINT) AS last_update_date",
-                "CAST(9000000000000000000 AS BIGINT) AS seq",
-                "TRUE AS _ds",
-            )
-        )
         _write_split_files(
             [part.filter(part.seq <= mid), part.filter(part.seq > mid), dels],
             src,
@@ -733,23 +680,12 @@ def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _source(spark, sf_dir, "s9_src", write)
 
     def start(work: str):
-        path = os.path.join(work, "b_device_stream")
+        path = os.path.join(work, "b_device")
         # seed: the full-column creation write (w9 batch 1)
-        partial_upsert_table(
-            spark, obs.filter(F.col("seq") % 2 == 0), path,
-            keys=["app_id", "device_id"], order_col="seq",
-            update_cols=["device_model", "language", "timezone",
-                         "last_update_date"],
-            partition_cols=["app_id"],
-        )
+        upsert_b_device_partial(spark, seed, path)
 
         def sink(batch_df: DataFrame, _batch_id: int) -> None:
-            partial_upsert_table(
-                spark, batch_df, path,
-                keys=["app_id", "device_id"], order_col="seq",
-                update_cols=["language", "timezone", "last_update_date"],
-                delete_col="_ds", partition_cols=["app_id"],
-            )
+            upsert_b_device_partial(spark, batch_df, path)
 
         stream = file_stream(
             spark, src,
@@ -761,13 +697,7 @@ def _s9(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.writeStream.foreachBatch(sink), os.path.join(work, "ckpt")
         )
 
-    def read(work: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(work, "b_device_stream")).select(
-            "app_id", "device_id", "device_model", "language", "timezone",
-            "last_update_date",
-        )
-
-    return _replay(spark, src, start, read)
+    return _replay(spark, src, start, lambda work: read_b_device(spark, work))
 
 
 QUERIES["s9_stream_partial_upsert"] = _s9

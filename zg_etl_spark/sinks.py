@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 NULL_TOKEN = r"\N"  # Doris stream-load null literal (EventAttrRow.java:49)
+STREAM_LOAD_SEP = "\t"  # the Doris stream-load column separator default
 
 # Up to this many touched partition tuples the existing-side restriction is
 # a literal predicate (static partition pruning at the scan); beyond it a
@@ -90,19 +91,15 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
-    mode: str = "overwrite",
     dynamic: bool = True,
 ) -> None:
-    """Partitioned write with dynamic partition overwrite (only partitions
-    present in df are replaced — the RANGE-partition analog)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    if dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    """Partitioned overwrite, by default with dynamic partition overwrite
+    (only partitions present in df are replaced — the RANGE-partition
+    analog). The mode is a write option, so the session's
+    ``spark.sql.sources.partitionOverwriteMode`` is never touched."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic" if dynamic else "static"
+    ).partitionBy(*partition_cols).parquet(path)
 
 
 def upsert_table(
@@ -324,12 +321,12 @@ def drop_expired_partitions(
     return dropped
 
 
-def export_stream_load_csv(df: DataFrame, path: str, sep: str = "\t") -> None:
+def export_stream_load_csv(df: DataFrame, path: str) -> None:
     """Compat export in the reference's stream-load shape: flat CSV,
     nulls as \\N (transfer/EventAttrTransfer.java:32), tab-separated
     (the Doris stream-load default the sinks configure)."""
     cols = [F.coalesce(F.col(c).cast("string"), F.lit(NULL_TOKEN)).alias(c) for c in df.columns]
-    df.select(cols).write.mode("overwrite").option("sep", sep).option(
+    df.select(cols).write.mode("overwrite").option("sep", STREAM_LOAD_SEP).option(
         "emptyValue", ""
     ).csv(path)
 
@@ -381,46 +378,41 @@ def partial_upsert_table(
     if delete_col is not None:
         deletes = latest.filter(_delete_flag(delete_col)).select(*keys)
         latest = latest.filter(~_delete_flag(delete_col)).drop(delete_col)
-    if not table_exists:
+    merged = latest
+    if table_exists:
+        existing = spark.read.parquet(path)
         if partition_cols:
-            write_partitioned(latest, path, partition_cols, dynamic=False)
-            _ensure_readable(path, partition_cols, latest)
-        else:
-            latest.write.mode("overwrite").parquet(path)
-        spark.catalog.refreshByPath(path)
-        return
-    existing = spark.read.parquet(path)
-    if partition_cols:
-        existing = _restrict_to_touched(spark, existing, partition_cols, touched)
-    # key joins are NULL-SAFE throughout: _restrict_to_touched goes out
-    # of its way (eqNullSafe) to read a NULL partition's existing rows
-    # into the merge, and keep_latest's Window.partitionBy groups NULL
-    # keys — plain == here would instead duplicate a NULL-keyed row on
-    # update and make it undeletable
-    def _key_cond(left, right):
-        cond = None
-        for k in keys:
-            eq = left[k].eqNullSafe(right[k])
-            cond = eq if cond is None else cond & eq
-        return cond
+            existing = _restrict_to_touched(spark, existing, partition_cols, touched)
+        # key joins are NULL-SAFE throughout: _restrict_to_touched goes out
+        # of its way (eqNullSafe) to read a NULL partition's existing rows
+        # into the merge, and keep_latest's Window.partitionBy groups NULL
+        # keys — plain == here would instead duplicate a NULL-keyed row on
+        # update and make it undeletable
+        def _key_cond(left, right):
+            cond = None
+            for k in keys:
+                eq = left[k].eqNullSafe(right[k])
+                cond = eq if cond is None else cond & eq
+            return cond
 
-    if deletes is not None:
-        existing = existing.join(deletes, _key_cond(existing, deletes), "left_anti")
-    # presence flag, not per-column coalesce: an incoming explicit NULL
-    # must overwrite (the \N stream-load semantics), which coalesce would
-    # silently keep as the old value
-    e = existing.alias("e")
-    i = latest.withColumn("_i_present", F.lit(True)).alias("i")
-    hit = F.coalesce(F.col("_i_present"), F.lit(False))
-    other_cols = [c for c in existing.columns if c not in keys and c not in update_cols]
-    merged = e.join(i, _key_cond(e, i), "full_outer").select(
-        *[F.coalesce(f"e.{k}", f"i.{k}").alias(k) for k in keys],
-        *[
-            F.when(hit, F.col(f"i.{c}")).otherwise(F.col(f"e.{c}")).alias(c)
-            for c in update_cols
-        ],
-        *[F.col(f"e.{c}").alias(c) for c in other_cols],
-    )
+        if deletes is not None:
+            existing = existing.join(deletes, _key_cond(existing, deletes), "left_anti")
+        # presence flag, not per-column coalesce: an incoming explicit NULL
+        # must overwrite (the \N stream-load semantics), which coalesce would
+        # silently keep as the old value
+        e = existing.alias("e")
+        i = latest.withColumn("_i_present", F.lit(True)).alias("i")
+        hit = F.coalesce(F.col("_i_present"), F.lit(False))
+        other_cols = [c for c in existing.columns if c not in keys and c not in update_cols]
+        merged = e.join(i, _key_cond(e, i), "full_outer").select(
+            *[F.coalesce(f"e.{k}", f"i.{k}").alias(k) for k in keys],
+            *[
+                F.when(hit, F.col(f"i.{c}")).otherwise(F.col(f"e.{c}")).alias(c)
+                for c in update_cols
+            ],
+            *[F.col(f"e.{c}").alias(c) for c in other_cols],
+        )
+    # one staged commit; a missing table is the touched=None case
     if partition_cols:
         _commit_touched_partitions(spark, merged, path, partition_cols, touched)
     else:
