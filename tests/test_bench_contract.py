@@ -15,16 +15,20 @@ def test_correctness_window_composition():
     round-13 composition: the queries whose materialization path the
     session registry rewrote (p42/p52/p54/p54c/p54d, w2, l16/l27) first,
     then l6/l31/l37 (rewritten after their last driver row), then the
-    oldest (round-10) rows whose sources are now registry entries and
-    the stream-source queries s5/s7/s8; registering a new query must
-    never silently displace one of these."""
+    l-queries whose oracle now inlines the engine's index declaration
+    (l11/l19/l25/l29/l33/l34/l35) and p43/p50 (anchored parseLong gate),
+    then the oldest (round-10) rows whose sources are now registry
+    entries and the stream-source queries s5/s7/s8; registering a new
+    query must never silently displace one of these."""
     first50 = list(plans.all_queries())[:50]
     assert len(set(first50)) == 50
     want_prefixes = ["p54_", "p54c_", "p54d_", "w2_", "g2_", "g3_"]
-    want_prefixes += [f"l{i}_" for i in (1, 2, 3, 4, 5, 6, 7, 8, 9, 16, 27,
-                                         30, 31, 37)]
+    want_prefixes += [f"l{i}_" for i in (1, 2, 3, 4, 5, 6, 7, 8, 9, 11, 16,
+                                         19, 25, 27, 29, 30, 31, 33, 34,
+                                         35, 37)]
     want_prefixes += [f"p{i}_" for i in (1, 2, 5, 7, 8, 9, 27, 28, 30, 31,
-                                         32, 33, 35, 39, 42, 51, 52)]
+                                         32, 33, 35, 39, 42, 43, 50, 51,
+                                         52)]
     want_prefixes += [f"s{i}_" for i in (5, 7, 8)]
     for prefix in want_prefixes:
         assert any(q.startswith(prefix) for q in first50), (
@@ -84,7 +88,10 @@ def test_driver_window_is_the_planned_rotation():
         "p54_click_consumption", "p54c_candidates", "p54d_replay_rollup",
         "w2_bucketed_join", "l16_dedup_groups", "l27_dedup_keep_list",
         "l6_lsh_candidates", "l31_candidate_verify", "l37_pq_ann",
-        "l5_minhash_signatures", "l9_ann_ivf", "s7_stream_stream_join",
+        "l11_embedding_neardup", "l19_tfidf_terms", "l25_decontaminate",
+        "l29_semantic_dedup", "l33_lm_quality_score", "l34_source_overlap",
+        "l35_incremental_dedup", "p43_adv_match_json",
+        "p50_match_json_userprop", "l5_minhash_signatures", "l9_ann_ivf", "s7_stream_stream_join",
         "p8_wide_table", "p7_enrichment", "p5_virtual_attrs",
         "q1_pricing_summary",
     ]
@@ -94,7 +101,7 @@ def test_driver_window_is_the_planned_rotation():
     # parity rehearsal): the round-12 window, hash-green in
     # CORRECTNESS_r12, and the relational tail the cut leaves out
     for name in ("q10_set_ops", "p3_zgid_binding", "l10_multimodal_binary",
-                 "g4_sm2_unwrap", "l11_embedding_neardup",
+                 "g4_sm2_unwrap", "q2_orders_customer_join",
                  "l15_multimodal_features", "p47_adv_cdc_route",
                  "p56_event_paths", "s1_streaming_identity",
                  "s4_streaming_route", "s10_streaming_deep_convert",

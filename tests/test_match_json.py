@@ -75,6 +75,9 @@ VALUES = [
     # where a naive Python int() would accept
     " 5", "1_0", "99999999999999999999", "-99999999999999999999",
     "9223372036854775807", "9223372036854775808",
+    # a trailing line terminator: Java's regex '$' matches before it, so
+    # the numeric/date gate must be anchored with \z to reject these
+    "5\n", "1704070000\n",
 ]
 
 

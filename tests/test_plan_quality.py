@@ -14,6 +14,8 @@ import re
 import pytest
 
 from zg_etl_spark import plans
+from zg_etl_spark.dialect import SPARK
+from zg_etl_spark.plans import llm
 
 ALL = plans.all_queries()
 
@@ -25,19 +27,23 @@ def _plan(df, mode: str = "formatted") -> str:
     )
 
 
-def _source_scans(plan: str, sf_dir: str, table: str) -> int:
-    """Scans of a base table in a "simple" plan: of its parquet file, or of
-    its registry entry (a checkpointed ``Scan ExistingRDD`` whose columns
-    are exactly the table's)."""
-    import pyarrow.parquet as pq
-
-    cols = pq.read_schema(f"{sf_dir}/{table}.parquet").names
+def _entry_scans(plan: str, cols: list[str]) -> int:
+    """Scans of a registry entry in a "simple" plan: checkpointed ``Scan
+    ExistingRDD`` nodes whose columns are exactly ``cols``."""
     scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan)
-    entry = sum(
+    return sum(
         [re.sub(r"#\d+L?$", "", c) for c in s.split(",")] == cols
         for s in scans
     )
-    return plan.count(f"{table}.parquet") + entry
+
+
+def _source_scans(plan: str, sf_dir: str, table: str) -> int:
+    """Scans of a base table in a "simple" plan: of its parquet file, or of
+    its registry entry."""
+    import pyarrow.parquet as pq
+
+    cols = pq.read_schema(f"{sf_dir}/{table}.parquet").names
+    return plan.count(f"{table}.parquet") + _entry_scans(plan, cols)
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -209,21 +215,57 @@ def test_vtl_union_reuses_cached_resolved(spark, sf_dir):
     assert not shuffles, f"vtl fan-out shuffles the fact:\n{plan}"
 
 
-@pytest.mark.parametrize("name", ["l4_ngram_jaccard", "l6_lsh_candidates"])
+def _bloom_filter_builds(plan: str) -> str:
+    """The subtrees of a "simple" plan that build a runtime bloom filter
+    (the ``Subquery`` a ``might_contain(Subquery …)`` filter reads: that
+    node's line and every following line indented deeper). Spark re-reads
+    one join side to build a filter for the other — a filter build, not a
+    re-derived index."""
+    ids = set(re.findall(r"might_contain\(Subquery (subquery#\d+)", plan))
+    out, depth = [], None
+    for line in plan.splitlines():
+        col = len(re.match(r"[ :+-]*", line).group())
+        if depth is not None and col > depth:
+            out.append(line)
+            continue
+        m = re.search(r"\+- Subquery (subquery#\d+)", line)
+        depth = col if m and m.group(1) in ids else None
+        if depth is not None:
+            out.append(line)
+    return "\n".join(out)
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n, (_, uses) in llm.BODIES.items() if uses)
+)
 def test_shared_views_not_recomputed(spark, sf_dir, name):
-    """Queries over a shared derived set (shingles / minhash signatures)
-    must scan the materialized view, never re-derive it from the source
-    table. Spark substitutes cached plans BEFORE CTE inlining, so a
-    cache()d view referenced inside a WITH body silently recomputes its
-    whole lineage per reference — the engine materializes these via
-    localCheckpoint precisely so this plan shape is impossible. A
-    FileScan of documents here means the fix regressed (4× recompute of
-    the shingle pipeline at any SF)."""
+    """Queries over an index (shingles, minhash signatures, candidate
+    pairs, IVF/PQ assignments, ...) must scan the materialized entry,
+    never re-derive it from the source table. Spark substitutes cached
+    plans BEFORE CTE inlining, so a cache()d view referenced inside a WITH
+    body silently recomputes its whole lineage per reference — the engine
+    materializes indexes via localCheckpoint precisely so this plan shape
+    is impossible. Each index the body reads must appear as a checkpoint
+    scan, and documents/embeddings may be scanned only as often as the
+    body's own FROM/JOIN clauses name them (a re-derived index adds
+    source scans: 4× recompute of the shingle pipeline at any SF)."""
+    body_fn, uses = llm.BODIES[name]
     plan = _plan(ALL[name](spark, sf_dir), "simple")
-    assert "Scan ExistingRDD" in plan, plan
-    assert _source_scans(plan, sf_dir, "documents") == 0, (
-        f"{name} re-derives its shared view from the source scan:\n{plan}"
-    )
+    for index in uses:
+        assert _entry_scans(plan, spark.table(index).columns) >= 1, (
+            f"{name} does not read index {index} as a checkpoint scan:\n{plan}"
+        )
+    body = body_fn(SPARK)
+    # l37's plan carries a runtime bloom filter whose build re-reads the
+    # embeddings entry (CHANGES.md FOUND: l37 bloom-filter subquery); only
+    # that filter build is exempt, and only from the embeddings count
+    blooms = _source_scans(_bloom_filter_builds(plan), sf_dir, "embeddings")
+    for table, exempt in (("documents", 0), ("embeddings", blooms)):
+        named = len(re.findall(rf"\b(?:FROM|JOIN)\s+{table}\b", body))
+        assert _source_scans(plan, sf_dir, table) - exempt <= named, (
+            f"{name} scans {table} beyond its body's {named} references "
+            f"— an index was re-derived:\n{plan}"
+        )
 
 
 def test_no_l_query_scans_corpus_twice(spark, sf_dir):

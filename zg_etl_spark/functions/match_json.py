@@ -49,8 +49,11 @@ from zg_etl_spark.functions.java_digits import (
 # decimal digit via Character.digit — JVM fixture mode 'cv', round 11 —
 # so the SQL side first translate()s the JDK-dumped BMP digit table;
 # an untranslated char, including a supplementary-plane digit that
-# parseLong sees as two surrogates, fails this gate = Java's throw)
-_LONG_RE = r"^[+-]?[0-9]+$"
+# parseLong sees as two surrogates, fails this gate = Java's throw).
+# \A..\z, not ^..$: in Spark's java.util.regex a bare '$' also matches
+# before a trailing line terminator, so '123\n' would pass the gate that
+# parseLong (and DuckDB's RE2) rejects
+_LONG_RE = r"\A[+-]?[0-9]+\z"
 
 _NUM_OPS = {
     "gt": ">",

@@ -787,19 +787,29 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
     return out
 
 
-def prelude(d: Dialect) -> str:
-    """Single WITH-prelude (DuckDB oracle path)."""
-    return "WITH " + ",\n".join(
-        f"{name} AS ({sql.strip()})" for name, sql in stages(d)
-    )
+def with_ctes(ctes: list[tuple[str, str]], body: str) -> str:
+    """``body`` behind one WITH clause of ``ctes`` ((name, sql) pairs, in
+    dependency order) — how an oracle inlines the relations the engine
+    materializes. A body with its own CTEs is spliced into that clause;
+    its RECURSIVE marker, if any, moves to the front."""
+    if not ctes:
+        return body
+    head = "WITH "
+    stripped = body.lstrip()
+    if stripped.upper().startswith("WITH "):
+        body = stripped[4:]
+        if body.lstrip().upper().startswith("RECURSIVE "):
+            head, body = "WITH RECURSIVE ", body.lstrip()[len("RECURSIVE"):]
+        body = "," + body
+    return head + ",\n".join(
+        f"{name} AS ({sql.strip()})" for name, sql in ctes
+    ) + "\n" + body
 
 
 def full_query(d: Dialect, body: str) -> str:
-    # a body with its own CTEs is spliced into the prelude's WITH clause
-    stripped = body.lstrip()
-    if stripped.upper().startswith("WITH "):
-        body = "," + stripped[4:]
-    return prelude(d) + "\n" + body
+    """``body`` over the whole spine as one WITH prelude (DuckDB oracle
+    path)."""
+    return with_ctes(stages(d), body)
 
 
 # --- Spark execution: the spine as registry entries -------------------------

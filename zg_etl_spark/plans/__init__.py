@@ -24,11 +24,15 @@ from zg_etl_spark.plans import (
 #      l16's groups (read by l27) are registry entries;
 #   2. l6, l31 and l37, rewritten onto shared views after their last
 #      driver row, so their new forms were never attested;
-#   3. the oldest driver rows (round 10) whose sources are now registry
+#   3. the l-queries whose oracle now inlines the one index declaration
+#      the engine materializes (l11, l19, l25, l29, l33, l34, l35 — the
+#      others sit in items 1, 2 and 4), and p43/p50, whose parseLong gate
+#      is now anchored with \A..\z;
+#   4. the oldest driver rows (round 10) whose sources are now registry
 #      entries: the l-queries over the materialized documents/embeddings
 #      tables, the stream-source queries s5/s7/s8 (round 11), and the
 #      g/p queries over the spine's materialized events;
-#   4. the round-10 relational band, as far as the cut allows.
+#   5. the round-10 relational band, as far as the cut allows.
 #
 # EXPLICIT, not module-unpacked: a query added to llm/streaming/gate
 # must be slotted here deliberately — unpacking whole modules let any
@@ -45,6 +49,15 @@ _WINDOW = [
     "l6_lsh_candidates",
     "l31_candidate_verify",
     "l37_pq_ann",
+    "l11_embedding_neardup",
+    "l19_tfidf_terms",
+    "l25_decontaminate",
+    "l29_semantic_dedup",
+    "l33_lm_quality_score",
+    "l34_source_overlap",
+    "l35_incremental_dedup",
+    "p43_adv_match_json",
+    "p50_match_json_userprop",
     "l1_text_stats",
     "l2_lang_id",
     "l3_dedup_exact",
@@ -75,6 +88,8 @@ _WINDOW = [
     "p39_baidu_eqid",
     "p51_web_ad_lane",
     "q1_pricing_summary",
+    # behind the 50-query cut — stay listed so a future rotation is a
+    # reorder, not a rediscovery
     "q2_orders_customer_join",
     "q3_revenue_by_nation",
     "q4_nation_region",
@@ -84,8 +99,6 @@ _WINDOW = [
     "q8_window_topk",
     "q9_top_parts",
     "q12_scalar_functions",
-    # behind the 50-query cut — stay listed so a future rotation is a
-    # reorder, not a rediscovery
     "q13_cube",
     "q14_grouping_sets",
     "q15_percentiles",

@@ -4,9 +4,16 @@ first-class engine components).
 
 Every query body is one template rendered with the same dialect as the
 event pipeline (``zg_etl_spark.dialect``: ``SPARK`` for the engine, ``DUCK``
-for the oracle), so oracle and engine cannot drift. Everything is expressed
-with built-in array/lambda functions — no Python UDFs in any hot path
-(JVM-side codegen in Spark).
+for the oracle), so oracle and engine cannot drift. The derived sets that
+several queries (or several references in one query) read — shingle sets,
+minhash signatures, candidate pairs, IVF/PQ assignments — are INDEXES,
+each declared once (``_index``: name -> sql(d), plus the indexes it
+reads). A query names the indexes its body reads (``_register(...,
+uses=...)``) and refers to each by name in both dialects: the engine
+materializes them as registry entries, the oracle inlines the same text
+as CTEs in front of the body (``operators.domain.with_ctes``).
+Everything is expressed with built-in array/lambda functions — no Python
+UDFs in any hot path (JVM-side codegen in Spark).
 
 Scale design (100 TB corpus thinking):
 - exact dedup: hash-groupBy on md5(text) — one shuffle on the hash, partial
@@ -30,48 +37,77 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution
 from pyspark.sql import DataFrame, SparkSession
 
 from zg_etl_spark.dialect import DUCK, SPARK
+from zg_etl_spark.operators.domain import with_ctes
 from zg_etl_spark.session import materialize
 
 QUERIES: dict = {}
 ORACLE: dict = {}
+# index name -> (sql(d), the indexes it reads), in dependency order
+INDEXES: dict = {}
+# SQL-bodied query -> (body(d), the indexes the body reads)
+BODIES: dict = {}
 
 STOPWORDS = "('the', 'a')"
 
 
-def _register_docs_views(spark: SparkSession, sf_dir: str) -> None:
-    """documents/embeddings ship as ONE parquet file per table, which
-    would serialize every per-row array/hash pipeline into a single task;
-    a size-derived round-robin repartition of the raw rows (sources.tables
-    fan_out — cheap, thousands of rows) parallelizes all downstream CPU.
-    Each table is a registry entry: read, fanned out and materialized once
-    per (session, sf_dir), not re-read per query."""
+# Indexes: the derived sets (shingle sets, minhash signatures, IVF
+# assignments, ...) that several queries — or several references inside
+# one query's WITH clause — read. Spark inlines CTEs and substitutes
+# cached plans BEFORE that inlining, so a WITH body or a `.cache()`d view
+# referenced N times re-runs its whole lineage N times (measured: l4's 4
+# references re-ran the shingle pipeline 4×). The engine therefore
+# materializes each index as a registry entry (localCheckpointed, so every
+# reference scans the materialized partitions; a real deployment would
+# persist it as a table), and the oracle inlines the SAME text as a CTE —
+# DuckDB materializes CTEs natively. One declaration serves both, so the
+# SQL Spark runs is the SQL the oracle checks.
+def _index(name: str, sql_fn, uses: tuple[str, ...] = ()) -> None:
+    INDEXES[name] = (sql_fn, uses)
+
+
+def _closure(uses: tuple[str, ...]) -> list[str]:
+    """``uses`` plus every index they read, in dependency order."""
+    need, todo = set(), list(uses)
+    while todo:
+        name = todo.pop()
+        if name not in need:
+            need.add(name)
+            todo.extend(INDEXES[name][1])
+    return [name for name in INDEXES if name in need]
+
+
+def _materialize_inputs(
+    spark: SparkSession, sf_dir: str, uses: tuple[str, ...] = ()
+) -> None:
+    """The engine side: documents/embeddings, then each index in ``uses``
+    and those it reads, each built once per (session, sf_dir).
+
+    documents/embeddings ship as ONE parquet file per table, which would
+    serialize every per-row array/hash pipeline into a single task; a
+    size-derived round-robin repartition of the raw rows (sources.tables
+    fan_out — cheap, thousands of rows) parallelizes all downstream CPU."""
     from zg_etl_spark.sources.tables import fan_out
 
     for t in ("documents", "embeddings"):
         materialize(spark, sf_dir, t, lambda t=t: fan_out(spark, sf_dir, t))
+    for name in _closure(uses):
+        materialize(spark, sf_dir, name,
+                    lambda name=name: spark.sql(INDEXES[name][0](SPARK)))
 
 
-# Shared derived datasets (shingle sets, minhash signatures) referenced by
-# several queries — and referenced MULTIPLE times inside one query via WITH
-# clauses. Spark substitutes cached plans BEFORE CTE inlining, so a
-# `.cache()`d temp view inside a WITH body silently recomputes its whole
-# lineage per reference (measured: l4's 4 references re-ran the shingle
-# pipeline 4×). A registry entry is localCheckpointed instead, so every
-# reference — CTE or not — scans the materialized partitions: the suite
-# builds each derived set once, as a real deployment would persist it as
-# a table.
-def _shared_view(spark: SparkSession, sf_dir: str, name: str, sql: str) -> None:
-    _register_docs_views(spark, sf_dir)
-    materialize(spark, sf_dir, name, lambda: spark.sql(sql))
+def _oracle(body: str, uses: tuple[str, ...] = ()) -> str:
+    """The oracle side: the same index texts as CTEs in front of ``body``."""
+    return with_ctes([(n, INDEXES[n][0](DUCK)) for n in _closure(uses)], body)
 
 
-def _register(name: str, body_fn):
+def _register(name: str, body_fn, uses: tuple[str, ...] = ()) -> None:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _register_docs_views(spark, sf_dir)
+        _materialize_inputs(spark, sf_dir, uses)
         return spark.sql(body_fn(SPARK))
 
     QUERIES[name] = run
-    ORACLE[name] = body_fn(DUCK)
+    ORACLE[name] = _oracle(body_fn(DUCK), uses)
+    BODIES[name] = (body_fn, uses)
 
 
 # ---------------------------------------------------------------------------
@@ -104,25 +140,24 @@ _register("l1_text_stats", _l1)
 # L2 language-ID: self-supervised word-profile heuristic — build top-5 word
 # profiles per lang from the corpus, classify each doc by profile overlap
 # ---------------------------------------------------------------------------
-def _l2(d, words_src: str | None = None) -> str:
-    words_from = d.explode(d.split("text"), "word")
-    words_cte = (
-        f"words AS (SELECT * FROM {words_src})"
-        if words_src
-        else f"words AS (\n  SELECT doc_id, lang, word FROM documents {words_from}\n)"
-    )
-    return f"""
-WITH {words_cte},
-profile AS (
+# `l2_words` feeds both the per-lang profile build AND the per-doc scoring join
+_index("l2_words", lambda d: (
+    f"SELECT doc_id, lang, word FROM documents "
+    f"{d.explode(d.split('text'), 'word')}"))
+
+
+def _l2(d) -> str:
+    return """
+WITH profile AS (
   SELECT lang AS p_lang, word AS p_word FROM (
     SELECT lang, word, COUNT(*) AS cnt,
            ROW_NUMBER() OVER (PARTITION BY lang ORDER BY COUNT(*) DESC, word) AS rn
-    FROM words GROUP BY lang, word
+    FROM l2_words GROUP BY lang, word
   ) x WHERE rn <= 5
 ),
 scores AS (
   SELECT w.doc_id, p.p_lang, COUNT(*) AS overlap
-  FROM words w JOIN profile p ON p.p_word = w.word
+  FROM l2_words w JOIN profile p ON p.p_word = w.word
   GROUP BY w.doc_id, p.p_lang
 ),
 best AS (
@@ -138,21 +173,7 @@ SELECT dd.doc_id, dd.lang, b.predicted_lang,
 FROM documents dd LEFT JOIN best b ON b.doc_id = dd.doc_id"""
 
 
-def _l2_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # `words` feeds both the per-lang profile build AND the per-doc scoring
-    # join — materialize it once (see _shared_view on CTE cache bypass)
-    _shared_view(
-        spark,
-        sf_dir,
-        "l2_words",
-        f"SELECT doc_id, lang, word FROM documents "
-        f"{SPARK.explode(SPARK.split('text'), 'word')}",
-    )
-    return spark.sql(_l2(SPARK, words_src="l2_words"))
-
-
-QUERIES["l2_lang_id"] = _l2_run
-ORACLE["l2_lang_id"] = _l2(DUCK)
+_register("l2_lang_id", _l2, uses=("l2_words",))
 
 
 # ---------------------------------------------------------------------------
@@ -170,43 +191,47 @@ _register("l3_dedup_exact", _l3)
 
 
 # ---------------------------------------------------------------------------
-# shared shingle CTE (n-word shingles over the pre-split ws column,
-# distinct per doc)
+# The hashed 4-gram shingle index (n-word shingles over the split text,
+# distinct per doc), shared by l4, l25, l31 and l34.
+# Two-step build: the per-doc shingle ARRAYS are one index, the exploded
+# shingles a second one over it. A one-step build pushes the Generate-
+# inferred predicate (which embeds the whole transform(...) chain) below
+# the round-robin repartition, evaluating the expensive expression on the
+# single source partition — measured 3× slower than this split.
+# Shingles are 8-byte hashes, not strings — 3× less shuffle volume; counts
+# are hash-agnostic (64-bit collision odds over ~1M shingles ≈ 1e-7), so
+# the oracle still matches even though each engine uses its own hash
+# function. Per-doc dedup happens INSIDE the array (array_distinct) before
+# the explode, so no DISTINCT shuffle ever runs.
 # ---------------------------------------------------------------------------
-def _shingles_cte_fixed(d, n: int = 4, hashed: bool = False) -> str:
+def _l4_sharr(d) -> str:
+    n = 4
     starts = d.seq("1", f"{d.alen('ws')} - {n - 1}")
     sh_arr = d.lmap(starts, "i", d.slice_join("ws", "i", n))
-    # hashed=True joins on 8-byte hashes instead of shingle strings —
-    # 3× less shuffle volume; counts are hash-agnostic (64-bit collision
-    # odds over ~1M shingles ≈ 1e-7), so the oracle still matches even
-    # though each engine uses its own hash function. Per-doc dedup happens
-    # INSIDE the array (array_distinct) before the explode, so no DISTINCT
-    # shuffle ever runs.
-    key = d.h64("shingle") + " AS shingle" if hashed else "shingle"
-    return f"""
-docw AS (SELECT doc_id, ws
-         FROM (SELECT doc_id, {d.split('text')} AS ws FROM documents) w0
-         WHERE {d.alen('ws')} >= {n}),
-sharr AS (SELECT doc_id, {d.adistinct(sh_arr)} AS sh_arr FROM docw),
-shingles AS (
-  SELECT doc_id, {key}
-  FROM sharr {d.explode('sh_arr', 'shingle')}
-)"""
+    return f"""SELECT doc_id, {d.adistinct(sh_arr)} AS sh_arr
+            FROM (SELECT doc_id, {d.split('text')} AS ws FROM documents) w
+            WHERE {d.alen('ws')} >= {n}"""
+
+
+def _l4_shingles(d) -> str:
+    return f"""SELECT doc_id, {d.h64('shingle')} AS shingle
+            FROM l4_sharr {d.explode('sh_arr', 'shingle')}"""
+
+
+_index("l4_sharr", _l4_sharr)
+_index("l4_shingles", _l4_shingles, uses=("l4_sharr",))
 
 
 # ---------------------------------------------------------------------------
 # L4 n-gram Jaccard near-dup: top pairs by 4-gram Jaccard similarity.
-# The shingle set is referenced 3× (self-join sides + sizes); Spark inlines
-# CTEs, which re-ran the whole split/hash/explode pipeline per reference —
-# so the Spark path caches the shingles as a temp view (DuckDB materializes
-# CTEs natively and keeps the single inline rendering).
+# The shingle set is referenced 3× (self-join sides + sizes).
 # ---------------------------------------------------------------------------
-def _l4_inner(d, src: str) -> str:
-    return f"""
-WITH sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM {src} GROUP BY doc_id),
+def _l4(d) -> str:
+    return """
+WITH sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM l4_shingles GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM {src} a JOIN {src} b
+  FROM l4_shingles a JOIN l4_shingles b
     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
 )
@@ -221,46 +246,7 @@ ORDER BY jaccard DESC, doc_a, doc_b
 LIMIT 100"""
 
 
-def _ensure_shingle_views(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
-    """Materialize the hashed 4-gram shingle views shared by l4 and l25.
-
-    ONE definition site: _shared_view memoizes by name, so a second,
-    textually-divergent copy would silently serve whichever ran first.
-    Two-step build: materialize the per-doc shingle ARRAYS first, explode
-    from the checkpoint. One-step builds push the Generate-inferred
-    predicate (which embeds the whole transform(...) chain) below the
-    round-robin repartition, evaluating the expensive expression on the
-    single source partition — measured 3× slower than this split.
-    Returns the name of the exploded hashed-shingle view."""
-    starts = SPARK.seq("1", f"{SPARK.alen('ws')} - {n - 1}")
-    sh_arr = SPARK.lmap(starts, "i", SPARK.slice_join("ws", "i", n))
-    _shared_view(
-        spark,
-        sf_dir,
-        "l4_sharr",
-        f"""SELECT doc_id, {SPARK.adistinct(sh_arr)} AS sh_arr
-            FROM (SELECT doc_id, {SPARK.split('text')} AS ws FROM documents) w
-            WHERE {SPARK.alen('ws')} >= {n}""",
-    )
-    _shared_view(
-        spark,
-        sf_dir,
-        "l4_shingles",
-        f"""SELECT doc_id, {SPARK.h64('shingle')} AS shingle
-            FROM l4_sharr {SPARK.explode('sh_arr', 'shingle')}""",
-    )
-    return "l4_shingles"
-
-
-def _l4_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_l4_inner(SPARK, _ensure_shingle_views(spark, sf_dir)))
-
-
-QUERIES["l4_ngram_jaccard"] = _l4_run
-ORACLE["l4_ngram_jaccard"] = (
-    f"WITH {_shingles_cte_fixed(DUCK, 4, hashed=True)},"
-    + _l4_inner(DUCK, "shingles").lstrip()[len("WITH "):]
-)
+_register("l4_ngram_jaccard", _l4, uses=("l4_shingles",))
 
 
 # ---------------------------------------------------------------------------
@@ -298,30 +284,30 @@ FROM (
 
 
 _register("l5_minhash_signatures", _l5)
+# the signature index the LSH band fan-out reads: inlined, the band
+# fan-out recomputed the md5 signatures 8×
+_index("mh_sigs", _l5)
 
 
 # ---------------------------------------------------------------------------
 # L6 LSH candidate pairs: 4 bands × 2 rows; pairs sharing a band bucket,
 # scored by fraction of matching minhashes
 # ---------------------------------------------------------------------------
-def _l6_ctes(d) -> str:
-    # Spark path reads the CACHED signature view (mh_sigs) — Spark re-executes
-    # WITH-CTEs per reference, which made the band fan-out recompute the md5
-    # signatures 8×; DuckDB materializes CTEs and inlines _l5 directly.
-    inner = "SELECT * FROM mh_sigs" if d.name == "spark" else _l5(d).strip()
+def _l6_bands() -> str:
     band_rows = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_idx, h{2 * b} || h{2 * b + 1} AS band_val, "
-        f"h0, h1, h2, h3, h4, h5, h6, h7 FROM sigs"
+        f"h0, h1, h2, h3, h4, h5, h6, h7 FROM mh_sigs"
         for b in range(_N_HASHES // 2)
     )
-    return f"sigs AS ({inner}),\nbands AS ({band_rows})"
+    return f"bands AS ({band_rows})"
 
 
-def _l6_select(d) -> str:
+def _l6(d) -> str:
     matches = " + ".join(
         f"(CASE WHEN a.h{j} = b.h{j} THEN 1 ELSE 0 END)" for j in range(_N_HASHES)
     )
     return f"""
+WITH {_l6_bands()}
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        round(CAST({matches} AS DOUBLE) / {_N_HASHES}, 6) AS est_sim
 FROM bands a JOIN bands b
@@ -329,28 +315,15 @@ FROM bands a JOIN bands b
  AND a.doc_id < b.doc_id"""
 
 
-def _l6(d) -> str:
-    return f"\nWITH {_l6_ctes(d)}\n{_l6_select(d).strip()}"
-
-
-def _ensure_cands_view(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize the LSH candidate pairs once per (session, sf_dir) —
-    l6 declares them, l16 filters them into dedup edges, l31 verifies
-    them against exact shingles; each recomputed the band self-join +
-    DISTINCT before (and l16's symmetric-edge union executed it TWICE
-    in one action). On a cluster this is the persisted candidate table
-    every dedup pipeline keeps next to its signature index."""
-    _shared_view(spark, sf_dir, "mh_sigs", _l5(SPARK))
-    _shared_view(spark, sf_dir, "l6_cands", _l6(SPARK))
-
-
-def _l6_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ensure_cands_view(spark, sf_dir)
-    return spark.table("l6_cands")
-
-
-QUERIES["l6_lsh_candidates"] = _l6_run
-ORACLE["l6_lsh_candidates"] = _l6(DUCK)
+# The LSH candidate pairs, built once per (session, sf_dir): l6 declares
+# them, l16 filters them into dedup edges, l31 verifies them against exact
+# shingles; each recomputed the band self-join + DISTINCT before (and l16's
+# symmetric-edge union executed it TWICE in one action). On a cluster this
+# is the persisted candidate table every dedup pipeline keeps next to its
+# signature index.
+_index("l6_cands", _l6, uses=("mh_sigs",))
+_register("l6_lsh_candidates", lambda d: "SELECT * FROM l6_cands",
+          uses=("l6_cands",))
 
 
 # ---------------------------------------------------------------------------
@@ -363,12 +336,22 @@ ORACLE["l6_lsh_candidates"] = _l6(DUCK)
 # edges. This is the genuinely-iterative algorithm on the query surface.
 # ---------------------------------------------------------------------------
 _L16_SIM = 0.5  # ≥4 of 8 minhashes agree
+_L16_USES = ("l6_cands",)
+# the oracle's reachability walk over the candidate edges (l16, l27)
+_L16_WALK = f"""
+edges AS (SELECT doc_a AS a, doc_b AS b FROM l6_cands WHERE est_sim >= {_L16_SIM}),
+sym_edges AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
+walk(doc, lab) AS (
+  SELECT doc_id, doc_id FROM documents
+  UNION
+  SELECT e.b, w.lab FROM walk w JOIN sym_edges e ON e.a = w.doc
+)"""
 
 
 def _l16_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    _ensure_cands_view(spark, sf_dir)
+    _materialize_inputs(spark, sf_dir, _L16_USES)
     edges = spark.table("l6_cands").where(f"est_sim >= {_L16_SIM}")
     sym = (
         edges.selectExpr("doc_a AS a", "doc_b AS b")
@@ -400,17 +383,11 @@ def _l16_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["l16_dedup_groups"] = _l16_run
-ORACLE["l16_dedup_groups"] = f"""
-WITH RECURSIVE {_l6_ctes(DUCK)},
-cand AS ({_l6_select(DUCK)}),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM cand WHERE est_sim >= {_L16_SIM}),
-sym_edges AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
-walk(doc, lab) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.b, w.lab FROM walk w JOIN sym_edges e ON e.a = w.doc
+ORACLE["l16_dedup_groups"] = _oracle(
+    f"WITH RECURSIVE {_L16_WALK}\n"
+    "SELECT doc AS doc_id, MIN(lab) AS group_id FROM walk GROUP BY doc",
+    _L16_USES,
 )
-SELECT doc AS doc_id, MIN(lab) AS group_id FROM walk GROUP BY doc"""
 
 
 # ---------------------------------------------------------------------------
@@ -486,15 +463,23 @@ def _l9_assign_sql(d) -> str:
   ) x WHERE rn = 1"""
 
 
-def _l9_inner(d, assign_src: str) -> str:
+# `assign` (every vector quantized against every centroid) is the
+# expensive coarse step and is referenced TWICE (query side + candidate
+# side); inlined CTEs recompute it per reference (15 Exchanges). Built
+# once, it is exactly an IVF index build: on a cluster this IS the
+# persisted index table.
+_index("l9_assign", _l9_assign_sql)
+
+
+def _l9(d) -> str:
     cos_pair = _cosine(d, d.dvec("q.embedding"), d.dvec("c.embedding"))
-    return f"""
+    return "WITH " + f"""
 pairs AS (
   SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
          round({cos_pair}, 4) AS cosine
   FROM embeddings q
-  JOIN {assign_src} aq ON aq.vec_id = q.vec_id
-  JOIN {assign_src} ac ON ac.bucket = aq.bucket AND ac.vec_id != q.vec_id
+  JOIN l9_assign aq ON aq.vec_id = q.vec_id
+  JOIN l9_assign ac ON ac.bucket = aq.bucket AND ac.vec_id != q.vec_id
   JOIN embeddings c ON c.vec_id = ac.vec_id
   WHERE q.vec_id < 5
 )
@@ -505,59 +490,19 @@ SELECT q_id, cand_id, cosine, rank FROM (
 ) x WHERE rank <= 5"""
 
 
-def _l9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # `assign` (every vector quantized against every centroid) is the
-    # expensive coarse step and is referenced TWICE (query side + candidate
-    # side); inlined CTEs recompute it per reference (15 Exchanges). The
-    # materialized view computes it once — exactly an IVF index build: on
-    # a cluster this IS the persisted index table.
-    _shared_view(spark, sf_dir, "l9_assign", _l9_assign_sql(SPARK))
-    return spark.sql("WITH " + _l9_inner(SPARK, "l9_assign"))
-
-
-QUERIES["l9_ann_ivf"] = _l9_run
-ORACLE["l9_ann_ivf"] = (
-    f"WITH assign AS ({_l9_assign_sql(DUCK)}), " + _l9_inner(DUCK, "assign")
-)
+_register("l9_ann_ivf", _l9, uses=("l9_assign",))
 
 
 # ---------------------------------------------------------------------------
-# L10 multimodal binary-column stats: opaque bytes + typed metadata
-# (decode itself is a stubbed Pandas-UDF path, operators/multimodal.py)
+# L11 embedding-cosine near-dup via sign-bucket LSH: vectors only pair
+# within the same 8-bit hyperplane-sign bucket (dims 1-8), so the
+# all-pairs O(n²) collapses to an equi-join on bucket — the same shape
+# that scales to 100 TB (bucket = shuffle key, per-bucket work is
+# independent). Vectors are L2-normalized ONCE per vector before the join,
+# so the per-pair work is a single dot product instead of three array
+# folds (norms recomputed n² times otherwise). Brute-force recall baseline
+# is l8.
 # ---------------------------------------------------------------------------
-def _l11(d) -> str:
-    """Embedding-cosine near-dup via sign-bucket LSH: vectors only pair
-    within the same 8-bit hyperplane-sign bucket (dims 1-8), so the
-    all-pairs O(n²) collapses to an equi-join on bucket — the same shape
-    that scales to 100 TB (bucket = shuffle key, per-bucket work is
-    independent). Vectors are L2-normalized ONCE per vector before the
-    join, so the per-pair work is a single dot product instead of three
-    array folds (norms recomputed n² times otherwise). Brute-force recall
-    baseline is l8."""
-    emb = d.dvec("embedding")
-
-    def sign_bucket(col: str) -> str:
-        bits = " + ".join(
-            f"(CASE WHEN {d.idx(col, str(j + 1))} >= 0 THEN {2 ** j} ELSE 0 END)"
-            for j in range(8)
-        )
-        return f"({bits})"
-
-    dot = d.fold_sum(d.zip_mul("a.v", "b.v"))
-    return f"""
-WITH raw AS (
-  SELECT vec_id, {emb} AS v0, {sign_bucket(emb)} AS bucket FROM embeddings
-),
-normed AS (
-  SELECT vec_id, bucket, sqrt({d.fold_sum(d.zip_mul('v0', 'v0'))}) AS nv, v0
-  FROM raw
-),
-vecs AS (
-  SELECT vec_id, bucket, {d.lmap('v0', 'x', 'x / nv')} AS v FROM normed
-)
-{_l11_pairs(d, 'vecs')}"""
-
-
 def _l11_vecs_sql(d) -> str:
     emb = d.dvec("embedding")
     bits = " + ".join(
@@ -571,30 +516,26 @@ SELECT vec_id, bucket, {d.lmap('v0', 'x', 'x / nv')} AS v FROM (
 ) normed"""
 
 
-def _l11_pairs(d, src: str) -> str:
+# the normalized+bucketed vectors are referenced twice by the self-join
+# and inlined CTEs recompute them per reference; built once they are the
+# persisted LSH index table on a cluster. Interleaved A/B at sf0.1:
+# inline 0.69/0.54/0.56 s -> index 0.22/0.18/0.19 warm, 0.47/0.42/0.39
+# including the index build.
+_index("l11_vecs", _l11_vecs_sql)
+
+
+def _l11_pairs(d) -> str:
     dot = d.fold_sum(d.zip_mul("a.v", "b.v"))
     return f"""
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        round({dot}, 4) AS cosine
-FROM {src} a JOIN {src} b ON b.bucket = a.bucket AND a.vec_id < b.vec_id
+FROM l11_vecs a JOIN l11_vecs b ON b.bucket = a.bucket AND a.vec_id < b.vec_id
 WHERE round({dot}, 4) >= 0.15
 ORDER BY cosine DESC, vec_a, vec_b
 LIMIT 200"""
 
 
-def _l11_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the normalized+bucketed vectors are referenced twice by the
-    # self-join and inlined CTEs recompute them per reference; the
-    # memoized view computes them once — the persisted LSH index table
-    # on a cluster, same discipline as l9_assign/mh_sigs. Interleaved
-    # A/B at sf0.1: inline 0.69/0.54/0.56 s -> view 0.22/0.18/0.19
-    # warm, 0.47/0.42/0.39 including the view build.
-    _shared_view(spark, sf_dir, "l11_vecs", _l11_vecs_sql(SPARK))
-    return spark.sql(_l11_pairs(SPARK, "l11_vecs"))
-
-
-QUERIES["l11_embedding_neardup"] = _l11_run
-ORACLE["l11_embedding_neardup"] = _l11(DUCK)
+_register("l11_embedding_neardup", _l11_pairs, uses=("l11_vecs",))
 
 
 # ---------------------------------------------------------------------------
@@ -670,7 +611,7 @@ def _l14_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    _register_docs_views(spark, sf_dir)
+    _materialize_inputs(spark, sf_dir)
     qrows = spark.sql(
         "SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v "
         "FROM embeddings WHERE vec_id < 5"
@@ -728,7 +669,7 @@ def _l15_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_features,
     )
 
-    _register_docs_views(spark, sf_dir)
+    _materialize_inputs(spark, sf_dir)
     feats = extract_features(documents_as_media(spark.table("documents")))
     return feats.selectExpr("media_id AS doc_id", "n_bytes", "n_frames")
 
@@ -758,7 +699,7 @@ def _l17_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize_media,
     )
 
-    _register_docs_views(spark, sf_dir)
+    _materialize_inputs(spark, sf_dir)
     media = resize_media(
         documents_as_media(spark.table("documents")), _L17_W, _L17_H
     )
@@ -850,24 +791,21 @@ _register("l18_split_sample", _l18)
 # the tf⋈df equi-join on word is AQE-handled; top-k per doc is a window
 # with WindowGroupLimit pushdown (rank<=3 applied partially pre-shuffle).
 # ---------------------------------------------------------------------------
-def _l19(d, tf_src: str | None = None) -> str:
-    words_from = d.explode(d.split("text"), "word")
-    tf_cte = (
-        f"tf AS (SELECT * FROM {tf_src})"
-        if tf_src
-        else f"""tf AS (
-  SELECT doc_id, word, COUNT(*) AS tf
-  FROM (SELECT doc_id, word FROM documents {words_from}) w
-  GROUP BY doc_id, word
-)"""
-    )
-    return f"""
-WITH {tf_cte},
-df AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY word),
+# tf feeds both df and the scoring join — inlined, the word explode +
+# groupBy would run twice
+_index("l19_tf", lambda d: (
+    f"SELECT doc_id, word, COUNT(*) AS tf FROM (SELECT doc_id, word "
+    f"FROM documents {d.explode(d.split('text'), 'word')}) w "
+    f"GROUP BY doc_id, word"))
+
+
+def _l19(d) -> str:
+    return """
+WITH df AS (SELECT word, COUNT(*) AS df FROM l19_tf GROUP BY word),
 scored AS (
   SELECT t.doc_id, t.word, t.tf, d.df,
          CAST(t.tf AS DOUBLE) / CAST(d.df AS DOUBLE) AS score
-  FROM tf t JOIN df d ON d.word = t.word
+  FROM l19_tf t JOIN df d ON d.word = t.word
 )
 SELECT doc_id, word, tf, df, score, rank FROM (
   SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
@@ -876,22 +814,7 @@ SELECT doc_id, word, tf, df, score, rank FROM (
 ) x WHERE rank <= 3"""
 
 
-def _l19_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # tf feeds both df and the scoring join — materialize once (Spark
-    # inlines CTEs, which would re-run the word explode + groupBy twice)
-    _shared_view(
-        spark,
-        sf_dir,
-        "l19_tf",
-        f"SELECT doc_id, word, COUNT(*) AS tf FROM (SELECT doc_id, word "
-        f"FROM documents {SPARK.explode(SPARK.split('text'), 'word')}) w "
-        f"GROUP BY doc_id, word",
-    )
-    return spark.sql(_l19(SPARK, tf_src="l19_tf"))
-
-
-QUERIES["l19_tfidf_terms"] = _l19_run
-ORACLE["l19_tfidf_terms"] = _l19(DUCK)
+_register("l19_tfidf_terms", _l19, uses=("l19_tf",))
 
 
 # ---------------------------------------------------------------------------
@@ -1000,7 +923,7 @@ def _l23_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_frames,
     )
 
-    _register_docs_views(spark, sf_dir)
+    _materialize_inputs(spark, sf_dir)
     media = documents_as_media(spark.table("documents"))
     return sample_frames(media, every_n=4).selectExpr(
         "media_id",
@@ -1067,13 +990,17 @@ _register("l24_pii_scrub", _l24)
 # The overlap check is a shingle equi-join against the benchmark's
 # DISTINCT shingle set — bucketed by shingle, never all-pairs; the
 # benchmark side is tiny and broadcasts. Same scale shape as l4/l6.
+# The shingle set (referenced by bench AND hits) is l4's index; inlined,
+# it re-derived the whole corpus shingle pipeline twice (3 doc scans
+# total). Hashed keys are equality-only here, same collision argument as
+# l4.
 # ---------------------------------------------------------------------------
-def _l25_inner(d, src: str) -> str:
-    return f"""
-bench AS (SELECT DISTINCT shingle FROM {src} WHERE doc_id % 97 = 0),
+def _l25(d) -> str:
+    return "WITH " + """
+bench AS (SELECT DISTINCT shingle FROM l4_shingles WHERE doc_id % 97 = 0),
 hits AS (
   SELECT DISTINCT s.doc_id
-  FROM {src} s JOIN bench b ON b.shingle = s.shingle
+  FROM l4_shingles s JOIN bench b ON b.shingle = s.shingle
   WHERE s.doc_id % 97 <> 0
 )
 SELECT dd.source,
@@ -1087,20 +1014,7 @@ WHERE dd.doc_id % 97 <> 0
 GROUP BY dd.source"""
 
 
-def _l25_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Spark inlines CTEs, so an inline `shingles` CTE (referenced by bench
-    # AND hits) re-derived the whole corpus shingle pipeline twice (3 doc
-    # scans total). Reuse l4's materialized hashed-shingle views — one
-    # materialization serves both queries; hashed keys are equality-only
-    # here, same collision argument as l4.
-    return spark.sql("WITH " + _l25_inner(SPARK, _ensure_shingle_views(spark, sf_dir)))
-
-
-QUERIES["l25_decontaminate"] = _l25_run
-ORACLE["l25_decontaminate"] = (
-    f"WITH {_shingles_cte_fixed(DUCK, n=4, hashed=True)}, "
-    + _l25_inner(DUCK, "shingles")
-)
+_register("l25_decontaminate", _l25, uses=("l4_shingles",))
 
 
 # ---------------------------------------------------------------------------
@@ -1175,16 +1089,8 @@ def _l27_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["l27_dedup_keep_list"] = _l27_run
-ORACLE["l27_dedup_keep_list"] = f"""
-WITH RECURSIVE {_l6_ctes(DUCK)},
-cand AS ({_l6_select(DUCK)}),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM cand WHERE est_sim >= {_L16_SIM}),
-sym_edges AS (SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
-walk(doc, lab) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.b, w.lab FROM walk w JOIN sym_edges e ON e.a = w.doc
-),
+ORACLE["l27_dedup_keep_list"] = _oracle(f"""
+WITH RECURSIVE {_L16_WALK},
 groups AS (SELECT doc AS doc_id, MIN(lab) AS group_id FROM walk GROUP BY doc)
 SELECT d.source, COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN g.group_id = d.doc_id THEN 1 ELSE 0 END) AS BIGINT)
@@ -1192,7 +1098,7 @@ SELECT d.source, COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN g.group_id <> d.doc_id THEN 1 ELSE 0 END) AS BIGINT)
            AS n_dropped
 FROM documents d JOIN groups g ON g.doc_id = d.doc_id
-GROUP BY d.source"""
+GROUP BY d.source""", _L16_USES)
 
 
 # ---------------------------------------------------------------------------
@@ -1276,47 +1182,35 @@ _register("l28_source_mixture", _l28)
 _L29_TAU = 0.35
 
 
-def _l29_index_sql(assign_src: str) -> str:
-    # a real IVF index stores the vectors WITH the assignment: joining
-    # them once at index build means the dedup query below touches the
-    # embeddings corpus zero times (it references the index three times —
-    # inlined, that would have been three corpus scans)
-    return f"""
+# a real IVF index stores the vectors WITH the assignment: joining them
+# once at index build (on top of l9's quantization — free if l9 ran first)
+# means the dedup query below touches the embeddings corpus zero times (it
+# references the index three times — both pair sides + the verdict;
+# inlined, that would have been three corpus scans)
+_index("l29_index", lambda d: """
   SELECT a.vec_id, a.bucket, e.embedding
-  FROM {assign_src} a JOIN embeddings e ON e.vec_id = a.vec_id"""
+  FROM l9_assign a JOIN embeddings e ON e.vec_id = a.vec_id""",
+       uses=("l9_assign",))
 
 
-def _l29_inner(d, idx_src: str) -> str:
+def _l29(d) -> str:
     cos = _cosine(d, d.dvec("a.embedding"), d.dvec("b.embedding"))
-    return f"""
+    return "WITH " + f"""
 pairs AS (
   SELECT b.vec_id AS dup_id, a.vec_id AS keep_id
-  FROM {idx_src} a
-  JOIN {idx_src} b ON b.bucket = a.bucket AND b.vec_id > a.vec_id
+  FROM l29_index a
+  JOIN l29_index b ON b.bucket = a.bucket AND b.vec_id > a.vec_id
   WHERE round({cos}, 4) >= {_L29_TAU}
 )
 SELECT e.vec_id, CAST(e.bucket AS BIGINT) AS bucket,
        CASE WHEN MIN(p.keep_id) IS NULL THEN 1 ELSE 0 END AS keep,
        MIN(p.keep_id) AS dup_of
-FROM {idx_src} e
+FROM l29_index e
 LEFT JOIN pairs p ON p.dup_id = e.vec_id
 GROUP BY e.vec_id, e.bucket"""
 
 
-def _l29_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # quantization shared with l9 (if l9 ran first, the coarse step is
-    # free); the vector-carrying index view is materialized once more on
-    # top and referenced three times (both pair sides + the verdict).
-    _shared_view(spark, sf_dir, "l9_assign", _l9_assign_sql(SPARK))
-    _shared_view(spark, sf_dir, "l29_index", _l29_index_sql("l9_assign"))
-    return spark.sql("WITH " + _l29_inner(SPARK, "l29_index"))
-
-
-QUERIES["l29_semantic_dedup"] = _l29_run
-ORACLE["l29_semantic_dedup"] = (
-    f"WITH assign AS ({_l9_assign_sql(DUCK)}), "
-    f"idx AS ({_l29_index_sql('assign')}), " + _l29_inner(DUCK, "idx")
-)
+_register("l29_semantic_dedup", _l29, uses=("l29_index",))
 
 
 # ---------------------------------------------------------------------------
@@ -1353,20 +1247,29 @@ def _l30_win_sql(d) -> str:
   {d.explode_ne(starts, 's')}"""
 
 
-def _l30_inner(d, win_src: str) -> str:
+# the window-hash relation is referenced THREE times (shared totals,
+# coverage join, per-doc totals); inlined CTEs would re-scan and re-window
+# the corpus per reference. Per-doc totals derive from it (count + k - 1 =
+# token count, exact because starts is 1..n-k+1), keeping the whole query
+# at ONE corpus scan. On a cluster this is the persisted span index a
+# dedup sweep would build anyway.
+_index("l30_win", _l30_win_sql)
+
+
+def _l30(d) -> str:
     k = _L30_K
-    return f"""
+    return "WITH " + f"""
 shared AS (
-  SELECT h FROM {win_src} GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
+  SELECT h FROM l30_win GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
 ),
 cover AS (
   SELECT DISTINCT w.doc_id, pos
-  FROM {win_src} w JOIN shared sh ON sh.h = w.h
+  FROM l30_win w JOIN shared sh ON sh.h = w.h
   {d.explode_ne(d.seq('w.s', f'w.s + {k - 1}'), 'pos')}
 ),
 cov_agg AS (SELECT doc_id, COUNT(*) AS covered FROM cover GROUP BY doc_id),
 per_doc AS (SELECT doc_id, COUNT(*) + {k - 1} AS n_tokens
-            FROM {win_src} GROUP BY doc_id)
+            FROM l30_win GROUP BY doc_id)
 SELECT p.doc_id, CAST(p.n_tokens AS BIGINT) AS n_tokens,
        CAST(COALESCE(c.covered, 0) AS BIGINT) AS dup_tokens,
        round(COALESCE(c.covered, 0) / CAST(p.n_tokens AS DOUBLE), 6)
@@ -1374,22 +1277,7 @@ SELECT p.doc_id, CAST(p.n_tokens AS BIGINT) AS n_tokens,
 FROM per_doc p LEFT JOIN cov_agg c ON c.doc_id = p.doc_id"""
 
 
-def _l30_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the window-hash relation is referenced THREE times (shared totals,
-    # coverage join, per-doc totals); inlined CTEs would re-scan and
-    # re-window the corpus per reference, so it materializes once as a
-    # shared view — per-doc totals derive from it (count + k - 1 = token
-    # count, exact because starts is 1..n-k+1), keeping the whole query
-    # at ONE corpus scan. On a cluster this view is the persisted span
-    # index a dedup sweep would build anyway.
-    _shared_view(spark, sf_dir, "l30_win", _l30_win_sql(SPARK))
-    return spark.sql("WITH " + _l30_inner(SPARK, "l30_win"))
-
-
-QUERIES["l30_dup_span_fraction"] = _l30_run
-ORACLE["l30_dup_span_fraction"] = (
-    f"WITH win AS ({_l30_win_sql(DUCK)}), " + _l30_inner(DUCK, "win")
-)
+_register("l30_dup_span_fraction", _l30, uses=("l30_win",))
 
 
 # ---------------------------------------------------------------------------
@@ -1402,16 +1290,20 @@ ORACLE["l30_dup_span_fraction"] = (
 # while keeping banding recall.
 #
 # "Exact" is modulo the shared 64-bit shingle-hash space (same caveat as
-# _shingles_cte_fixed): an intra-document hash collision would shift
+# the l4_shingles index): an intra-document hash collision would shift
 # sizes/inter by 1 and each engine hashes differently (xxhash64 vs duckdb
 # hash), so parity is probabilistic with odds ~n_shingles²/2⁶⁴ per doc
 # (~1e-7 at driver SFs). The thresholded `verified` bit is additionally
 # insulated unless the true Jaccard sits within 1/n_sh of the cut.
+# Every derived set is an index (minhash signatures, hashed shingles, AND
+# the banded candidate pairs — `l6_cands` is referenced twice below, so an
+# inlined band join executed twice): the verify stage adds joins, not
+# rebuilds.
 # ---------------------------------------------------------------------------
 _L31_JACCARD = 0.35
 
 
-def _l31_inner(d, sh_src: str, cand_sql: str | None = None) -> str:
+def _l31(d) -> str:
     # LEFT joins + zero-denominator guard: a 3-word doc carries a minhash
     # signature (3-gram) and can band-collide, yet has NO 4-gram shingle
     # rows — inner joins to `sizes` would silently DROP that candidate
@@ -1425,42 +1317,25 @@ def _l31_inner(d, sh_src: str, cand_sql: str | None = None) -> str:
         f"CASE WHEN {denom} > 0 THEN CAST(COALESCE(i.n_inter, 0) AS DOUBLE) "
         f"/ CAST({denom} AS DOUBLE) ELSE CAST(0 AS DOUBLE) END"
     )
-    return f"""
-cand AS ({cand_sql or _l6_select(d).strip()}),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM {sh_src} GROUP BY doc_id),
+    return "WITH " + f"""
+sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM l4_shingles GROUP BY doc_id),
 inter AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-  FROM cand c
-  JOIN {sh_src} sa ON sa.doc_id = c.doc_a
-  JOIN {sh_src} sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
+  FROM l6_cands c
+  JOIN l4_shingles sa ON sa.doc_id = c.doc_a
+  JOIN l4_shingles sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
   GROUP BY c.doc_a, c.doc_b
 )
 SELECT c.doc_a, c.doc_b, c.est_sim,
        round({jac}, 6) AS jaccard,
        CASE WHEN {jac} >= {_L31_JACCARD} THEN 1 ELSE 0 END AS verified
-FROM cand c
+FROM l6_cands c
 LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
 LEFT JOIN sizes na ON na.doc_id = c.doc_a
 LEFT JOIN sizes nb ON nb.doc_id = c.doc_b"""
 
 
-def _l31_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # every derived set is a memoized shared view (minhash signatures,
-    # hashed shingles, AND the banded candidate pairs — `cand` is
-    # referenced twice below, so an inlined band join executed twice):
-    # the verify stage adds joins, not rebuilds.
-    sh = _ensure_shingle_views(spark, sf_dir)
-    _ensure_cands_view(spark, sf_dir)
-    return spark.sql(
-        "WITH " + _l31_inner(SPARK, sh, cand_sql="SELECT * FROM l6_cands")
-    )
-
-
-QUERIES["l31_candidate_verify"] = _l31_run
-ORACLE["l31_candidate_verify"] = (
-    f"WITH {_shingles_cte_fixed(DUCK, 4, hashed=True)}, {_l6_ctes(DUCK)}, "
-    + _l31_inner(DUCK, "shingles")
-)
+_register("l31_candidate_verify", _l31, uses=("l4_shingles", "l6_cands"))
 
 
 # ---------------------------------------------------------------------------
@@ -1499,8 +1374,8 @@ _register("l32_vocab_coverage", _l32)
 # model (MLE P(w2|w1) = c(w1 w2)/c(w1) — no smoothing needed: every doc
 # bigram exists in the corpus it came from), then bucket head/middle/tail
 # exactly as CCNet routes perplexity tertiles. The token-level bigram
-# stream is materialized ONCE (shared view, referenced by the model
-# counts AND the scoring join); per-term log-probs quantize to integer
+# stream is an index (referenced by the model counts AND the scoring
+# join); per-term log-probs quantize to integer
 # micro-nats BEFORE summation so the aggregate is an exact integer sum —
 # float SUM order across partitions would otherwise drift the last ulp
 # between engines. Counts tables are vocab-sized (broadcastable); the
@@ -1515,18 +1390,21 @@ FROM {_docw(d, 2)}
 {d.explode_ne(starts, 'i')}"""
 
 
-def _l33_inner(d, bg_src: str) -> str:
+_index("l33_bg", _l33_bg_sql)
+
+
+def _l33(d) -> str:
     nll = "-sum_logp_micro"
     avg = d.idiv(nll, "n_bigrams")
-    return f"""
-lm AS (SELECT bigram, COUNT(*) AS c_bg FROM {bg_src} GROUP BY bigram),
-uni AS (SELECT w1, COUNT(*) AS c_w1 FROM {bg_src} GROUP BY w1),
+    return "WITH " + f"""
+lm AS (SELECT bigram, COUNT(*) AS c_bg FROM l33_bg GROUP BY bigram),
+uni AS (SELECT w1, COUNT(*) AS c_w1 FROM l33_bg GROUP BY w1),
 scored AS (
   SELECT b.doc_id,
          COUNT(*) AS n_bigrams,
          CAST(SUM(CAST(round(ln(CAST(l.c_bg AS DOUBLE) / u.c_w1) * 1000000)
                        AS BIGINT)) AS BIGINT) AS sum_logp_micro
-  FROM {bg_src} b
+  FROM l33_bg b
   JOIN lm l ON l.bigram = b.bigram
   JOIN uni u ON u.w1 = b.w1
   GROUP BY b.doc_id
@@ -1539,39 +1417,35 @@ SELECT doc_id, n_bigrams,
 FROM scored"""
 
 
-def _l33_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _shared_view(spark, sf_dir, "l33_bg", _l33_bg_sql(SPARK))
-    return spark.sql("WITH " + _l33_inner(SPARK, "l33_bg"))
-
-
-QUERIES["l33_lm_quality_score"] = _l33_run
-ORACLE["l33_lm_quality_score"] = (
-    f"WITH bg AS ({_l33_bg_sql(DUCK)}), " + _l33_inner(DUCK, "bg")
-)
+_register("l33_lm_quality_score", _l33, uses=("l33_bg",))
 
 
 # ---------------------------------------------------------------------------
 # L34 source-overlap matrix: corpus-governance view of cross-source
 # content duplication — for every source pair, the count of shared
 # 4-gram shingles and the containment ratio (shared / smaller source's
-# shingle set). Reuses the memoized hashed-shingle views; the self-join
+# shingle set). Reads l4's hashed-shingle index; the self-join
 # runs on SOURCE-distinct shingle sets (one row per (source, shingle) —
 # orders of magnitude below doc grain), so the pair fan-out is bounded
 # by per-shingle source counts, never doc counts. Output is
 # #sources² rows — driver-side tiny at any corpus size.
 # ---------------------------------------------------------------------------
-def _l34_src_sh_sql(sh_src: str) -> str:
-    return f"""
+# src_sh is referenced THREE times (totals + both self-join sides);
+# inlined, each reference re-runs the doc→source attach over the corpus —
+# as an index over l4's shingles the whole query pays a single documents
+# scan at build time
+_index("l34_src_sh", lambda d: """
   SELECT DISTINCT d.source, s.shingle
-  FROM {sh_src} s JOIN documents d ON d.doc_id = s.doc_id"""
+  FROM l4_shingles s JOIN documents d ON d.doc_id = s.doc_id""",
+       uses=("l4_shingles",))
 
 
-def _l34_inner(d, src_sh: str) -> str:
-    return f"""
-tot AS (SELECT source, COUNT(*) AS n_sh FROM {src_sh} GROUP BY source),
+def _l34(d) -> str:
+    return "WITH " + """
+tot AS (SELECT source, COUNT(*) AS n_sh FROM l34_src_sh GROUP BY source),
 pairs AS (
   SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS shared_shingles
-  FROM {src_sh} a JOIN {src_sh} b
+  FROM l34_src_sh a JOIN l34_src_sh b
     ON b.shingle = a.shingle AND a.source < b.source
   GROUP BY a.source, b.source
 )
@@ -1584,40 +1458,26 @@ JOIN tot ta ON ta.source = p.source_a
 JOIN tot tb ON tb.source = p.source_b"""
 
 
-def _l34_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # src_sh is referenced THREE times (totals + both self-join sides);
-    # inlined, each reference re-runs the doc→source attach over the
-    # corpus — it materializes once on top of the memoized shingle view,
-    # so the whole query pays a single documents scan at build time
-    sh = _ensure_shingle_views(spark, sf_dir)
-    _shared_view(spark, sf_dir, "l34_src_sh", _l34_src_sh_sql(sh))
-    return spark.sql(f"WITH {_l34_inner(SPARK, 'l34_src_sh')}")
-
-
-QUERIES["l34_source_overlap"] = _l34_run
-ORACLE["l34_source_overlap"] = (
-    f"WITH {_shingles_cte_fixed(DUCK, 4, hashed=True)}, "
-    f"src_sh AS ({_l34_src_sh_sql('shingles')}), " + _l34_inner(DUCK, "src_sh")
-)
+_register("l34_source_overlap", _l34, uses=("l34_src_sh",))
 
 
 # ---------------------------------------------------------------------------
 # L35 incremental dedup admission: the shape that keeps 100 TB dedup from
 # being recomputed daily — a NEW batch (doc_id % 10 = 0 plays today's
 # arrivals) is checked against the EXISTING corpus's banded minhash index
-# (the persisted mh_sigs view), and each new doc is accepted or rejected
+# (the mh_sigs index), and each new doc is accepted or rejected
 # with its best existing near-duplicate. The join is new-bands × old-bands
 # on the band key: cost ∝ batch size, never corpus², and the index grows
 # append-only as accepted docs band in.
 # ---------------------------------------------------------------------------
-def _l35_inner(d) -> str:
-    # sigs + bands come from _l6_ctes — the SAME banded index l6 queries,
+def _l35(d) -> str:
+    # bands come from _l6_bands — the SAME banded index l6 queries,
     # not a re-derivation
     matches = " + ".join(
         f"(CASE WHEN n.h{j} = o.h{j} THEN 1 ELSE 0 END)"
         for j in range(_N_HASHES)
     )
-    return f"""
+    return f"WITH {_l6_bands()}, " + f"""
 new_bands AS (SELECT * FROM bands WHERE doc_id % 10 = 0),
 old_bands AS (SELECT * FROM bands WHERE doc_id % 10 <> 0),
 hits AS (
@@ -1640,13 +1500,7 @@ LEFT JOIN best b ON b.doc_id = d.doc_id AND b.rn = 1
 WHERE d.doc_id % 10 = 0"""
 
 
-def _l35_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _shared_view(spark, sf_dir, "mh_sigs", _l5(SPARK))
-    return spark.sql(f"WITH {_l6_ctes(SPARK)}, {_l35_inner(SPARK)}")
-
-
-QUERIES["l35_incremental_dedup"] = _l35_run
-ORACLE["l35_incremental_dedup"] = f"WITH {_l6_ctes(DUCK)}, " + _l35_inner(DUCK)
+_register("l35_incremental_dedup", _l35, uses=("mh_sigs",))
 
 
 # ---------------------------------------------------------------------------
@@ -1723,9 +1577,8 @@ def _pq_d2(d, a: str, b: str) -> str:
             f"+ {d.fold_sum(d.zip_mul(b, b))})")
 
 
-def _l37_ctes(d) -> str:
-    """subs / cb / sliced / enc — the PQ index build (codebook slices +
-    per-vector code assignment)."""
+def _l37_slices(d) -> str:
+    """subs / cb / sliced — the codebook and per-vector subspace slices."""
     vec = d.dvec("e.embedding")
     subs = ", ".join(
         f"({j}, {j * _PQ_SUBDIM + 1})" for j in range(_PQ_M)
@@ -1739,7 +1592,12 @@ cb AS (
 sliced AS (
   SELECT e.vec_id, s.sub_j, {sl} AS svec
   FROM embeddings e CROSS JOIN subs s
-),
+)"""
+
+
+def _l37_enc(d) -> str:
+    """The PQ index build: each vector's nearest codeword per subspace."""
+    return f"""WITH {_l37_slices(d)},
 enc AS (
   SELECT vec_id, sub_j, c_id AS code FROM (
     SELECT v.vec_id, v.sub_j, c.c_id,
@@ -1748,19 +1606,26 @@ enc AS (
                                        c.c_id) AS rn
     FROM sliced v JOIN cb c ON c.sub_j = v.sub_j
   ) x WHERE rn = 1
-)"""
+) SELECT * FROM enc"""
 
 
-def _l37_body(d, enc_src: str) -> str:
+# enc (every vector's per-subspace code assignment — the PQ INDEX a
+# deployment persists) is the expensive CTE and feeds the ADC join;
+# inlined it recomputes the codebook rank per reference/run
+_index("l37_enc", _l37_enc)
+
+
+def _l37(d) -> str:
     cos = _cosine(d, d.dvec("q.embedding"), d.dvec("c.embedding"))
-    return f"""lut AS (
+    return f"""WITH {_l37_slices(d)},
+lut AS (
   SELECT q.vec_id AS q_id, c.sub_j, c.c_id,
          {_pq_d2(d, 'q.svec', 'c.cvec')} AS dq
   FROM sliced q JOIN cb c ON c.sub_j = q.sub_j WHERE q.vec_id < 5
 ),
 adc AS (
   SELECT l.q_id, t.vec_id AS cand_id, SUM(l.dq) AS adist
-  FROM {enc_src} t JOIN lut l ON l.sub_j = t.sub_j AND l.c_id = t.code
+  FROM l37_enc t JOIN lut l ON l.sub_j = t.sub_j AND l.c_id = t.code
   WHERE t.vec_id != l.q_id
   GROUP BY l.q_id, t.vec_id
 ),
@@ -1786,23 +1651,4 @@ SELECT q_id, cand_id, cosine, rank FROM (
 ) x WHERE rank <= 10"""
 
 
-def _l37(d) -> str:
-    return f"""
-WITH {_l37_ctes(d)},
-{_l37_body(d, 'enc')}"""
-
-
-def _l37_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # enc (every vector's per-subspace code assignment — the PQ INDEX a
-    # deployment persists) is the expensive CTE and feeds the ADC join;
-    # inlined it recomputes the codebook rank per reference/run. One
-    # memoized build, same discipline as l9_assign/l6_cands/l11_vecs.
-    _shared_view(
-        spark, sf_dir, "l37_enc",
-        f"WITH {_l37_ctes(SPARK)} SELECT * FROM enc",
-    )
-    return spark.sql(f"WITH {_l37_ctes(SPARK)},\n{_l37_body(SPARK, 'l37_enc')}")
-
-
-QUERIES["l37_pq_ann"] = _l37_run
-ORACLE["l37_pq_ann"] = _l37(DUCK)
+_register("l37_pq_ann", _l37, uses=("l37_enc",))
