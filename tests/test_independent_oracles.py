@@ -1230,9 +1230,10 @@ def test_virtual_bag_attrs_match_python_eval(spark, sf_dir):
 # windowed-cumsum formulation.
 # ---------------------------------------------------------------------------
 def test_sequence_packing_matches_python_cursor(spark, sf_dir):
-    from zg_etl_spark.plans.llm import _L36_SEQ_LEN, _materialize_inputs
+    from zg_etl_spark.operators.domain import relations
+    from zg_etl_spark.plans.llm import _L36_SEQ_LEN
 
-    _materialize_inputs(spark, sf_dir)
+    relations(spark, sf_dir, ["documents"])
     docs = sorted(
         spark.sql("SELECT doc_id, source, text FROM documents").collect(),
         key=lambda r: r.doc_id,

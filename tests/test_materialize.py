@@ -6,7 +6,8 @@ releases every entry of the old one (temp views, references, cleanups).
 These tests pin that contract, run the queries whose shared state lives
 in it across sf_dir switches against their oracles, and check that the
 UA-parsed advertising-apps index and the write path's b_user and
-b_device rows are each built once for all their readers."""
+b_device rows are each built once for all their readers, and that a
+query builds only the shared relations it reads."""
 
 from __future__ import annotations
 
@@ -15,7 +16,9 @@ import shutil
 
 import pytest
 
-from zg_etl_spark import plans
+from zg_etl_spark import plans, session
+from zg_etl_spark.dialect import SPARK
+from zg_etl_spark.operators import domain
 from zg_etl_spark.oracle import compare
 from zg_etl_spark.session import materialize
 from zg_etl_spark.sources.tables import fan_out, table_bytes
@@ -90,14 +93,21 @@ def test_alternating_sf_dirs_match_oracles(spark):
         assert os.path.isdir(prev_src)
 
 
+def _count_builds(monkeypatch, name: str) -> list:
+    """Record each time Spark is handed relation ``name``'s declared
+    text: one call per build of its registry entry."""
+    from pyspark.sql import SparkSession
+
+    text = domain.RELATIONS[name].sql(SPARK)
+    builds, sql = [], SparkSession.sql
+    monkeypatch.setattr(SparkSession, "sql", lambda self, q, *a, **k: (
+        q == text and builds.append(1), sql(self, q, *a, **k))[1])
+    return builds
+
+
 def test_adv_ua_index_builds_once(spark, monkeypatch):
     """p42, p52 and p54c all read the one UA-parsed index."""
-    from zg_etl_spark.plans import pipeline
-
-    builds = []
-    render = pipeline._adv_ua_sql
-    monkeypatch.setattr(pipeline, "_adv_ua_sql",
-                        lambda: builds.append(1) or render())
+    builds = _count_builds(monkeypatch, "adv_ua")
     # start from an empty live set: any entry of another sf_dir releases
     # an index an earlier test left behind
     materialize(spark, SF_B, "reg_switch", lambda: 0)
@@ -118,15 +128,41 @@ def test_write_path_rows_build_once(spark, monkeypatch, render, readers):
     b_device writers the one b_device_obs entry."""
     from zg_etl_spark.plans import pipeline
 
-    builds = []
     sql = getattr(pipeline, render)
-    monkeypatch.setattr(pipeline, render,
-                        lambda d: builds.append(1) or sql(d))
+    relation, = [n for n, rel in domain.RELATIONS.items() if rel.sql is sql]
+    builds = _count_builds(monkeypatch, relation)
     materialize(spark, SF_B, "reg_switch", lambda: 0)
     qs = plans.all_queries()
     for name in readers:
         qs[name](spark, SF_A).count()
     assert len(builds) == 1
+
+
+def test_queries_build_only_what_they_read(spark, monkeypatch):
+    """From an empty live set a query builds the relations its body
+    reads and the ones those read, and nothing else; a warm call looks
+    the live set up once."""
+    qs = plans.all_queries()
+
+    def built_by(name: str) -> set[str]:
+        materialize(spark, SF_B, "reg_switch", lambda: 0)
+        qs[name](spark, SF_A)
+        return set(session.entries(spark, SF_A))
+
+    p1 = built_by("p1_gate_errors")
+    assert set(domain.closure(SPARK, ["gated"])) <= p1
+    assert "resolved" not in p1
+    # p45 reads only the source table
+    assert built_by("p45_device_classify") == {"events"}
+    l2 = built_by("l2_lang_id")
+    assert {"documents", "l2_words"} <= l2 and "embeddings" not in l2
+
+    calls, key = [], session.session_key
+    monkeypatch.setattr(session, "session_key",
+                        lambda s: calls.append(1) or key(s))
+    domain.spark_pipeline_df(
+        spark, SF_A, domain.BODIES["l2_lang_id"](SPARK)).count()
+    assert len(calls) == 1
 
 
 @pytest.mark.parametrize("sf", [SF_A, SF_B])

@@ -15,9 +15,14 @@ import pytest
 
 from zg_etl_spark import plans
 from zg_etl_spark.dialect import SPARK
-from zg_etl_spark.plans import llm
+from zg_etl_spark.operators import domain
 
 ALL = plans.all_queries()
+
+
+def _indexes_read(body: str) -> list[str]:
+    """The declared relations (not source tables) a body reads."""
+    return [n for n in domain.reads(body) if domain.RELATIONS[n].sql]
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -235,9 +240,9 @@ def _bloom_filter_builds(plan: str) -> str:
     return "\n".join(out)
 
 
-@pytest.mark.parametrize(
-    "name", sorted(n for n, (_, uses) in llm.BODIES.items() if uses)
-)
+@pytest.mark.parametrize("name", sorted(
+    n for n, body_fn in domain.BODIES.items()
+    if n.startswith("l") and _indexes_read(body_fn(SPARK))))
 def test_shared_views_not_recomputed(spark, sf_dir, name):
     """Queries over an index (shingles, minhash signatures, candidate
     pairs, IVF/PQ assignments, ...) must scan the materialized entry,
@@ -249,13 +254,12 @@ def test_shared_views_not_recomputed(spark, sf_dir, name):
     scan, and documents/embeddings may be scanned only as often as the
     body's own FROM/JOIN clauses name them (a re-derived index adds
     source scans: 4× recompute of the shingle pipeline at any SF)."""
-    body_fn, uses = llm.BODIES[name]
+    body = domain.BODIES[name](SPARK)
     plan = _plan(ALL[name](spark, sf_dir), "simple")
-    for index in uses:
+    for index in _indexes_read(body):
         assert _entry_scans(plan, spark.table(index).columns) >= 1, (
             f"{name} does not read index {index} as a checkpoint scan:\n{plan}"
         )
-    body = body_fn(SPARK)
     # l37's plan carries a runtime bloom filter whose build re-reads the
     # embeddings entry (CHANGES.md FOUND: l37 bloom-filter subquery); only
     # that filter build is exempt, and only from the embeddings count

@@ -1,4 +1,5 @@
-"""Pipeline domain: dialect-templated SQL for the ZG event pipeline.
+"""Pipeline domain: dialect-templated SQL for the ZG event pipeline, and the
+one registry of shared relations.
 
 The reference pipeline (SURVEY.md §3.1) is: parse → gate → identity
 resolution → dictionaries → virtual attrs/events → enrichment → route/pivot.
@@ -8,10 +9,10 @@ written ONCE as a template rendered with the one dialect
 ``DUCK`` for DuckDB SQL (the correctness oracle) — so oracle and engine
 cannot drift.
 
-Execution differs per engine: DuckDB gets one WITH-prelude per query;
-Spark registers each stage as a temp view with the hot stages CACHED
-(Spark re-executes CTEs per reference — caching the shared spine turns the
-11 pipeline queries from 11 full rebuilds into one).
+Every shared relation (spine stages, LLM indexes, the pipeline's keyed
+slices, the source tables) is one ``RELATIONS`` declaration. The engine
+(``spark_pipeline_df``) builds just what a query reads, the hot relations
+CACHED; the oracle (``duck_pipeline_sql``) inlines just that as CTEs.
 
 Stage ↔ reference operator map:
 - gate        → GateFlatMapFunction (operator/gate/GateFlatMapFunction.java:102-213)
@@ -32,9 +33,13 @@ documented mode, the deterministic mode is the test/oracle profile.
 
 from __future__ import annotations
 
+import functools
+import re
+from typing import Any, Callable, NamedTuple
+
 from zg_etl_spark.dialect import DUCK, SPARK, Dialect
 from zg_etl_spark.operators import registries as R
-from zg_etl_spark.session import materialize
+from zg_etl_spark.session import entries, materialize
 
 DAY_MS = 86_400_000
 VALID_PAST_MS = 21 * DAY_MS  # configured subtime (reference ships 7d,
@@ -251,36 +256,168 @@ def vtl_fanout_df(batch):
     )
 
 
-# stages whose output is shared by many queries → cached on the Spark side
-# (events_typed deliberately NOT cached: it is a cheap broadcast-join union
-# over the cached `resolved`, and checkpointing it would copy half the data
-# again)
-CACHE_STAGES = {
-    "gated",
-    "resolved",
-    "event_first",
-    "event_dict",
-    "event_dict_eff",
-    "attrs_melted",
-    "attr_dict",
-    "attr_map",
-    "did_ids",
-    "uid_ids",
-    "device_zgid",
-}
+# --- the relation registry ---------------------------------------------------
+# Every relation that several queries (or several references in one
+# query) read is declared ONCE, in dependency order, as name -> sql(d):
+# the spine stages below, the LLM lane's indexes (plans/llm.py), the
+# pipeline's keyed slices (plans/pipeline.py) and the source tables under
+# them. What a relation or a query body reads is derived from its text:
+# every declared name it contains as a whole word. Spark inlines CTEs and
+# substitutes cached plans BEFORE that inlining, so a relation referenced
+# N times re-runs its lineage N times; a CACHED relation is therefore a
+# localCheckpointed registry entry, whose lineage cut also keeps Catalyst
+# off thousand-node plans (measured on the spine: attr_dict count 5.8 s
+# with a warm cache, 0.05 s checkpointed). A deployment persists these
+# as tables, as the reference persists each stage's output once for
+# every consumer. A plain relation is a temp view over the entries it
+# reads. DuckDB materializes CTEs natively.
+class Relation(NamedTuple):
+    sql: Callable[[Dialect], str] | None  # None: a source table
+    cached: bool
 
 
-def stages(d: Dialect) -> list[tuple[str, str]]:
-    """Ordered (name, SELECT-sql) pairs; each may reference earlier names."""
+RELATIONS: dict[str, Relation] = {}
+BODIES: dict = {}  # SQL-bodied query -> body(d), see register
+
+
+def relation(name: str, cached: bool = False):
+    """Declare the decorated ``sql(d)`` as the shared relation ``name``."""
+    def declare(sql):
+        RELATIONS[name] = Relation(sql, cached)
+        return sql
+    return declare
+
+
+# The source tables, built with sources.tables.fan_out (read as they are
+# by the oracle): the testdata ships each as ONE parquet file, which would
+# run every per-row pipeline over it (the spine's ~50 derived columns,
+# the LLM lane's array/hash chains) in a single task.
+for _source in ("events", "documents", "embeddings"):
+    RELATIONS[_source] = Relation(None, cached=True)
+
+
+def reads(sql: str, names=RELATIONS) -> list[str]:
+    """The ``names`` (declared relations) that ``sql`` reads."""
+    words = set(re.findall(r"\w+", sql))
+    return [n for n in names if n in words]
+
+
+@functools.lru_cache(maxsize=None)
+def _text(d: Dialect, name: str) -> tuple[str, list[str]]:
+    """(sql, the earlier-declared relations it reads) of ``name``."""
+    sql = RELATIONS[name].sql(d) if RELATIONS[name].sql else ""
+    return sql, reads(sql, list(RELATIONS)[:list(RELATIONS).index(name)])
+
+
+def closure(d: Dialect, names) -> list[str]:
+    """``names`` and every relation they read, in dependency order."""
+    need, todo = set(), list(names)
+    while todo:
+        name = todo.pop()
+        if name not in need:
+            need.add(name)
+            todo += _text(d, name)[1]
+    return [name for name in RELATIONS if name in need]
+
+
+def with_ctes(ctes: list[tuple[str, str]], body: str) -> str:
+    """``body`` behind one WITH clause of ``ctes`` ((name, sql) pairs, in
+    dependency order) — how an oracle inlines the relations the engine
+    materializes. A body with its own CTEs is spliced into that clause;
+    its RECURSIVE marker, if any, moves to the front."""
+    if not ctes:
+        return body
+    head = "WITH "
+    stripped = body.lstrip()
+    if stripped.upper().startswith("WITH "):
+        body = stripped[4:]
+        if body.lstrip().upper().startswith("RECURSIVE "):
+            head, body = "WITH RECURSIVE ", body.lstrip()[len("RECURSIVE"):]
+        body = "," + body
+    return head + ",\n".join(
+        f"{name} AS ({sql.strip()})" for name, sql in ctes
+    ) + "\n" + body
+
+
+def duck_pipeline_sql(body: str) -> str:
+    """The oracle: ``body`` behind the relations it reads, as CTEs."""
+    return with_ctes([(n, _text(DUCK, n)[0]) for n in closure(DUCK, reads(body))
+                      if RELATIONS[n].sql], body)
+
+
+def spark_pipeline_df(spark, sf_dir: str, body: str):
+    """The engine: ``body`` over the relations it reads."""
+    relations(spark, sf_dir, reads(body))
+    return spark.sql(body)
+
+
+def relations(spark, sf_dir: str, names) -> dict[str, Any]:
+    """Build ``names`` and what they read, each once per (session,
+    sf_dir), and return sf_dir's live entries (name -> value).
+    Consecutive cached relations that do not read each other (did_ids /
+    uid_ids; event_dict / attrs_melted) build CONCURRENTLY — Spark
+    schedules jobs from several driver threads onto one executor pool, as
+    independent builds would run on a cluster."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    live, pending = entries(spark, sf_dir), []
+
+    def flush() -> None:
+        with ThreadPoolExecutor(max_workers=len(pending)) as ex:
+            live.update(zip(pending, ex.map(
+                lambda n: _build(spark, sf_dir, n), pending)))
+        pending.clear()
+
+    for name in closure(SPARK, names):
+        if name not in live:
+            if set(pending) & set(_text(SPARK, name)[1]):
+                flush()  # it reads a pending relation: barrier first
+            if RELATIONS[name].cached and RELATIONS[name].sql:
+                pending.append(name)
+            else:  # a source table or a view: built in place
+                live[name] = _build(spark, sf_dir, name)
+    if pending:
+        flush()
+    return live
+
+
+def _build(spark, sf_dir: str, name: str) -> Any:
+    from zg_etl_spark.sources.tables import fan_out
+
+    sql = _text(SPARK, name)[0]
+    if not sql:
+        return materialize(spark, sf_dir, name, lambda: fan_out(spark, sf_dir, name))
+    if RELATIONS[name].cached:
+        return materialize(spark, sf_dir, name, lambda: spark.sql(sql))
+    return materialize(spark, sf_dir, name,
+                       lambda: spark.sql(sql).createOrReplaceTempView(name),
+                       cleanup=lambda _: spark.catalog.dropTempView(name))
+
+
+def register(queries: dict, oracles: dict, name: str, body_fn) -> None:
+    """Declare the SQL-bodied query ``name`` in a module's QUERIES and
+    ORACLE: ``body_fn(SPARK)`` on the engine, ``body_fn(DUCK)`` as the
+    oracle."""
+    queries[name] = lambda spark, sf_dir: spark_pipeline_df(
+        spark, sf_dir, body_fn(SPARK))
+    oracles[name] = duck_pipeline_sql(body_fn(DUCK))
+    BODIES[name] = body_fn
+
+
+# --- the spine ---------------------------------------------------------------
+def _catalog(name: str, rows, cols: str) -> None:
+    """Declare a catalog fixture table (operators/registries.py) as an
+    inline VALUES relation."""
+    relation(name)(lambda d: f"SELECT * FROM {R.values_sql(rows)} AS t({cols})")
+
+
+@relation("feed")
+def _feed(d: Dialect) -> str:
     s, idiv = d.s, d.idiv
-    out: list[tuple[str, str]] = []
-
     app_id = "(user_id % 3 + 1)"
     ip_hash = "((event_id * 2654435761) % 4294967296)"
     k_expr = f"CAST({d.json_str('props', '$.k')} AS BIGINT)"
-    out.append((
-        "feed",
-        f"""
+    return f"""
   SELECT event_id, user_id, event_type, value,
          {d.event_ms()} AS ct,
          {d.event_ms()} * 1000000 + event_id AS seq,
@@ -377,49 +514,44 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
               WHEN 2 THEN CAST(999999999999 AS BIGINT)
               ELSE CAST(0 AS BIGINT) END AS tzoff,
          CASE WHEN user_id % 11 = 3 THEN 'zs_' || {s(app_id)} END AS zs
-  FROM events""",
-    ))
+  FROM events"""
 
-    # G5 owner normalization (CheckJsonAndOwnerOperator.java:39-52);
-    # now_ref via 1-row aggregate cross join (broadcast), not a global
-    # window — and aggregated over the RAW events scan (one narrow column),
-    # not over feed, which would evaluate the whole feed projection twice
-    out.append((
-        "enveloped",
-        f"""
+
+# G5 owner normalization (CheckJsonAndOwnerOperator.java:39-52);
+# now_ref via 1-row aggregate cross join (broadcast), not a global
+# window — and aggregated over the RAW events scan (one narrow column),
+# not over feed, which would evaluate the whole feed projection twice
+relation("enveloped")(lambda d: f"""
   SELECT f.*,
          CASE WHEN f.owner_raw IN ('zg', 'zg_adp', 'zg_mkt', 'zg_cdp')
               THEN f.owner_raw ELSE 'zg' END AS owner,
          nr.now_ref
-  FROM feed f CROSS JOIN (SELECT MAX({d.event_ms()}) AS now_ref FROM events) nr""",
-    ))
+  FROM feed f CROSS JOIN (SELECT MAX({d.event_ms()}) AS now_ref FROM events) nr""")
 
-    out.append(("app_reg", f"SELECT * FROM {R.values_sql(R.APP_REGISTRY)} AS t(r_ak, r_app_id, company_id)"))
-    out.append(("ip_bl", f"SELECT * FROM {R.values_sql(R.IP_BLACKLIST)} AS t(b_app_id, b_ip)"))
-    out.append(("ua_bl", f"SELECT * FROM {R.values_sql(R.UA_BLACKLIST)} AS t(b_app_id, b_ua)"))
-    out.append(("ip_ranges", f"SELECT * FROM {R.values_sql(R.IP_RANGES)} AS t({', '.join(R.IP_RANGE_COLS)})"))
-    out.append(("ipv6_ranges", f"SELECT * FROM {R.values_sql(R.IPV6_RANGES)} AS t({', '.join(R.IPV6_RANGE_COLS)})"))
-    out.append((
-        "biz_wl",
-        f"SELECT * FROM {R.values_sql(R.BUSINESS_WHITELIST)} AS t(wb_cid, wb_business)",
-    ))
+_catalog("app_reg", R.APP_REGISTRY, "r_ak, r_app_id, company_id")
+_catalog("ip_bl", R.IP_BLACKLIST, "b_app_id, b_ip")
+_catalog("ua_bl", R.UA_BLACKLIST, "b_app_id, b_ua")
+_catalog("ip_ranges", R.IP_RANGES, ", ".join(R.IP_RANGE_COLS))
+_catalog("ipv6_ranges", R.IPV6_RANGES, ", ".join(R.IPV6_RANGE_COLS))
+_catalog("biz_wl", R.BUSINESS_WHITELIST, "wb_cid, wb_business")
 
-    # gate (GateFlatMapFunction.java:102-213), the reference's observable
-    # attribution order:
-    #   1. ak not in filter.aks       -> SILENT drop (:139-141, no error row)
-    #   2. ak not in app registry     -> 1010006 AK_NONE
-    #   3. basicSchema conformance    -> 1020002 BASIC_SCHEMA_FORMAT_NOT_MATCH
-    #      (CheckJSONSchemaUtil.java:55-78 + basicSchema.json: usr.did
-    #      minLength 1 / maxLength 100, pl enum)
-    #   4. business whitelist         -> NOT an error: business reset to ''
-    #   5. per-app ip blacklist       -> 1010001 IP_BLOCK
-    #   6. per-app ua blacklist       -> 1010002 UA_BLOCK
-    #   7. time validity (G7, dw)     -> 1030005 EVENT_TIME_EXCEEDS_RANGE;
-    #      zg_server / zg-cdp sdks exempt (dataquality/TimeValidator.java:40-41)
+
+# gate (GateFlatMapFunction.java:102-213), the reference's observable
+# attribution order:
+#   1. ak not in filter.aks       -> SILENT drop (:139-141, no error row)
+#   2. ak not in app registry     -> 1010006 AK_NONE
+#   3. basicSchema conformance    -> 1020002 BASIC_SCHEMA_FORMAT_NOT_MATCH
+#      (CheckJSONSchemaUtil.java:55-78 + basicSchema.json: usr.did
+#      minLength 1 / maxLength 100, pl enum)
+#   4. business whitelist         -> NOT an error: business reset to ''
+#   5. per-app ip blacklist       -> 1010001 IP_BLOCK
+#   6. per-app ua blacklist       -> 1010002 UA_BLOCK
+#   7. time validity (G7, dw)     -> 1030005 EVENT_TIME_EXCEEDS_RANGE;
+#      zg_server / zg-cdp sdks exempt (dataquality/TimeValidator.java:40-41)
+@relation("gated", cached=True)
+def _gated(d: Dialect) -> str:
     filter_aks = ", ".join(f"'{a}'" for a in R.FILTER_AKS)
-    out.append((
-        "gated",
-        f"""
+    return f"""
   SELECT f.*, r.company_id,
          CASE WHEN b.wb_business IS NOT NULL THEN f.business_raw
               ELSE '' END AS business,
@@ -438,86 +570,76 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
   LEFT JOIN biz_wl b ON b.wb_cid = r.company_id AND b.wb_business = f.business_raw
   LEFT JOIN ip_bl ipb ON ipb.b_app_id = f.app_id AND ipb.b_ip = f.ip
   LEFT JOIN ua_bl uab ON uab.b_app_id = f.app_id AND uab.b_ua = f.ua
-  WHERE f.ak IN ({filter_aks})""",
-    ))
-    out.append(("gate_ok", "SELECT * FROM gated WHERE error_code = 0 AND debug = 0"))
+  WHERE f.ak IN ({filter_aks})"""
 
-    # identity resolution, deterministic-ID mode
-    out.append((
-        "did_first",
-        "SELECT app_id, did, MIN(seq) AS first_seq FROM gate_ok GROUP BY app_id, did",
-    ))
-    out.append((
-        "did_ids",
-        """
+
+relation("gate_ok")(lambda d: "SELECT * FROM gated WHERE error_code = 0 AND debug = 0")
+
+# identity resolution, deterministic-ID mode
+relation("did_first")(lambda d: (
+    "SELECT app_id, did, MIN(seq) AS first_seq FROM gate_ok GROUP BY app_id, did"))
+
+relation("did_ids", cached=True)(lambda d: """
   SELECT app_id, did,
          CAST(100000 + DENSE_RANK() OVER (PARTITION BY app_id ORDER BY first_seq)
               AS BIGINT) AS zg_did
-  FROM did_first""",
-    ))
-    out.append((
-        "cuid_first",
-        """
+  FROM did_first""")
+
+relation("cuid_first")(lambda d: """
   SELECT app_id, cuid, MIN(seq) AS first_seq FROM gate_ok
-  WHERE cuid IS NOT NULL GROUP BY app_id, cuid""",
-    ))
-    out.append((
-        "uid_ids",
-        """
+  WHERE cuid IS NOT NULL GROUP BY app_id, cuid""")
+
+relation("uid_ids", cached=True)(lambda d: """
   SELECT app_id, cuid,
          CAST(200000 + DENSE_RANK() OVER (PARTITION BY app_id ORDER BY first_seq)
               AS BIGINT) AS zg_uid
-  FROM cuid_first""",
-    ))
-    out.append((
-        "dev_first_cuid",
-        """
+  FROM cuid_first""")
+
+relation("dev_first_cuid")(lambda d: """
   SELECT app_id, did, cuid FROM (
     SELECT app_id, did, cuid,
            ROW_NUMBER() OVER (PARTITION BY app_id, did ORDER BY seq) AS rn
     FROM gate_ok WHERE cuid IS NOT NULL
-  ) x WHERE rn = 1""",
-    ))
-    out.append((
-        "device_zgid",
-        """
+  ) x WHERE rn = 1""")
+
+relation("device_zgid", cached=True)(lambda d: """
   SELECT d.app_id, d.did, d.zg_did, fc.cuid AS bound_cuid,
          CASE WHEN u.zg_uid IS NOT NULL THEN 300000 + u.zg_uid
               ELSE 900000 + d.zg_did END AS zg_id
   FROM did_ids d
   LEFT JOIN dev_first_cuid fc ON fc.app_id = d.app_id AND fc.did = d.did
-  LEFT JOIN uid_ids u ON u.app_id = fc.app_id AND u.cuid = fc.cuid""",
-    ))
-    out.append((
-        "resolved",
-        """
+  LEFT JOIN uid_ids u ON u.app_id = fc.app_id AND u.cuid = fc.cuid""")
+
+relation("resolved", cached=True)(lambda d: """
   SELECT g.*, di.zg_did, ui.zg_uid,
          CASE WHEN g.cuid IS NOT NULL THEN 300000 + ui.zg_uid
               ELSE dz.zg_id END AS zg_id
   FROM gate_ok g
   JOIN device_zgid dz ON dz.app_id = g.app_id AND dz.did = g.did
   JOIN did_ids di ON di.app_id = g.app_id AND di.did = g.did
-  LEFT JOIN uid_ids ui ON ui.app_id = g.app_id AND ui.cuid = g.cuid""",
-    ))
+  LEFT JOIN uid_ids ui ON ui.app_id = g.app_id AND ui.cuid = g.cuid""")
 
-    # dictionaries: event dict (owner rule: dt=abp ⇒ owner zg,
-    # EventAsyncOperator.java:293-299; >100-char names truncated :120-299)
-    # EVENT_NAME_INVALID (1020013): only digits / letters / underscore /
-    # hyphen / CJK / $ allowed (ErrorMessageEnum.java EVENT_NAME_INVALID);
-    # invalid names never enter the dictionary (no auto-create)
+
+# dictionaries: event dict (owner rule: dt=abp ⇒ owner zg,
+# EventAsyncOperator.java:293-299; >100-char names truncated :120-299)
+# EVENT_NAME_INVALID (1020013): only digits / letters / underscore /
+# hyphen / CJK / $ allowed (ErrorMessageEnum.java EVENT_NAME_INVALID);
+# invalid names never enter the dictionary (no auto-create).
+# Virtual-event fan-out rows (dt='vtl', owner zg_vtl) enter the spine
+# HERE: VirtualEventOperator (IdJob step 7) runs BEFORE
+# EventAsyncOperator (step 8), whose dt filter includes 'vtl'
+# (EventAsyncOperator.java:190), so the synthesized rows register in
+# the event dictionary, count against the per-app creation cap,
+# register their custom bag, and reach the wide table / streaming
+# route (p4, p8, p29, p36, s4). Both UNION branches project
+# RESOLVED_COLS by name, so the union cannot silently misalign;
+# tests/test_pipeline.py pins RESOLVED_COLS against the live schema.
+# Deliberately NOT cached: a cheap broadcast-join union over the cached
+# `resolved`, and checkpointing it would copy half the data again.
+@relation("events_typed")
+def _events_typed(d: Dialect) -> str:
     name_valid = d.rlike("substring(event_name, 1, 100)", "^[0-9A-Za-z_$一-龥-]+$")
-    # Virtual-event fan-out rows (dt='vtl', owner zg_vtl) enter the spine
-    # HERE: VirtualEventOperator (IdJob step 7) runs BEFORE
-    # EventAsyncOperator (step 8), whose dt filter includes 'vtl'
-    # (EventAsyncOperator.java:190), so the synthesized rows register in
-    # the event dictionary, count against the per-app creation cap,
-    # register their custom bag, and reach the wide table / streaming
-    # route (p4, p8, p29, p36, s4). Both UNION branches project
-    # RESOLVED_COLS by name, so the union cannot silently misalign;
-    # tests/test_pipeline.py pins RESOLVED_COLS against the live schema.
-    out.append((
-        "events_typed",
-        f"""
+    return f"""
   SELECT *, CASE WHEN dt = 'abp' THEN 'zg' ELSE owner END AS owner_e,
          substring(event_name, 1, 100) AS event_name_t,
          {name_valid} AS name_valid
@@ -527,73 +649,48 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
     UNION ALL
     {_vtl_fanout_select(d)}
   ) u
-  WHERE event_name IS NOT NULL""",
-    ))
-    out.append((
-        "event_first",
-        """
+  WHERE event_name IS NOT NULL"""
+
+
+relation("event_first", cached=True)(lambda d: """
   SELECT app_id, owner_e AS owner, event_name_t AS event_name,
          MIN(seq) AS first_seq
   FROM events_typed WHERE name_valid
-  GROUP BY app_id, owner_e, event_name_t""",
-    ))
-    # first_seq ties EXIST since the vtl fan-out: a synthesized row shares
-    # its source row's seq, so a first-seen source name and a first-seen
-    # virtual name can tie. The reference resolves ties by arrival order
-    # (the synthesized message is emitted after its source,
-    # VirtualEventOperator.java:260-326); the deterministic batch stand-in
-    # is (first_seq, owner, event_name) — 'zg' < 'zg_vtl' puts the source
-    # name first, matching arrival order, and it is byte-identical to the
-    # streaming get-or-create's tie-break (engine.py
-    # incremental_get_or_create orders by first_seq, *key_cols), which
-    # keeps the s4 oracle exact.
-    out.append((
-        "event_dict",
-        """
+  GROUP BY app_id, owner_e, event_name_t""")
+
+# first_seq ties EXIST since the vtl fan-out: a synthesized row shares
+# its source row's seq, so a first-seen source name and a first-seen
+# virtual name can tie. The reference resolves ties by arrival order
+# (the synthesized message is emitted after its source,
+# VirtualEventOperator.java:260-326); the deterministic batch stand-in
+# is (first_seq, owner, event_name) — 'zg' < 'zg_vtl' puts the source
+# name first, matching arrival order, and it is byte-identical to the
+# streaming get-or-create's tie-break (engine.py
+# incremental_get_or_create orders by first_seq, *key_cols), which
+# keeps the s4 oracle exact.
+relation("event_dict", cached=True)(lambda d: """
   SELECT app_id, owner, event_name,
          CAST(1000 * app_id +
               DENSE_RANK() OVER (PARTITION BY app_id
                                  ORDER BY first_seq, owner, event_name)
               AS BIGINT) AS zg_eid
-  FROM event_first""",
-    ))
+  FROM event_first""")
 
-    # --- dictionary governance (M1 gating) ---------------------------------
-    # event_dict above is the UNGATED get-or-create relation (every
-    # first-seen event assigned an id) — it stays the oracle for the
-    # streaming get-or-create (s4) and the high-water query. The effective
-    # dictionary below applies the reference's creation rules: preseeded
-    # rows always exist; new events are created only when the app allows
-    # auto-create and the total id count stays under the app's cap
-    # (EventAsyncOperator.java:300-326; company_app.event_sum/auto_event).
-    out.append((
-        "app_cfg",
-        f"SELECT * FROM {R.values_sql(R.APP_CONFIG)} "
-        "AS t(cfg_app_id, auto_disabled, event_cap, attr_cap)",
-    ))
-    out.append((
-        "event_preseed",
-        f"SELECT * FROM {R.values_sql(R.EVENT_PRESEED)} "
-        "AS t(ps_app_id, ps_owner, ps_event_name, ps_eid)",
-    ))
-    out.append((
-        "event_bl",
-        f"SELECT * FROM {R.values_sql(R.EVENT_BLACKLIST)} "
-        "AS t(bl_app_id, bl_owner, bl_event_name)",
-    ))
-    out.append((
-        "attr_bl",
-        f"SELECT * FROM {R.values_sql(R.ATTR_BLACKLIST)} "
-        "AS t(ab_app_id, ab_attr_name)",
-    ))
-    out.append((
-        "uprop_bl",
-        f"SELECT * FROM {R.values_sql(R.USER_PROP_BLACKLIST)} "
-        "AS t(ub_app_id, ub_prop_name)",
-    ))
-    out.append((
-        "event_dict_eff",
-        """
+# --- dictionary governance (M1 gating) ---------------------------------
+# event_dict above is the UNGATED get-or-create relation (every
+# first-seen event assigned an id) — it stays the oracle for the
+# streaming get-or-create (s4) and the high-water query. The effective
+# dictionary below applies the reference's creation rules: preseeded
+# rows always exist; new events are created only when the app allows
+# auto-create and the total id count stays under the app's cap
+# (EventAsyncOperator.java:300-326; company_app.event_sum/auto_event).
+_catalog("app_cfg", R.APP_CONFIG, "cfg_app_id, auto_disabled, event_cap, attr_cap")
+_catalog("event_preseed", R.EVENT_PRESEED, "ps_app_id, ps_owner, ps_event_name, ps_eid")
+_catalog("event_bl", R.EVENT_BLACKLIST, "bl_app_id, bl_owner, bl_event_name")
+_catalog("attr_bl", R.ATTR_BLACKLIST, "ab_app_id, ab_attr_name")
+_catalog("uprop_bl", R.USER_PROP_BLACKLIST, "ub_app_id, ub_prop_name")
+
+relation("event_dict_eff", cached=True)(lambda d: """
   SELECT ps_app_id AS app_id, ps_owner AS owner, ps_event_name AS event_name,
          CAST(ps_eid AS BIGINT) AS zg_eid
   FROM event_preseed
@@ -613,15 +710,13 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
     LEFT JOIN (SELECT ps_app_id, COUNT(*) AS pre_n FROM event_preseed
                GROUP BY ps_app_id) pc ON pc.ps_app_id = ef.app_id
     WHERE c.auto_disabled = 0 AND p.ps_eid IS NULL
-  ) x WHERE pre_n + rk <= event_cap""",
-    ))
-    # per-sub-record event resolution outcome, reference attribution order:
-    # resolved + blacklisted -> EVENT_BLACK; unresolved on a no-auto-create
-    # app -> EVENT_CREATE_DISABLED; unresolved under the cap rule ->
-    # EVENT_COUNT_EXCEED (ErrorMessageEnum 1020102/1020103/1020104)
-    out.append((
-        "events_dicted",
-        """
+  ) x WHERE pre_n + rk <= event_cap""")
+
+# per-sub-record event resolution outcome, reference attribution order:
+# resolved + blacklisted -> EVENT_BLACK; unresolved on a no-auto-create
+# app -> EVENT_CREATE_DISABLED; unresolved under the cap rule ->
+# EVENT_COUNT_EXCEED (ErrorMessageEnum 1020102/1020103/1020104)
+relation("events_dicted")(lambda d: """
   SELECT /*+ BROADCAST(ed), BROADCAST(bl), BROADCAST(cfg) */
          et.*, ed.zg_eid,
          CASE WHEN NOT et.name_valid THEN 1020013
@@ -635,13 +730,16 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
   LEFT JOIN event_dict_eff ed ON ed.app_id = et.app_id
        AND ed.owner = et.owner_e AND ed.event_name = et.event_name_t
   LEFT JOIN event_bl bl ON bl.bl_app_id = et.app_id
-       AND bl.bl_owner = et.owner_e AND bl.bl_event_name = et.event_name_t""",
-    ))
-    # attr melt runs only for sub-records whose event RESOLVED (the
-    # reference's operator order: EventAttrAsyncOperator after
-    # EventAsyncOperator, errored records skip ahead); blacklisted
-    # property keys are dropped before registration
-    # (EventAttrAsyncOperator.java:784-834)
+       AND bl.bl_owner = et.owner_e AND bl.bl_event_name = et.event_name_t""")
+
+
+# attr melt runs only for sub-records whose event RESOLVED (the
+# reference's operator order: EventAttrAsyncOperator after
+# EventAsyncOperator, errored records skip ahead); blacklisted
+# property keys are dropped before registration
+# (EventAttrAsyncOperator.java:784-834)
+@relation("attrs_melted", cached=True)
+def _attrs_melted(d: Dialect) -> str:
     if d.name == "spark":
         # one pass, not five (guide §2.4): the UNION-ALL melt re-executes
         # events_dicted's whole lineage (events_typed union + three
@@ -671,29 +769,24 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
   FROM events_dicted WHERE event_error_code = 0"""
             for name, val, ptype in custom_attrs(d)
         )
-    out.append((
-        "attrs_melted",
-        f"""
+    return f"""
   SELECT m.* FROM ({melt}
   ) m
   LEFT JOIN attr_bl ab ON ab.ab_app_id = m.app_id
        AND ab.ab_attr_name = m.attr_name
-  WHERE ab.ab_attr_name IS NULL""",
-    ))
-    out.append((
-        "attr_first",
-        """
+  WHERE ab.ab_attr_name IS NULL"""
+
+
+relation("attr_first")(lambda d: """
   SELECT m.app_id, m.zg_eid, m.owner, m.attr_name, m.prop_type,
          MIN(m.seq) AS first_seq
   FROM attrs_melted m
-  GROUP BY m.app_id, m.zg_eid, m.owner, m.attr_name, m.prop_type""",
-    ))
-    # physical column allocation, capped at the app's attr_sum
-    # (EventAttrAsyncOperator.java:539-551 column alloc; properties beyond
-    # the cap get no physical column and drop out of the wide pivot)
-    out.append((
-        "attr_dict",
-        f"""
+  GROUP BY m.app_id, m.zg_eid, m.owner, m.attr_name, m.prop_type""")
+
+# physical column allocation, capped at the app's attr_sum
+# (EventAttrAsyncOperator.java:539-551 column alloc; properties beyond
+# the cap get no physical column and drop out of the wide pivot)
+relation("attr_dict", cached=True)(lambda d: f"""
   SELECT zg_eid, owner, attr_name, prop_type, col_idx,
          zg_eid * 10 + col_idx AS attr_id,
          'cus' || {d.s('col_idx')} AS column_name
@@ -704,39 +797,38 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
                      AS BIGINT) AS col_idx
       FROM attr_first
     ) x JOIN app_cfg c ON c.cfg_app_id = x.app_id
-  ) y WHERE col_idx <= attr_cap""",
-    ))
-    # attr_map: the dictionary pivoted to one row per (zg_eid, owner) with
-    # the attr name + type occupying each physical cus column. Aggregates
-    # the DICT (broadcast-sized by construction), never the fact — the wide
-    # table derives cus{n} map-side from the row's own fields through this
-    # lookup, with ZERO fact-grain shuffles (EventAttrTransfer.java:162-228
-    # does the same via a per-record column-index cache).
+  ) y WHERE col_idx <= attr_cap""")
+
+
+# attr_map: the dictionary pivoted to one row per (zg_eid, owner) with
+# the attr name + type occupying each physical cus column. Aggregates
+# the DICT (broadcast-sized by construction), never the fact — the wide
+# table derives cus{n} map-side from the row's own fields through this
+# lookup, with ZERO fact-grain shuffles (EventAttrTransfer.java:162-228
+# does the same via a per-record column-index cache).
+@relation("attr_map", cached=True)
+def _attr_map(d: Dialect) -> str:
     map_cols = ",\n         ".join(
         f"MAX(CASE WHEN col_idx = {i} THEN attr_name END) AS a{i},\n"
         f"         MAX(CASE WHEN col_idx = {i} THEN CAST(prop_type AS INT) END) AS t{i}"
         for i in range(1, ZG_CUS_N + 1)
     )
-    out.append((
-        "attr_map",
-        f"""
+    return f"""
   SELECT zg_eid, owner,
          {map_cols}
-  FROM attr_dict GROUP BY zg_eid, owner""",
-    ))
+  FROM attr_dict GROUP BY zg_eid, owner"""
 
-    # M3 user-property dictionary: get-or-create per (app, owner, prop_name)
-    # (UserPropAsyncOperator.java:112-260); built-in app_user_id = -1
-    # (UserPropertyTransfer.java:30-33) joins in at projection time
-    # user-prop blacklist drops the key before dictionary registration
-    # (UserPropAsyncOperator.java:112-260)
-    # zg_uid rides along for the TRANSFER gate (UserPropertyTransfer.java:
-    # 55-59 emits rows only for IDENTIFIED users); registration below
-    # stays ungated — the dictionary operator annotates the message before
-    # the transfer decides whether rows ship
-    out.append((
-        "usr_props_melted",
-        f"""
+
+# M3 user-property dictionary: get-or-create per (app, owner, prop_name)
+# (UserPropAsyncOperator.java:112-260); built-in app_user_id = -1
+# (UserPropertyTransfer.java:30-33) joins in at projection time
+# user-prop blacklist drops the key before dictionary registration
+# (UserPropAsyncOperator.java:112-260)
+# zg_uid rides along for the TRANSFER gate (UserPropertyTransfer.java:
+# 55-59 emits rows only for IDENTIFIED users); registration below
+# stays ungated — the dictionary operator annotates the message before
+# the transfer decides whether rows ship
+relation("usr_props_melted")(lambda d: f"""
   SELECT m.* FROM (
   SELECT app_id, owner, zg_id, zg_uid, seq, '_k' AS prop_name,
          {d.s('k')} AS prop_value,
@@ -751,11 +843,9 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
   ) m
   LEFT JOIN uprop_bl ub ON ub.ub_app_id = m.app_id
        AND ub.ub_prop_name = m.prop_name
-  WHERE ub.ub_prop_name IS NULL""",
-    ))
-    out.append((
-        "user_prop_dict",
-        """
+  WHERE ub.ub_prop_name IS NULL""")
+
+relation("user_prop_dict")(lambda d: """
   SELECT app_id, owner, prop_name, prop_type,
          CAST(500 * app_id +
               ROW_NUMBER() OVER (PARTITION BY app_id, owner
@@ -764,122 +854,32 @@ def stages(d: Dialect) -> list[tuple[str, str]]:
   FROM (
     SELECT app_id, owner, prop_name, prop_type, MIN(seq) AS first_seq
     FROM usr_props_melted GROUP BY app_id, owner, prop_name, prop_type
-  ) f""",
-    ))
+  ) f""")
 
-    # M4 device-property dictionary: LOOKUP-ONLY static registry
-    # (DevicePropertyOperator.java:46-152 — no auto-create)
-    out.append((
-        "device_prop_dict",
-        f"SELECT * FROM {R.values_sql(R.DEVICE_PROP_DICT)} "
-        f"AS t({', '.join(R.DEVICE_PROP_COLS)})",
-    ))
-    out.append((
-        "dev_props_melted",
-        f"""
+# M4 device-property dictionary: LOOKUP-ONLY static registry
+# (DevicePropertyOperator.java:46-152 — no auto-create)
+_catalog("device_prop_dict", R.DEVICE_PROP_DICT, ", ".join(R.DEVICE_PROP_COLS))
+
+relation("dev_props_melted")(lambda d: f"""
   SELECT app_id, did, seq, '_model' AS prop_name, ua AS prop_value
   FROM resolved WHERE dt = 'pl'
   UNION ALL
   SELECT app_id, did, seq, '_zs', {d.s('k')} FROM resolved WHERE dt = 'pl'
   UNION ALL
-  SELECT app_id, did, seq, '_unknown_prop', 'x' FROM resolved WHERE dt = 'pl'""",
-    ))
-    return out
+  SELECT app_id, did, seq, '_unknown_prop', 'x' FROM resolved WHERE dt = 'pl'""")
 
 
-def with_ctes(ctes: list[tuple[str, str]], body: str) -> str:
-    """``body`` behind one WITH clause of ``ctes`` ((name, sql) pairs, in
-    dependency order) — how an oracle inlines the relations the engine
-    materializes. A body with its own CTEs is spliced into that clause;
-    its RECURSIVE marker, if any, moves to the front."""
-    if not ctes:
-        return body
-    head = "WITH "
-    stripped = body.lstrip()
-    if stripped.upper().startswith("WITH "):
-        body = stripped[4:]
-        if body.lstrip().upper().startswith("RECURSIVE "):
-            head, body = "WITH RECURSIVE ", body.lstrip()[len("RECURSIVE"):]
-        body = "," + body
-    return head + ",\n".join(
-        f"{name} AS ({sql.strip()})" for name, sql in ctes
-    ) + "\n" + body
+# the spine: every relation declared above, in dependency order
+SPINE = [name for name, rel in RELATIONS.items() if rel.sql]
 
 
-def full_query(d: Dialect, body: str) -> str:
-    """``body`` over the whole spine as one WITH prelude (DuckDB oracle
-    path)."""
-    return with_ctes(stages(d), body)
+def stages(d: Dialect) -> list[tuple[str, str]]:
+    """Ordered (name, SELECT-sql) pairs; each may reference earlier names."""
+    return [(name, _text(d, name)[0]) for name in SPINE]
 
 
-# --- Spark execution: the spine as registry entries -------------------------
 def ensure_pipeline_views(spark, sf_dir: str) -> None:
-    """Register every stage as a temp view: CACHE_STAGES (and the source
-    ``events``) are registry entries, the rest plain views over them. The
-    whole set is itself one entry, so asking for another sf_dir releases
-    and rebuilds it (session.materialize's live-set policy)."""
-    materialize(
-        spark, sf_dir, "spine", lambda: _build_spine(spark, sf_dir),
-        cleanup=lambda views: [spark.catalog.dropTempView(v) for v in views],
-    )
-
-
-def _build_spine(spark, sf_dir: str) -> list[str]:
-    """Build the spine; returns the names of its plain (uncached) views."""
-    import re
-    from concurrent.futures import ThreadPoolExecutor
-
-    from zg_etl_spark.sources.tables import fan_out
-
-    # the spine's first pass (feed -> gated) evaluates ~50 derived
-    # columns per row (md5, regexps, string builds) — far heavier per
-    # byte than a plain scan — and the testdata ships events as ONE
-    # parquet file, so without the fan-out the whole gated build runs in
-    # a single task
-    materialize(spark, sf_dir, "events",
-                lambda: fan_out(spark, sf_dir, "events"))
-
-    # Cached stages are localCheckpointed (by the registry): without the
-    # lineage cut every downstream query's logical plan inlines the whole
-    # chain and Catalyst spends seconds per query on analysis/cache-
-    # matching of thousand-node plans (measured: attr_dict count 5.8s
-    # with a warm cache, 0.05s checkpointed). In a cluster deployment the
-    # spine stages would be persisted tables (as the reference persists
-    # stage outputs to Kafka/Doris), giving the same lineage cut.
-    #
-    # Consecutive cache stages that don't reference each other (e.g.
-    # did_ids / uid_ids; event_dict / attrs_melted) materialize
-    # CONCURRENTLY — Spark schedules jobs from multiple driver threads
-    # onto the same executor pool, exactly as independent registry builds
-    # would run on a cluster.
-    pending: list[tuple[str, str]] = []
-    views: list[str] = []
-
-    def flush() -> None:
-        if not pending:
-            return
-        with ThreadPoolExecutor(max_workers=len(pending)) as ex:
-            list(ex.map(lambda ns: materialize(
-                spark, sf_dir, ns[0], lambda: spark.sql(ns[1])), pending))
-        pending.clear()
-
-    for name, sql in stages(SPARK):
-        if any(re.search(rf"\b{p}\b", sql) for p, _ in pending):
-            flush()  # this stage reads a pending one — barrier first
-        if name in CACHE_STAGES:
-            pending.append((name, sql))
-        else:
-            spark.sql(sql).createOrReplaceTempView(name)
-            views.append(name)
-    flush()
-    return views
-
-
-def spark_pipeline_df(spark, sf_dir: str, body: str):
-    """Run a pipeline query (body references the stage views) on Spark."""
-    ensure_pipeline_views(spark, sf_dir)
-    return spark.sql(body)
-
-
-def duck_pipeline_sql(body: str) -> str:
-    return full_query(DUCK, body)
+    """Build every spine stage: the cached ones as checkpointed entries,
+    the rest as views over them. Asking for another sf_dir releases and
+    rebuilds them (session.materialize's live-set policy)."""
+    relations(spark, sf_dir, SPINE)

@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zg_etl_spark.dialect import DUCK, SPARK
-from zg_etl_spark.operators.domain import duck_pipeline_sql
+from zg_etl_spark.operators.domain import duck_pipeline_sql, spark_pipeline_df
 from zg_etl_spark.operators.graph import label_components
 from zg_etl_spark.session import materialize
 
@@ -171,9 +171,10 @@ def _build_p54_relations(spark: SparkSession, sf_dir: str):
 
     d = SPARK
     # clicks/ss are cheap projections of the shared UA-parsed index
-    keyed = p52_keyed_src(spark, sf_dir)
-    clicks = spark.sql(p52_clicks_sql(d, keyed)).localCheckpoint(True)
-    ss = spark.sql(p52_ss_sql(d, keyed)).localCheckpoint(True)
+    keyed = p52_keyed_src()
+    clicks = spark_pipeline_df(
+        spark, sf_dir, p52_clicks_sql(d, keyed)).localCheckpoint(True)
+    ss = spark_pipeline_df(spark, sf_dir, p52_ss_sql(d, keyed)).localCheckpoint(True)
 
     app_s = F.col("app_id").cast("string")
 
@@ -649,9 +650,6 @@ WITH keyed AS ({p52_keyed_sql(d)}
   SELECT row_number() OVER (ORDER BY sess_ct, sess_seq) AS i, *
   FROM scand
 ), rep AS (
-  -- the recursive scope nests INSIDE a CTE body: full_query splices a
-  -- leading WITH into the prelude's (non-recursive) clause list, where
-  -- a top-level RECURSIVE marker cannot ride along
   WITH RECURSIVE
   replay(i, dead, sess_seq, zg_id, match_tier, lid, claim_click) AS (
     SELECT 0::BIGINT, []::VARCHAR[], NULL::BIGINT, NULL::BIGINT,

@@ -6,12 +6,14 @@ Every query body is one template rendered with the same dialect as the
 event pipeline (``zg_etl_spark.dialect``: ``SPARK`` for the engine, ``DUCK``
 for the oracle), so oracle and engine cannot drift. The derived sets that
 several queries (or several references in one query) read — shingle sets,
-minhash signatures, candidate pairs, IVF/PQ assignments — are INDEXES,
-each declared once (``_index``: name -> sql(d), plus the indexes it
-reads). A query names the indexes its body reads (``_register(...,
-uses=...)``) and refers to each by name in both dialects: the engine
-materializes them as registry entries, the oracle inlines the same text
-as CTEs in front of the body (``operators.domain.with_ctes``).
+minhash signatures, candidate pairs, IVF/PQ assignments — are INDEXES:
+cached relations of the one registry (``operators.domain.relation``),
+each declared once as name -> sql(d). A body refers to an index by its
+name in both dialects; the engine builds the indexes a body reads (and
+the ones they read) as checkpointed registry entries, and the oracle
+inlines the same texts as CTEs in front of the body. Inlined on Spark,
+an index referenced N times re-runs N times (measured: l4's 4 references
+re-ran the shingle pipeline 4×).
 Everything is expressed with built-in array/lambda functions — no Python
 UDFs in any hot path (JVM-side codegen in Spark).
 
@@ -36,78 +38,19 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution
 
 from pyspark.sql import DataFrame, SparkSession
 
-from zg_etl_spark.dialect import DUCK, SPARK
-from zg_etl_spark.operators.domain import with_ctes
+from zg_etl_spark.dialect import DUCK
+from zg_etl_spark.operators.domain import (
+    duck_pipeline_sql,
+    register,
+    relation,
+    relations,
+)
 from zg_etl_spark.session import materialize
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-# index name -> (sql(d), the indexes it reads), in dependency order
-INDEXES: dict = {}
-# SQL-bodied query -> (body(d), the indexes the body reads)
-BODIES: dict = {}
 
 STOPWORDS = "('the', 'a')"
-
-
-# Indexes: the derived sets (shingle sets, minhash signatures, IVF
-# assignments, ...) that several queries — or several references inside
-# one query's WITH clause — read. Spark inlines CTEs and substitutes
-# cached plans BEFORE that inlining, so a WITH body or a `.cache()`d view
-# referenced N times re-runs its whole lineage N times (measured: l4's 4
-# references re-ran the shingle pipeline 4×). The engine therefore
-# materializes each index as a registry entry (localCheckpointed, so every
-# reference scans the materialized partitions; a real deployment would
-# persist it as a table), and the oracle inlines the SAME text as a CTE —
-# DuckDB materializes CTEs natively. One declaration serves both, so the
-# SQL Spark runs is the SQL the oracle checks.
-def _index(name: str, sql_fn, uses: tuple[str, ...] = ()) -> None:
-    INDEXES[name] = (sql_fn, uses)
-
-
-def _closure(uses: tuple[str, ...]) -> list[str]:
-    """``uses`` plus every index they read, in dependency order."""
-    need, todo = set(), list(uses)
-    while todo:
-        name = todo.pop()
-        if name not in need:
-            need.add(name)
-            todo.extend(INDEXES[name][1])
-    return [name for name in INDEXES if name in need]
-
-
-def _materialize_inputs(
-    spark: SparkSession, sf_dir: str, uses: tuple[str, ...] = ()
-) -> None:
-    """The engine side: documents/embeddings, then each index in ``uses``
-    and those it reads, each built once per (session, sf_dir).
-
-    documents/embeddings ship as ONE parquet file per table, which would
-    serialize every per-row array/hash pipeline into a single task; a
-    size-derived round-robin repartition of the raw rows (sources.tables
-    fan_out — cheap, thousands of rows) parallelizes all downstream CPU."""
-    from zg_etl_spark.sources.tables import fan_out
-
-    for t in ("documents", "embeddings"):
-        materialize(spark, sf_dir, t, lambda t=t: fan_out(spark, sf_dir, t))
-    for name in _closure(uses):
-        materialize(spark, sf_dir, name,
-                    lambda name=name: spark.sql(INDEXES[name][0](SPARK)))
-
-
-def _oracle(body: str, uses: tuple[str, ...] = ()) -> str:
-    """The oracle side: the same index texts as CTEs in front of ``body``."""
-    return with_ctes([(n, INDEXES[n][0](DUCK)) for n in _closure(uses)], body)
-
-
-def _register(name: str, body_fn, uses: tuple[str, ...] = ()) -> None:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _materialize_inputs(spark, sf_dir, uses)
-        return spark.sql(body_fn(SPARK))
-
-    QUERIES[name] = run
-    ORACLE[name] = _oracle(body_fn(DUCK), uses)
-    BODIES[name] = (body_fn, uses)
 
 
 # ---------------------------------------------------------------------------
@@ -133,7 +76,7 @@ SELECT doc_id, lang, source,
 FROM documents"""
 
 
-_register("l1_text_stats", _l1)
+register(QUERIES, ORACLE, "l1_text_stats", _l1)
 
 
 # ---------------------------------------------------------------------------
@@ -141,7 +84,7 @@ _register("l1_text_stats", _l1)
 # profiles per lang from the corpus, classify each doc by profile overlap
 # ---------------------------------------------------------------------------
 # `l2_words` feeds both the per-lang profile build AND the per-doc scoring join
-_index("l2_words", lambda d: (
+relation("l2_words", cached=True)(lambda d: (
     f"SELECT doc_id, lang, word FROM documents "
     f"{d.explode(d.split('text'), 'word')}"))
 
@@ -173,7 +116,7 @@ SELECT dd.doc_id, dd.lang, b.predicted_lang,
 FROM documents dd LEFT JOIN best b ON b.doc_id = dd.doc_id"""
 
 
-_register("l2_lang_id", _l2, uses=("l2_words",))
+register(QUERIES, ORACLE, "l2_lang_id", _l2)
 
 
 # ---------------------------------------------------------------------------
@@ -187,7 +130,7 @@ SELECT COUNT(*) AS n_docs,
 FROM documents"""
 
 
-_register("l3_dedup_exact", _l3)
+register(QUERIES, ORACLE, "l3_dedup_exact", _l3)
 
 
 # ---------------------------------------------------------------------------
@@ -218,8 +161,8 @@ def _l4_shingles(d) -> str:
             FROM l4_sharr {d.explode('sh_arr', 'shingle')}"""
 
 
-_index("l4_sharr", _l4_sharr)
-_index("l4_shingles", _l4_shingles, uses=("l4_sharr",))
+relation("l4_sharr", cached=True)(_l4_sharr)
+relation("l4_shingles", cached=True)(_l4_shingles)
 
 
 # ---------------------------------------------------------------------------
@@ -246,7 +189,7 @@ ORDER BY jaccard DESC, doc_a, doc_b
 LIMIT 100"""
 
 
-_register("l4_ngram_jaccard", _l4, uses=("l4_shingles",))
+register(QUERIES, ORACLE, "l4_ngram_jaccard", _l4)
 
 
 # ---------------------------------------------------------------------------
@@ -283,10 +226,10 @@ FROM (
       WHERE {d.alen('ws')} >= {n}) b) c"""
 
 
-_register("l5_minhash_signatures", _l5)
+register(QUERIES, ORACLE, "l5_minhash_signatures", _l5)
 # the signature index the LSH band fan-out reads: inlined, the band
 # fan-out recomputed the md5 signatures 8×
-_index("mh_sigs", _l5)
+relation("mh_sigs", cached=True)(_l5)
 
 
 # ---------------------------------------------------------------------------
@@ -321,9 +264,8 @@ FROM bands a JOIN bands b
 # symmetric-edge union executed it TWICE in one action). On a cluster this
 # is the persisted candidate table every dedup pipeline keeps next to its
 # signature index.
-_index("l6_cands", _l6, uses=("mh_sigs",))
-_register("l6_lsh_candidates", lambda d: "SELECT * FROM l6_cands",
-          uses=("l6_cands",))
+relation("l6_cands", cached=True)(_l6)
+register(QUERIES, ORACLE, "l6_lsh_candidates", lambda d: "SELECT * FROM l6_cands")
 
 
 # ---------------------------------------------------------------------------
@@ -336,7 +278,6 @@ _register("l6_lsh_candidates", lambda d: "SELECT * FROM l6_cands",
 # edges. This is the genuinely-iterative algorithm on the query surface.
 # ---------------------------------------------------------------------------
 _L16_SIM = 0.5  # ≥4 of 8 minhashes agree
-_L16_USES = ("l6_cands",)
 # the oracle's reachability walk over the candidate edges (l16, l27)
 _L16_WALK = f"""
 edges AS (SELECT doc_a AS a, doc_b AS b FROM l6_cands WHERE est_sim >= {_L16_SIM}),
@@ -351,7 +292,7 @@ walk(doc, lab) AS (
 def _l16_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    _materialize_inputs(spark, sf_dir, _L16_USES)
+    relations(spark, sf_dir, ["documents", "l6_cands"])
     edges = spark.table("l6_cands").where(f"est_sim >= {_L16_SIM}")
     sym = (
         edges.selectExpr("doc_a AS a", "doc_b AS b")
@@ -383,11 +324,9 @@ def _l16_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["l16_dedup_groups"] = _l16_run
-ORACLE["l16_dedup_groups"] = _oracle(
+ORACLE["l16_dedup_groups"] = duck_pipeline_sql(
     f"WITH RECURSIVE {_L16_WALK}\n"
-    "SELECT doc AS doc_id, MIN(lab) AS group_id FROM walk GROUP BY doc",
-    _L16_USES,
-)
+    "SELECT doc AS doc_id, MIN(lab) AS group_id FROM walk GROUP BY doc")
 
 
 # ---------------------------------------------------------------------------
@@ -415,7 +354,7 @@ bits AS (
 SELECT doc_id, CAST({assemble} AS BIGINT) AS simhash16 FROM bits"""
 
 
-_register("l7_simhash", _l7)
+register(QUERIES, ORACLE, "l7_simhash", _l7)
 
 
 # ---------------------------------------------------------------------------
@@ -444,7 +383,7 @@ SELECT q_id, cand_id, cosine, rank FROM (
 ) x WHERE rank <= 10"""
 
 
-_register("l8_ann_bruteforce", _l8)
+register(QUERIES, ORACLE, "l8_ann_bruteforce", _l8)
 
 
 # ---------------------------------------------------------------------------
@@ -468,7 +407,7 @@ def _l9_assign_sql(d) -> str:
 # side); inlined CTEs recompute it per reference (15 Exchanges). Built
 # once, it is exactly an IVF index build: on a cluster this IS the
 # persisted index table.
-_index("l9_assign", _l9_assign_sql)
+relation("l9_assign", cached=True)(_l9_assign_sql)
 
 
 def _l9(d) -> str:
@@ -490,7 +429,7 @@ SELECT q_id, cand_id, cosine, rank FROM (
 ) x WHERE rank <= 5"""
 
 
-_register("l9_ann_ivf", _l9, uses=("l9_assign",))
+register(QUERIES, ORACLE, "l9_ann_ivf", _l9)
 
 
 # ---------------------------------------------------------------------------
@@ -521,7 +460,7 @@ SELECT vec_id, bucket, {d.lmap('v0', 'x', 'x / nv')} AS v FROM (
 # persisted LSH index table on a cluster. Interleaved A/B at sf0.1:
 # inline 0.69/0.54/0.56 s -> index 0.22/0.18/0.19 warm, 0.47/0.42/0.39
 # including the index build.
-_index("l11_vecs", _l11_vecs_sql)
+relation("l11_vecs", cached=True)(_l11_vecs_sql)
 
 
 def _l11_pairs(d) -> str:
@@ -535,7 +474,7 @@ ORDER BY cosine DESC, vec_a, vec_b
 LIMIT 200"""
 
 
-_register("l11_embedding_neardup", _l11_pairs, uses=("l11_vecs",))
+register(QUERIES, ORACLE, "l11_embedding_neardup", _l11_pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -564,7 +503,7 @@ SELECT doc_id,
 FROM documents"""
 
 
-_register("l12_tokens_fingerprint", _l12)
+register(QUERIES, ORACLE, "l12_tokens_fingerprint", _l12)
 
 
 # ---------------------------------------------------------------------------
@@ -598,7 +537,7 @@ FROM ranked
 GROUP BY lang, source"""
 
 
-_register("l13_curation", _l13)
+register(QUERIES, ORACLE, "l13_curation", _l13)
 
 
 # ---------------------------------------------------------------------------
@@ -611,7 +550,7 @@ def _l14_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    _materialize_inputs(spark, sf_dir)
+    relations(spark, sf_dir, ["embeddings"])
     qrows = spark.sql(
         "SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v "
         "FROM embeddings WHERE vec_id < 5"
@@ -669,7 +608,7 @@ def _l15_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_features,
     )
 
-    _materialize_inputs(spark, sf_dir)
+    relations(spark, sf_dir, ["documents"])
     feats = extract_features(documents_as_media(spark.table("documents")))
     return feats.selectExpr("media_id AS doc_id", "n_bytes", "n_frames")
 
@@ -699,7 +638,7 @@ def _l17_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize_media,
     )
 
-    _materialize_inputs(spark, sf_dir)
+    relations(spark, sf_dir, ["documents"])
     media = resize_media(
         documents_as_media(spark.table("documents")), _L17_W, _L17_H
     )
@@ -741,7 +680,7 @@ SELECT doc_id,
 FROM documents"""
 
 
-_register("l10_multimodal_binary", _l10)
+register(QUERIES, ORACLE, "l10_multimodal_binary", _l10)
 
 
 # ---------------------------------------------------------------------------
@@ -778,7 +717,7 @@ FROM (
   FROM documents) h"""
 
 
-_register("l18_split_sample", _l18)
+register(QUERIES, ORACLE, "l18_split_sample", _l18)
 
 
 # ---------------------------------------------------------------------------
@@ -793,7 +732,7 @@ _register("l18_split_sample", _l18)
 # ---------------------------------------------------------------------------
 # tf feeds both df and the scoring join — inlined, the word explode +
 # groupBy would run twice
-_index("l19_tf", lambda d: (
+relation("l19_tf", cached=True)(lambda d: (
     f"SELECT doc_id, word, COUNT(*) AS tf FROM (SELECT doc_id, word "
     f"FROM documents {d.explode(d.split('text'), 'word')}) w "
     f"GROUP BY doc_id, word"))
@@ -814,7 +753,7 @@ SELECT doc_id, word, tf, df, score, rank FROM (
 ) x WHERE rank <= 3"""
 
 
-_register("l19_tfidf_terms", _l19, uses=("l19_tf",))
+register(QUERIES, ORACLE, "l19_tfidf_terms", _l19)
 
 
 # ---------------------------------------------------------------------------
@@ -846,7 +785,7 @@ FROM (
 ) w {d.explode(starts, 'chunk_start')}"""
 
 
-_register("l20_chunking", _l20)
+register(QUERIES, ORACLE, "l20_chunking", _l20)
 
 
 # ---------------------------------------------------------------------------
@@ -876,7 +815,7 @@ SELECT lang, bigram, n_docs, rank FROM (
 ) r WHERE rank <= 10"""
 
 
-_register("l21_bigram_stats", _l21)
+register(QUERIES, ORACLE, "l21_bigram_stats", _l21)
 
 
 # ---------------------------------------------------------------------------
@@ -907,7 +846,7 @@ FROM (
 GROUP BY lang, rate_pct"""
 
 
-_register("l22_stratified_sample", _l22)
+register(QUERIES, ORACLE, "l22_stratified_sample", _l22)
 
 
 # ---------------------------------------------------------------------------
@@ -923,7 +862,7 @@ def _l23_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_frames,
     )
 
-    _materialize_inputs(spark, sf_dir)
+    relations(spark, sf_dir, ["documents"])
     media = documents_as_media(spark.table("documents"))
     return sample_frames(media, every_n=4).selectExpr(
         "media_id",
@@ -981,7 +920,7 @@ SELECT doc_id,
 FROM (SELECT doc_id, {planted} AS t FROM documents) corpus"""
 
 
-_register("l24_pii_scrub", _l24)
+register(QUERIES, ORACLE, "l24_pii_scrub", _l24)
 
 
 # ---------------------------------------------------------------------------
@@ -1014,7 +953,7 @@ WHERE dd.doc_id % 97 <> 0
 GROUP BY dd.source"""
 
 
-_register("l25_decontaminate", _l25, uses=("l4_shingles",))
+register(QUERIES, ORACLE, "l25_decontaminate", _l25)
 
 
 # ---------------------------------------------------------------------------
@@ -1048,7 +987,7 @@ SELECT doc_id, max_freq, n_words, n_distinct,
 FROM agg"""
 
 
-_register("l26_repetition_filter", _l26)
+register(QUERIES, ORACLE, "l26_repetition_filter", _l26)
 
 
 # ---------------------------------------------------------------------------
@@ -1089,7 +1028,7 @@ def _l27_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["l27_dedup_keep_list"] = _l27_run
-ORACLE["l27_dedup_keep_list"] = _oracle(f"""
+ORACLE["l27_dedup_keep_list"] = duck_pipeline_sql(f"""
 WITH RECURSIVE {_L16_WALK},
 groups AS (SELECT doc AS doc_id, MIN(lab) AS group_id FROM walk GROUP BY doc)
 SELECT d.source, COUNT(*) AS n_docs,
@@ -1098,7 +1037,7 @@ SELECT d.source, COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN g.group_id <> d.doc_id THEN 1 ELSE 0 END) AS BIGINT)
            AS n_dropped
 FROM documents d JOIN groups g ON g.doc_id = d.doc_id
-GROUP BY d.source""", _L16_USES)
+GROUP BY d.source""")
 
 
 # ---------------------------------------------------------------------------
@@ -1167,7 +1106,7 @@ SELECT source, n_docs, n_tokens,
 FROM solved"""
 
 
-_register("l28_source_mixture", _l28)
+register(QUERIES, ORACLE, "l28_source_mixture", _l28)
 
 # ---------------------------------------------------------------------------
 # L29 semantic dedup (SemDeDup-style): cluster embeddings with the SAME
@@ -1187,10 +1126,9 @@ _L29_TAU = 0.35
 # means the dedup query below touches the embeddings corpus zero times (it
 # references the index three times — both pair sides + the verdict;
 # inlined, that would have been three corpus scans)
-_index("l29_index", lambda d: """
+relation("l29_index", cached=True)(lambda d: """
   SELECT a.vec_id, a.bucket, e.embedding
-  FROM l9_assign a JOIN embeddings e ON e.vec_id = a.vec_id""",
-       uses=("l9_assign",))
+  FROM l9_assign a JOIN embeddings e ON e.vec_id = a.vec_id""")
 
 
 def _l29(d) -> str:
@@ -1210,7 +1148,7 @@ LEFT JOIN pairs p ON p.dup_id = e.vec_id
 GROUP BY e.vec_id, e.bucket"""
 
 
-_register("l29_semantic_dedup", _l29, uses=("l29_index",))
+register(QUERIES, ORACLE, "l29_semantic_dedup", _l29)
 
 
 # ---------------------------------------------------------------------------
@@ -1253,7 +1191,7 @@ def _l30_win_sql(d) -> str:
 # token count, exact because starts is 1..n-k+1), keeping the whole query
 # at ONE corpus scan. On a cluster this is the persisted span index a
 # dedup sweep would build anyway.
-_index("l30_win", _l30_win_sql)
+relation("l30_win", cached=True)(_l30_win_sql)
 
 
 def _l30(d) -> str:
@@ -1277,7 +1215,7 @@ SELECT p.doc_id, CAST(p.n_tokens AS BIGINT) AS n_tokens,
 FROM per_doc p LEFT JOIN cov_agg c ON c.doc_id = p.doc_id"""
 
 
-_register("l30_dup_span_fraction", _l30, uses=("l30_win",))
+register(QUERIES, ORACLE, "l30_dup_span_fraction", _l30)
 
 
 # ---------------------------------------------------------------------------
@@ -1335,7 +1273,7 @@ LEFT JOIN sizes na ON na.doc_id = c.doc_a
 LEFT JOIN sizes nb ON nb.doc_id = c.doc_b"""
 
 
-_register("l31_candidate_verify", _l31, uses=("l4_shingles", "l6_cands"))
+register(QUERIES, ORACLE, "l31_candidate_verify", _l31)
 
 
 # ---------------------------------------------------------------------------
@@ -1365,7 +1303,7 @@ SELECT vocab_rank, word, CAST(c AS BIGINT) AS freq,
 FROM ranked WHERE vocab_rank <= 100"""
 
 
-_register("l32_vocab_coverage", _l32)
+register(QUERIES, ORACLE, "l32_vocab_coverage", _l32)
 
 
 # ---------------------------------------------------------------------------
@@ -1390,7 +1328,7 @@ FROM {_docw(d, 2)}
 {d.explode_ne(starts, 'i')}"""
 
 
-_index("l33_bg", _l33_bg_sql)
+relation("l33_bg", cached=True)(_l33_bg_sql)
 
 
 def _l33(d) -> str:
@@ -1417,7 +1355,7 @@ SELECT doc_id, n_bigrams,
 FROM scored"""
 
 
-_register("l33_lm_quality_score", _l33, uses=("l33_bg",))
+register(QUERIES, ORACLE, "l33_lm_quality_score", _l33)
 
 
 # ---------------------------------------------------------------------------
@@ -1434,10 +1372,9 @@ _register("l33_lm_quality_score", _l33, uses=("l33_bg",))
 # inlined, each reference re-runs the doc→source attach over the corpus —
 # as an index over l4's shingles the whole query pays a single documents
 # scan at build time
-_index("l34_src_sh", lambda d: """
+relation("l34_src_sh", cached=True)(lambda d: """
   SELECT DISTINCT d.source, s.shingle
-  FROM l4_shingles s JOIN documents d ON d.doc_id = s.doc_id""",
-       uses=("l4_shingles",))
+  FROM l4_shingles s JOIN documents d ON d.doc_id = s.doc_id""")
 
 
 def _l34(d) -> str:
@@ -1458,7 +1395,7 @@ JOIN tot ta ON ta.source = p.source_a
 JOIN tot tb ON tb.source = p.source_b"""
 
 
-_register("l34_source_overlap", _l34, uses=("l34_src_sh",))
+register(QUERIES, ORACLE, "l34_source_overlap", _l34)
 
 
 # ---------------------------------------------------------------------------
@@ -1500,7 +1437,7 @@ LEFT JOIN best b ON b.doc_id = d.doc_id AND b.rn = 1
 WHERE d.doc_id % 10 = 0"""
 
 
-_register("l35_incremental_dedup", _l35, uses=("mh_sigs",))
+register(QUERIES, ORACLE, "l35_incremental_dedup", _l35)
 
 
 # ---------------------------------------------------------------------------
@@ -1542,7 +1479,7 @@ SELECT doc_id, source, n_tokens,
 FROM cursor"""
 
 
-_register("l36_sequence_packing", _l36)
+register(QUERIES, ORACLE, "l36_sequence_packing", _l36)
 
 
 # ---------------------------------------------------------------------------
@@ -1612,7 +1549,7 @@ enc AS (
 # enc (every vector's per-subspace code assignment — the PQ INDEX a
 # deployment persists) is the expensive CTE and feeds the ADC join;
 # inlined it recomputes the codebook rank per reference/run
-_index("l37_enc", _l37_enc)
+relation("l37_enc", cached=True)(_l37_enc)
 
 
 def _l37(d) -> str:
@@ -1651,4 +1588,4 @@ SELECT q_id, cand_id, cosine, rank FROM (
 ) x WHERE rank <= 10"""
 
 
-_register("l37_pq_ann", _l37, uses=("l37_enc",))
+register(QUERIES, ORACLE, "l37_pq_ann", _l37)

@@ -24,7 +24,9 @@ from zg_etl_spark.functions.expr_compiler import (
 from zg_etl_spark.operators import registries as R
 from zg_etl_spark.operators.domain import (
     duck_pipeline_sql,
-    ensure_pipeline_views,
+    register,
+    relation,
+    relations,
     spark_pipeline_df,
 )
 from zg_etl_spark.plans.common import scratch_run
@@ -32,14 +34,6 @@ from zg_etl_spark.session import materialize
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-
-def _register(name: str, body_fn):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return spark_pipeline_df(spark, sf_dir, body_fn(SPARK))
-
-    QUERIES[name] = run
-    ORACLE[name] = duck_pipeline_sql(body_fn(DUCK))
 
 
 # ---------------------------------------------------------------------------
@@ -52,7 +46,7 @@ SELECT event_id, app_id, ak, owner, pl, pl_id, sdk, dt, did, cuid, event_name,
 FROM enveloped"""
 
 
-_register("p0_envelope", _p0)
+register(QUERIES, ORACLE, "p0_envelope", _p0)
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +58,7 @@ SELECT app_id, error_code, COUNT(*) AS n, COUNT(DISTINCT did) AS n_devices
 FROM gated GROUP BY app_id, error_code"""
 
 
-_register("p1_gate_errors", _p1)
+register(QUERIES, ORACLE, "p1_gate_errors", _p1)
 
 
 # ---------------------------------------------------------------------------
@@ -82,7 +76,7 @@ LEFT JOIN (SELECT app_id, COUNT(*) AS n_users, MIN(zg_uid) AS min_zg_uid,
            FROM uid_ids GROUP BY app_id) u ON u.app_id = d.app_id"""
 
 
-_register("p2_identity_mappings", _p2)
+register(QUERIES, ORACLE, "p2_identity_mappings", _p2)
 
 
 # ---------------------------------------------------------------------------
@@ -128,7 +122,7 @@ LEFT JOIN (SELECT app_id, bound_cuid, COUNT(DISTINCT zg_id) AS zgids_per_cuid
 GROUP BY z.app_id"""
 
 
-_register("p3_zgid_binding", _p3)
+register(QUERIES, ORACLE, "p3_zgid_binding", _p3)
 
 
 # ---------------------------------------------------------------------------
@@ -144,7 +138,7 @@ FROM event_dict_eff e
 JOIN attr_dict a ON a.zg_eid = e.zg_eid AND a.owner = e.owner"""
 
 
-_register("p4_dictionaries", _p4)
+register(QUERIES, ORACLE, "p4_dictionaries", _p4)
 
 
 # ---------------------------------------------------------------------------
@@ -230,7 +224,7 @@ SELECT event_id, app_id, dt, event_type,
 FROM resolved WHERE dt IN ('evt', 'abp', 'usr')"""
 
 
-_register("p5_virtual_attrs", _p5)
+register(QUERIES, ORACLE, "p5_virtual_attrs", _p5)
 
 
 # ---------------------------------------------------------------------------
@@ -269,7 +263,7 @@ GROUP BY app_id, virtual_name, virtual_alias, event_owner,
          event_name_src, event_dt_src"""
 
 
-_register("p6_virtual_events", _p6)
+register(QUERIES, ORACLE, "p6_virtual_events", _p6)
 
 
 # ---------------------------------------------------------------------------
@@ -345,7 +339,7 @@ FROM (
 ) x"""
 
 
-_register("p7_enrichment", _p7)
+register(QUERIES, ORACLE, "p7_enrichment", _p7)
 
 
 # ---------------------------------------------------------------------------
@@ -539,7 +533,7 @@ LEFT JOIN attr_map am ON am.zg_eid = e.zg_eid AND am.owner = e.owner_e
 LEFT JOIN ip_ranges g ON e.ip_long BETWEEN g.ip_lo AND g.ip_hi"""
 
 
-_register("p8_wide_table", _p8)
+register(QUERIES, ORACLE, "p8_wide_table", _p8)
 
 
 # ---------------------------------------------------------------------------
@@ -569,13 +563,14 @@ FROM (
 ) y WHERE rn = 1"""
 
 
-_register("p9_user_properties", _p9)
+register(QUERIES, ORACLE, "p9_user_properties", _p9)
 
 
 # ---------------------------------------------------------------------------
 # P10 upsert grain: b_user — UNIQUE KEY(device_id, zg_id) keep-latest
 # (schema.sql:1-24; MERGE-on-write emulated as row_number dedup)
 # ---------------------------------------------------------------------------
+@relation("b_user_rows", cached=True)
 def b_user_rows_sql(d: Dialect) -> str:
     """The b_user row grain (UserTransfer.java:38-90 + schema.sql:1-24):
     NUMERIC zg_did/zg_uid ids (the table's BIGINT device_id/user_id
@@ -594,8 +589,7 @@ FROM resolved WHERE abs(tzoff) <= 172800000"""
 def b_user_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The b_user rows of sf_dir: one registry entry that every b_user
     writer (w1/w6/w7/s8) reads."""
-    return materialize(spark, sf_dir, "b_user_rows", lambda: spark_pipeline_df(
-        spark, sf_dir, b_user_rows_sql(SPARK)))
+    return relations(spark, sf_dir, ["b_user_rows"])["b_user_rows"]
 
 
 # The b_user sink contract: UNIQUE KEY(app_id, device_id, zg_id)
@@ -629,7 +623,7 @@ FROM (
 ) x WHERE rn = 1"""
 
 
-_register("p10_b_user_upsert", _p10)
+register(QUERIES, ORACLE, "p10_b_user_upsert", _p10)
 
 
 # ---------------------------------------------------------------------------
@@ -685,7 +679,7 @@ FROM (
 ) x WHERE rn = 1"""
 
 
-_register("p11_b_device_upsert", _p11)
+register(QUERIES, ORACLE, "p11_b_device_upsert", _p11)
 
 
 # ---------------------------------------------------------------------------
@@ -713,7 +707,7 @@ SELECT archive_type, app_id, map_key, map_id FROM (
 ) u"""
 
 
-_register("p12_id_archive", _p12)
+register(QUERIES, ORACLE, "p12_id_archive", _p12)
 
 
 # ---------------------------------------------------------------------------
@@ -736,7 +730,7 @@ WHERE dt IN ('evt', 'abp', 'mkt')
 GROUP BY app_id, zg_id"""
 
 
-_register("p13_user_visit_stats", _p13)
+register(QUERIES, ORACLE, "p13_user_visit_stats", _p13)
 
 
 # ---------------------------------------------------------------------------
@@ -757,7 +751,7 @@ FROM (
 ) x WHERE rn = 1"""
 
 
-_register("p14_first_touch", _p14)
+register(QUERIES, ORACLE, "p14_first_touch", _p14)
 
 
 # ---------------------------------------------------------------------------
@@ -806,7 +800,7 @@ JOIN cohort c ON c.app_id = a.app_id AND c.zg_id = a.zg_id
 GROUP BY a.app_id, c.d0, a.day_num - c.d0"""
 
 
-_register("p15_retention_cohort", _p15)
+register(QUERIES, ORACLE, "p15_retention_cohort", _p15)
 
 
 # ---------------------------------------------------------------------------
@@ -891,7 +885,7 @@ LEFT JOIN s3 ON s3.app_id = s1.app_id AND s3.zg_id = s1.zg_id
 GROUP BY s1.app_id"""
 
 
-_register("p16_funnel", _p16)
+register(QUERIES, ORACLE, "p16_funnel", _p16)
 
 
 # ---------------------------------------------------------------------------
@@ -922,7 +916,7 @@ FROM (
 ) x WHERE rn = 1"""
 
 
-_register("p17_user_prop_dict", _p17)
+register(QUERIES, ORACLE, "p17_user_prop_dict", _p17)
 
 
 # ---------------------------------------------------------------------------
@@ -941,7 +935,7 @@ FROM (
 ) x WHERE rn = 1"""
 
 
-_register("p18_device_props", _p18)
+register(QUERIES, ORACLE, "p18_device_props", _p18)
 
 
 # ---------------------------------------------------------------------------
@@ -958,7 +952,7 @@ JOIN event_dict dct ON dct.app_id = e.app_id AND dct.owner = e.owner_e
 GROUP BY dct.zg_eid, dct.event_name"""
 
 
-_register("p19_event_highwater", _p19)
+register(QUERIES, ORACLE, "p19_event_highwater", _p19)
 
 
 # ---------------------------------------------------------------------------
@@ -1136,7 +1130,7 @@ SELECT 'b_user_property',
 FROM resolved WHERE dt = 'usr'"""
 
 
-_register("p21_sink_counts", _p21)
+register(QUERIES, ORACLE, "p21_sink_counts", _p21)
 
 
 # ---------------------------------------------------------------------------
@@ -1194,7 +1188,7 @@ def _p22_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["p22_session_attribution"] = _p22_run
 ORACLE["p22_session_attribution"] = duck_pipeline_sql(f"""
-, p22_sess AS ({_P22_SESSIONS}),
+WITH p22_sess AS ({_P22_SESSIONS}),
 p22_err AS ({_P22_ERRORS})
 SELECT e.app_id, e.zg_did, e.err_event_id, e.err_ct, e.error_code, e.debug,
        s.session_start, s.session_end, s.win_lo, s.win_hi
@@ -1256,7 +1250,7 @@ LEFT JOIN p23_claims c
   ON c.app_id = s.ad_app_id AND c.click_id = s.ad_click_id"""
 
 
-_register("p23_ad_conversion", _p23)
+register(QUERIES, ORACLE, "p23_ad_conversion", _p23)
 
 
 # ---------------------------------------------------------------------------
@@ -1277,7 +1271,7 @@ FROM (
 GROUP BY app_id, pl"""
 
 
-_register("p24_app_first_seen", _p24)
+register(QUERIES, ORACLE, "p24_app_first_seen", _p24)
 
 
 # ---------------------------------------------------------------------------
@@ -1338,7 +1332,7 @@ FROM (
 GROUP BY GROUPING SETS ((app_id, hour_b), (app_id, day_b), (app_id, week_b))"""
 
 
-_register("p25_time_rollup", _p25)
+register(QUERIES, ORACLE, "p25_time_rollup", _p25)
 
 
 # ---------------------------------------------------------------------------
@@ -1381,7 +1375,7 @@ FROM gate_ok GROUP BY app_id, {SPARK.idiv('ct', '86400000')}""",
 
 QUERIES["w4_partition_overwrite"] = _w4_run
 ORACLE["w4_partition_overwrite"] = duck_pipeline_sql(f"""
-, w4_days AS ({_W4_DAYS}),
+WITH w4_days AS ({_W4_DAYS}),
 w4_latest AS (SELECT MAX(day_id) AS m FROM w4_days)
 SELECT app_id, day_id,
        CASE WHEN day_id = (SELECT m FROM w4_latest) THEN n * 2 ELSE n END AS n
@@ -1407,7 +1401,7 @@ FROM gated WHERE error_code <> 0
 GROUP BY app_id, error_code, event_name, sdk, pl"""
 
 
-_register("p26_error_details", _p26)
+register(QUERIES, ORACLE, "p26_error_details", _p26)
 
 
 # ---------------------------------------------------------------------------
@@ -1448,7 +1442,7 @@ FROM resolved
 GROUP BY app_id, zg_id"""
 
 
-_register("p27_user_profile", _p27)
+register(QUERIES, ORACLE, "p27_user_profile", _p27)
 
 
 # ---------------------------------------------------------------------------
@@ -1464,7 +1458,7 @@ SELECT ak, business, error_code, COUNT(*) AS n
 FROM gated GROUP BY ak, business, error_code"""
 
 
-_register("p28_gate_business", _p28)
+register(QUERIES, ORACLE, "p28_gate_business", _p28)
 
 
 # ---------------------------------------------------------------------------
@@ -1481,7 +1475,7 @@ SELECT app_id, event_error_code, COUNT(*) AS n,
 FROM events_dicted GROUP BY app_id, event_error_code"""
 
 
-_register("p29_event_resolution", _p29)
+register(QUERIES, ORACLE, "p29_event_resolution", _p29)
 
 
 # ---------------------------------------------------------------------------
@@ -1506,7 +1500,7 @@ FROM (
 GROUP BY search_engine, keyword"""
 
 
-_register("p30_search_keywords", _p30)
+register(QUERIES, ORACLE, "p30_search_keywords", _p30)
 
 
 # ---------------------------------------------------------------------------
@@ -1575,7 +1569,7 @@ WHERE conv_rank = 1 OR frequency = 1
 GROUP BY app_id, event_name, lid, frequency, utm_source_adv"""
 
 
-_register("p31_adv_attribution", _p31)
+register(QUERIES, ORACLE, "p31_adv_attribution", _p31)
 
 
 # ---------------------------------------------------------------------------
@@ -1611,7 +1605,7 @@ FROM (
 GROUP BY dt, app_id"""
 
 
-_register("p32_synthesized_records", _p32)
+register(QUERIES, ORACLE, "p32_synthesized_records", _p32)
 
 
 # ---------------------------------------------------------------------------
@@ -1643,7 +1637,7 @@ FROM (
 GROUP BY os_family, os_version, browser, browser_major, device_type, brand"""
 
 
-_register("p33_ua_parse", _p33)
+register(QUERIES, ORACLE, "p33_ua_parse", _p33)
 
 
 # ---------------------------------------------------------------------------
@@ -1679,7 +1673,7 @@ FROM (
 GROUP BY zg_id, day_id, period, yearweek, yearmonth, platform"""
 
 
-_register("p34_user_duration", _p34)
+register(QUERIES, ORACLE, "p34_user_duration", _p34)
 
 
 # ---------------------------------------------------------------------------
@@ -1699,7 +1693,7 @@ FROM device_zgid
 GROUP BY app_id, zg_id"""
 
 
-_register("p35_user_anonymous", _p35)
+register(QUERIES, ORACLE, "p35_user_anonymous", _p35)
 
 
 # ---------------------------------------------------------------------------
@@ -1717,7 +1711,7 @@ FROM events_dicted WHERE event_error_code = 0
 GROUP BY zg_eid, pl_id"""
 
 
-_register("p36_event_platforms", _p36)
+register(QUERIES, ORACLE, "p36_event_platforms", _p36)
 
 
 # ---------------------------------------------------------------------------
@@ -1740,7 +1734,7 @@ WHERE dt IN ('evt', 'abp') AND event_name IS NOT NULL
 GROUP BY app_id, zg_id, {day_id}, event_name"""
 
 
-_register("p37_user_detail_sum", _p37)
+register(QUERIES, ORACLE, "p37_user_detail_sum", _p37)
 
 
 # ---------------------------------------------------------------------------
@@ -1786,7 +1780,7 @@ FROM (
 ) g"""
 
 
-_register("p38_adv_user_sources", _p38)
+register(QUERIES, ORACLE, "p38_adv_user_sources", _p38)
 
 
 # ---------------------------------------------------------------------------
@@ -1862,7 +1856,7 @@ FROM (
 GROUP BY channel_type, channel_name, lid"""
 
 
-_register("p41_adv_channel_props", _p41)
+register(QUERIES, ORACLE, "p41_adv_channel_props", _p41)
 
 
 # ---------------------------------------------------------------------------
@@ -1922,26 +1916,21 @@ SELECT r.app_id, r.dt, r.did, r.ip, r.k, r.ct, r.seq, r.zg_id, r.pl,
     FROM resolved r WHERE r.app_id IN ({apps}) AND r.dt IN ('mkt', 'ss')""")
 
 
-def _adv_ua_sql() -> str:
-    """The UA-parsed advertising-apps index (Spark): every resolved row of
+# A cached relation, so the ua_real regex parse runs once per session and
+# sf_dir for p42, p52 and the p54 family; only their Spark runners read
+# it (their oracles inline their own keyed slices)
+@relation("adv_ua", cached=True)
+def _adv_ua_sql(d: Dialect) -> str:
+    """The UA-parsed advertising-apps index: every resolved row of
     ADVERTISING_APPS, carrying both did (p42's exact key) and user_id
     (p52's probe ids), UA parsed once."""
     from zg_etl_spark.operators.domain import ua_real_case
 
     apps = ", ".join(str(a) for a in R.ADVERTISING_APPS)
     return _ua_parsed_sql(
-        SPARK, "app_id, dt, did, user_id, ip, k, ct, seq, zg_id, pl",
-        f"SELECT r.*, {ua_real_case(SPARK, 'r.')} AS ua_real "
+        d, "app_id, dt, did, user_id, ip, k, ct, seq, zg_id, pl",
+        f"SELECT r.*, {ua_real_case(d, 'r.')} AS ua_real "
         f"FROM resolved r WHERE r.app_id IN ({apps})")
-
-
-def _adv_ua_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the UA-parsed advertising-apps index (a registry entry,
-    so the ua_real regex parse runs once per session and sf_dir for p42,
-    p52 and the p54 family) and return its view name."""
-    ensure_pipeline_views(spark, sf_dir)
-    materialize(spark, sf_dir, "adv_ua", lambda: spark.sql(_adv_ua_sql()))
-    return "adv_ua"
 
 
 def _p42_body(d: Dialect, keyed: str) -> str:
@@ -2006,9 +1995,8 @@ GROUP BY match_tier, lid"""
 
 def _p42_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The body over the mkt/ss rows of the shared UA-parsed index."""
-    keyed = (f"(SELECT * FROM {_adv_ua_index(spark, sf_dir)} "
-             "WHERE dt IN ('mkt', 'ss')) keyed")
-    return spark.sql("WITH " + _p42_body(SPARK, keyed))
+    keyed = "(SELECT * FROM adv_ua WHERE dt IN ('mkt', 'ss')) keyed"
+    return spark_pipeline_df(spark, sf_dir, "WITH " + _p42_body(SPARK, keyed))
 
 
 QUERIES["p42_adv_click_match"] = _p42_run
@@ -2057,7 +2045,7 @@ SELECT COUNT(*) AS n_evaluated,
 FROM resolved WHERE dt = 'evt'"""
 
 
-_register("p43_adv_match_json", _p43)
+register(QUERIES, ORACLE, "p43_adv_match_json", _p43)
 
 
 # ---------------------------------------------------------------------------
@@ -2153,7 +2141,7 @@ FROM (
 GROUP BY fmt"""
 
 
-_register("p44_apple_asa", _p44)
+register(QUERIES, ORACLE, "p44_apple_asa", _p44)
 
 
 # ---------------------------------------------------------------------------
@@ -2193,7 +2181,7 @@ FROM (
 GROUP BY keyword_source"""
 
 
-_register("p39_baidu_eqid", _p39)
+register(QUERIES, ORACLE, "p39_baidu_eqid", _p39)
 
 
 # ---------------------------------------------------------------------------
@@ -2450,6 +2438,7 @@ GROUP BY {DUCK.idiv('ct', '86400000')}""")
 # touched app partitions are read and rewritten (plan-pinned in
 # tests/test_decode_sinks.py).
 # ---------------------------------------------------------------------------
+@relation("b_device_obs", cached=True)
 def b_device_obs_sql(d: Dialect) -> str:
     # the b_device column subset the partial mode exercises
     # (schema.sql:26-66 grain; values per DeviceTransfer.java:30-146)
@@ -2466,8 +2455,7 @@ FROM resolved WHERE dt = 'pl'"""
 def b_device_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The b_device observations of sf_dir: one registry entry that both
     partial-column writers (w9/s9) read."""
-    return materialize(spark, sf_dir, "b_device_obs", lambda: spark_pipeline_df(
-        spark, sf_dir, b_device_obs_sql(SPARK)))
+    return relations(spark, sf_dir, ["b_device_obs"])["b_device_obs"]
 
 
 # The b_device partial-column sink contract: UNIQUE KEY(app_id,
@@ -2743,7 +2731,7 @@ FROM (
 ) t"""
 
 
-_register("p45_device_classify", _p45)
+register(QUERIES, ORACLE, "p45_device_classify", _p45)
 
 
 # ---------------------------------------------------------------------------
@@ -2903,7 +2891,7 @@ LEFT JOIN (SELECT CAST(user_id % {n} AS INT) AS ecid, COUNT(*) AS n_events
            FROM events GROUP BY user_id % {n}) ev ON ev.ecid = x.cid"""
 
 
-_register("p46_dims_mapping", _p46)
+register(QUERIES, ORACLE, "p46_dims_mapping", _p46)
 
 
 # ---------------------------------------------------------------------------
@@ -3137,7 +3125,7 @@ def _p47_parsed(d: Dialect, payload: str) -> str:
     ) r"""
 
 
-_register("p47_adv_cdc_route", _p47)
+register(QUERIES, ORACLE, "p47_adv_cdc_route", _p47)
 
 
 # ---------------------------------------------------------------------------
@@ -3309,7 +3297,7 @@ FROM (
 GROUP BY cid, lane"""
 
 
-_register("p48_adv_click_keys", _p48)
+register(QUERIES, ORACLE, "p48_adv_click_keys", _p48)
 
 
 # ---------------------------------------------------------------------------
@@ -3464,7 +3452,7 @@ def _p49(d: Dialect) -> str:
     return p49_final_sql(d, gated)
 
 
-_register("p49_adv_deep_convert", _p49)
+register(QUERIES, ORACLE, "p49_adv_deep_convert", _p49)
 
 
 # ---------------------------------------------------------------------------
@@ -3553,7 +3541,7 @@ FROM ustate u
 LEFT JOIN uprop p ON p.app_id = u.app_id AND p.zg_id = u.zg_id"""
 
 
-_register("p50_match_json_userprop", _p50)
+register(QUERIES, ORACLE, "p50_match_json_userprop", _p50)
 
 
 # ---------------------------------------------------------------------------
@@ -3716,7 +3704,7 @@ FROM (
 GROUP BY cid, lane"""
 
 
-_register("p51_web_ad_lane", _p51)
+register(QUERIES, ORACLE, "p51_web_ad_lane", _p51)
 
 
 # ---------------------------------------------------------------------------
@@ -3821,14 +3809,14 @@ SELECT r.app_id, r.dt, r.user_id, r.ip, r.k, r.ct, r.seq, r.zg_id,
          AS f(app_id, dt, user_id, ip, k, ct, seq, zg_id, pl, ua_real)""")
 
 
-def p52_keyed_src(spark: SparkSession, sf_dir: str) -> str:
+def p52_keyed_src() -> str:
     """p52_keyed_sql's rows on Spark, as a FROM item: the shared UA-parsed
     index UNION ALL the parsed P52_FIXTURES rows."""
     fixtures = (f"SELECT * FROM {R.values_sql(P52_FIXTURES)} "
                 f"AS f({_P52_COLS}, ua_real)")
     return f"""(
   SELECT {_P52_COLS}, ua_name, ua_ver, ua_iphone
-  FROM {_adv_ua_index(spark, sf_dir)}
+  FROM adv_ua
   UNION ALL{_ua_parsed_sql(SPARK, _P52_COLS, fixtures)}
 ) keyed"""
 
@@ -3974,7 +3962,7 @@ GROUP BY match_tier, lid"""
 
 
 def _p52_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_p52(SPARK, keyed_src=p52_keyed_src(spark, sf_dir)))
+    return spark_pipeline_df(spark, sf_dir, _p52(SPARK, keyed_src=p52_keyed_src()))
 
 
 QUERIES["p52_adv_ss_priority"] = _p52_run
@@ -4229,7 +4217,7 @@ FROM (
 GROUP BY cid, lane"""
 
 
-_register("p53_ipv6_geo", _p53)
+register(QUERIES, ORACLE, "p53_ipv6_geo", _p53)
 
 
 # ---------------------------------------------------------------------------
@@ -4325,7 +4313,7 @@ FROM (
 GROUP BY app_id, pid, lane"""
 
 
-_register("p55_tencent_web_match", _p55)
+register(QUERIES, ORACLE, "p55_tencent_web_match", _p55)
 
 
 # ---------------------------------------------------------------------------
@@ -4371,7 +4359,7 @@ FROM steps
 GROUP BY app_id, from_event, COALESCE(to_event, '(exit)')"""
 
 
-_register("p56_event_paths", _p56)
+register(QUERIES, ORACLE, "p56_event_paths", _p56)
 
 
 # ---------------------------------------------------------------------------

@@ -227,7 +227,7 @@ ORACLE["s1_streaming_identity"] = duck_pipeline_sql(
 _SESSION_GAP_MS = 3_600_000  # 1 hour
 
 _S2_ORACLE_BODY = f"""
-, sess_events AS (
+WITH sess_events AS (
   SELECT app_id, zg_did, ct FROM resolved
 ),
 marked AS (
@@ -330,7 +330,7 @@ def _s3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["s3_streaming_counts"] = _s3
 ORACLE["s3_streaming_counts"] = duck_pipeline_sql(f"""
-, s3_feed AS (SELECT app_id, event_type, ct FROM gate_ok),
+WITH s3_feed AS (SELECT app_id, event_type, ct FROM gate_ok),
 s3_mx AS (SELECT MAX(ct) AS max_ct FROM s3_feed)
 SELECT (ct // {_S3_WINDOW_MS}) * {_S3_WINDOW_MS} AS win_start,
        app_id, event_type, COUNT(*) AS n

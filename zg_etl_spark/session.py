@@ -113,6 +113,14 @@ def materialize(
     return value
 
 
+def entries(spark: SparkSession, sf_dir: str | None) -> dict[str, Any]:
+    """The live entries of ``sf_dir`` in this session (name -> value)."""
+    app = session_key(spark)
+    with _LOCK:
+        return {k[2]: v[0] for k, v in _ENTRIES.items()
+                if k[0] == app and k[1] == sf_dir}
+
+
 def _release_all() -> None:
     while _ENTRIES:
         value, drop = _ENTRIES.popitem()[1]
