@@ -13,7 +13,7 @@ from zg_etl_spark import plans
 def test_correctness_window_composition():
     """The driver verifies exactly the FIRST 50 of all_queries(). Pin the
     round-13 composition: the queries whose materialization path the
-    session registry rewrote (p42/p52/p54/p54c/p54d, w2, l16/l27) first,
+    session registry rewrote (p42/p52/p54/p54c/p54d/p55, w2, l16/l27) first,
     then l6/l31/l37 (rewritten after their last driver row), then the
     l-queries whose oracle now inlines the engine's index declaration
     (l11/l19/l25/l29/l33/l34/l35) and p43/p50 (anchored parseLong gate),
@@ -28,7 +28,7 @@ def test_correctness_window_composition():
                                          35, 37)]
     want_prefixes += [f"p{i}_" for i in (1, 2, 5, 7, 8, 9, 27, 28, 30, 31,
                                          32, 33, 35, 39, 42, 43, 50, 51,
-                                         52)]
+                                         52, 55)]
     want_prefixes += [f"s{i}_" for i in (5, 7, 8)]
     for prefix in want_prefixes:
         assert any(q.startswith(prefix) for q in first50), (
@@ -86,14 +86,13 @@ def test_driver_window_is_the_planned_rotation():
     must_have = [
         "p42_adv_click_match", "p52_adv_ss_priority",
         "p54_click_consumption", "p54c_candidates", "p54d_replay_rollup",
-        "w2_bucketed_join", "l16_dedup_groups", "l27_dedup_keep_list",
+        "p55_tencent_web_match", "w2_bucketed_join", "l16_dedup_groups", "l27_dedup_keep_list",
         "l6_lsh_candidates", "l31_candidate_verify", "l37_pq_ann",
         "l11_embedding_neardup", "l19_tfidf_terms", "l25_decontaminate",
         "l29_semantic_dedup", "l33_lm_quality_score", "l34_source_overlap",
         "l35_incremental_dedup", "p43_adv_match_json",
         "p50_match_json_userprop", "l5_minhash_signatures", "l9_ann_ivf", "s7_stream_stream_join",
         "p8_wide_table", "p7_enrichment", "p5_virtual_attrs",
-        "q1_pricing_summary",
     ]
     for name in must_have:
         assert name in first50, f"{name} missing from the driver window"

@@ -10,7 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from zg_etl_spark.operators.decode import register_decryptor, resolve_wire
+from zg_etl_spark.operators.decode import resolve_wire
 from zg_etl_spark.sinks import (
     export_stream_load_csv,
     keep_latest,
@@ -51,7 +51,7 @@ def test_resolve_plain_and_compressed(spark):
 
 def test_resolve_with_plugged_decryptor(spark):
     # XOR "cipher" stands in for the RSA/AES path: proves the plug point
-    register_decryptor(1, lambda raw, key: bytes(b ^ 0x5A for b in raw))
+    xor = {1: lambda raw, key: bytes(b ^ 0x5A for b in raw)}
     payload = {"ak": "ak_2"}
     ct = bytes(b ^ 0x5A for b in json.dumps(payload).encode())
     wire = json.dumps(
@@ -59,7 +59,8 @@ def test_resolve_with_plugged_decryptor(spark):
          "Args": {"event": ct.hex(), "compress": 0,
                   "encrypt": 1, "type": 1, "key": "k"}}
     )
-    out = resolve_wire(spark.createDataFrame([(wire,)], "raw STRING")).collect()
+    out = resolve_wire(spark.createDataFrame([(wire,)], "raw STRING"),
+                       decryptors=xor).collect()
     assert out[0].result == 0
     assert json.loads(out[0].payload) == payload
 
@@ -189,7 +190,7 @@ def test_resolve_with_real_aes(spark):
     from zg_etl_spark.operators.decode import aes_cbc_decryptor
 
     secret, iv = "0123456789abcdef", "fedcba9876543210"
-    register_decryptor(1, aes_cbc_decryptor(lambda wire_key: (secret, iv)))
+    aes = {1: aes_cbc_decryptor(lambda wire_key: (secret, iv))}
     payload = json.dumps({"ak": "ak_1", "data": [{"dt": "evt"}]}).encode()
 
     cases = [
@@ -208,7 +209,8 @@ def test_resolve_with_real_aes(spark):
                      "compress": c["compress"], "encrypt": c["encrypt"],
                      "type": 1, "key": "enc_key_blob"},
         }),))
-    out = resolve_wire(spark.createDataFrame(rows, "raw string")).collect()
+    out = resolve_wire(spark.createDataFrame(rows, "raw string"),
+                       decryptors=aes).collect()
     assert all(r.result == 0 for r in out), out
     assert all(json.loads(r.payload) == json.loads(payload) for r in out)
 
@@ -225,7 +227,7 @@ def test_resolve_with_real_sm4(spark):
     from zg_etl_spark.operators.decode import sm4_ecb_decryptor
 
     key = b"0123456789abcdef"
-    register_decryptor(2, sm4_ecb_decryptor(lambda wire_key: key))
+    sm4 = {2: sm4_ecb_decryptor(lambda wire_key: key)}
     payload = json.dumps({"ak": "ak_2", "data": [{"dt": "usr"}]}).encode()
     pad = 16 - len(payload) % 16
     e = Cipher(algorithms.SM4(key), modes.ECB()).encryptor()
@@ -236,7 +238,8 @@ def test_resolve_with_real_sm4(spark):
         "Args": {"event": base64.b64encode(ct).decode(), "compress": 0,
                  "encrypt": 1, "type": 2, "key": "sm2_blob"},
     })
-    out = resolve_wire(spark.createDataFrame([(wire,)], "raw string")).collect()
+    out = resolve_wire(spark.createDataFrame([(wire,)], "raw string"),
+                       decryptors=sm4).collect()
     assert out[0].result == 0, out
     assert json.loads(out[0].payload) == json.loads(payload)
 
@@ -268,7 +271,7 @@ def test_tampered_ciphertext_is_error_row(spark):
     from zg_etl_spark.operators.decode import aes_cbc_decryptor
 
     secret, iv = "0123456789abcdef", "fedcba9876543210"
-    register_decryptor(1, aes_cbc_decryptor(lambda wire_key: (secret, iv)))
+    aes = {1: aes_cbc_decryptor(lambda wire_key: (secret, iv))}
     ct = _aes_encrypt(secret, iv, b'{"ak": "x"}')
     tampered = ct[:-1] + bytes([ct[-1] ^ 0xFF])
     wire = json.dumps({
@@ -276,7 +279,8 @@ def test_tampered_ciphertext_is_error_row(spark):
         "Args": {"event": tampered.hex(), "compress": 0,
                  "encrypt": 1, "type": 1, "key": "k"},
     })
-    out = resolve_wire(spark.createDataFrame([(wire,)], "raw string")).collect()
+    out = resolve_wire(spark.createDataFrame([(wire,)], "raw string"),
+                       decryptors=aes).collect()
     assert out[0].result == -1
 
 
@@ -551,18 +555,18 @@ def test_reference_demo_vectors_decode(spark):
 
     from zg_etl_spark.operators.decode import (
         aes_cbc_decryptor,
-        register_decryptor,
         resolve_wire,
         rsa_key_unwrapper,
     )
 
-    register_decryptor(1, aes_cbc_decryptor(rsa_key_unwrapper(priv)))
+    rsa_aes = {1: aes_cbc_decryptor(rsa_key_unwrapper(priv))}
     wire = json.dumps({
         "Ip": "1.2.3.4", "Now": 1642503583, "Header": "{}",
         "Args": json.dumps({"event": datas[0], "compress": 0,
                             "encrypt": 1, "type": 1, "key": keys[1]}),
     })
-    out = resolve_wire(spark.createDataFrame([(wire,)], "raw STRING")).collect()
+    out = resolve_wire(spark.createDataFrame([(wire,)], "raw STRING"),
+                       decryptors=rsa_aes).collect()
     assert out[0].result == 0, out
     payload = json.loads(out[0].payload)
     assert payload["ak"] == "eaac64f2a7684c418bffa47809756a05"
@@ -578,7 +582,8 @@ def test_reference_demo_vectors_decode(spark):
         "Args": json.dumps({"event": datas[1].rstrip("\\"), "compress": 0,
                             "encrypt": 1, "type": 1, "key": keys[2]}),
     })
-    out2 = resolve_wire(spark.createDataFrame([(wire_ecb,)], "raw STRING")).collect()
+    out2 = resolve_wire(spark.createDataFrame([(wire_ecb,)], "raw STRING"),
+                        decryptors=rsa_aes).collect()
     assert out2[0].result == -1
     # with the demo's manual empty-iv convention the same blob round-trips
     # through our ECB branch

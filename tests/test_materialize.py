@@ -106,14 +106,16 @@ def _count_builds(monkeypatch, name: str) -> list:
 
 
 def test_adv_ua_index_builds_once(spark, monkeypatch):
-    """p42, p52 and p54c all read the one UA-parsed index."""
+    """The ad-click lane (p42, p52, the p54 family and p55) reads the one
+    UA-parsed index."""
     builds = _count_builds(monkeypatch, "adv_ua")
     # start from an empty live set: any entry of another sf_dir releases
     # an index an earlier test left behind
     materialize(spark, SF_B, "reg_switch", lambda: 0)
     qs = plans.all_queries()
     for name in ("p42_adv_click_match", "p52_adv_ss_priority",
-                 "p54c_candidates"):
+                 "p54c_candidates", "p54_click_consumption",
+                 "p54d_replay_rollup", "p55_tencent_web_match"):
         qs[name](spark, SF_A).count()
     assert len(builds) == 1
 
@@ -154,6 +156,10 @@ def test_queries_build_only_what_they_read(spark, monkeypatch):
     assert "resolved" not in p1
     # p45 reads only the source table
     assert built_by("p45_device_classify") == {"events"}
+    # p55 reads the click records over the cached UA-parsed index, and
+    # p54c scans the candidates: their closure and nothing else
+    assert "adv_ua" in built_by("p55_tencent_web_match")
+    assert built_by("p54c_candidates") == set(domain.closure(SPARK, ["p54_cands"]))
     l2 = built_by("l2_lang_id")
     assert {"documents", "l2_words"} <= l2 and "embeddings" not in l2
 

@@ -136,11 +136,7 @@ def test_adv_click_match_ipver_tier(spark):
     'ipver'; the same rows on a non-iOS platform land 'none'; a
     NON-Baidu click with the identical UA stores 'iPhone:16.6' and is
     found by the full-UA probe as 'ipua'."""
-    from zg_etl_spark.operators.domain import SPARK
-    from zg_etl_spark.plans.pipeline import _p42_body, _p42_keyed_sql
-
-    def _p42(d):
-        return f"WITH keyed AS ({_p42_keyed_sql(d)}),\n{_p42_body(d, 'keyed')}"
+    from zg_etl_spark.operators.domain import BODIES, RELATIONS, SPARK, with_ctes
 
     rows = [
         # (app_id, dt, did, ip, k, ct, seq, zg_id, pl, user_id)
@@ -162,7 +158,10 @@ def test_adv_click_match_ipver_tier(spark):
         "app_id long, dt string, did string, ip string, k long, ct long, "
         "seq long, zg_id long, pl string, user_id long",
     ).createOrReplaceTempView("p42_resolved")
-    sql = _p42(SPARK).replace("FROM resolved r", "FROM p42_resolved r")
+    # the declarations p42 reads, rendered as CTEs over the rows above
+    sql = with_ctes([("adv_ua", RELATIONS["adv_ua"].sql(SPARK))],
+                    BODIES["p42_adv_click_match"](SPARK))
+    sql = sql.replace("FROM resolved r", "FROM p42_resolved r")
     got = {
         r["match_tier"]: (r["lid"], r["n_sessions"])
         for r in spark.sql(sql).collect()
@@ -171,32 +170,3 @@ def test_adv_click_match_ipver_tier(spark):
     assert got["ipua"] == (1, 1), got
     assert got["none"] == (None, 1), got
     assert "exact" not in got, got
-
-
-def test_p54_candidates_template_matches_engine(spark, sf_dir):
-    """The p54_candidates SQL template (the driver-hashable half of p54)
-    must emit EXACTLY the candidate relation the sequential replay
-    consumes — same sessions, keys, tiers, ranks (multiset equality).
-    With the driver's DuckDB hash row on p54_candidates and the global
-    sequential replay oracle in test_independent_oracles, this closes
-    p54's attestation chain: every input to the replay is value-checked."""
-    from pyspark.sql import functions as F
-
-    from zg_etl_spark.operators.domain import SPARK, spark_pipeline_df
-    from zg_etl_spark.plans.consume import _p54_relations, p54_candidates_sql
-
-    _, _, _, cands = _p54_relations(spark, sf_dir)
-    eng = cands.select(
-        "sess_seq", "sess_ct", "zg_id",
-        F.col("rank").cast("int").alias("cand_rank"),
-        F.col("key").alias("cand_key"), "tier",
-    )
-    tpl = spark_pipeline_df(spark, sf_dir, p54_candidates_sql(SPARK)).select(
-        "sess_seq", "sess_ct", "zg_id",
-        F.col("cand_rank").cast("int").alias("cand_rank"),
-        "cand_key", "tier",
-    )
-    n = eng.count()
-    assert n > 0 and n == tpl.count()
-    assert eng.exceptAll(tpl).count() == 0
-    assert tpl.exceptAll(eng).count() == 0

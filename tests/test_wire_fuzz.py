@@ -86,7 +86,6 @@ def test_garbage_wire_with_real_decryptor_registered(spark):
 
     from zg_etl_spark.operators.decode import (
         aes_cbc_decryptor,
-        register_decryptor,
         resolve_wire,
         rsa_key_unwrapper,
     )
@@ -97,13 +96,14 @@ def test_garbage_wire_with_real_decryptor_registered(spark):
         serialization.PrivateFormat.PKCS8,
         serialization.NoEncryption(),
     )).decode()
-    register_decryptor(1, aes_cbc_decryptor(rsa_key_unwrapper(der_b64)))
+    rsa_aes = {1: aes_cbc_decryptor(rsa_key_unwrapper(der_b64))}
     wires = [
         _wire("00", encrypt=1, key=None),
         _wire("zz not hex", encrypt=1, key="not-base64!!"),
         _wire("00" * 16, encrypt=1, key="QUJD"),  # undecryptable key
     ]
     out = resolve_wire(
-        spark.createDataFrame([(w,) for w in wires], "raw STRING")
+        spark.createDataFrame([(w,) for w in wires], "raw STRING"),
+        decryptors=rsa_aes,
     ).collect()
     assert [r.result for r in out] == [-1, -1, -1]

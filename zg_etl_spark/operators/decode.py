@@ -32,19 +32,9 @@ WIRE_SCHEMA = "Ip STRING, Now BIGINT, Header STRING"
 # superset of the reference, which rejects non-string Args)
 ARGS_SCHEMA = "event STRING, compress INT, encrypt INT, type INT, key STRING"
 
-_DECRYPTORS: dict[int, object] = {}
-
-
-def register_decryptor(enc_type: int, fn) -> None:
-    """Plug a deployment decryptor: fn(ciphertext: bytes, key: str) -> bytes.
-    Type 1 = RSA+AES (DecodeService.java:20-38), 2 = SM2+SM4 (:40-52)."""
-    _DECRYPTORS[enc_type] = fn
-
-
 def _make_decode_fn(decryptors: dict):
-    """Build the batch decode fn closing over a SNAPSHOT of the decryptor
-    registry — the UDF runs in executor Python workers where this module
-    is re-imported (empty registry), so the closure must carry the state
+    """Build the batch decode fn closing over the caller's decryptors —
+    the UDF runs in executor Python workers, so the closure carries them
     by value."""
 
     def decode(event: pd.Series, compress: pd.Series, encrypt: pd.Series,
@@ -94,13 +84,14 @@ def _make_decode_fn(decryptors: dict):
     return decode
 
 
-def _decode_event_udf():
-    # pandas_udf needs an active session → created lazily, not at import
-    return pandas_udf(_make_decode_fn(dict(_DECRYPTORS)), "string")
-
-
-def resolve_wire(raw: DataFrame, raw_col: str = "raw") -> DataFrame:
+def resolve_wire(raw: DataFrame, raw_col: str = "raw",
+                 decryptors: dict | None = None) -> DataFrame:
     """Wire JSON string column → decoded payload column + error flag.
+
+    ``decryptors`` plugs the deployment ciphers, enc type ->
+    fn(ciphertext: bytes, key: str) -> bytes: type 1 = RSA+AES
+    (DecodeService.java:20-38), 2 = SM2+SM4 (:40-52). An encrypted event
+    whose type has none wired is an error row.
 
     Output columns: ip, server_ts, payload (decoded inner-event JSON
     string), result (0 ok / -1 error — ZGMessage.result semantics,
@@ -114,7 +105,8 @@ def resolve_wire(raw: DataFrame, raw_col: str = "raw") -> DataFrame:
     )
     decoded = parsed.withColumn(
         "payload",
-        _decode_event_udf()(
+        # pandas_udf needs an active session → created here, not at import
+        pandas_udf(_make_decode_fn(dict(decryptors or {})), "string")(
             F.col("_args.event"),
             F.coalesce(F.col("_args.compress"), F.lit(0)),
             F.coalesce(F.col("_args.encrypt"), F.lit(0)),
@@ -183,8 +175,8 @@ def aes_cbc_decryptor(key_resolver):
     ``key_resolver(wire_key) -> (secret, iv)`` plays the RSA step
     (service/DecodeService.java:20-38: the deployment's private key
     decrypts the per-message AES key carried in ``Args.key``) — key
-    management stays pluggable, the cipher itself is real. Register with
-    ``register_decryptor(1, aes_cbc_decryptor(resolver))``.
+    management stays pluggable, the cipher itself is real. Wire with
+    ``resolve_wire(raw, decryptors={1: aes_cbc_decryptor(resolver)})``.
     """
     def decrypt(raw: bytes, wire_key: str) -> bytes:
         # imported HERE, not in the factory: the UDF closure is
@@ -288,8 +280,8 @@ def sm4_ecb_decryptor(key_resolver):
     key recovered by SM2-decrypting ``Args.key``). ``key_resolver(wire_key)
     -> key_bytes`` plays that SM2 step — ``sm2_key_unwrapper`` above is
     the REAL one (g4 exercises it end-to-end); a constant resolver works
-    for transport-focused tests (g2). Register with
-    ``register_decryptor(2, sm4_ecb_decryptor(r))``.
+    for transport-focused tests (g2). Wire with
+    ``resolve_wire(raw, decryptors={2: sm4_ecb_decryptor(r)})``.
     """
 
     def decrypt(raw: bytes, wire_key: str) -> bytes:

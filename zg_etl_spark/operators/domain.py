@@ -260,8 +260,8 @@ def vtl_fanout_df(batch):
 # Every relation that several queries (or several references in one
 # query) read is declared ONCE, in dependency order, as name -> sql(d):
 # the spine stages below, the LLM lane's indexes (plans/llm.py), the
-# pipeline's keyed slices (plans/pipeline.py) and the source tables under
-# them. What a relation or a query body reads is derived from its text:
+# pipeline's keyed slices and ad-click relations (plans/pipeline.py,
+# plans/consume.py) and the source tables under them. What a relation or a query body reads is derived from its text:
 # every declared name it contains as a whole word. Spark inlines CTEs and
 # substitutes cached plans BEFORE that inlining, so a relation referenced
 # N times re-runs its lineage N times; a CACHED relation is therefore a

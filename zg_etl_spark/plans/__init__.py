@@ -19,9 +19,11 @@ from zg_etl_spark.plans import (
 # round-12 composition, so that block rotates behind. The window
 # front-loads, in priority order:
 #   1. the queries whose materialization path the session registry
-#      (session.materialize) rewrote: p42/p52/p54/p54c/p54d now read one
-#      shared UA-parsed advertising-apps index, w2's bucketed tables and
-#      l16's groups (read by l27) are registry entries;
+#      (session.materialize) rewrote: the ad-click lane p42/p52/p54/
+#      p54c/p54d/p55 now reads one declaration per relation (keyed slice,
+#      click store, candidates) over one shared UA-parsed index, w2's
+#      bucketed tables and l16's groups (read by l27) are registry
+#      entries;
 #   2. l6, l31 and l37, rewritten onto shared views after their last
 #      driver row, so their new forms were never attested;
 #   3. the l-queries whose oracle now inlines the one index declaration
@@ -43,6 +45,7 @@ _WINDOW = [
     "p54_click_consumption",
     "p54c_candidates",
     "p54d_replay_rollup",
+    "p55_tencent_web_match",
     "w2_bucketed_join",
     "l16_dedup_groups",
     "l27_dedup_keep_list",
@@ -87,9 +90,9 @@ _WINDOW = [
     "p35_user_anonymous",
     "p39_baidu_eqid",
     "p51_web_ad_lane",
-    "q1_pricing_summary",
     # behind the 50-query cut — stay listed so a future rotation is a
     # reorder, not a rediscovery
+    "q1_pricing_summary",
     "q2_orders_customer_join",
     "q3_revenue_by_nation",
     "q4_nation_region",

@@ -33,7 +33,11 @@ connected through shared candidate keys / click aliases. So:
   1. candidate resolution — the same 6 equi-joins as p52 (map-side,
      broadcastable stores), emitting each session's static preference
      list (only keys PRESENT in the snapshot enter it; iOS orders the
-     two fuzzy keys by stored ct, the strict ``>`` of :1157-1163);
+     two fuzzy keys by stored ct, the strict ``>`` of :1157-1163). The
+     click-store entries, the store and the candidates are relation
+     declarations (p54_entries, p54_store, p54_cands) over p52's click
+     records and probes: the engine materializes them once, p54c scans
+     the candidates, and the p54/p54d oracles inline the same texts;
   2. sessions with no candidate at all exit early as 'none' (map-only —
      at production skew this is the vast majority);
   3. replay grouping, size-gated: components never cross an app, so a
@@ -61,12 +65,17 @@ consumed, batch-end del-set size).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zg_etl_spark.dialect import DUCK, SPARK
-from zg_etl_spark.operators.domain import duck_pipeline_sql, spark_pipeline_df
+from zg_etl_spark.dialect import DUCK
+from zg_etl_spark.operators.domain import (
+    duck_pipeline_sql, register, relation, relations)
 from zg_etl_spark.operators.graph import label_components
+# p54's relations read p52's (p52_clicks, p52_exact_entries, p52_ss):
+# the registry resolves reads against EARLIER declarations, so pipeline's
+# must come first
+from zg_etl_spark.plans import pipeline  # noqa: F401
 from zg_etl_spark.session import materialize
 
 QUERIES: dict = {}
@@ -102,14 +111,14 @@ def _replay(pdf: pd.DataFrame) -> pd.DataFrame:
                     f"bound (max abs {mx}); the sentinel fill regressed")
     for r in pdf.itertuples(index=False):
         if r.typ == "store":
-            store[r.key] = (int(r.click_seq),
-                            None if r.lid == -1 else int(r.lid))
+            store[r.cand_key] = (int(r.click_seq),
+                                 None if r.lid == -1 else int(r.lid))
         elif r.typ == "alias":
-            alias.setdefault(int(r.click_seq), []).append(r.key)
+            alias.setdefault(int(r.click_seq), []).append(r.cand_key)
         else:
             ent = cands.setdefault(
                 int(r.sess_seq), (int(r.sess_ct), int(r.zg_id), []))
-            ent[2].append((int(r.rank), r.key, r.tier))
+            ent[2].append((int(r.cand_rank), r.cand_key, r.tier))
     dead: set = set()
     out = []
     for sess_seq, (ct, zg_id, lst) in sorted(
@@ -152,143 +161,6 @@ def _replay(pdf: pd.DataFrame) -> pd.DataFrame:
 P54_COARSE_MAX = 2_000_000
 
 
-def _p54_relations(spark: SparkSession, sf_dir: str):
-    """The DataFrame build of p54's candidate resolution — click-store
-    entries, per-key store, session probes, and the per-session static
-    preference relation (cands). Shared by the sequential replay
-    (_p54_run) and pinned against the dual-dialect p54_candidates SQL
-    template by tests/test_pipeline.py, so the driver's hash-green
-    p54_candidates row transitively attests these joins. A registry
-    entry (every frame in it localCheckpointed): p54, p54c and p54d all
-    start from it."""
-    return materialize(spark, sf_dir, "p54_relations",
-                       lambda: _build_p54_relations(spark, sf_dir))
-
-
-def _build_p54_relations(spark: SparkSession, sf_dir: str):
-    from zg_etl_spark.plans.pipeline import (
-        p52_clicks_sql, p52_keyed_src, p52_ss_sql)
-
-    d = SPARK
-    # clicks/ss are cheap projections of the shared UA-parsed index
-    keyed = p52_keyed_src()
-    clicks = spark_pipeline_df(
-        spark, sf_dir, p52_clicks_sql(d, keyed)).localCheckpoint(True)
-    ss = spark_pipeline_df(spark, sf_dir, p52_ss_sql(d, keyed)).localCheckpoint(True)
-
-    app_s = F.col("app_id").cast("string")
-
-    # all exact ids share one 'adtfad:{app}:{md5}' namespace in the
-    # reference — a single 'ex|' prefix here, keyed by value alone
-    def k_exact(col) -> F.Column:
-        return F.concat(F.lit("ex|"), app_s, F.lit("|"), col)
-
-    # every (key, click) ENTRY — winners feed the store, the full set is
-    # the alias/del map (deletion is by key string, see module docstring).
-    # ONE pass over clicks via explode(array_compact(...)), not a 5-way
-    # union: a union's partition count is the SUM of its parts, so the
-    # union form checkpointed 5× the partitions and every downstream
-    # stage paid 5× the (tiny) tasks — and clicks was scanned five times
-    # (guide §2.3/§2.4: one pass, no inflated partitioning). Row multiset
-    # identical: per click, one entry per non-null exact key plus the
-    # single fuzzy ua_proc-form key (downgraded for Baidu-iPhone clicks),
-    # the fuzzy WRITE gated on a non-empty ip (setIpUaMaps'
-    # StringUtils.isNotEmpty(ip), AdvSaveAppAdDataFlatMapFunction.java:
-    # 275-279) — the probe side builds its key unconditionally, like the
-    # reference (:1140-1141)
-    key_variants = [
-        F.when(F.col(c).isNotNull(), k_exact(F.col(c)))
-        for c in ("idfa_key", "oaid_key", "aid_key", "imei_key")
-    ] + [
-        F.when(
-            F.col("ip").isNotNull() & (F.col("ip") != ""),
-            F.concat(F.lit("fz|"), app_s, F.lit("|"), "ip", F.lit("|"),
-                     "ua_proc"),
-        )
-    ]
-    entries = clicks.select(
-        F.explode(F.array_compact(F.array(*key_variants))).alias("key"),
-        "seq", "ct", "lid",
-    ).localCheckpoint(True)
-    store = (
-        entries.withColumn(
-            "rn", F.row_number().over(
-                Window.partitionBy("key")
-                .orderBy(F.col("ct").desc(), F.col("seq").desc())))
-        .where("rn = 1")
-        .select("key", F.col("seq").alias("click_seq"),
-                F.col("ct").alias("click_ct"), "lid")
-        .localCheckpoint(True)
-    )
-
-    # per-session candidates: probe keys joined to the store; ranks are
-    # the reference's tier order, the iOS fuzzy pair by stored ct with
-    # the strict > of :1157-1163 (tie keeps ip+ua)
-    sp = ss.select(
-        "seq", "ct", "zg_id", "is_ios",
-        k_exact(F.col("p_idfa")).alias("k_idfa"),
-        k_exact(F.col("p_oaid")).alias("k_oaid"),
-        k_exact(F.col("p_aid")).alias("k_aid"),
-        k_exact(F.col("p_imei")).alias("k_imei"),
-        F.concat(F.lit("fz|"), app_s, F.lit("|"), "ip", F.lit("|"),
-                 "ua_name", F.lit(":"), "ua_ver").alias("k_ipua"),
-        F.when(F.col("ua_ver") != "",
-               F.concat(F.lit("fz|"), app_s, F.lit("|"), "ip",
-                        F.lit("|:"), "ua_ver")).alias("k_ipver"),
-    )
-    hits = sp
-    for t in ("idfa", "oaid", "aid", "imei", "ipua", "ipver"):
-        st = store.select(F.col("key").alias(f"k_{t}"),
-                          F.col("click_ct").alias(f"ct_{t}"))
-        # window-built store has no size stats → AQE silently falls back
-        # to SortMergeJoin (6 shuffles); the store is the per-batch click
-        # snapshot — registry-sized, broadcast it (the p42/p52 lesson)
-        hits = hits.join(F.broadcast(st), f"k_{t}", "left")
-    # materialize ONCE: six tier branches fan out of this relation below,
-    # and without the cut each branch re-executes the whole 6-join probe
-    # (measured: 36 joins in the naive plan)
-    hits = hits.localCheckpoint(True)
-    tiers = []  # (tier, key_col, present_pred, rank_expr)
-    rk_u = F.when(
-        F.col("ct_ipver").isNotNull()
-        & (F.col("ct_ipver") > F.coalesce(F.col("ct_ipua"), F.lit(-1))),
-        F.lit(11)).otherwise(F.lit(10))
-    rk_v = F.when(rk_u == 11, F.lit(10)).otherwise(F.lit(11))
-    ios = F.col("is_ios") == 1
-    tiers = [
-        ("exact_idfa", "k_idfa", ios & F.col("ct_idfa").isNotNull(),
-         F.lit(0)),
-        ("exact_oaid", "k_oaid", ~ios & F.col("ct_oaid").isNotNull(),
-         F.lit(0)),
-        ("exact_aid", "k_aid", ~ios & F.col("ct_aid").isNotNull(),
-         F.lit(1)),
-        ("exact_imei", "k_imei", ~ios & F.col("ct_imei").isNotNull(),
-         F.lit(2)),
-        ("ipua", "k_ipua", F.col("ct_ipua").isNotNull(), rk_u),
-        ("ipver", "k_ipver", ios & F.col("ct_ipver").isNotNull(), rk_v),
-    ]
-    # same single-pass shape as `entries`: one explode over hits instead
-    # of a 6-way union (6× partition inflation + 6 scans of hits)
-    tier_variants = [
-        F.when(pred, F.struct(rank.cast("int").alias("rank"),
-                              F.col(kc).alias("key"),
-                              F.lit(t).alias("tier")))
-        for t, kc, pred, rank in tiers
-    ]
-    cands = (
-        hits.select(
-            F.col("seq").alias("sess_seq"), F.col("ct").alias("sess_ct"),
-            "zg_id",
-            F.explode(F.array_compact(F.array(*tier_variants))).alias("c"),
-        )
-        .select("sess_seq", "sess_ct", "zg_id",
-                F.col("c.rank").alias("rank"), F.col("c.key").alias("key"),
-                F.col("c.tier").alias("tier"))
-        .localCheckpoint(True)
-    )
-    return entries, store, ss, cands
-
-
 def _p54_detail(spark: SparkSession, sf_dir: str):
     """Per-session replay outcome (match_tier, lid, sess_seq, zg_id,
     claim_click) plus the relations p54d's del-set accounting joins
@@ -306,7 +178,9 @@ def _p54_detail(spark: SparkSession, sf_dir: str):
 
 
 def _build_p54_detail(spark: SparkSession, sf_dir: str):
-    entries, store, ss, cands = _p54_relations(spark, sf_dir)
+    names = ("p52_ss", "p54_entries", "p54_store", "p54_cands")
+    live = relations(spark, sf_dir, names)
+    ss, entries, store, cands = (live[n] for n in names)
 
     # the map-only fast path: sessions with no candidate key at all
     nomatch = (
@@ -323,10 +197,10 @@ def _build_p54_detail(spark: SparkSession, sf_dir: str):
     # or die observably, and without this cut the coarse per-app branch
     # would ship an app's ENTIRE click store into one pandas group —
     # per-group volume must be ∝ contested candidates, not store size
-    live_keys = cands.select("key").distinct().localCheckpoint(True)
-    akeys = (entries.join(live_keys, "key")
-             .select("key", "seq").localCheckpoint(True))
-    store = store.join(live_keys, "key").localCheckpoint(True)
+    live_keys = cands.select("cand_key").distinct().localCheckpoint(True)
+    akeys = (entries.join(live_keys, "cand_key")
+             .select("cand_key", "seq").localCheckpoint(True))
+    store = store.join(live_keys, "cand_key").localCheckpoint(True)
 
     # grouping for the replay. Components never cross an app (every key
     # embeds its app id), so grouping by app is ALWAYS correct — coarser
@@ -343,7 +217,7 @@ def _build_p54_detail(spark: SparkSession, sf_dir: str):
         return _finish(store, akeys, cands, nomatch, None), entries, ss
 
     # nodes: keys + sessions + clicks that alias a live key
-    n_key = live_keys.select(F.col("key").alias("node"))
+    n_key = live_keys.select(F.col("cand_key").alias("node"))
     n_sess = cands.select(
         F.concat(F.lit("s|"), F.col("sess_seq")).alias("node")).distinct()
     n_click = akeys.select(
@@ -353,10 +227,10 @@ def _build_p54_detail(spark: SparkSession, sf_dir: str):
              .localCheckpoint(True))
     e1 = cands.select(
         F.concat(F.lit("s|"), F.col("sess_seq")).alias("na"),
-        F.col("key").alias("nb"))
+        F.col("cand_key").alias("nb"))
     e2 = akeys.select(
         F.concat(F.lit("c|"), F.col("seq")).alias("na"),
-        F.col("key").alias("nb"))
+        F.col("cand_key").alias("nb"))
     edges = e1.unionByName(e2).distinct()
     edges = (
         edges.join(nodes.withColumnRenamed("node", "na")
@@ -371,7 +245,7 @@ def _build_p54_detail(spark: SparkSession, sf_dir: str):
            .localCheckpoint(True))
     labels = label_components(sym)
     key_comp = (nodes.join(labels, nodes.nid == labels.nd)
-                .select(F.col("node").alias("key"),
+                .select(F.col("node").alias("cand_key"),
                         F.col("lab").cast("string").alias("comp")))
     return _finish(store, akeys, cands, nomatch, key_comp), entries, ss
 
@@ -390,33 +264,32 @@ def _finish(store, akeys, cands, nomatch, key_comp) -> DataFrame:
     if key_comp is None:
         def grouped(df):
             return df.withColumn(
-                "comp", F.split("key", "[|]").getItem(1))
+                "comp", F.split("cand_key", "[|]").getItem(1))
     else:
         def grouped(df):
-            return df.join(key_comp, "key")
+            return df.join(key_comp, "cand_key")
     rep_store = (grouped(store)
-                 .select("comp", F.lit("store").alias("typ"), "key",
+                 .select("comp", F.lit("store").alias("typ"), "cand_key",
                          "click_seq", "lid",
                          F.lit(None).cast("long").alias("sess_seq"),
                          F.lit(None).cast("long").alias("sess_ct"),
                          F.lit(None).cast("long").alias("zg_id"),
-                         F.lit(None).cast("int").alias("rank"),
+                         F.lit(None).cast("int").alias("cand_rank"),
                          F.lit(None).cast("string").alias("tier")))
     rep_alias = (grouped(akeys)
-                 .select("comp", F.lit("alias").alias("typ"), "key",
+                 .select("comp", F.lit("alias").alias("typ"), "cand_key",
                          F.col("seq").alias("click_seq"),
                          F.lit(None).cast("long").alias("lid"),
                          F.lit(None).cast("long").alias("sess_seq"),
                          F.lit(None).cast("long").alias("sess_ct"),
                          F.lit(None).cast("long").alias("zg_id"),
-                         F.lit(None).cast("int").alias("rank"),
+                         F.lit(None).cast("int").alias("cand_rank"),
                          F.lit(None).cast("string").alias("tier")))
     rep_cand = (grouped(cands)
-                .select("comp", F.lit("cand").alias("typ"), "key",
+                .select("comp", F.lit("cand").alias("typ"), "cand_key",
                         F.lit(None).cast("long").alias("click_seq"),
                         F.lit(None).cast("long").alias("lid"),
-                        "sess_seq", "sess_ct", "zg_id",
-                        F.col("rank").cast("int").alias("rank"), "tier"))
+                        "sess_seq", "sess_ct", "zg_id", "cand_rank", "tier"))
     # -1 SENTINELS, not NULLs, on the long columns: a nullable int64
     # reaches pandas as float64 (NaN coercion), which is exact only
     # below 2^53 — seq values are epoch-ms*1e6+event_id ≈ 1.7e18, where
@@ -425,7 +298,7 @@ def _finish(store, akeys, cands, nomatch, key_comp) -> DataFrame:
     # sf0.1). All real values are positive, so -1 is unambiguous; a
     # null-count-0 arrow batch converts to exact int64.
     rep = rep_store.unionByName(rep_alias).unionByName(rep_cand).na.fill(
-        -1, ["click_seq", "lid", "sess_seq", "sess_ct", "zg_id", "rank"])
+        -1, ["click_seq", "lid", "sess_seq", "sess_ct", "zg_id", "cand_rank"])
 
     matched = rep.groupBy("comp").applyInPandas(_replay, _REPLAY_SCHEMA)
     return matched.unionByName(nomatch)
@@ -443,51 +316,62 @@ QUERIES["p54_click_consumption"] = _p54_run
 
 
 # ---------------------------------------------------------------------------
-# P54_CANDIDATES — the driver-hashable half of p54: each session's
-# static preference list over the batch-start click store (the same
-# probe keys/tiers/ranks the sequential replay consumes,
+# P54's shared relations, one declaration each (operators/domain.RELATIONS):
+# the batch-start click store and each session's static preference list
+# over it (the same probe keys/tiers/ranks the sequential replay consumes,
 # AdvLidAndUserFirstEndFlatMapFunction.java:1085-1166 for the probe
 # order, :408-443 + setIpUaMaps :260-279 for the store writes). Pure
-# joins — ROW_NUMBER store build + 6 broadcastable equi-joins — so it
-# carries a full DuckDB value oracle; tests/test_pipeline.py pins this
-# template's output equal to the DataFrame-built relation the replay
-# actually ships (_p54_relations), closing the attestation chain:
-# driver hash-green here + template≡engine pin + the global sequential
-# Python replay ⇒ every piece of p54 is value-checked.
+# joins — ROW_NUMBER store build + 6 broadcastable equi-joins. The engine
+# checkpoints each; the replay (_build_p54_detail) ships them to
+# applyInPandas, and p54c is a scan of p54_cands, so the driver's hash
+# row on p54c value-checks the replay's candidate input, and the p54 and
+# p54d oracles inline the same texts.
 # ---------------------------------------------------------------------------
-def p54_candidates_sql(d) -> str:
-    from zg_etl_spark.plans.pipeline import (
-        p52_clicks_sql, p52_keyed_sql, p52_ss_sql)
+_EX = "'ex|' || {app} || '|' || {v}"
 
+
+@relation("p54_entries", cached=True)
+def _p54_entries_sql(d) -> str:
+    """Every (key, click) entry: one per non-null exact key (all exact
+    ids share one 'adtfad:{app}:{md5}' namespace in the reference — a
+    single 'ex|' prefix here, keyed by value alone) plus the click's one
+    fuzzy key, its ua_proc form, written only for a non-empty ip
+    (setIpUaMaps' StringUtils.isNotEmpty(ip),
+    AdvSaveAppAdDataFlatMapFunction.java:275-279 — the probe side builds
+    its key unconditionally, like the reference :1140-1141). Winners
+    feed the store; the full set is the alias/del map (deletion is by
+    key string, see module docstring)."""
     s = d.s
-    ex = "'ex|' || {app} || '|' || {v}"
-    rk_u = ("CASE WHEN ct_ipver IS NOT NULL"
-            " AND ct_ipver > COALESCE(ct_ipua, -1) THEN 11 ELSE 10 END")
-    rk_v = f"CASE WHEN {rk_u} = 11 THEN 10 ELSE 11 END"
-    exact_entry = (
-        "  SELECT {k} AS cand_key, ct, seq, lid FROM clicks\n"
-        "  WHERE {col} IS NOT NULL"
-    )
-    exact_entries = "\n  UNION ALL\n".join(
-        exact_entry.format(k=ex.format(app=s("app_id"), v=col), col=col)
-        for col in ("idfa_key", "oaid_key", "aid_key", "imei_key"))
     return f"""
-WITH keyed AS ({p52_keyed_sql(d)}
-), clicks AS ({p52_clicks_sql(d)}
-), entries AS (
-{exact_entries}
+  SELECT {_EX.format(app=s('app_id'), v='mkey')} AS cand_key, ct, seq, lid
+  FROM p52_exact_entries
   UNION ALL
   SELECT 'fz|' || {s('app_id')} || '|' || ip || '|' || ua_proc,
          ct, seq, lid
-  FROM clicks WHERE ip IS NOT NULL AND ip <> ''
-), store AS (
-  SELECT cand_key, ct AS click_ct FROM (
-    SELECT cand_key, ct,
+  FROM p52_clicks WHERE ip IS NOT NULL AND ip <> ''"""
+
+
+relation("p54_store", cached=True)(lambda d: """
+  SELECT cand_key, click_seq, click_ct, lid FROM (
+    SELECT cand_key, seq AS click_seq, ct AS click_ct, lid,
            ROW_NUMBER() OVER (PARTITION BY cand_key
                               ORDER BY ct DESC, seq DESC) AS rn
-    FROM entries) t WHERE rn = 1
-), ss AS ({p52_ss_sql(d)}
-), sp AS (
+    FROM p54_entries) t WHERE rn = 1""")
+
+
+@relation("p54_cands", cached=True)
+def _p54_cands_sql(d) -> str:
+    """Per-session candidates: probe keys joined to the store; ranks are
+    the reference's tier order, the iOS fuzzy pair by stored ct with the
+    strict > of :1157-1163 (tie keeps ip+ua)."""
+    s, ex = d.s, _EX
+    rk_u = ("CASE WHEN ct_ipver IS NOT NULL"
+            " AND ct_ipver > COALESCE(ct_ipua, -1) THEN 11 ELSE 10 END")
+    rk_v = f"CASE WHEN {rk_u} = 11 THEN 10 ELSE 11 END"
+    # the store is a window output without size stats: the hint keeps
+    # its six probes broadcast (the p42/p52 lesson)
+    return f"""
+WITH sp AS (
   SELECT seq, ct, zg_id, is_ios,
          {ex.format(app=s('app_id'), v='p_idfa')} AS k_idfa,
          {ex.format(app=s('app_id'), v='p_oaid')} AS k_oaid,
@@ -498,19 +382,19 @@ WITH keyed AS ({p52_keyed_sql(d)}
          CASE WHEN ua_ver <> ''
               THEN 'fz|' || {s('app_id')} || '|' || ip || '|:' || ua_ver
          END AS k_ipver
-  FROM ss
+  FROM p52_ss
 ), hits AS (
-  SELECT sp.*,
+  SELECT /*+ BROADCAST(i, o, a, m, u, v) */ sp.*,
          i.click_ct AS ct_idfa, o.click_ct AS ct_oaid,
          a.click_ct AS ct_aid, m.click_ct AS ct_imei,
          u.click_ct AS ct_ipua, v.click_ct AS ct_ipver
   FROM sp
-  LEFT JOIN store i ON i.cand_key = sp.k_idfa
-  LEFT JOIN store o ON o.cand_key = sp.k_oaid
-  LEFT JOIN store a ON a.cand_key = sp.k_aid
-  LEFT JOIN store m ON m.cand_key = sp.k_imei
-  LEFT JOIN store u ON u.cand_key = sp.k_ipua
-  LEFT JOIN store v ON v.cand_key = sp.k_ipver
+  LEFT JOIN p54_store i ON i.cand_key = sp.k_idfa
+  LEFT JOIN p54_store o ON o.cand_key = sp.k_oaid
+  LEFT JOIN p54_store a ON a.cand_key = sp.k_aid
+  LEFT JOIN p54_store m ON m.cand_key = sp.k_imei
+  LEFT JOIN p54_store u ON u.cand_key = sp.k_ipua
+  LEFT JOIN p54_store v ON v.cand_key = sp.k_ipver
 )
 SELECT seq AS sess_seq, ct AS sess_ct, zg_id,
        CASE t.tier
@@ -542,22 +426,9 @@ WHERE CASE t.tier
         ELSE is_ios = 1 AND ct_ipver IS NOT NULL END"""
 
 
-def _p54c_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The QUERY side runs the engine relation the replay actually ships
-    (_p54_relations — broadcast store probes, hits materialized once);
-    the SQL template above serves as the DuckDB oracle and as the
-    Spark-rendering pin target in tests/test_pipeline.py. The driver's
-    hash row therefore checks engine-vs-DuckDB directly."""
-    _, _, _, cands = _p54_relations(spark, sf_dir)
-    return cands.select(
-        "sess_seq", "sess_ct", "zg_id",
-        F.col("rank").cast("int").alias("cand_rank"),
-        F.col("key").alias("cand_key"), "tier",
-    )
-
-
-QUERIES["p54c_candidates"] = _p54c_run
-ORACLE["p54c_candidates"] = duck_pipeline_sql(p54_candidates_sql(DUCK))
+# P54_CANDIDATES — the driver-hashable half of p54
+register(QUERIES, ORACLE, "p54c_candidates", lambda d: """
+SELECT sess_seq, sess_ct, zg_id, cand_rank, cand_key, tier FROM p54_cands""")
 
 
 # ---------------------------------------------------------------------------
@@ -596,45 +467,17 @@ def _p54_replay_ctes(d) -> str:
     i.e. once per session. Measured round 11: p54 68s -> 12s at
     sf0.001, p54d 173s -> 23s at sf0.1; without the markers the sf0.1
     bench denominator ran 20+ minutes."""
-    from zg_etl_spark.plans.pipeline import (
-        p52_clicks_sql, p52_keyed_sql, p52_ss_sql)
-
-    s = d.s
-    ex = "'ex|' || {app} || '|' || {v}"
-    exact_entry = (
-        "  SELECT {k} AS cand_key, ct, seq, lid FROM clicks\n"
-        "  WHERE {col} IS NOT NULL"
-    )
-    exact_entries = "\n  UNION ALL\n".join(
-        exact_entry.format(k=ex.format(app=s("app_id"), v=col), col=col)
-        for col in ("idfa_key", "oaid_key", "aid_key", "imei_key"))
-    return f"""
-WITH keyed AS ({p52_keyed_sql(d)}
-), clicks AS ({p52_clicks_sql(d)}
-), entries AS (
-{exact_entries}
-  UNION ALL
-  SELECT 'fz|' || {s('app_id')} || '|' || ip || '|' || ua_proc,
-         ct, seq, lid
-  FROM clicks WHERE ip IS NOT NULL AND ip <> ''
-), store AS (
-  SELECT cand_key, click_seq, lid FROM (
-    SELECT cand_key, seq AS click_seq, lid,
-           ROW_NUMBER() OVER (PARTITION BY cand_key
-                              ORDER BY ct DESC, seq DESC) AS rn
-    FROM entries) t WHERE rn = 1
-), alias AS (
+    return """
+WITH alias AS (
   SELECT seq AS click_seq, list(DISTINCT cand_key) AS akeys
-  FROM entries GROUP BY seq
-), ss AS ({p52_ss_sql(d)}
-), cand AS ({p54_candidates_sql(d)}
+  FROM p54_entries GROUP BY seq
 ), candx AS (
   -- each candidate embeds everything a claim needs: the stored click,
   -- its lid, and the click's full alias key set
   SELECT c.sess_seq, c.sess_ct, c.zg_id, c.cand_rank, c.cand_key,
          c.tier, st.click_seq, st.lid, al.akeys
-  FROM cand c
-  JOIN store st ON st.cand_key = c.cand_key
+  FROM p54_cands c
+  JOIN p54_store st ON st.cand_key = c.cand_key
   JOIN alias al ON al.click_seq = st.click_seq
 ), scand AS (
   -- per-session static preference list, ordered exactly like the
@@ -674,17 +517,17 @@ WITH keyed AS ({p52_keyed_sql(d)}
   FROM rep WHERE i > 0
   UNION ALL
   SELECT seq, zg_id, 'none', NULL::BIGINT, NULL::BIGINT
-  FROM ss WHERE seq NOT IN (SELECT sess_seq FROM cand)
+  FROM p52_ss WHERE seq NOT IN (SELECT sess_seq FROM p54_cands)
 )"""
 
 
 def p54d_replay_sql(d) -> str:
     return _p54_replay_ctes(d) + """, withapp AS MATERIALIZED (
-  SELECT dd.*, s2.app_id FROM detail dd JOIN ss s2 ON s2.seq = dd.sess_seq
+  SELECT dd.*, s2.app_id FROM detail dd JOIN p52_ss s2 ON s2.seq = dd.sess_seq
 ), appdel AS (
   SELECT app_id, COUNT(*) AS nk FROM (
     SELECT DISTINCT w.app_id, e.cand_key
-    FROM withapp w JOIN entries e ON e.seq = w.claim_click) dk
+    FROM withapp w JOIN p54_entries e ON e.seq = w.claim_click) dk
   GROUP BY app_id
 )
 SELECT w.app_id, w.match_tier,
@@ -714,7 +557,7 @@ def _p54d_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation, never the reverse
     appdel = (entries.join(F.broadcast(claimed),
                            entries.seq == F.col("claim_click"))
-              .select("app_id", "key").distinct()
+              .select("app_id", "cand_key").distinct()
               .groupBy("app_id").agg(F.count(F.lit(1)).alias("nk")))
     # appdel is one row per app — broadcast it; the checkpointed inputs
     # carry no stats, so the static plan would otherwise SMJ two tiny

@@ -63,17 +63,19 @@ _WIRE_COLS = ("ip", "server_ts", "result", "error_code")
 
 
 def _decode_wire(spark: SparkSession, sf_dir: str, encode,
-                 cols: tuple = _WIRE_COLS) -> DataFrame:
+                 cols: tuple = _WIRE_COLS,
+                 decryptors: dict | None = None) -> DataFrame:
     """Every event wire-encoded by ``encode`` (a pandas UDF body over
-    event_id, event_type), decoded by resolve_wire, and projected to the
-    decoded (event_id, event_type) plus the envelope columns ``cols``."""
+    event_id, event_type), decoded by resolve_wire with ``decryptors``,
+    and projected to the decoded (event_id, event_type) plus the envelope
+    columns ``cols``."""
     from zg_etl_spark.operators.decode import resolve_wire
     from zg_etl_spark.sources.tables import load_table
 
     enc = pandas_udf(encode, "string")
     events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     raw = events.select(enc("event_id", "event_type").alias("raw"))
-    return resolve_wire(raw).select(
+    return resolve_wire(raw, decryptors=decryptors).select(
         F.get_json_object("payload", "$.eid").cast("bigint").alias("event_id"),
         F.get_json_object("payload", "$.etype").alias("event_type"),
         *cols,
@@ -151,17 +153,14 @@ def _g2_encode(event_id: pd.Series, event_type: pd.Series) -> pd.Series:
 
 
 def _g2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zg_etl_spark.operators.decode import (
-        aes_cbc_decryptor,
-        register_decryptor,
-        sm4_ecb_decryptor,
-    )
+    from zg_etl_spark.operators.decode import aes_cbc_decryptor, sm4_ecb_decryptor
 
     # the key resolvers play the RSA/SM2 unwrap of Args.key — deployment
     # secrets in the reference, fixture constants here
-    register_decryptor(1, aes_cbc_decryptor(lambda _k: (_G2_AES_KEY, _G2_AES_IV)))
-    register_decryptor(2, sm4_ecb_decryptor(lambda _k: _G2_SM4_KEY))
-    return _decode_wire(spark, sf_dir, _g2_encode)
+    return _decode_wire(spark, sf_dir, _g2_encode, decryptors={
+        1: aes_cbc_decryptor(lambda _k: (_G2_AES_KEY, _G2_AES_IV)),
+        2: sm4_ecb_decryptor(lambda _k: _G2_SM4_KEY),
+    })
 
 
 QUERIES["g2_wire_crypto"] = _g2
@@ -280,16 +279,13 @@ def _g3_make_encoder(fx: dict):
 
 
 def _g3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zg_etl_spark.operators.decode import (
-        aes_cbc_decryptor,
-        register_decryptor,
-        rsa_key_unwrapper,
-    )
+    from zg_etl_spark.operators.decode import aes_cbc_decryptor, rsa_key_unwrapper
 
     fx = _g3_fixture()
-    register_decryptor(1, aes_cbc_decryptor(rsa_key_unwrapper(fx["der_b64"])))
     return _decode_wire(spark, sf_dir, _g3_make_encoder(fx),
-                        ("ip", "server_ts", "ua", "result", "error_code"))
+                        ("ip", "server_ts", "ua", "result", "error_code"),
+                        decryptors={1: aes_cbc_decryptor(
+                            rsa_key_unwrapper(fx["der_b64"]))})
 
 
 QUERIES["g3_rsa_unwrap"] = _g3
@@ -394,15 +390,11 @@ def _g4_make_encoder(fx: dict):
 
 
 def _g4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zg_etl_spark.operators.decode import (
-        register_decryptor,
-        sm2_key_unwrapper,
-        sm4_ecb_decryptor,
-    )
+    from zg_etl_spark.operators.decode import sm2_key_unwrapper, sm4_ecb_decryptor
 
     fx = _g4_fixture()
-    register_decryptor(2, sm4_ecb_decryptor(sm2_key_unwrapper(fx["d_hex"])))
-    return _decode_wire(spark, sf_dir, _g4_make_encoder(fx))
+    return _decode_wire(spark, sf_dir, _g4_make_encoder(fx), decryptors={
+        2: sm4_ecb_decryptor(sm2_key_unwrapper(fx["d_hex"]))})
 
 
 QUERIES["g4_sm2_unwrap"] = _g4

@@ -5,6 +5,12 @@ operators/domain.py (feed → gate → identity → dictionaries); the Spark and
 DuckDB renderings come from the same template, so the oracle is generated,
 not hand-duplicated. Virtual-attribute queries additionally run the rule SQL
 through the rule compiler's one emitter (functions/expr_compiler.py).
+
+The relations several queries read are declared here once in the domain
+registry: the write path's b_user_rows / b_device_obs, and the ad-click
+lane's UA-parsed index (adv_ua), keyed slice (p52_keyed), click records
+(p52_clicks), session-start probes (p52_ss) and exact-key melt
+(p52_exact_entries) that p42, p52, p55 and consume.py's p54 family read.
 """
 
 from __future__ import annotations
@@ -1903,22 +1909,9 @@ def _ua_parsed_sql(d: Dialect, cols: str, rows: str) -> str:
   ) s"""
 
 
-def _p42_keyed_sql(d: Dialect) -> str:
-    """p42's UA-parsed advertising-apps slice. Only the mkt (click) and
-    ss (session-start) rows feed the stores/probes, so the slice filters
-    to those dt values at the scan."""
-    from zg_etl_spark.operators.domain import ua_real_case
-
-    apps = ", ".join(str(a) for a in R.ADVERTISING_APPS)
-    return _ua_parsed_sql(d, "app_id, dt, did, ip, k, ct, seq, zg_id, pl", f"""\
-SELECT r.app_id, r.dt, r.did, r.ip, r.k, r.ct, r.seq, r.zg_id, r.pl,
-           {ua_real_case(d, 'r.')} AS ua_real
-    FROM resolved r WHERE r.app_id IN ({apps}) AND r.dt IN ('mkt', 'ss')""")
-
-
 # A cached relation, so the ua_real regex parse runs once per session and
-# sf_dir for p42, p52 and the p54 family; only their Spark runners read
-# it (their oracles inline their own keyed slices)
+# sf_dir for the whole ad-click lane: p42 reads it directly; p52, the p54
+# family and p55 through p52_keyed
 @relation("adv_ua", cached=True)
 def _adv_ua_sql(d: Dialect) -> str:
     """The UA-parsed advertising-apps index: every resolved row of
@@ -1933,13 +1926,9 @@ def _adv_ua_sql(d: Dialect) -> str:
         f"FROM resolved r WHERE r.app_id IN ({apps})")
 
 
-def _p42_body(d: Dialect, keyed: str) -> str:
-    """Everything downstream of the keyed slice, referencing it as
-    ``keyed``. The Spark runner points ``keyed`` at the materialized
-    UA-parsed index (the UA regex parse would otherwise re-run per CTE
-    reference — measured 3 subset parses after column pruning); the
-    DuckDB oracle inlines it, proving the materialization changes
-    nothing."""
+def _p42(d: Dialect) -> str:
+    """The cascade over the mkt (click) and ss (session-start) rows of
+    the UA-parsed index."""
     norm_id = (
         "CASE WHEN length(did) = 32 THEN did ELSE md5(did) END"
     )
@@ -1950,14 +1939,17 @@ def _p42_body(d: Dialect, keyed: str) -> str:
         "                              ORDER BY ct DESC, seq DESC) AS rn\n"
         "    FROM clicks{where}) t WHERE rn = 1"
     )
-    return f"""clicks AS (
+    return f"""
+WITH keyed AS (
+  SELECT * FROM adv_ua WHERE dt IN ('mkt', 'ss')
+), clicks AS (
   SELECT app_id, ip, ua_name, ua_ver, k % 5 AS lid, ct, seq,
          CASE WHEN (1 + k % 7) IN (1, 4) AND ua_iphone = 1
                    AND ua_ver <> '' THEN ':' || ua_ver
               ELSE ua_name || ':' || ua_ver END AS ua_proc,
          CASE WHEN k % 3 = 0 AND did IS NOT NULL AND did <> ''
               THEN {norm_id} END AS exact_key
-  FROM {keyed} WHERE dt = 'mkt' AND k IS NOT NULL
+  FROM keyed WHERE dt = 'mkt' AND k IS NOT NULL
 ), exact_store AS (
   {store.format(keys="exact_key", where=" WHERE exact_key IS NOT NULL")}
 ), fz_store AS (
@@ -1968,7 +1960,7 @@ def _p42_body(d: Dialect, keyed: str) -> str:
          CASE WHEN pl = 'ios' THEN 1 ELSE 0 END AS is_ios,
          CASE WHEN did IS NOT NULL AND did <> '' THEN {norm_id} END
              AS probe_key
-  FROM {keyed} WHERE dt = 'ss'
+  FROM keyed WHERE dt = 'ss'
 )
 SELECT match_tier, lid,
        COUNT(*) AS n_sessions, COUNT(DISTINCT zg_id) AS n_users
@@ -1993,16 +1985,7 @@ FROM (
 GROUP BY match_tier, lid"""
 
 
-def _p42_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The body over the mkt/ss rows of the shared UA-parsed index."""
-    keyed = "(SELECT * FROM adv_ua WHERE dt IN ('mkt', 'ss')) keyed"
-    return spark_pipeline_df(spark, sf_dir, "WITH " + _p42_body(SPARK, keyed))
-
-
-QUERIES["p42_adv_click_match"] = _p42_run
-ORACLE["p42_adv_click_match"] = duck_pipeline_sql(
-    f"WITH keyed AS ({_p42_keyed_sql(DUCK)}),\n{_p42_body(DUCK, 'keyed')}"
-)
+register(QUERIES, ORACLE, "p42_adv_click_match", _p42)
 
 
 # ---------------------------------------------------------------------------
@@ -3791,39 +3774,25 @@ def _p52_kid(d: Dialect, prefix: str, src: str, mod: int) -> str:
 _P52_COLS = "app_id, dt, user_id, ip, k, ct, seq, zg_id, pl"
 
 
-def p52_keyed_sql(d: Dialect) -> str:
-    """The advertising-app mkt/ss stream with parsed UA fields and the
-    constant P52_FIXTURES rows — shared by p52's snapshot probe and
-    p54's consuming replay so the two read the same store."""
-    from zg_etl_spark.operators.domain import ua_real_case
-
-    apps = ", ".join(str(a) for a in R.ADVERTISING_APPS)
-    return _ua_parsed_sql(d, _P52_COLS, f"""\
-SELECT r.app_id, r.dt, r.user_id, r.ip, r.k, r.ct, r.seq, r.zg_id,
-           r.pl, {ua_real_case(d, 'r.')} AS ua_real
-    FROM resolved r WHERE r.app_id IN ({apps})
-    UNION ALL
-    SELECT f.app_id, f.dt, f.user_id, f.ip, f.k, f.ct, f.seq, f.zg_id,
-           f.pl, f.ua_real
-    FROM {R.values_sql(P52_FIXTURES)}
-         AS f(app_id, dt, user_id, ip, k, ct, seq, zg_id, pl, ua_real)""")
-
-
-def p52_keyed_src() -> str:
-    """p52_keyed_sql's rows on Spark, as a FROM item: the shared UA-parsed
-    index UNION ALL the parsed P52_FIXTURES rows."""
+# The ad-click lane's shared relations: p52_keyed feeds the click
+# records (p52_clicks: p52, p54's store, p55's Tencent clicks) and the
+# session-start probes (p52_ss: p52, p54's candidates and replay)
+@relation("p52_keyed")
+def _p52_keyed_sql(d: Dialect) -> str:
+    """The advertising-app stream with parsed UA fields: the UA-parsed
+    index's rows and the constant P52_FIXTURES rows."""
     fixtures = (f"SELECT * FROM {R.values_sql(P52_FIXTURES)} "
                 f"AS f({_P52_COLS}, ua_real)")
-    return f"""(
+    return f"""
   SELECT {_P52_COLS}, ua_name, ua_ver, ua_iphone
   FROM adv_ua
-  UNION ALL{_ua_parsed_sql(SPARK, _P52_COLS, fixtures)}
-) keyed"""
+  UNION ALL{_ua_parsed_sql(d, _P52_COLS, fixtures)}"""
 
 
-def p52_clicks_sql(d: Dialect, src: str = "keyed") -> str:
+@relation("p52_clicks", cached=True)
+def _p52_clicks_sql(d: Dialect) -> str:
     """The click records with their exact store keys and the SINGLE
-    fuzzy-key form the store actually holds (FROM keyed): setIpUaMaps
+    fuzzy-key form the store actually holds: setIpUaMaps
     writes ONE key 'ip + uaAnalysis(ua)' per click, DOWNGRADED to
     ':version' for Baidu channels 1/4 when the raw UA contains
     'iPhone' (AdvSaveAppAdDataFlatMapFunction.java:260-273 — iPads
@@ -3841,12 +3810,13 @@ def p52_clicks_sql(d: Dialect, src: str = "keyed") -> str:
          CASE WHEN k % 4 = 0 THEN {kid("oaid", "k", 19)} END AS oaid_key,
          CASE WHEN k % 5 = 0 THEN {kid("aid", "k", 17)} END AS aid_key,
          CASE WHEN k % 2 = 0 THEN {kid("imei", "k", 13)} END AS imei_key
-  FROM {src} WHERE dt = 'mkt' AND k IS NOT NULL"""
+  FROM p52_keyed WHERE dt = 'mkt' AND k IS NOT NULL"""
 
 
-def p52_ss_sql(d: Dialect, src: str = "keyed") -> str:
-    """The session-start probes (FROM keyed); ct/seq ride along for
-    p54's arrival-order replay, p52's snapshot ignores them."""
+@relation("p52_ss", cached=True)
+def _p52_ss_sql(d: Dialect) -> str:
+    """The session-start probes; ct/seq ride along for p54's
+    arrival-order replay, p52's snapshot ignores them."""
     kid = lambda p, s, m: _p52_kid(d, p, s, m)
     return f"""
   SELECT app_id, zg_id, ip, ua_name, ua_ver, ct, seq,
@@ -3859,66 +3829,54 @@ def p52_ss_sql(d: Dialect, src: str = "keyed") -> str:
              AS p_aid,
          CASE WHEN user_id % 2 <> 1 THEN {kid("imei", "user_id", 15)} END
              AS p_imei
-  FROM {src} WHERE dt = 'ss'"""
+  FROM p52_keyed WHERE dt = 'ss'"""
 
 
-def _p52(d: Dialect, keyed_src: str | None = None) -> str:
-    store = (
-        "SELECT app_id, {keys}, lid, ct FROM (\n"
-        "    SELECT app_id, {keys}, lid, ct,\n"
-        "           ROW_NUMBER() OVER (PARTITION BY app_id, {keys}\n"
-        "                              ORDER BY ct DESC, seq DESC) AS rn\n"
-        "    FROM clicks{where}) t WHERE rn = 1"
-    )
-
+@relation("p52_exact_entries")
+def _p52_exact_entries_sql(d: Dialect) -> str:
+    """The exact-key melt: one (app_id, mkey, lid, ct, seq) row per
+    non-null exact key column of each click."""
     if d.name == "spark":
-        # ONE pass over clicks: the 4-way UNION ALL re-evaluated the
-        # whole clicks lineage (keyed's UA-regex parse over resolved)
-        # per key column — Spark inlines WITH-CTEs per reference.
-        # explode(filter(array(...))) emits exactly the same multiset
-        # (one row per non-null key column) from a single scan
-        # (guide §2.4: remove redundant passes). DuckDB materializes
-        # CTEs, so its UNION ALL form stays — and stays the oracle.
-        exact_entries = """
+        # ONE pass over clicks: explode(filter(array(...))) emits exactly
+        # the same multiset (one row per non-null key column) from a
+        # single scan, where the 4-way UNION ALL scans clicks per key
+        # column (guide §2.4: remove redundant passes). The UNION ALL
+        # form stays the oracle's.
+        return """
   SELECT app_id, mkey, lid, ct, seq
   FROM (SELECT app_id, lid, ct, seq,
                explode(filter(array(idfa_key, oaid_key, aid_key,
                                     imei_key), x -> x IS NOT NULL))
                    AS mkey
-        FROM clicks) e"""
-    else:
-        exact_entries = """
-  SELECT app_id, idfa_key AS mkey, lid, ct, seq FROM clicks
+        FROM p52_clicks) e"""
+    return """
+  SELECT app_id, idfa_key AS mkey, lid, ct, seq FROM p52_clicks
   WHERE idfa_key IS NOT NULL
   UNION ALL
-  SELECT app_id, oaid_key, lid, ct, seq FROM clicks
+  SELECT app_id, oaid_key, lid, ct, seq FROM p52_clicks
   WHERE oaid_key IS NOT NULL
   UNION ALL
-  SELECT app_id, aid_key, lid, ct, seq FROM clicks
+  SELECT app_id, aid_key, lid, ct, seq FROM p52_clicks
   WHERE aid_key IS NOT NULL
   UNION ALL
-  SELECT app_id, imei_key, lid, ct, seq FROM clicks
+  SELECT app_id, imei_key, lid, ct, seq FROM p52_clicks
   WHERE imei_key IS NOT NULL"""
 
-    # keyed_src: the Spark runner passes a FROM item over the
-    # materialized UA-parsed index (p52_keyed_src) — the inlined keyed
-    # CTE otherwise re-runs the UA regex parse per reference (clicks + ss
-    # subtrees). The DuckDB oracle always inlines (DuckDB materializes
-    # CTEs itself), proving the index changes nothing.
-    keyed_cte = "" if keyed_src else f"keyed AS ({p52_keyed_sql(d)}\n), "
-    return f"""
-WITH {keyed_cte}clicks AS ({p52_clicks_sql(d, keyed_src or 'keyed')}
-), exact_entries AS ({exact_entries}
-), exact_store AS (
+
+def _p52(d: Dialect) -> str:
+    return """
+WITH exact_store AS (
   SELECT app_id, mkey, lid, ct FROM (
     SELECT app_id, mkey, lid, ct,
            ROW_NUMBER() OVER (PARTITION BY app_id, mkey
                               ORDER BY ct DESC, seq DESC) AS rn
-    FROM exact_entries) t WHERE rn = 1
+    FROM p52_exact_entries) t WHERE rn = 1
 ), fz_store AS (
-  {store.format(keys="ip, ua_proc",
-                where=" WHERE ip IS NOT NULL AND ip <> ''")}
-), ss AS ({p52_ss_sql(d, keyed_src or 'keyed')}
+  SELECT app_id, ip, ua_proc, lid, ct FROM (
+    SELECT app_id, ip, ua_proc, lid, ct,
+           ROW_NUMBER() OVER (PARTITION BY app_id, ip, ua_proc
+                              ORDER BY ct DESC, seq DESC) AS rn
+    FROM p52_clicks WHERE ip IS NOT NULL AND ip <> '') t WHERE rn = 1
 )
 SELECT match_tier, lid,
        COUNT(*) AS n_sessions, COUNT(DISTINCT zg_id) AS n_users
@@ -3942,7 +3900,7 @@ FROM (
                 AND (u.lid IS NULL OR v.ct > u.ct) THEN v.lid
            WHEN u.lid IS NOT NULL THEN u.lid
          END AS lid
-  FROM ss s
+  FROM p52_ss s
   LEFT JOIN exact_store i
          ON s.is_ios = 1 AND i.app_id = s.app_id AND i.mkey = s.p_idfa
   LEFT JOIN exact_store o
@@ -3961,12 +3919,7 @@ FROM (
 GROUP BY match_tier, lid"""
 
 
-def _p52_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark_pipeline_df(spark, sf_dir, _p52(SPARK, keyed_src=p52_keyed_src()))
-
-
-QUERIES["p52_adv_ss_priority"] = _p52_run
-ORACLE["p52_adv_ss_priority"] = duck_pipeline_sql(_p52(DUCK))
+register(QUERIES, ORACLE, "p52_adv_ss_priority", _p52)
 
 
 # ---------------------------------------------------------------------------
@@ -4262,12 +4215,10 @@ def _p55(d: Dialect) -> str:
     probe_seed = R.values_sql(
         [(a, i) for a in R.ADVERTISING_APPS for i in range(11)])
     return f"""
-WITH keyed AS ({p52_keyed_sql(d)}
-), clicks AS ({p52_clicks_sql(d)}
-), tx_clicks AS (
+WITH tx_clicks AS (
   SELECT app_id, 'cck_' || {s('(k % 9)')} AS cck, k % 5 AS lid,
          ip, ua_proc, ct, seq
-  FROM clicks WHERE ch = 3
+  FROM p52_clicks WHERE ch = 3
   UNION ALL
   SELECT t.app_id, 'cck_' || {s('t.i')}, CAST(t.i % 5 AS BIGINT),
          t.ip, 'Android:13', CAST(t.ct AS BIGINT), CAST(t.seq AS BIGINT)
